@@ -1,0 +1,1 @@
+"""CDC benchmark: see run.py and README.md."""
