@@ -128,7 +128,7 @@ def bench_cdc_replay(spark, sf_tag: str, n_buckets: int = 32) -> dict:
         warm_dir = scratch_dir("bench_warm_")
         try:
             wt = BucketedLakeTable(spark, warm_dir, ["conv_id", "turn_idx"], n_buckets=4)
-            TranscriptsApplier(spark, wt, salt=None).apply_files(paths[:2], batch_id=0)
+            TranscriptsApplier(spark, wt).apply_files(paths[:2], batch_id=0)
         finally:
             shutil.rmtree(warm_dir, ignore_errors=True)
         # best-of-2 with BOTH trials published — the same policy
@@ -144,7 +144,7 @@ def bench_cdc_replay(spark, sf_tag: str, n_buckets: int = 32) -> dict:
                 table = BucketedLakeTable(
                     spark, run_dir, ["conv_id", "turn_idx"], n_buckets=n_buckets
                 )
-                applier = TranscriptsApplier(spark, table, salt=None)
+                applier = TranscriptsApplier(spark, table)
                 rec = applier.apply_files(paths, batch_id=0)
                 n_final = table.read().count()
                 trials.append(round(time.monotonic() - t0, 3))
@@ -316,7 +316,7 @@ def bench_multitable(spark) -> dict:
         root = scratch_dir("bench_st_")
         try:
             table = BucketedLakeTable(spark, root, ["conv_id", "turn_idx"], n_buckets=8)
-            TranscriptsApplier(spark, table, salt=None).apply_batch(
+            TranscriptsApplier(spark, table).apply_batch(
                 decode_changes(events).filter("table_name = 'transcripts'"),
                 batch_id=0,
             )
@@ -371,7 +371,7 @@ def bench_point_lookup(spark, sf_tag: str, n_buckets: int = 256) -> dict:
         table = BucketedLakeTable(
             spark, run_dir, ["conv_id", "turn_idx"], n_buckets=n_buckets
         )
-        TranscriptsApplier(spark, table, salt=None).apply_files(paths, batch_id=0)
+        TranscriptsApplier(spark, table).apply_files(paths, batch_id=0)
         # 8 probe keys from 8 DISTINCT buckets (a bare limit(8) reads one
         # partition = one bucket, which would overstate the pruning ratio)
         probe = [
@@ -453,7 +453,7 @@ def bench_replication(spark, sf_tag: str, n_buckets: int = 32) -> dict:
         src = BucketedLakeTable(
             spark, src_dir, ["conv_id", "turn_idx"], n_buckets=n_buckets
         )
-        applier = TranscriptsApplier(spark, src, salt=None)
+        applier = TranscriptsApplier(spark, src)
         step = max(1, len(paths) // 4)
         t0 = time.monotonic()
         for b, i in enumerate(range(0, len(paths), step)):
@@ -527,7 +527,7 @@ def bench_feed_stream(
         table = BucketedLakeTable(
             spark, run_dir, ["conv_id", "turn_idx"], n_buckets=n_buckets
         )
-        applier = TranscriptsApplier(spark, table, salt=None)
+        applier = TranscriptsApplier(spark, table)
         # 4 commits -> 4 feed partitions per full drain
         step = max(1, len(paths) // 4)
         for b, i in enumerate(range(0, len(paths), step)):

@@ -203,7 +203,7 @@ def sec_aligned(spark, sf_tag):
                 spark, run_dir, ["conv_id", "turn_idx"], n_buckets=32,
                 aligned_writes=aligned,
             )
-            TranscriptsApplier(spark, table, salt=None).apply_files(
+            TranscriptsApplier(spark, table).apply_files(
                 paths, batch_id=0
             )
             table.read().count()
@@ -282,7 +282,7 @@ def sec_replica(spark, sf_tag):
         src = BucketedLakeTable(
             spark, src_dir, ["conv_id", "turn_idx"], n_buckets=32
         )
-        applier = TranscriptsApplier(spark, src, salt=None)
+        applier = TranscriptsApplier(spark, src)
         step = max(1, len(paths) // 4)
         t0 = time.monotonic()
         for b, i in enumerate(range(0, len(paths), step)):

@@ -510,6 +510,9 @@ def parse_rows_event(
         if is_partial
         else []
     )
+    if pos < end and not (present1 or present2 or is_partial):
+        # zero-width row images would never advance ``pos``
+        raise ValueError("rows event has no present columns but a row body")
     while pos < end:
         if is_write:
             after, pos = _read_row_image(decoders, n_cols, present1, payload, pos)
@@ -542,6 +545,12 @@ def parse_rows_event(
             before, pos = _read_row_image(decoders, n_cols, present1, payload, pos)
             after, pos = _read_row_image(decoders, n_cols, present2, payload, pos)
             append(RowChange(DML_UPDATE, before, after))
+    # slices clamp at the end of the buffer, so a truncated or corrupt
+    # length prefix would otherwise decode as a silently short value; pos
+    # only grows and the loop stops at the first row past ``end``, so one
+    # check after the loop covers every row
+    if pos > end:
+        raise ValueError("row image overran event body")
     return out
 
 
@@ -569,8 +578,7 @@ def rows_prelude(
 ) -> tuple[int, int, bytes, bytes]:
     """Parse the ROWS-event prelude: table_id+flags(+v2 extra), column
     count, present-column bitmap(s).  Returns (pos, n_cols, present1,
-    present2) with the bitmaps as bytes (cache keys for the code-generated
-    body parsers).
+    present2) with the bitmaps as bytes (keys of the vectorized plans).
 
     ``rows_v2``: whether the body carries the v2 extra-data section — the
     discriminator is the FORMAT_DESCRIPTION post_header_len (8 → v1,
@@ -593,6 +601,15 @@ def rows_prelude(
 
 def _present_list(bitmap: bytes, n_cols: int) -> list[int]:
     return [i for i in range(n_cols) if bitmap[i // 8] >> (i % 8) & 1]
+
+
+def _key_image(values: list, keys) -> list:
+    """``values`` with every position outside ``keys`` set to None."""
+    out = [None] * len(values)
+    for i in keys:
+        if i < len(values):
+            out[i] = values[i]
+    return out
 
 
 def _dml_for(event_type: int) -> str:
@@ -624,10 +641,9 @@ class EnvelopeBatch:
         return [getattr(self, name) for name in self.__slots__]
 
     def mark(self) -> tuple:
-        """Per-column lengths, for :meth:`truncate` after a mid-event parse
-        failure.  The per-row parsers append ``before/after_values`` row by
-        row and only extend the meta columns once the whole event decodes,
-        so an exception can leave the columns ragged."""
+        """Per-column lengths, for :meth:`truncate` after a failed event:
+        the decode loop rolls back to the mark so that no failure between
+        two column appends can leave the batch ragged."""
         return tuple(len(getattr(self, name)) for name in self.__slots__)
 
     def truncate(self, marks: tuple | None) -> None:
@@ -664,9 +680,6 @@ class BinlogSession:
         self._schema_desc: dict[int, str] = {}  # table_id -> compact JSON desc
         self._decoders: dict[int, list] = {}  # table_id -> compiled column decoders
         self._tm_raw: dict[bytes, bytes] = {}  # table_id(6B) -> raw TABLE_MAP payload
-        # (table_id, event_type, present1, present2[, …]) -> generated parser;
-        # entries for a table_id are dropped when its TABLE_MAP changes
-        self._parser_cache: dict = {}
         # FDE-announced ROWS framing: event_type -> is_v2 (post_header_len
         # 10 → v2, 8 → v1); empty = MySQL 5.6+ defaults
         self._rows_v2: dict[int, bool] = {}
@@ -799,8 +812,6 @@ class BinlogSession:
                 return None
             self._tm_raw[raw[:6]] = raw
             table_id, schema = parse_table_map(payload)
-            for k in [k for k in self._parser_cache if k[0] == table_id]:
-                del self._parser_cache[k]
             # earliest-possible filter: excluded tables are never cached, so
             # their ROWS events skip all parsing (binlog_reader.zig:404-417).
             # The id is remembered as INTENTIONALLY filtered — that skip
@@ -853,8 +864,7 @@ class BinlogSession:
         [RowChange])`` — one tuple per ROWS event.
 
         The generic (per-value closure) body parse — the reference-shaped
-        implementation the code-generated fast paths are equality-tested
-        against."""
+        implementation the vectorized paths are equality-tested against."""
         pre = self._pre_rows(blob, file_seq)
         if pre is None:
             return
@@ -876,9 +886,9 @@ class BinlogSession:
         event_seq: int,
         out: EnvelopeBatch,
     ) -> int:
-        """Hot-path envelope decode: appends change rows columnar into
-        ``out`` via the code-generated per-schema parser (rowcodec).
-        Returns the number of rows appended."""
+        """Per-row envelope decode: appends change rows columnar into
+        ``out`` through the generic parser.  Returns the number of rows
+        appended.  The reference the vectorized path is tested against."""
         pre = self._pre_rows(blob, file_seq)
         if pre is None:
             return 0
@@ -921,41 +931,17 @@ class BinlogSession:
 
     def _columnar_after_pre(self, pre, file_seq, gtid, event_seq, out) -> int:
         hdr, et, payload, table_id, schema = pre
-        if et == EventType.PARTIAL_UPDATE_ROWS:
-            # partial-JSON layout is data-dependent per row (value_options +
-            # partial bitmap) — generic parser, not worth codegen
-            changes = parse_rows_event(
-                et, payload, schema, self._decoders[table_id], rows_v2=self._is_v2(et)
-            )
-            k = len(changes)
-            for ch in changes:
-                out.before_values.append(row_values_to_json(ch.before))
-                out.after_values.append(row_values_to_json(ch.after))
-            self._emit_env_meta(out, hdr, schema, table_id, file_seq, gtid, event_seq, DML_UPDATE, k)
-            return k
-        ckey = (table_id, et)
-        hit = self._parser_cache.get(ckey)
-        pos, n_cols, p1, p2 = rows_prelude(et, payload, self._is_v2(et))
-        if hit is None or hit[1] != p1 or hit[2] != p2:
-            from .rowcodec import get_env_parser
-
-            dml = _dml_for(et)
-            parser = get_env_parser(
-                schema,
-                self._schema_desc[table_id],
-                _present_list(p1, n_cols),
-                _present_list(p2, n_cols),
-                dml,
-            )
-            hit = (parser, p1, p2, dml)
-            self._parser_cache[ckey] = hit
-        parser, _, _, dml = hit
-        k = parser(payload, pos, len(payload), out.before_values.append, out.after_values.append)
-        if dml == DML_INSERT:
-            out.before_values.extend([None] * k)
-        elif dml == DML_DELETE:
-            out.after_values.extend([None] * k)
-        self._emit_env_meta(out, hdr, schema, table_id, file_seq, gtid, event_seq, dml, k)
+        # the whole event parses and renders before anything is appended,
+        # so a corrupt body leaves ``out`` untouched
+        changes = parse_rows_event(
+            et, payload, schema, self._decoders[table_id], rows_v2=self._is_v2(et)
+        )
+        before = [row_values_to_json(ch.before) for ch in changes]
+        after = [row_values_to_json(ch.after) for ch in changes]
+        out.before_values.extend(before)
+        out.after_values.extend(after)
+        k = len(changes)
+        self._emit_env_meta(out, hdr, schema, table_id, file_seq, gtid, event_seq, _dml_for(et), k)
         return k
 
     def _emit_env_meta(self, out, hdr, schema, table_id, file_seq, gtid, event_seq, dml, k):
@@ -985,11 +971,11 @@ class BinlogSession:
         key_positions: tuple,
         n_payload: int,
     ) -> int:
-        """Typed fast path: appends payload values through ``apps`` (one
-        ``list.append`` per payload column) and ``_deleted`` through
+        """Per-row typed decode: appends payload values through ``apps``
+        (one ``list.append`` per payload column) and ``_deleted`` through
         ``apps[n_payload]``; extends the remaining meta columns
         (gtid/event_seq/row_index/file_seq/log_pos) per event.  Returns rows
-        appended."""
+        appended.  The reference the vectorized path is tested against."""
         pre = self._pre_rows(blob, file_seq)
         if pre is None:
             return 0
@@ -1011,53 +997,46 @@ class BinlogSession:
         n_payload: int,
     ) -> int:
         """Per-row typed decode of a classified ROWS event (shared by the
-        plain and vec-deferring entry points)."""
-        hdr, et, payload, table_id, schema = pre
-        if et == EventType.PARTIAL_UPDATE_ROWS:
-            changes = parse_rows_event(
-                et, payload, schema, self._decoders[table_id], rows_v2=self._is_v2(et)
-            )
-            k = len(changes)
-            for ch in changes:
-                src = ch.after
-                m = len(src)
-                for i in range(n_payload):
-                    v = src[i] if i < m else None
-                    if v is not None and kinds[i] == "s" and type(v) is not str:
-                        v = (
-                            "0x" + bytes(v).hex()
-                            if isinstance(v, (bytes, bytearray, memoryview))
-                            else str(v)
-                        )
-                    apps[i](v)
-                apps[n_payload](False)  # _deleted
-            g, es = self.effective_ids(gtid, event_seq)
-            meta_cols[0].extend([g] * k)
-            meta_cols[1].extend([es] * k)
-            meta_cols[2].extend(range(1, k + 1))
-            meta_cols[3].extend([file_seq] * k)
-            meta_cols[4].extend([hdr.log_pos] * k)
-            self.rows_emitted += k
-            return k
-        ckey = (table_id, et, "t")
-        hit = self._parser_cache.get(ckey)
-        pos, n_cols, p1, p2 = rows_prelude(et, payload, self._is_v2(et))
-        if hit is None or hit[1] != p1 or hit[2] != p2:
-            from .rowcodec import get_typed_parser
+        plain and vec-deferring entry points).
 
-            parser = get_typed_parser(
-                schema,
-                self._schema_desc[table_id],
-                _present_list(p1, n_cols),
-                _present_list(p2, n_cols),
-                _dml_for(et),
-                kinds,
-                key_positions,
-                n_payload,
-            )
-            hit = (parser, p1, p2)
-            self._parser_cache[ckey] = hit
-        k = hit[0](payload, pos, len(payload), apps, apps[n_payload])
+        INSERT and UPDATE emit the after image, DELETE only the key
+        positions of the before image (``_deleted`` set) — matching
+        ``TranscriptsApplier.typed_changes``.  An UPDATE whose key changed
+        first emits a tombstone at the old key: without it the old-key row
+        would stay live forever.  A key absent from either image counts as
+        unchanged.  Non-string values in ``'s'`` columns render as ``str``
+        (bytes as ``0x…`` hex, like the envelope)."""
+        hdr, et, payload, table_id, schema = pre
+        rows_v2 = self._is_v2(et)
+        changes = parse_rows_event(et, payload, schema, self._decoders[table_id], rows_v2)
+        dml = _dml_for(et)
+        keys = key_positions
+        if dml == DML_UPDATE:
+            _, n_cols, p1, p2 = rows_prelude(et, payload, rows_v2)
+            both = set(_present_list(p1, n_cols)).intersection(_present_list(p2, n_cols))
+            keys = [i for i in key_positions if i in both]
+        images = []  # (values, deleted) per output row
+        for ch in changes:
+            if dml == DML_INSERT:
+                images.append((ch.after, False))
+            elif dml == DML_DELETE:
+                images.append((_key_image(ch.before, keys), True))
+            else:
+                if any(ch.before[i] != ch.after[i] for i in keys):
+                    images.append((_key_image(ch.before, keys), True))
+                images.append((ch.after, False))
+        for values, deleted in images:
+            m = len(values)
+            for i in range(n_payload):
+                v = values[i] if i < m else None
+                if v is not None and type(v) is not str:
+                    if isinstance(v, (bytes, bytearray, memoryview)):
+                        v = "0x" + bytes(v).hex()
+                    elif kinds[i] == "s":
+                        v = str(v)
+                apps[i](v)
+            apps[n_payload](deleted)
+        k = len(images)
         g, es = self.effective_ids(gtid, event_seq)
         meta_cols[0].extend([g] * k)
         meta_cols[1].extend([es] * k)

@@ -1,10 +1,10 @@
 """Vectorized across-events ROWS decode — the typed fast path's fast path.
 
-The code-generated per-row parsers (rowcodec.py) removed per-VALUE
-dispatch, but each row still costs a Python interpreter pass: ~4.5 µs/row
-on the transcripts schema, the dominant term of the decode stage.  This
-module removes the per-ROW interpreter pass for the common case the same
-way the reference's native processing worker does with compiled code
+The generic per-row parser (``decoder.parse_rows_event``) costs a Python
+interpreter pass per value: ~14 µs/row on the transcripts schema, which
+would be the dominant term of the decode stage.  This module removes the
+per-row interpreter pass for the common case the same way the
+reference's native processing worker does with compiled code
 (/root/reference/src/event_parser.zig:870-1039): decode is re-expressed as
 numpy array programs over a CONCATENATED buffer of many events' bodies.
 
@@ -29,36 +29,20 @@ with a sparse-scatter escape expander matching stdlib/orjson escaping.
 
 Supported: VARCHAR/VAR_STRING, TINY/SHORT/INT24/LONG/LONGLONG, YEAR,
 FLOAT/DOUBLE, TIMESTAMP, TIMESTAMP2 — the hot OLTP row shape (and the
-whole transcripts schema).  Anything else (JSON, DECIMAL, BLOB, ENUM/SET,
-DATE/TIME, partial updates) routes to the existing per-row parsers; the
-two paths are equality-fuzzed against each other in
-tests/test_rowvec.py.
+whole transcripts schema).  The envelope output declines FLOAT/DOUBLE
+(their JSON rendering must match Python ``repr``).  Anything else (JSON,
+DECIMAL, BLOB, ENUM/SET, DATE/TIME, partial updates) decodes through the
+generic per-row parser; the two paths are equality-fuzzed against each
+other, envelope and typed (tests/test_rowvec.py and the property tests).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from .constants import ColumnType, DML_DELETE, DML_INSERT, DML_UPDATE
-
-# operational kill-switch: SPARK_GRAFT_NO_ROWVEC=1 routes every event
-# through the per-row parsers (A/B benchmarking; emergency fallback)
-DISABLED = bool(os.environ.get("SPARK_GRAFT_NO_ROWVEC"))
-
-# deferred-buffer flush bound (estimated rows per collector before a forced
-# vectorized flush).  This is the FALLBACK for decoders built without a
-# parallelism hint; the Spark-level entry points size it per core via
-# ``functions.decode._vec_flush_rows`` — at 32 workers on one box, 32
-# collectors each deferring 512k rows (~50 MB of buffers + giant output
-# RecordBatches) thrash the shared memory bus and the single local-mode
-# JVM's heap, which made the typed path ~1.8x SLOWER than the per-row
-# parsers at local[32] while winning at 2-8 cores (round-4 verdict).
-# Tunable override for A/B: SPARK_GRAFT_VEC_FLUSH_ROWS.
-FLUSH_ROWS = int(os.environ.get("SPARK_GRAFT_VEC_FLUSH_ROWS") or (1 << 19))
 
 _TS2_FRAC_BYTES = (0, 1, 1, 2, 2, 3, 3)
 
@@ -84,8 +68,10 @@ def _plan_image(schema, present, kinds, n_payload, allow_float=True):
     outside the vectorizable set / incompatible with the output kind.
     ``kinds=None`` skips output-kind checks (envelope mode: every present
     column is stored, JSON-rendered by its decoded type)."""
-    if len(present) > 64:
-        return None  # null bitmap must fit one uint64
+    if not present or len(present) > 64:
+        # null bitmap must fit one uint64; a zero-width image would never
+        # advance the row walk (the per-row parser rejects such bodies)
+        return None
 
     def bad_kind(i, ok):
         if kinds is None or i >= n_payload:
@@ -578,8 +564,6 @@ def _utf8_checked(arr: pa.Array, data: "np.ndarray | None" = None) -> pa.Array:
     short-circuits the common case; otherwise one vectorized C++
     validation pass runs, and only a column that really contains corrupt
     bytes takes the per-value repair."""
-    if os.environ.get("SPARK_GRAFT_NO_UTF8_CHECK"):
-        return arr  # measurement kill-switch (same pattern as NO_ROWVEC)
     if data is not None and (data.size == 0 or int(data.max()) < 0x80):
         return arr  # pure ASCII is always valid UTF-8
     try:
@@ -996,7 +980,7 @@ class TypedVecCollector:
         key = (desc_key, dml, bytes(present1), bytes(present2))
         plan = self._plans.get(key, False)
         if plan is False:
-            plan = None if DISABLED else build_plan(
+            plan = build_plan(
                 schema, list(present1), list(present2), dml,
                 self.kinds, self.keys, self.n_payload,
             )
@@ -1088,7 +1072,7 @@ class EnvVecCollector:
                schema.database, schema.table)
         plan = self._plans.get(key, False)
         if plan is False:
-            plan = None if DISABLED else build_env_plan(
+            plan = build_env_plan(
                 schema, list(present1), list(present2), dml
             )
             self._plans[key] = plan

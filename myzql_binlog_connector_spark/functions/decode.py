@@ -21,14 +21,11 @@ the reference's last-TABLE_MAP-wins semantics within each segment
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-
-from ..binlog import rowvec as _rv
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -129,7 +126,7 @@ def _blob_views(arr) -> list:
     ``to_pylist()`` materializes every blob as Python ``bytes`` up front —
     double the peak memory of the batch.  Slicing one memoryview over the
     shared data buffer keeps the bytes where Arrow put them; the decoder
-    stack (wire/decoder/rowcodec) consumes buffer-protocol objects
+    stack (wire/decoder/rowvec) consumes buffer-protocol objects
     throughout."""
     import numpy as np
 
@@ -167,11 +164,7 @@ def _vec_flush_rows(parallelism: int | None) -> int:
     1.8x slower than the per-row parsers (round-4 regression); 16-32k/worker
     restored it to fastest-overall.  At 2 cores the same formula yields the
     old 512k bound, where big batches win (+28% pinned A/B).
-    ``SPARK_GRAFT_VEC_FLUSH_ROWS`` overrides unconditionally.
     """
-    env = os.environ.get("SPARK_GRAFT_VEC_FLUSH_ROWS")
-    if env:
-        return int(env)
     if not parallelism or parallelism <= 0:
         return 1 << 19
     return max(8192, min(1 << 19, (1 << 20) // parallelism))
@@ -183,9 +176,9 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
     """Build the mapInArrow function.  One BinlogSession per partition: the
     table-map cache persists across Arrow batches within the partition,
     matching the reference reader whose cache lives for the connection.
-    Decode is columnar end to end: the code-generated per-schema parsers
-    (binlog/rowcodec.py) append straight into per-column lists — no per-row
-    dicts anywhere on the path.
+    Decode is columnar end to end: events with a vectorized plan decode in
+    batched numpy programs (binlog/rowvec.py), the rest through the generic
+    parser straight into per-column lists — no per-row dicts on the path.
 
     ``on_error="quarantine"``: an undecodable packet (CRC mismatch, parse
     error, truncated body) becomes a dead-letter row with
@@ -193,7 +186,7 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
     Default ``"raise"`` keeps reference-parity fail-fast semantics."""
     from ..binlog.decoder import EnvelopeBatch
 
-    flush_rows = flush_rows or _rv.FLUSH_ROWS
+    flush_rows = flush_rows or _vec_flush_rows(None)
     quarantine = on_error == "quarantine"
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -214,9 +207,7 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
             event_seqs = batch.column("event_seq").to_pylist()
             blobs = _blob_views(batch.column("event_blob"))
             for i in range(batch.num_rows):
-                # Per-row parsers append before/after_values row by row and
-                # extend the meta columns only after the event fully decodes;
-                # snapshot so a mid-event failure can be rolled back instead
+                # Snapshot so a failed event can be rolled back instead
                 # of leaving the batch ragged (which would fail the whole
                 # partition in RecordBatch.from_arrays — defeating quarantine
                 # exactly on the events it exists for).  Lazy while the
@@ -240,10 +231,10 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
                 if len(out) >= out_batch_rows:
                     yield _env_to_batch(out)
                     out = EnvelopeBatch()
-            if vec.rows_hint >= flush_rows:
-                for rb in vec.flush(on_error=on_error, quarantine=q_cb):
-                    session.rows_emitted += rb.num_rows
-                    yield rb
+                if vec.rows_hint >= flush_rows:
+                    for rb in vec.flush(on_error=on_error, quarantine=q_cb):
+                        session.rows_emitted += rb.num_rows
+                        yield rb
         for rb in vec.flush(on_error=on_error, quarantine=q_cb):
             session.rows_emitted += rb.num_rows
             yield rb
@@ -350,7 +341,7 @@ def make_typed_decoder(
 
     kinds_t = tuple(kinds)
     keys_t = tuple(key_positions)
-    flush_rows = flush_rows or _rv.FLUSH_ROWS
+    flush_rows = flush_rows or _vec_flush_rows(None)
 
     def dead_batch(dead: list[tuple]) -> pa.RecordBatch:
         """Dead-letter rows: null payload, meta where parseable, _corrupt
@@ -388,8 +379,8 @@ def make_typed_decoder(
         transcripts schema): events defer into a ``TypedVecCollector`` and
         decode as batched numpy array programs (binlog/rowvec.py) — no
         per-row Python at all.  Everything else (partial updates, cold
-        column types) decodes through the code-generated per-row parsers
-        (binlog/rowcodec.py) appending into Arrow builder lists."""
+        column types) decodes through the generic per-row parser
+        (``decoder.parse_rows_event``) appending into Arrow builder lists."""
         from ..binlog.decoder import BinlogSession
         from ..binlog.rowvec import TypedVecCollector
 
@@ -407,10 +398,10 @@ def make_typed_decoder(
         n = 0
         for blob, file_seq, gtid, event_seq in packet_iter:
             if quarantine:
-                # per-row parsers extend the builder lists mid-event;
-                # a failure must roll back instead of leaving the batch
-                # ragged (same policy as make_decoder).  LAZY snapshot
-                # (round-7 A/B: an unconditional tuple(len) per event cost
+                # a failed event must roll back whatever it appended
+                # instead of leaving the batch ragged (same policy as
+                # make_decoder).  LAZY snapshot (round-7 A/B: an
+                # unconditional tuple(len) per event cost
                 # ~8% of clean-stream decode): n == 0 ⇔ cols is empty —
                 # the steady state when every event takes the vectorized
                 # hot path — so the rollback target is "clear"; a real
@@ -594,45 +585,25 @@ def decode_segment_files(
     import pyarrow.parquet as pq
 
     bins_df = _bin_pack_paths(spark, paths)
-    flush_rows = _vec_flush_rows(spark.sparkContext.defaultParallelism)
+    decode_partition = make_decoder(
+        table_filter=table_filter,
+        stop_position=stop_position,
+        out_batch_rows=out_batch_rows,
+        flush_rows=_vec_flush_rows(spark.sparkContext.defaultParallelism),
+    )
 
     def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..binlog.decoder import BinlogSession, EnvelopeBatch
-        from ..binlog.rowvec import EnvVecCollector
-
         for batch in batches:
             for pblob in batch.column("paths").to_pylist():
                 for path in _json.loads(pblob):
-                    session = BinlogSession(
-                        table_filter=table_filter, stop_position=stop_position
-                    )
-                    vec = EnvVecCollector(_ARROW_ENVELOPE)
+                    # a fresh BinlogSession per file: each segment is
+                    # self-contained
                     tbl = pq.read_table(
                         path,
                         columns=["file_seq", "offset", "gtid", "event_seq", "event_blob"],
                         use_threads=False,  # tasks are already core-parallel
                     )
-                    file_seqs = tbl.column("file_seq").to_pylist()
-                    gtids = tbl.column("gtid").to_pylist()
-                    event_seqs = tbl.column("event_seq").to_pylist()
-                    blobs = _blob_views(tbl.column("event_blob"))
-                    out = EnvelopeBatch()
-                    for i in range(tbl.num_rows):
-                        session.process_packet_columnar_vec(
-                            blobs[i], file_seqs[i], gtids[i], event_seqs[i], out, vec
-                        )
-                        if len(out) >= out_batch_rows:
-                            yield _env_to_batch(out)
-                            out = EnvelopeBatch()
-                        if vec.rows_hint >= flush_rows:
-                            for rb in vec.flush():
-                                session.rows_emitted += rb.num_rows
-                                yield rb
-                    if len(out):
-                        yield _env_to_batch(out)
-                    for rb in vec.flush():
-                        session.rows_emitted += rb.num_rows
-                        yield rb
+                    yield from decode_partition(iter(tbl.to_batches()))
 
     return bins_df.mapInArrow(decode_files, schema=ENVELOPE_SCHEMA)
 

@@ -2,7 +2,7 @@
 
 The J2/T5/T6/A2 operators of SURVEY.md §2: typed extraction of row images
 from the positional-JSON envelope (JVM-side ``from_json`` — no Python),
-per-file_seq watermark gating for idempotent redelivery, salted LWW dedup,
+per-file_seq watermark gating for idempotent redelivery, LWW dedup,
 and a merge into :class:`BucketedLakeTable` with lineage/metrics recorded in
 the same atomic commit.
 """
@@ -146,7 +146,6 @@ class TranscriptsApplier:
         column_names: list[str] = ("conv_id", "turn_idx", "role", "text", "tool", "ts"),
         extra_names: list[str] = ("score",),
         key_positions: tuple[int, int] = (0, 1),
-        salt: int | None = None,
         narrowed_names: dict[int, list[str]] | None = None,
     ):
         self.spark = spark
@@ -154,7 +153,6 @@ class TranscriptsApplier:
         self.column_names = list(column_names)
         self.extra_names = list(extra_names)
         self.key_positions = key_positions
-        self.salt = salt
         self.narrowed_names = {
             int(k): list(v) for k, v in (narrowed_names or {}).items()
         }
@@ -518,20 +516,7 @@ class TranscriptsApplier:
         return self._merge_typed(typed, batch_id)
 
     def _merge_typed(self, typed: DataFrame, batch_id: int | None) -> dict:
-        fresh = self._watermark_filter(typed)
-        if self.salt:
-            # optional salted pre-reduce (window path); the merge's max_by
-            # aggregate already pre-reduces map-side, so this is off by
-            # default and exists to compose the T8 operator explicitly
-            from ..operators.dedup import lww_dedup_salted
-
-            fresh = lww_dedup_salted(
-                fresh,
-                self.table.key_cols,
-                ["_gtid", "_event_seq", "_event_row_index"],
-                salt=self.salt,
-            )
-        fresh = fresh.persist()
+        fresh = self._watermark_filter(typed).persist()
         try:
             # ONE pass computes the per-file watermarks AND the dirty-bucket
             # stats (the merge skips its own counting job): grouped by

@@ -168,14 +168,14 @@ def main() -> None:
             spark, table_dir, ["conv_id", "turn_idx"], n_buckets=32,
             auto_fold=auto_fold,
         )
-        applier = TranscriptsApplier(spark, table, salt=None)
+        applier = TranscriptsApplier(spark, table)
         # warmup on a 2-segment slice of chunk 0 (throwaway table):
         # JVM/codegen cold start is not what this run measures
         warm_dir = bench.scratch_dir("endurance_warm_")
         try:
             wt = BucketedLakeTable(spark, warm_dir, ["conv_id", "turn_idx"],
                                    n_buckets=4)
-            TranscriptsApplier(spark, wt, salt=None).apply_files(
+            TranscriptsApplier(spark, wt).apply_files(
                 sorted(glob.glob(os.path.join(chunks[0][0], "*.parquet")))[:2],
                 batch_id=0)
         finally:

@@ -56,8 +56,8 @@ def main():
         key_t = BucketedLakeTable(
             spark, key_dir, ["conv_id", "turn_idx"], n_buckets=256
         )
-        TranscriptsApplier(spark, conv_t, salt=None).apply_files(paths, batch_id=0)
-        TranscriptsApplier(spark, key_t, salt=None).apply_files(paths, batch_id=0)
+        TranscriptsApplier(spark, conv_t).apply_files(paths, batch_id=0)
+        TranscriptsApplier(spark, key_t).apply_files(paths, batch_id=0)
 
         # 8 conversations from 8 distinct conv-buckets
         probe = [

@@ -94,7 +94,7 @@ from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
 run_dir = bench.scratch_dir("skew_evidence_")
 try:
     table = BucketedLakeTable(spark, run_dir, ["conv_id", "turn_idx"], n_buckets=32)
-    TranscriptsApplier(spark, table, salt=None).apply_files(
+    TranscriptsApplier(spark, table).apply_files(
         sorted(glob.glob(os.path.join(seg, "*.parquet"))), batch_id=0)
     rec = table.lineage()[-1]
     res["hot_buckets"] = rec.get("hot_buckets", {})

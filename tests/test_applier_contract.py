@@ -179,7 +179,7 @@ class FakeIcebergEngine:
 
 def _lake_backend(spark, tmp_path):
     table = BucketedLakeTable(spark, str(tmp_path / "lake"), KEYS, n_buckets=4)
-    applier = TranscriptsApplier(spark, table, salt=None)
+    applier = TranscriptsApplier(spark, table)
 
     def apply(typed, batch_id):
         return applier._merge_typed(typed, batch_id)

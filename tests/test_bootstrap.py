@@ -66,7 +66,7 @@ class TestBootstrapHandoff:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        ap = TranscriptsApplier(spark, table, salt=None)
+        ap = TranscriptsApplier(spark, table)
         rec = ap.bootstrap(snap, batch_id=0)
         assert not rec.get("skipped")
         ap.apply_files(paths[1:], batch_id=1)  # the CDC tail from position P
@@ -92,7 +92,7 @@ class TestBootstrapHandoff:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        ap = TranscriptsApplier(spark, table, salt=None)
+        ap = TranscriptsApplier(spark, table)
         ap.bootstrap(snap, batch_id=0)
         ap.apply_files(paths, batch_id=1)  # full overlap with the snapshot
         want = {k: v[3] for k, v in replay_truth(ops).items()}
@@ -109,6 +109,6 @@ class TestBootstrapHandoff:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake2"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        TranscriptsApplier(spark, table, salt=None).bootstrap(snap, batch_id=0)
+        TranscriptsApplier(spark, table).bootstrap(snap, batch_id=0)
         got = {(r.conv_id, r.turn_idx): r.text for r in table.read().collect()}
         assert got == {k: v[3] for k, v in replay_truth(ops).items()}

@@ -135,7 +135,7 @@ class TestCaptureEndToEnd:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        TranscriptsApplier(spark, table, salt=None).apply_files(paths, batch_id=0)
+        TranscriptsApplier(spark, table).apply_files(paths, batch_id=0)
         got = {
             (r.conv_id, r.turn_idx): (r.role, r.text)
             for r in table.read().collect()
@@ -160,7 +160,7 @@ class TestCaptureEndToEnd:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        applier = TranscriptsApplier(spark, table, salt=None)
+        applier = TranscriptsApplier(spark, table)
         BinlogReplayStream(
             spark,
             out_dir,

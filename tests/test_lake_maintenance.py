@@ -282,7 +282,7 @@ class TestTimeTravel:
         write_segments_parquet(s2, seg2)
 
         table = BucketedLakeTable(spark, str(tmp_path / "t"), ["conv_id", "turn_idx"], n_buckets=4)
-        app = TranscriptsApplier(spark, table, salt=None)
+        app = TranscriptsApplier(spark, table)
         app.apply_batch(decode_changes(spark.read.parquet(seg1)), batch_id=0)
         v1 = table.snapshot_manifest()["version"]
         # second commit must not collide with the first batch's stamps
@@ -318,7 +318,7 @@ class TestTimeTravel:
         seg = str(tmp_path / "seg")
         write_segments_parquet(stream, seg)
         table = BucketedLakeTable(spark, str(tmp_path / "t"), ["conv_id", "turn_idx"], n_buckets=2)
-        TranscriptsApplier(spark, table, salt=None).apply_batch(
+        TranscriptsApplier(spark, table).apply_batch(
             decode_changes(spark.read.parquet(seg)), batch_id=0
         )
         with _pytest.raises(ValueError, match="available"):
@@ -345,7 +345,7 @@ class TestVacuum:
         table = BucketedLakeTable(
             spark, str(tmp_path / "t"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        app = TranscriptsApplier(spark, table, salt=None)
+        app = TranscriptsApplier(spark, table)
         for i, (lo, hi) in enumerate([(0, n_ins), (n_ins, cut), (cut, len(ops))]):
             seg = str(tmp_path / f"s{i}")
             write_segments_parquet(encode_stream(ops[lo:hi], n_segments=1, seed=71), seg)
@@ -736,7 +736,7 @@ class TestViralStreamE2E:
             n_buckets=32, hot_bucket_split_rows=64,  # low floor: force the split at test scale
         )
         env = decode_changes(spark.read.parquet(str(tmp_path / "seg")))
-        TranscriptsApplier(spark, table, salt=None).apply_batch(env, batch_id=0)
+        TranscriptsApplier(spark, table).apply_batch(env, batch_id=0)
 
         got = {(r.conv_id, r.turn_idx): r.text for r in table.read().collect()}
         want = {k: v[3] for k, v in stream.truth.items()}

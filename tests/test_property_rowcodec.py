@@ -1,8 +1,9 @@
-"""Property-based parity: code-generated row parsers (binlog/rowcodec.py)
-vs the generic per-value decoder, over random schemas (hot + cold column
-types), random values including nulls, and all three DML kinds.  The
-generic path is the reference-shaped implementation; any divergence in the
-exec-generated fast path is a decode bug."""
+"""Property-based parity: the vectorized decoders (binlog/rowvec.py) vs the
+generic per-value parser, envelope and typed, over random schemas (hot +
+cold column types), random values including nulls, and all three DML kinds
+(UPDATEs pair each row with its predecessor, so keys change).  The generic
+path is the reference-shaped implementation; any divergence in the
+vectorized path is a decode bug."""
 
 from __future__ import annotations
 
@@ -80,10 +81,7 @@ def table_and_rows(draw):
     return schema, rows, dml
 
 
-@settings(max_examples=120, deadline=None)
-@given(table_and_rows())
-def test_codegen_matches_generic(case):
-    schema, rows, dml = case
+def _packets(schema, rows, dml):
     w = EventWriter()
     w.format_description()
     w.table_map(77, schema)
@@ -92,24 +90,8 @@ def test_codegen_matches_generic(case):
     elif dml == "D":
         w.delete_rows(77, schema, rows)
     else:
-        w.update_rows(77, schema, [(r, r) for r in rows])
-    packets = [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
-
-    s1 = BinlogSession()
-    generic = []
-    for fs, g, es, pkt in packets:
-        generic.extend(s1.process_packet(pkt, file_seq=fs, gtid=g, event_seq=es))
-
-    s2 = BinlogSession()
-    out = EnvelopeBatch()
-    for fs, g, es, pkt in packets:
-        s2.process_packet_columnar(pkt, fs, g, es, out)
-
-    assert len(out) == len(generic)
-    cols = out.columns()
-    for ci, name in enumerate(EnvelopeBatch.__slots__):
-        for r, old in enumerate(generic):
-            assert old[name] == cols[ci][r], (name, r, old[name], cols[ci][r])
+        w.update_rows(77, schema, [(rows[i - 1], r) for i, r in enumerate(rows)])
+    return [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
 
 
 @settings(max_examples=120, deadline=None)
@@ -125,17 +107,7 @@ def test_vectorized_envelope_matches_generic(case):
     from myzql_binlog_connector_spark.binlog.rowvec import EnvVecCollector
     from myzql_binlog_connector_spark.functions.decode import _ARROW_ENVELOPE
 
-    schema, rows, dml = case
-    w = EventWriter()
-    w.format_description()
-    w.table_map(77, schema)
-    if dml == "I":
-        w.write_rows(77, schema, rows)
-    elif dml == "D":
-        w.delete_rows(77, schema, rows)
-    else:
-        w.update_rows(77, schema, [(r, r) for r in rows])
-    packets = [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+    packets = _packets(*case)
 
     s1 = BinlogSession()
     generic = []
@@ -154,4 +126,40 @@ def test_vectorized_envelope_matches_generic(case):
     for rb in vec.flush():
         t = rb.to_pydict()
         got.update(zip(*[t[n] for n in names]))
+    assert got == want
+
+
+@settings(max_examples=120, deadline=None)
+@given(table_and_rows())
+def test_vectorized_typed_matches_generic(case):
+    """The typed twin: ``TypedVecCollector`` (via the typed decoder) vs
+    ``process_packet_typed`` on the same schemas, including the tombstones
+    of key-changing UPDATEs.  Multiset parity, like the envelope test."""
+    import json
+    from collections import Counter
+
+    from myzql_binlog_connector_spark.functions.decode import (
+        _payload_kinds,
+        make_typed_decoder,
+    )
+
+    schema = case[0]
+    packets = _packets(*case)
+    n = len(schema.columns)
+    desc = json.dumps([[c.type_code, c.meta, int(c.nullable)] for c in schema.columns])
+    kinds = tuple(_payload_kinds([desc]))
+    keys = tuple(range(min(2, n)))
+
+    s1 = BinlogSession()
+    cols = [[] for _ in range(n + 6)]
+    apps = tuple(c.append for c in cols[: n + 1])
+    for fs, g, es, pkt in packets:
+        s1.process_packet_typed(pkt, fs, g, es, apps, cols[n + 1 :], kinds, keys, n)
+    want = Counter(zip(*cols))
+
+    decode_stream, arrow_schema = make_typed_decoder(schema.column_names, list(kinds), keys)
+    got = Counter()
+    for rb in decode_stream((pkt, fs, g, es) for fs, g, es, pkt in packets):
+        t = rb.to_pydict()
+        got.update(zip(*[t[f.name] for f in arrow_schema]))
     assert got == want

@@ -128,7 +128,7 @@ class TestQuarantine:
         BinlogReplayStream(
             spark,
             str(seg_dir),
-            TranscriptsApplier(spark, table, salt=None),
+            TranscriptsApplier(spark, table),
             checkpoint_dir=str(tmp_path / "ckpt"),
             on_error="quarantine",
         ).run_to_completion()
@@ -164,7 +164,7 @@ class TestQuarantine:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        TranscriptsApplier(spark, table, salt=None).apply_batch(env, batch_id=0)
+        TranscriptsApplier(spark, table).apply_batch(env, batch_id=0)
         got = {(r.conv_id, r.turn_idx) for r in table.read().collect()}
         # 5 surviving events × 10 rows merged; the corrupt event's rows absent
         assert len(got) == 50
@@ -172,14 +172,12 @@ class TestQuarantine:
 
 
 # ---------------------------------------------------------------------------
-# round-5 regression: mid-event failure on the PER-ROW parser path must not
-# leave the shared EnvelopeBatch ragged.  The codegen env parsers append
-# before/after_values row by row and extend the meta columns only when the
-# whole event decodes; quarantine used to append the dead-letter row on top
-# of the partial rows, leaving before/after_values k rows longer than the
-# meta columns and failing RecordBatch.from_arrays for the whole partition —
-# on exactly the shapes quarantine exists for (non-vectorizable schemas,
-# SPARK_GRAFT_NO_ROWVEC=1).
+# round-5 regression: a failed event on the PER-ROW parser path must not
+# leave the shared EnvelopeBatch ragged.  Quarantine used to append the
+# dead-letter row on top of a failed event's partial rows, leaving
+# before/after_values longer than the meta columns and failing
+# RecordBatch.from_arrays for the whole partition — on exactly the shapes
+# quarantine exists for (schemas the vectorized path declines).
 # ---------------------------------------------------------------------------
 
 from myzql_binlog_connector_spark.binlog.constants import ColumnType
@@ -205,7 +203,7 @@ DECIMAL_SCHEMA = TableSchema(
 
 def _decode_inprocess(packets, on_error="quarantine"):
     """Run make_decoder's partition function directly on one Arrow batch —
-    no Spark, so the per-row path / kill-switch can be exercised in-process."""
+    no Spark, so the per-row path can be exercised in-process."""
     import pyarrow as pa
 
     from myzql_binlog_connector_spark.functions.decode import make_decoder
@@ -284,20 +282,94 @@ class TestQuarantineRaggedBatch:
         assert len(convs) == 30
         assert convs.isdisjoint({f"conv-{j}" for j in range(20, 30)})
 
-    def test_kill_switch_mid_event_failure(self, monkeypatch):
-        """SPARK_GRAFT_NO_ROWVEC routes the vectorizable transcripts schema
-        through the same per-row path; quarantine must survive it too."""
-        from myzql_binlog_connector_spark.binlog import rowvec
-
-        monkeypatch.setattr(rowvec, "DISABLED", True)
+    def test_nonvectorizable_schema_first_event_failure(self):
+        """The failed event is the first of the batch: the rollback target
+        is the lazy empty-batch mark, not a column snapshot."""
         w = EventWriter(server_id=1)
         w.format_description()
-        w.table_map(5, TRANSCRIPTS_SCHEMA)
+        w.table_map(7, DECIMAL_SCHEMA)
         for i in range(4):
-            w.write_rows(5, TRANSCRIPTS_SCHEMA, _rows(10, start=i * 10))
-        packets = _truncate_rows_event(w.events, rows_idx=1)
+            w.write_rows(
+                7,
+                DECIMAL_SCHEMA,
+                [(f"conv-{j}", j, "123.4567", f"note {j}")
+                 for j in range(i * 10, i * 10 + 10)],
+            )
+        packets = _truncate_rows_event(w.events, rows_idx=0)
         batches = _decode_inprocess(packets)
         self._assert_rectangular_with_one_corrupt(batches, n_good=30)
+
+
+def _overrun_packets():
+    """A DECIMAL_SCHEMA stream (no vectorized plan, so the generic parser
+    decodes it) whose middle WRITE_ROWS event has intact framing, but its
+    last VARCHAR length prefix claims 60 bytes where 4 remain."""
+    from myzql_binlog_connector_spark.binlog.constants import CRC_LEN
+
+    w = EventWriter(server_id=1)
+    w.format_description()
+    w.table_map(7, DECIMAL_SCHEMA)
+    w.write_rows(7, DECIMAL_SCHEMA,
+                 [(f"conv-{j}", j, "1.0000", f"note {j}") for j in range(10)])
+    w.write_rows(7, DECIMAL_SCHEMA, [("conv-x", 2, "2.0000", "bbbb")])
+    w.write_rows(7, DECIMAL_SCHEMA,
+                 [(f"conv-{j}", j, "3.0000", f"note {j}") for j in range(10, 20)])
+    packets = list(w.events)
+    off, pkt = packets[3]
+    bad = bytearray(pkt)
+    at = len(bad) - CRC_LEN - len("bbbb") - 1
+    assert bad[at] == 4
+    bad[at] = 60
+    packets[3] = (off, bytes(bad))
+    return packets
+
+
+class TestRowImageOverrun:
+    """A length prefix that runs past the event body must raise: Python
+    slices clamp, so without the check the value decodes silently short."""
+
+    def test_generic_parser_raises(self):
+        from myzql_binlog_connector_spark.binlog.decoder import BinlogSession
+
+        packets = [pkt for _off, pkt in _overrun_packets()]
+        sess = BinlogSession()
+        for pkt in packets[:3]:
+            list(sess.process_packet_events(pkt, 1))
+        with pytest.raises(ValueError, match="overran event body"):
+            list(sess.process_packet_events(packets[3], 1))
+
+        sess = BinlogSession()
+        cols = [[] for _ in range(4 + 6)]
+        typed = (tuple(c.append for c in cols[:5]), cols[5:], ("s", "i", "s", "s"), (0, 1), 4)
+        for pkt in packets[:3]:
+            sess.process_packet_typed(pkt, 1, 1, 1, *typed)
+        with pytest.raises(ValueError, match="overran event body"):
+            sess.process_packet_typed(packets[3], 1, 1, 1, *typed)
+
+    def test_quarantine_dead_letters_only_the_overrun_event(self):
+        batches = _decode_inprocess(_overrun_packets())
+        TestQuarantineRaggedBatch()._assert_rectangular_with_one_corrupt(batches, n_good=20)
+        bad = [
+            json.loads(av)
+            for rb in batches
+            for d, av in zip(rb.column("dml_type").to_pylist(),
+                             rb.column("after_values").to_pylist())
+            if d == "_corrupt"
+        ]
+        assert "overran event body" in bad[0]["error"]
+
+    def test_typed_quarantine_dead_letters_only_the_overrun_event(self):
+        from myzql_binlog_connector_spark.functions.decode import make_typed_decoder
+
+        decode_stream, _ = make_typed_decoder(
+            list(DECIMAL_SCHEMA.column_names), ["s", "i", "s", "s"], (0, 1),
+            on_error="quarantine",
+        )
+        packets = [(pkt, 1, i + 1, i + 1) for i, (_o, pkt) in enumerate(_overrun_packets())]
+        rows = [r for rb in decode_stream(iter(packets)) for r in rb.to_pylist()]
+        dead = [r for r in rows if r["_corrupt"] is not None]
+        assert len(dead) == 1 and "overran event body" in dead[0]["_corrupt"]
+        assert sorted(r["turn_idx"] for r in rows if r["_corrupt"] is None) == list(range(20))
 
 
 # ---------------------------------------------------------------------------
@@ -361,7 +433,7 @@ class TestTypedPathQuarantine:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        rec = TranscriptsApplier(spark, table, salt=None).apply_files(
+        rec = TranscriptsApplier(spark, table).apply_files(
             [str(seg_dir / "segment-000001.parquet")],
             batch_id=0,
             on_error=on_error,
@@ -430,7 +502,7 @@ class TestTypedPathQuarantine:
         env_table = BucketedLakeTable(
             spark, str(tmp_path / "lake_env"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        TranscriptsApplier(spark, env_table, salt=None).apply_batch(env, batch_id=0)
+        TranscriptsApplier(spark, env_table).apply_batch(env, batch_id=0)
         typed_state = {
             (r.conv_id, r.turn_idx, r.text) for r in table.read().collect()
         }
@@ -473,7 +545,7 @@ class TestTypedPathTableMapCorruption:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        rec = TranscriptsApplier(spark, table, salt=None).apply_files(
+        rec = TranscriptsApplier(spark, table).apply_files(
             [str(seg_dir / "segment-000001.parquet")],
             batch_id=0,
             on_error="quarantine",

@@ -1,7 +1,9 @@
-"""Parity tests: code-generated parsers (binlog/rowcodec.py) vs the generic
-per-value decoder over the full type matrix, nulls, updates, and schema
-evolution.  The generic path is the reference-shaped implementation
-(event_parser.zig:870-1039); the generated path must be bit-identical."""
+"""Per-row session entry points: the columnar envelope and typed decoders
+(``process_packet_columnar`` / ``process_packet_typed``) vs the dict-per-row
+``process_packet`` over the full type matrix, nulls, updates, and schema
+evolution, plus the typed path's tombstones, v1 framing, CRC checks, empty
+present bitmaps and zero-copy blob views.  All of them parse through the
+generic parser (event_parser.zig:870-1039)."""
 
 from __future__ import annotations
 
@@ -252,27 +254,42 @@ class TestCrcVerification:
 
 class TestEmptyPresentBitmap:
     def test_empty_present_compiles_and_parses(self):
-        """An empty present bitmap must not generate empty if/else suites
-        (SyntaxError at compile time — round-3 ADVICE).  A zero-present
-        image is zero bytes, so the parser sees pos == end and returns 0."""
-        from myzql_binlog_connector_spark.binlog.rowcodec import (
-            get_env_parser,
-            get_typed_parser,
-        )
+        """ROWS events whose present bitmaps are empty: an empty body
+        decodes to zero rows on every per-row entry point, and a body with
+        bytes raises instead of looping on zero-width row images."""
+        import pytest as _pytest
 
-        for dml in ("INSERT", "DELETE", "UPDATE"):
-            p = get_env_parser(
-                TRANSCRIPTS_SCHEMA, f"ep-{dml}", b"", b"", dml
-            )
-            b, a = [], []
-            assert p(b"", 0, 0, b.append, a.append) == 0
-            assert b == [] and a == []
-        t = get_typed_parser(
-            TRANSCRIPTS_SCHEMA, "ep-t", b"", b"", "DELETE",
-            ("s", "i", "s", "s", "s", "s"), (0, 1), 6,
-        )
-        cols = [[] for _ in range(7)]
-        assert t(b"", 0, 0, tuple(c.append for c in cols[:6]), cols[6].append) == 0
+        from myzql_binlog_connector_spark.binlog.rowvec import EnvVecCollector
+        from myzql_binlog_connector_spark.binlog.wire import write_lenenc
+        from myzql_binlog_connector_spark.functions.decode import _ARROW_ENVELOPE
+
+        def emit_rows_event(w, event_type, body=b""):
+            n_bitmaps = 2 if event_type == 31 else 1
+            payload = (5).to_bytes(6, "little") + b"\x00\x00" + b"\x02\x00"
+            payload += write_lenenc(6) + b"\x00" * n_bitmaps + body
+            return w._emit(event_type, payload)[2]
+
+        w = EventWriter()
+        w.format_description()
+        w.table_map(5, TRANSCRIPTS_SCHEMA)
+        for et in (30, 31, 32):
+            emit_rows_event(w, et)
+        packets = [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+        assert _envelope_dicts(packets) == []
+        assert len(_envelope_columnar(packets)) == 0
+        assert all(c == [] for c in TestTypedParser()._typed_rows(packets))
+
+        bad = emit_rows_event(w, 30, body=b"\x01")
+        sess = BinlogSession()
+        for _fs, _g, _es, pkt in packets:
+            sess.process_packet_columnar(pkt, 1, 1, 1, EnvelopeBatch())
+        with _pytest.raises(ValueError, match="no present columns"):
+            sess.process_packet_columnar(bad, 1, 1, 1, EnvelopeBatch())
+        # rowvec declines zero-width images, so the vec entry point raises
+        # the same way instead of hanging in its row walk
+        vec = EnvVecCollector(_ARROW_ENVELOPE)
+        with _pytest.raises(ValueError, match="no present columns"):
+            sess.process_packet_columnar_vec(bad, 1, 1, 1, EnvelopeBatch(), vec)
 
 
 class TestBlobViews:

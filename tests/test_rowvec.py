@@ -1,7 +1,8 @@
-"""Vectorized decode (binlog/rowvec.py) parity with the per-row parsers.
+"""Vectorized decode (binlog/rowvec.py) parity with the per-row parser.
 
 The vectorized kernels re-express decode as numpy array programs; the
-per-row code-generated parsers (rowcodec.py) remain the semantics anchor.
+generic per-row parser (``decoder.parse_rows_event``) is the semantics
+anchor.
 Every test here runs the SAME packets through both paths and compares the
 full output multisets — typed AND envelope."""
 
@@ -23,7 +24,6 @@ from myzql_binlog_connector_spark.binlog.encoder import (
 )
 from myzql_binlog_connector_spark.binlog.rowvec import (
     EnvVecCollector,
-    TypedVecCollector,
     _ts_string_array,
     build_env_plan,
     build_plan,
@@ -194,16 +194,6 @@ class TestPlanGating:
         assert build_plan(TRANSCRIPTS_SCHEMA, present, present, "INSERT",
                           wrong, (0, 1), 6) is None
 
-    def test_kill_switch_disables_plans(self, monkeypatch):
-        from myzql_binlog_connector_spark.binlog import rowvec
-
-        monkeypatch.setattr(rowvec, "DISABLED", True)
-        vec = TypedVecCollector(KINDS, (0, 1), 6, None)
-        _key, plan = vec.plan_for("desc", "INSERT", TRANSCRIPTS_SCHEMA,
-                                  b"\x00\x01\x02\x03\x04\x05",
-                                  b"\x00\x01\x02\x03\x04\x05")
-        assert plan is None
-
 
 class TestVecFlushSizing:
     """Round-5 regression pin: the deferred-buffer flush bound must scale
@@ -218,12 +208,6 @@ class TestVecFlushSizing:
         assert _vec_flush_rows(8) == 1 << 17
         assert _vec_flush_rows(32) == 1 << 15    # high-core: bus pressure
         assert _vec_flush_rows(1024) == 8192     # clamped floor
-
-    def test_env_override(self, monkeypatch):
-        from myzql_binlog_connector_spark.functions import decode as d
-
-        monkeypatch.setenv("SPARK_GRAFT_VEC_FLUSH_ROWS", "12345")
-        assert d._vec_flush_rows(32) == 12345
 
     def test_threaded_into_spark_entry_points(self, spark, monkeypatch):
         """decode_changes must resolve the bound from the session's
