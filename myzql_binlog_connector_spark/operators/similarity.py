@@ -452,26 +452,25 @@ def _kmeans_centroids(corpus, stride, id_col, vec_col, dims):
 def _kmeans_centroids_np(corpus, stride, id_col, vec_col, dims):
     """Numpy form of :func:`_kmeans_centroids`: ``(cids, C, cnrm)`` with
     ``cids`` ascending (argmax over cid-ascending columns == the oracle's
-    smallest-cid tie-break).  ONE Spark job: the strided training sample
-    and the strided seeds are collected together (their union filter) and
-    split driver-side — the prior count() + collect() + collect() trio
-    scanned the corpus three times for the same rows."""
+    smallest-cid tie-break).  The cap is checked BEFORE anything is
+    collected (an id-only count of the sample); then the strided training
+    sample and the strided seeds are collected together (their union
+    filter) and split driver-side."""
     samp_stride = max(1, stride // KMEANS_OVERSAMPLE)
-    both = (
-        corpus.filter(
-            ((F.col(id_col) % samp_stride) == 0)
-            | ((F.col(id_col) % stride) == 0)
+    is_samp = (F.col(id_col) % samp_stride) == 0
+    n_samp = corpus.filter(is_samp).select(id_col).count()
+    if n_samp > KMEANS_TRAIN_CAP:
+        raise ValueError(
+            f"k-means training sample is {n_samp} rows (> cap "
+            f"{KMEANS_TRAIN_CAP}); raise `stride` so corpus/"
+            f"{samp_stride} fits the driver-side trainer"
         )
+    both = (
+        corpus.filter(is_samp | ((F.col(id_col) % stride) == 0))
         .select(id_col, vec_col)
         .collect()
     )
     sample = [r for r in both if int(r[0]) % samp_stride == 0]
-    if len(sample) > KMEANS_TRAIN_CAP:
-        raise ValueError(
-            f"k-means training sample is {len(sample)} rows (> cap "
-            f"{KMEANS_TRAIN_CAP}); raise `stride` so corpus/"
-            f"{samp_stride} fits the driver-side trainer"
-        )
     seeds = sorted(
         (r for r in both if int(r[0]) % stride == 0), key=lambda r: r[0]
     )

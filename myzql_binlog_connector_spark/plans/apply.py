@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..binlog.constants import ColumnType
-from .lake import BucketedLakeTable
+from .lake import BucketedLakeTable, local_relation
 
 # MySQL column-type code → Spark type for typed extraction (SURVEY.md §1.2)
 _CODE_TO_SPARK = {
@@ -564,7 +564,8 @@ class TranscriptsApplier:
 
     def _watermark_filter(self, changes: DataFrame) -> DataFrame:
         """Drop rows at-or-below the stored per-file_seq watermark
-        (redelivered work) — broadcast join against the tiny watermark map."""
+        (redelivered work) — broadcast join against the tiny watermark
+        map, a driver-local relation (broadcast with no Spark job)."""
         wms = self.table.watermarks()
         if not wms:
             return changes
@@ -572,8 +573,16 @@ class TranscriptsApplier:
             (int(fs), int(v["log_pos"]), int(v["event_row_index"]))
             for fs, v in wms.items()
         ]
-        wm_df = self.spark.createDataFrame(
-            rows, "wm_file_seq int, wm_log_pos bigint, wm_eri bigint"
+        wm_df = local_relation(
+            self.spark,
+            T.StructType(
+                [
+                    T.StructField("wm_file_seq", T.IntegerType()),
+                    T.StructField("wm_log_pos", T.LongType()),
+                    T.StructField("wm_eri", T.LongType()),
+                ]
+            ),
+            rows,
         )
         joined = changes.join(
             F.broadcast(wm_df),

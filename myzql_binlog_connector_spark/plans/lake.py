@@ -115,6 +115,40 @@ def _footer_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
+def local_relation(
+    spark: SparkSession, schema: StructType, rows: list[tuple]
+) -> DataFrame:
+    """``rows`` (non-empty) as a driver-local relation: an inline
+    ``VALUES`` table whose cells are ``CAST(value AS <field type>)``.
+    Catalyst folds it into a ``LocalRelation``, so a projection over it
+    plans as a ``LocalTableScan`` and collects with no Spark job, and a
+    broadcast of it ships without one.  ``createDataFrame`` over a Python
+    list parallelizes an RDD instead and pays a job per use.
+
+    Values bind as named parameter markers, so each cell is exactly
+    ``F.lit(v).cast(type)``.  Python ints are rendered as SQL text instead
+    (an int's text is its literal): each bound parameter is a py4j round
+    trip, and a 1,000-row map of three ints binds in ~1.9 s but inlines
+    in ~0.08 s (4-core VM, ``local[2]``)."""
+    args: dict = {}
+    tuples = []
+    for r, row in enumerate(rows):
+        cells = []
+        for c, (f, v) in enumerate(zip(schema.fields, row)):
+            if type(v) is int:
+                val = str(v)
+            else:
+                name = f"v{r}_{c}"
+                args[name] = v
+                val = f":{name}"
+            cells.append(f"CAST({val} AS {f.dataType.simpleString()})")
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in schema.fields)
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS _local({names})", args=args
+    )
+
+
 def iter_commit_deltas(
     table_path: str, lo: int, hi: int, head_manifest: dict
 ) -> list[tuple[int, list[str]]]:
@@ -542,24 +576,29 @@ class BucketedLakeTable:
         n_buckets: int,
         bucket_cols: list[str],
     ) -> set:
-        """Bucket ids for key tuples, computed with Spark's own hash
-        (one tiny local job over a probe frame typed from the stored
-        schema — no Python Murmur3 reimplementation to drift).
+        """Bucket ids for key tuples, computed with Spark's own hash (no
+        Python Murmur3 reimplementation to drift).  Up to
+        ``KEY_PREDICATE_MAX`` tuples hash on the driver: the probe is a
+        :func:`local_relation` cast to the stored key types — the cast
+        :meth:`_key_cond` applies, so bucket ids and row predicate agree —
+        and ``pmod(hash(...))`` over it runs no Spark job.  Larger sets
+        hash the probe frame the semi-join uses (one job: a ``VALUES``
+        table that size costs more to parse than the job).
         ``n_buckets`` and ``bucket_cols`` come from the manifest BEING
         READ, not the handle — a time-travel read across a ``rebucket``
         must hash against that snapshot's layout."""
-        probe = self._key_probe_df(keys, schema, bucket_cols)
-        return {
-            r["b"]
-            for r in probe.select(
-                F.pmod(
-                    F.hash(*[F.col(c) for c in bucket_cols]),
-                    F.lit(n_buckets),
-                ).alias("b")
+        if not keys:
+            return set()
+        if len(keys) <= self.KEY_PREDICATE_MAX:
+            probe = local_relation(
+                self.spark,
+                StructType([schema[c] for c in bucket_cols]),
+                [tuple(k[c] for c in bucket_cols) for k in keys],
             )
-            .distinct()
-            .collect()
-        }
+        else:
+            probe = self._key_probe_df(keys, schema, bucket_cols)
+        b = F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
+        return {r["b"] for r in probe.select(b.alias("b")).collect()}
 
     def _select_buckets(
         self,

@@ -11,6 +11,8 @@ stale data)."""
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 import pytest
 
 
@@ -570,3 +572,182 @@ class TestRangeReadTombstones:
         # without the flag, semantics are unchanged: live in-range rows only
         live = table.read(ranges={"ts": (100, 104)})
         assert {r.conv_id for r in live.collect()} == {"c0", "c1", "c2", "c4"}
+
+
+def _jobs_of(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched on this thread)."""
+    sc = spark.sparkContext
+    group = f"probe-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stored_bucket_ids(spark, m, cols):
+    """{key tuple of ``cols``: (bucket dir it is stored in,
+    pmod(hash(cols), n_buckets) computed by Spark over the stored row)}
+    for every row of manifest ``m``."""
+    from pyspark.sql import functions as F
+
+    n = int(m["n_buckets"])
+    dir_of = {p: int(b) for b, fl in m["files"].items() for p in fl}
+    files = [p for fl in m["files"].values() for p in fl]
+    rows = (
+        spark.read.parquet(*files)
+        .select(
+            *cols,
+            F.pmod(F.hash(*cols), F.lit(n)).alias("_h"),
+            F.input_file_name().alias("_f"),
+        )
+        .collect()
+    )
+    return {
+        tuple(r[c] for c in cols): (dir_of[unquote(urlparse(r["_f"]).path)], r["_h"])
+        for r in rows
+    }
+
+
+class TestDriverSideBucketIds:
+    """Up to KEY_PREDICATE_MAX probe tuples, a keyed read's bucket ids are
+    Spark's own pmod(hash(...)) evaluated over a driver-local relation:
+    no Spark job, and the same ids the merge wrote the rows under."""
+
+    TYPED = (
+        "s string, i int, l bigint, d decimal(12,3), dt date, ts timestamp, "
+        "v string, _deleted boolean, _gtid bigint, _event_seq bigint, "
+        "_event_row_index bigint"
+    )
+    KEYS = ["s", "i", "l", "d", "dt", "ts"]
+
+    def _typed_rows(self):
+        import datetime as dtm
+        from decimal import Decimal
+
+        rows = [
+            (
+                f"k{j}", j - 3, (j - 3) * 2**40, Decimal(f"{j * 7 - 20}.{j:03d}"),
+                dtm.date(2020, 1, 1) + dtm.timedelta(days=37 * j),
+                dtm.datetime(2021, 3, 14, 1, 59, 26, 5000 * j)
+                + dtm.timedelta(hours=11 * j),
+            )
+            for j in range(8)
+        ]
+        # a NULL in every key part, one part at a time
+        rows += [
+            tuple(None if c == n else v for c, v in enumerate(rows[n]))
+            for n in range(len(self.KEYS))
+        ]
+        return rows
+
+    def test_small_probe_runs_no_job_and_plans_local_scan(self, spark, table):
+        from pyspark.sql import DataFrame
+
+        table.merge(
+            _mk_changes(
+                spark, [(f"c{i}", 0, f"v{i}", i, 1, False) for i in range(30)]
+            ),
+            batch_id=0,
+        )
+        m = table.snapshot_manifest()
+        schema = table.read(include_meta=True).schema
+        keys = [{"conv_id": f"c{i}", "turn_idx": 0} for i in (3, 11, 27)]
+        plans = []
+        cls = type(spark.range(1))
+        real_collect = cls.collect
+
+        def spy(df: DataFrame):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return real_collect(df)
+
+        cls.collect = spy
+        try:
+            ids, jobs = _jobs_of(
+                spark,
+                lambda: table._buckets_for_keys(
+                    keys, schema, 16, ["conv_id", "turn_idx"]
+                ),
+            )
+        finally:
+            cls.collect = real_collect
+        assert jobs == []
+        assert len(plans) == 1 and plans[0].startswith("LocalTableScan")
+        stored = _stored_bucket_ids(spark, m, ["conv_id", "turn_idx"])
+        assert ids == {stored[(k["conv_id"], 0)][0] for k in keys}
+        # the job counter does see the read itself
+        rows, jobs = _jobs_of(spark, lambda: table.read(keys=keys).collect())
+        assert len(rows) == 3 and jobs
+
+    def test_ids_match_stored_rows_per_key_type(self, spark, tmp_path):
+        """Every key type, NULL key parts and a non-UTC session zone: the
+        driver-side id of each stored row's key is the bucket the merge
+        wrote it to, and Spark's pmod(hash) over the stored row."""
+        from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+
+        zone = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            t = BucketedLakeTable(spark, str(tmp_path / "typed"), self.KEYS, n_buckets=16)
+            rows = self._typed_rows()
+            t.merge(
+                spark.createDataFrame(
+                    [r + (f"v{n}", False, 1, 1, n) for n, r in enumerate(rows)],
+                    self.TYPED,
+                ),
+                batch_id=0,
+            )
+            m = t.snapshot_manifest()
+            schema = t.read(include_meta=True).schema
+            stored = _stored_bucket_ids(spark, m, self.KEYS)
+            assert len(stored) == len(rows)
+            keys = [dict(zip(self.KEYS, r)) for r in rows]
+            for key, r in zip(keys, rows):
+                want = stored[r]
+                assert want[0] == want[1]
+                assert t._buckets_for_keys([key], schema, 16, self.KEYS) == {want[0]}
+            got = t.read(keys=keys).select(*self.KEYS).collect()
+            assert sorted(map(tuple, got), key=repr) == sorted(rows, key=repr)
+            # one key type at a time, hashed against the stored rows
+            for c in self.KEYS:
+                by_c = _stored_bucket_ids(spark, m, [c])
+                got = t._buckets_for_keys(
+                    [{c: v} for (v,) in by_c], schema, 16, [c]
+                )
+                assert got == {h for _, h in by_c.values()}, c
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+
+    def test_group_lookup_and_time_travel_across_rebucket(self, spark, table):
+        """A bucket_cols=["conv_id"] group lookup hashes the group column;
+        an at_version read from before a rebucket hashes that snapshot's
+        full-key, 16-bucket layout."""
+        table.merge(
+            _mk_changes(
+                spark,
+                [(f"c{i}", j, f"v{i}.{j}", i, 1, False)
+                 for i in range(12) for j in range(2)],
+            ),
+            batch_id=0,
+        )
+        m_old = table.snapshot_manifest()
+        schema = table.read(include_meta=True).schema
+        table.rebucket(8, bucket_cols=["conv_id"])
+        m_new = table.snapshot_manifest()
+
+        full = _stored_bucket_ids(spark, m_old, ["conv_id", "turn_idx"])
+        keys = [{"conv_id": "c4", "turn_idx": 1}, {"conv_id": "c9", "turn_idx": 0}]
+        hit = table._select_buckets(m_old, schema, keys=keys)
+        assert set(map(int, hit)) == {
+            full[(k["conv_id"], k["turn_idx"])][0] for k in keys
+        }
+        old = table.read(at_version=m_old["version"], keys=keys)
+        assert _rows(old) == {("c4", 1, "v4.1", 4), ("c9", 0, "v9.0", 9)}
+
+        grp = _stored_bucket_ids(spark, m_new, ["conv_id"])
+        hit = table._select_buckets(m_new, schema, keys=[{"conv_id": "c4"}])
+        assert set(map(int, hit)) == {grp[("c4",)][0]} == {grp[("c4",)][1]}
+        assert _rows(table.read(keys={"conv_id": "c4"})) == {
+            ("c4", 0, "v4.0", 4), ("c4", 1, "v4.1", 4)
+        }

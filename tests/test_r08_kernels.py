@@ -252,6 +252,29 @@ class TestAssignCells:
         }
         assert got == ref
 
+    def test_train_cap_raises_before_collecting(self, spark, monkeypatch):
+        """An over-cap training sample raises before the driver holds more
+        than cap + 1 of its rows."""
+        from myzql_binlog_connector_spark.operators import similarity
+
+        emb = similarity.clustered_embeddings(spark, n=300, n_clusters=5)
+        cap = 5  # stride 50 samples every 6th id: 50 rows
+        monkeypatch.setattr(similarity, "KMEANS_TRAIN_CAP", cap)
+        collected = []
+        cls = type(emb)
+        for name in ("collect", "take", "tail", "toLocalIterator"):
+            real = getattr(cls, name)
+
+            def spy(df, *a, _real=real, **kw):
+                out = list(_real(df, *a, **kw))
+                collected.append(len(out))
+                return out
+
+            monkeypatch.setattr(cls, name, spy)
+        with pytest.raises(ValueError, match="cap 5"):
+            similarity._kmeans_centroids_np(emb, 50, "vec_id", "embedding", 64)
+        assert all(n <= cap + 1 for n in collected)
+
     def test_round4_half_away_from_zero(self):
         import numpy as np
 
