@@ -28,7 +28,7 @@ from myzql_binlog_connector_spark.functions.position import (
 )
 from myzql_binlog_connector_spark.functions.table_filter import TableFilter
 from myzql_binlog_connector_spark.operators import fuzzy, sampling, similarity, text as T
-from myzql_binlog_connector_spark.operators.dedup import lww_dedup, lww_dedup_salted
+from myzql_binlog_connector_spark.operators.dedup import lww_dedup
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -376,8 +376,11 @@ def q_lww_dedup_events(spark, sf_dir):
 
 
 def q_lww_dedup_salted_events(spark, sf_dir):
+    # same reducer as q_lww_dedup_events: lww_dedup's map-side partial
+    # aggregate already bounds a hot key at one row per task, so nothing is
+    # salted; the leaf keeps its name so bench results stay comparable
     ev = _read(spark, sf_dir, "events")
-    latest = lww_dedup_salted(ev, ["user_id", "event_type"], ["ts", "event_id"], salt=8)
+    latest = lww_dedup(ev, ["user_id", "event_type"], ["ts", "event_id"])
     return latest.select("user_id", "event_type", "event_id", "value")
 
 

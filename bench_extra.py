@@ -6,8 +6,8 @@ section.  Usage:
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [section ...]
 
-Sections: minhash, ivf, decon, lww, normalize, aligned, decode_shuffle,
-replica (default: all).  Same env contract as bench.py
+Sections: minhash, ivf, decon, lww, normalize, decode_shuffle, replica
+(default: all).  Same env contract as bench.py
 ($SPARK_GRAFT_SF_DIR, $SPARK_GRAFT_CPUS); every A/B interleaves its arms
 inside one window (the Appendix-D/G/I methodology) so host drift hits
 both sides equally.
@@ -186,38 +186,6 @@ def sec_normalize(spark, sf_dir):
     print(json.dumps({"section": "normalize", "paired_trials": trials}))
 
 
-def sec_aligned(spark, sf_tag):
-    """Paired A/B: flagship replay with two-shuffle vs aligned one-shuffle
-    merge (the round-8 default flip)."""
-    from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
-    from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
-
-    seg_dir, _ = ensure_cdc_fixture(sf_tag)
-    paths = sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))
-
-    def run(aligned):
-        run_dir = scratch_dir("bx_al_")
-        try:
-            t0 = time.monotonic()
-            table = BucketedLakeTable(
-                spark, run_dir, ["conv_id", "turn_idx"], n_buckets=32,
-                aligned_writes=aligned,
-            )
-            TranscriptsApplier(spark, table).apply_files(
-                paths, batch_id=0
-            )
-            table.read().count()
-            return round(time.monotonic() - t0, 3)
-        finally:
-            shutil.rmtree(run_dir, ignore_errors=True)
-
-    run(True)  # warm
-    trials = [
-        {"two_shuffle": run(False), "aligned": run(True)} for _ in range(3)
-    ]
-    print(json.dumps({"section": "aligned_merge", "paired_trials": trials}))
-
-
 def sec_decode_shuffle(spark, sf_tag):
     """Paired A/B: hash- vs range-partitioned segment co-location in
     decode_changes (the round-8 skew fix)."""
@@ -268,10 +236,7 @@ def sec_replica(spark, sf_tag):
         COMMIT_VERSION_COL,
         LakeChangesDataSource,
     )
-    from myzql_binlog_connector_spark.streaming.replica import (
-        ORDER_COLS,
-        replicate,
-    )
+    from myzql_binlog_connector_spark.streaming.replica import replicate
 
     seg_dir, n_ops = ensure_cdc_fixture(sf_tag)
     paths = sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))
@@ -300,11 +265,7 @@ def sec_replica(spark, sf_tag):
             spark, dst_dir, ["conv_id", "turn_idx"], n_buckets=32
         )
         out["direct_merge_sec"] = _t(
-            lambda: dst.merge(
-                feed.drop(COMMIT_VERSION_COL),
-                order_cols=list(ORDER_COLS),
-                batch_id="bx",
-            )
+            lambda: dst.merge(feed.drop(COMMIT_VERSION_COL), batch_id="bx")
         )
 
         dst2_dir, ckpt = scratch_dir("bx_repl_dst2_"), scratch_dir("bx_ck_")
@@ -346,7 +307,6 @@ SECTIONS = {
     "decon": ("sf_dir", sec_decon),
     "lww": ("sf_dir", sec_lww),
     "normalize": ("sf_dir", sec_normalize),
-    "aligned": ("sf_tag", sec_aligned),
     "decode_shuffle": ("sf_tag", sec_decode_shuffle),
     "replica": ("sf_tag", sec_replica),
 }

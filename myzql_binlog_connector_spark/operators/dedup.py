@@ -1,11 +1,11 @@
-"""Last-writer-wins dedup (SURVEY.md §2.4 A4) with skew salting (§2.6 T8).
+"""Last-writer-wins dedup (SURVEY.md §2.4 A4) and its skew bound (§2.6 T8).
 
-The north-rule dedup: within each key partition keep the change with the
-highest ``(gtid, event_seq, event_row_index)``.  Plain form is a single
-ranking window; the salted form breaks hot-key window partitions into
-``salt`` sub-partitions, reduces each locally, then resolves the ≤salt
-survivors — same result, bounded per-task skew (window partitions are not
-covered by AQE skew-join splitting, so salting is explicit).
+The north-rule dedup: within each key keep the change with the highest
+``(gtid, event_seq, event_row_index)``.  :func:`lww_dedup` is the
+package's one LWW reducer — a ``max_by`` hash aggregate; the lake's
+merge, fold, compaction, rebucket and merge-on-read paths and the
+Iceberg applier all call it.  Hot keys need no salting: the aggregate's
+map-side partial bounds any one task's state at one row per key.
 """
 
 from __future__ import annotations
@@ -20,8 +20,7 @@ def lww_dedup(
     key_cols: list[str],
     order_cols: list[str] = list(DEFAULT_ORDER),
 ) -> DataFrame:
-    """Keep exactly the last writer per key: a ``max_by`` hash aggregate
-    (the same shape the lake's merge-on-read ``_lww`` uses).
+    """Keep exactly the last writer per key: a ``max_by`` hash aggregate.
 
     Round 8: replaced the ranking-window form — a window must shuffle and
     SORT every input row inside each key partition, while the aggregate
@@ -41,38 +40,6 @@ def lww_dedup(
         .agg(F.max_by(row, ordc).alias("_row"))
         .select("_row.*")
     )
-
-
-def lww_dedup_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str] = list(DEFAULT_ORDER),
-    salt: int = 16,
-) -> DataFrame:
-    """Two-phase LWW for skewed keys.
-
-    Phase 1 partitions by (key, salt_bucket) — a hot key's rows spread
-    over ``salt`` tasks, each keeping one local winner (ranking window:
-    an A/B against a phase-1 ``max_by`` aggregate showed the aggregate
-    form consistently SLOWER here — the two-level struct rebuild defeats
-    Catalyst's nested-column pruning, while the window sorts once and
-    keeps columns flat).  Phase 2 resolves the ≤salt winners per key via
-    :func:`lww_dedup`'s max_by aggregate.  The salt is derived from the
-    order columns so it is deterministic and result-invariant (verified
-    by tests against :func:`lww_dedup`).  At 10^10 events with a few
-    viral conversations this bounds the largest window partition by a
-    factor of ``salt``.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
-    )
-    w1 = Window.partitionBy(*key_cols, "_salt").orderBy(*[F.desc(c) for c in order_cols])
-    local = (
-        salted.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_salt")
-    )
-    return lww_dedup(local, key_cols, order_cols)
 
 
 def exact_dedup(df: DataFrame, cols: list[str] | None = None, keep_col: str | None = None) -> DataFrame:

@@ -537,15 +537,14 @@ def _doc_shingle_sets(docs, text_col: str, id_col: str, shingle_k: int):
     collide because no real byte is 0).  One ``mapInArrow`` computes every
     doc's packed window values straight off the Arrow string buffer
     (5 shift-or passes over the byte buffer for the whole batch), dedupes
-    per doc with a single composite ``np.unique``, and emits the list
-    column — NO explode, NO per-shingle hash, NO shuffle, and exact
+    per doc with a composite ``np.unique`` per slice of docs, and emits the
+    list column — NO explode, NO per-shingle hash, NO shuffle, and exact
     (injective beats any hash).  The prior shape exploded one row per
     character position, ran md5+conv per row, and paid a corpus-wide
     ``collect_set`` shuffle.
 
-    Fallback (``shingle_k`` > 6, packing would overflow the composite
-    key): the explode + xxhash64 + collect_set shape — one shuffle,
-    collision probability ~|doc|²/2^65 per pair."""
+    Fallback (``shingle_k`` > 6): the explode + xxhash64 + collect_set
+    shape — one shuffle, collision probability ~|doc|²/2^65 per pair."""
     import numpy as np
     import pyarrow as pa
 
@@ -651,11 +650,20 @@ def _packed_doc_shingles(txt, n: int, k: int):
             v = (v << 8) | b
         doc_of = np.concatenate((doc_of, sidx.astype(np.int64)))
         vals = np.concatenate((vals, v))
-    # composite (doc, sid) dedupe in one sort: k ≤ 6 ⇒ sid < 2^48,
-    # batch doc index < 2^14 ⇒ the composite fits int64
-    comp = np.unique((doc_of << (8 * k)) | vals)
-    doc_u = comp >> (8 * k)
-    val_u = comp & ((np.int64(1) << (8 * k)) - 1)
+    # composite (doc, value) dedupe, one np.unique per slice of docs: a
+    # value takes 8k bits, so a slice of 2^(63-8k) docs (32,768 at k=6)
+    # keeps (doc - lo) << 8k | value inside int64.  A two-key lexsort
+    # needs no slicing but was ~3.5x slower on 10k-doc batches.
+    bits = 8 * k
+    step = 1 << (63 - bits)
+    doc_parts, val_parts = [], []
+    for lo in range(0, n, step):
+        sel = (doc_of >= lo) & (doc_of < lo + step) if n > step else slice(None)
+        comp = np.unique(((doc_of[sel] - lo) << bits) | vals[sel])
+        doc_parts.append((comp >> bits) + lo)
+        val_parts.append(comp & ((np.int64(1) << bits) - 1))
+    doc_u = np.concatenate(doc_parts)
+    val_u = np.concatenate(val_parts)
     counts = np.bincount(doc_u, minlength=n)
     return doc_u, val_u, counts
 

@@ -102,7 +102,13 @@ def shingle_hash_rows(df, text_col: str, id_col: str, k: int):
     dtypes = dict(df.dtypes)
 
     def hash_fn(batches):
+        import pyarrow.compute as pc
+
         for rb in batches:
+            if rb.column(1).null_count:
+                # NULL text has no shingles (the minhash paths' contract):
+                # a NULL slot's empty value range would hash like ""
+                rb = rb.filter(pc.is_valid(rb.column(1)))
             n = rb.num_rows
             if n == 0:
                 continue

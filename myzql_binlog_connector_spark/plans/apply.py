@@ -17,6 +17,26 @@ from pyspark.sql import types as T
 from ..binlog.constants import ColumnType
 from .lake import BucketedLakeTable, local_relation
 
+
+def gate_redelivered(changes: DataFrame, wm: DataFrame) -> DataFrame:
+    """The exactly-once redelivery gate (T5/T6) both appliers share: drop
+    change rows at-or-below their file's stored watermark.  ``wm`` is the
+    small per-file_seq map ``(wm_file_seq, wm_log_pos, wm_eri)``; it is
+    broadcast, and a file with no watermark keeps all its rows."""
+    joined = changes.join(
+        F.broadcast(wm), changes["_file_seq"] == wm["wm_file_seq"], "left"
+    )
+    keep = (
+        F.col("wm_log_pos").isNull()
+        | (F.col("_log_pos") > F.col("wm_log_pos"))
+        | (
+            (F.col("_log_pos") == F.col("wm_log_pos"))
+            & (F.col("_event_row_index") > F.col("wm_eri"))
+        )
+    )
+    return joined.filter(keep).drop("wm_file_seq", "wm_log_pos", "wm_eri")
+
+
 # MySQL column-type code → Spark type for typed extraction (SURVEY.md §1.2)
 _CODE_TO_SPARK = {
     ColumnType.TINY: T.ByteType(),
@@ -584,20 +604,7 @@ class TranscriptsApplier:
             ),
             rows,
         )
-        joined = changes.join(
-            F.broadcast(wm_df),
-            changes["_file_seq"] == wm_df["wm_file_seq"],
-            "left",
-        )
-        keep = (
-            F.col("wm_log_pos").isNull()
-            | (F.col("_log_pos") > F.col("wm_log_pos"))
-            | (
-                (F.col("_log_pos") == F.col("wm_log_pos"))
-                & (F.col("_event_row_index") > F.col("wm_eri"))
-            )
-        )
-        return joined.filter(keep).drop("wm_file_seq", "wm_log_pos", "wm_eri")
+        return gate_redelivered(changes, wm_df)
 
     def apply_envelope_subset(
         self, envelope: DataFrame, batch_id: int | None, descs: list[str]

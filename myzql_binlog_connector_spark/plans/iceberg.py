@@ -32,13 +32,17 @@ guard, evolution) through THIS class against a fake engine implementing
 only the emitted SQL shapes, parameterized alongside the local
 BucketedLakeTable pipeline — both must produce identical state.  Risks
 only a real Iceberg runtime can exercise: MERGE cardinality enforcement
-(duplicate source keys — prevented here by the max_by pre-reduce),
+(duplicate source keys — prevented here by the lww_dedup pre-reduce),
 concurrent-commit conflict resolution/retries, and catalog interactions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..operators.dedup import lww_dedup
+from .apply import gate_redelivered
+from .lake import ORDER_COLS
 
 
 class IcebergNotAvailable(RuntimeError):
@@ -109,7 +113,7 @@ class IcebergApplier:
 
     def merge_sql(self, columns: list[str]) -> str:
         """LWW MERGE statement for a pre-reduced change batch."""
-        order = ["_gtid", "_event_seq", "_event_row_index"]
+        order = list(ORDER_COLS)
         on = " AND ".join(f"t.{k} = s.{k}" for k in self.key_cols)
         payload_cols = [c for c in columns if not c.startswith("_")] + order
         set_sql = ", ".join(f"t.{c} = s.{c}" for c in payload_cols)
@@ -164,38 +168,25 @@ class IcebergApplier:
         through WHEN NOT MATCHED — the per-row gtid guard only protects
         matched rows.  Watermarks are written after the data commit; a
         crash between the two re-merges only the last batch, which the
-        batch-internal max_by pre-reduce + gtid guard keep idempotent."""
-        from pyspark.sql import functions as F
-
+        batch-internal lww_dedup pre-reduce + gtid guard keep idempotent."""
         try:
             wm = self.spark.table(self.wm_table())
         except Exception:
             return typed
-        wm = wm.select(
-            F.col("file_seq").alias("wm_file_seq"),
-            F.col("log_pos").alias("wm_log_pos"),
-            F.col("event_row_index").alias("wm_eri"),
+        return gate_redelivered(
+            typed,
+            wm.select(
+                F.col("file_seq").alias("wm_file_seq"),
+                F.col("log_pos").alias("wm_log_pos"),
+                F.col("event_row_index").alias("wm_eri"),
+            ),
         )
-        joined = typed.join(
-            F.broadcast(wm), typed["_file_seq"] == wm["wm_file_seq"], "left"
-        )
-        keep = (
-            F.col("wm_log_pos").isNull()
-            | (F.col("_log_pos") > F.col("wm_log_pos"))
-            | (
-                (F.col("_log_pos") == F.col("wm_log_pos"))
-                & (F.col("_event_row_index") > F.col("wm_eri"))
-            )
-        )
-        return joined.filter(keep).drop("wm_file_seq", "wm_log_pos", "wm_eri")
 
     def apply_batch(self, typed: DataFrame, batch_id: int | None = None) -> dict:
         """LWW MERGE of a typed change batch (same input as
         TranscriptsApplier._merge_typed): watermark-gate redelivered rows,
-        pre-reduce per key (max_by), one MERGE INTO, then commit the new
-        watermarks to the side table."""
-        from pyspark.sql import functions as F
-
+        pre-reduce per key (:func:`lww_dedup`), one MERGE INTO, then commit
+        the new watermarks to the side table."""
         self.ensure_table(typed)
         self.evolve(typed)
         self.spark.sql(self.wm_create_sql())
@@ -209,15 +200,9 @@ class IcebergApplier:
             )
             if not wm_rows:
                 return {"batch_id": batch_id, "table": self.table, "skipped": True}
-            order = ["_gtid", "_event_seq", "_event_row_index"]
-            row_struct = F.struct(*[F.col(c) for c in fresh.columns])
-            ord_struct = F.struct(*[F.col(c) for c in order])
-            best = (
-                fresh.groupBy(*self.key_cols)
-                .agg(F.max_by(row_struct, ord_struct).alias("_r"))
-                .select("_r.*")
+            lww_dedup(fresh, self.key_cols, ORDER_COLS).createOrReplaceTempView(
+                "_changes_batch"
             )
-            best.createOrReplaceTempView("_changes_batch")
             self.spark.sql(self.merge_sql(fresh.columns))
 
             self.spark.createDataFrame(

@@ -6,15 +6,18 @@ table.  This sandbox has no Iceberg runtime jar, so the engine ships a
 self-contained hash-bucketed parquet table with atomic manifest commits that
 exposes the same contract (`merge`, schema evolution, snapshot isolation,
 per-commit lineage/metrics, watermarks).  On a real cluster the
-:class:`IcebergApplier` in ``plans/apply.py`` swaps in `MERGE INTO` with no
+:class:`IcebergApplier` in ``plans/iceberg.py`` swaps in `MERGE INTO` with no
 change to the pipeline.
 
 Design for 100 TB:
 
-  * **Hash-bucket layout** — rows live in ``data/bucket=K/`` by
-    ``pmod(hash(key), n_buckets)``.  A merge touches only the buckets that
-    contain changed keys; untouched buckets are carried forward by manifest
-    reference — zero read/write amplification on cold data.
+  * **Hash-bucket layout** — bucket K holds the rows whose
+    ``pmod(hash(key), n_buckets)`` is K; each write lands them in
+    ``_bucket=K/`` under a writer-unique ``data/v{N}…-{uuid}/`` dir, and
+    the manifest lists every bucket's files.  A merge touches only the
+    buckets that contain changed keys; untouched buckets are carried
+    forward by manifest reference — zero read/write amplification on cold
+    data.
   * **Tombstoned LWW, merge-on-read** — every row carries
     ``(_gtid, _event_seq, _event_row_index, _deleted)``.  A merge *appends*
     the (batch-reduced) change rows as new files in their buckets — write
@@ -47,9 +50,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from ..operators.dedup import lww_dedup
+
 MANIFEST_DIR = "_manifests"
 LATEST = "LATEST"
 META_COLS = ("_gtid", "_event_seq", "_event_row_index", "_deleted")
+# the LWW order: per key the change with the highest tuple wins
+ORDER_COLS = ("_gtid", "_event_seq", "_event_row_index")
+# hot merge-on-read table: snappy (Delta's default) — decode speed dominates
+# read cost and merge wall-time beats ~1.5x file size on a CDC-applied table
+# that compaction rewrites anyway.  Set on every write, so a session-wide
+# parquet codec (bench.py runs zstd) never leaks into lake files.
+CODEC = "snappy"
 
 # permitted type widenings (Iceberg-compatible set)
 _WIDEN = {
@@ -262,9 +274,7 @@ class BucketedLakeTable:
         key_cols: list[str],
         n_buckets: int = 64,
         max_files_per_bucket: int = 8,
-        aligned_writes: bool = True,
         hot_bucket_split_rows: int = 1 << 18,
-        codec: str = "snappy",
         auto_fold: bool = True,
         stats_cols: list[str] | None = None,
         lineage_keep: int = 200,
@@ -300,23 +310,6 @@ class BucketedLakeTable:
         # batch in few buckets (e.g. a single-column key with a viral key,
         # or unlucky hash clustering).
         self.hot_bucket_split_rows = hot_bucket_split_rows
-        # hot merge-on-read table: snappy (Delta's default) — decode speed
-        # dominates read cost and merge wall-time beats ~1.5x file size on
-        # a CDC-applied table that compaction rewrites anyway.  Archives
-        # that want zstd pass codec="zstd".
-        self.codec = codec
-        # aligned_writes: merge with ONE shuffle by repartitioning on the
-        # keys into exactly n_buckets partitions (Murmur3 pmod n_buckets ==
-        # the bucket function, so partition i IS bucket i and the
-        # partitionBy write needs no second shuffle).  On a real cluster
-        # this halves merge network traffic; default ON since round 8 —
-        # a paired same-window A/B of the flagship 3.2M-row merge at
-        # local[32] had the one-shuffle plan ahead in every trial
-        # (−13/−38/−21%), so the old "second shuffle is nearly free on a
-        # shared-memory box" rationale no longer held.  Small batches
-        # (< n_buckets×512 rows) and hot-bucket batches still take the
-        # two-shuffle path via the `aligned` gate in merge().
-        self.aligned_writes = aligned_writes
         # auto_fold=False defers the inline fold (the one O(bucket-history)
         # step a merge can take — the round-6 endurance run measured it at
         # ~8x a normal batch when every bucket crosses the threshold at
@@ -726,17 +719,6 @@ class BucketedLakeTable:
             cond = e if cond is None else (cond & e)
         return part.join(probe, on=cond, how="leftsemi")
 
-    def _lww(self, df: DataFrame, schema: StructType) -> DataFrame:
-        """Resolve last-writer-wins per key (merge-on-read).  max_by hash
-        aggregate — map-side partial aggregation, no ranking window."""
-        row_struct = F.struct(*[F.col(f_.name) for f_ in schema.fields])
-        ord_struct = F.struct(F.col("_gtid"), F.col("_event_seq"), F.col("_event_row_index"))
-        return (
-            df.groupBy(*self.key_cols)
-            .agg(F.max_by(row_struct, ord_struct).alias("_row"))
-            .select("_row.*")
-        )
-
     def read(
         self,
         include_tombstones: bool = False,
@@ -822,7 +804,7 @@ class BucketedLakeTable:
             part = self._read_files(multi, m["schema"])
             if keys:
                 part = self._apply_keys(part, keys, schema, probe_cols)  # pre-LWW: commutes
-            parts.append(range_filter(self._lww(part, schema)))
+            parts.append(range_filter(lww_dedup(part, self.key_cols, ORDER_COLS)))
         if not parts:
             parts = [self._read_files([], m["schema"])]
         df = parts[0]
@@ -1039,10 +1021,39 @@ class BucketedLakeTable:
             F.hash(*[F.col(c) for c in self.bucket_cols]), F.lit(self.n_buckets)
         )
 
+    def _write_buckets(self, df: DataFrame, tag: str, buckets) -> dict:
+        """Write ``df`` (carrying ``_bucket``, already partitioned and
+        sorted by the caller) as snappy parquet partitioned by bucket;
+        return ``{str(bucket): [files]}`` for each of ``buckets`` (an empty
+        list where the write produced none).
+
+        The dir is writer-unique, ``data/{tag}-{uuid}``: two racers both
+        computing version N must never share a directory — mode
+        ("overwrite") from the loser would otherwise delete the winner's
+        already-committed parquet files if its write lands after the
+        winner's commit.  The manifest records absolute file paths, so
+        readers never depend on the dir name, and vacuum reclaims a loser's
+        orphaned dir (unreferenced by any retained manifest)."""
+        out_dir = os.path.join(self.path, "data", f"{tag}-{uuid.uuid4().hex[:8]}")
+        (
+            df.write.mode("overwrite")
+            .option("compression", CODEC)
+            .partitionBy("_bucket")
+            .parquet(out_dir)
+        )
+        out = {}
+        for b in buckets:
+            bdir = os.path.join(out_dir, f"_bucket={b}")
+            out[str(b)] = (
+                [os.path.join(bdir, x) for x in os.listdir(bdir) if x.endswith(".parquet")]
+                if os.path.isdir(bdir)
+                else []
+            )
+        return out
+
     def merge(
         self,
         changes: DataFrame,
-        order_cols: list[str] = ("_gtid", "_event_seq", "_event_row_index"),
         batch_id: int | None = None,
         extra_lineage: dict | None = None,
         input_cached: bool = False,
@@ -1058,8 +1069,6 @@ class BucketedLakeTable:
         Returns the commit's lineage/metrics record.
         """
         t0 = time.monotonic()
-        spark = self.spark
-        order_cols = list(order_cols)
 
         m = self._read_manifest() if self.exists() else None
         pre_layout = (self.n_buckets, list(self.bucket_cols))
@@ -1166,88 +1175,53 @@ class BucketedLakeTable:
         # rewritten — write cost is O(batch), readers resolve LWW across a
         # bucket's files, and the fold below bounds how many there can be.
         #
-        # ONE shuffle total: repartition(n_buckets, keys) hash-partitions by
-        # Murmur3(keys) pmod n_buckets — exactly the bucket function — so
-        # the aggregate reuses that partitioning (ClusteredDistribution is
-        # already satisfied) and partition i holds precisely bucket i; the
-        # partitionBy write then needs no second shuffle and still produces
-        # one file per dirty bucket.
-        row_struct = F.struct(*[F.col(f_.name) for f_ in schema.fields])
-        ord_struct = F.struct(*[F.col(c) for c in order_cols])
-        # small batches (streaming micro-batches): the bucket-aligned plan
-        # would spawn n_buckets near-empty write tasks; a cheap second
-        # shuffle over the few dirty buckets wins there
-        # hot batches drop out of the aligned plan: partition i == bucket i
-        # means a hot bucket IS one giant task there, and the alignment
-        # trick can't salt within a partition
-        aligned = (
-            self.aligned_writes and n_changes >= self.n_buckets * 512 and not hot
+        # Big batches take ONE shuffle: repartition(n_buckets, bucket_cols)
+        # hash-partitions by Murmur3(bucket_cols) pmod n_buckets — exactly
+        # the bucket function — and HashPartitioning on a subset of the
+        # grouping keys still satisfies the aggregate's
+        # ClusteredDistribution (equal full key ⇒ equal subset ⇒ same
+        # partition), so the groupBy reuses that one exchange, partition i
+        # holds precisely bucket i, and the partitionBy write needs no
+        # second shuffle.  Small batches (streaming micro-batches) would
+        # spawn n_buckets near-empty write tasks on that plan, so a cheap
+        # second shuffle over the few dirty buckets wins there; hot batches
+        # drop out too — partition i == bucket i makes a hot bucket one
+        # giant task, and the alignment can't salt within a partition.
+        aligned = n_changes >= self.n_buckets * 512 and not hot
+        src = (
+            changes.repartition(self.n_buckets, *[F.col(c) for c in self.bucket_cols])
+            if aligned
+            else changes
         )
-        if aligned:
-            # repartition on bucket_cols: Murmur3(bucket_cols) pmod
-            # n_buckets IS the bucket function, and HashPartitioning on a
-            # subset of the grouping keys still satisfies the aggregate's
-            # ClusteredDistribution (equal full key ⇒ equal subset ⇒ same
-            # partition), so the groupBy below reuses this one exchange
+        reduced = lww_dedup(src, self.key_cols, ORDER_COLS).withColumn(
+            "_bucket", bucket_expr
+        )
+        if hot_splits:
+            # split each hot bucket's write across ~count/split_rows
+            # tasks: a per-key salt (different hash seed than the
+            # bucket fn) fans its rows over extra partitions; files
+            # still land under the single _bucket=b directory, and
+            # readers/manifest already handle multi-file buckets
+            salt_col = F.lit(0)
+            for b, nsplit in hot_splits.items():
+                salt_col = F.when(
+                    F.col("_bucket") == b,
+                    F.pmod(
+                        F.hash(*[F.col(c) for c in self.key_cols], F.lit(21557)),
+                        F.lit(nsplit),
+                    ),
+                ).otherwise(salt_col)
+            extra = sum(n - 1 for n in hot_splits.values())
             reduced = (
-                changes.repartition(
-                    self.n_buckets, *[F.col(c) for c in self.bucket_cols]
-                )
-                .groupBy(*self.key_cols)
-                .agg(F.max_by(row_struct, ord_struct).alias("_row"))
-                .select("_row.*")
-                .withColumn("_bucket", bucket_expr)
+                reduced.withColumn("_salt", salt_col)
+                .repartition(max(len(dirty) + extra, 1), "_bucket", "_salt")
+                .drop("_salt")
             )
-        else:
-            reduced = (
-                changes.groupBy(*self.key_cols)
-                .agg(F.max_by(row_struct, ord_struct).alias("_row"))
-                .select("_row.*")
-                .withColumn("_bucket", bucket_expr)
-            )
-            if hot_splits:
-                # split each hot bucket's write across ~count/split_rows
-                # tasks: a per-key salt (different hash seed than the
-                # bucket fn) fans its rows over extra partitions; files
-                # still land under the single _bucket=b directory, and
-                # readers/manifest already handle multi-file buckets
-                salt_col = F.lit(0)
-                for b, nsplit in hot_splits.items():
-                    salt_col = F.when(
-                        F.col("_bucket") == b,
-                        F.pmod(
-                            F.hash(
-                                *[F.col(c) for c in self.key_cols], F.lit(21557)
-                            ),
-                            F.lit(nsplit),
-                        ),
-                    ).otherwise(salt_col)
-                extra = sum(n - 1 for n in hot_splits.values())
-                reduced = (
-                    reduced.withColumn("_salt", salt_col)
-                    .repartition(max(len(dirty) + extra, 1), "_bucket", "_salt")
-                    .drop("_salt")
-                )
-            else:
-                reduced = reduced.repartition(max(len(dirty), 1), "_bucket")
+        elif not aligned:
+            reduced = reduced.repartition(max(len(dirty), 1), "_bucket")
 
         version = (m["version"] + 1) if m else 1
-        # Writer-unique data dir: two racers both computing version N must
-        # never share a directory — mode("overwrite") from the loser would
-        # otherwise delete the winner's already-committed parquet files if
-        # its write lands after the winner's commit.  The manifest records
-        # absolute file paths, so readers never depend on the dir name, and
-        # vacuum reclaims a loser's orphaned dir (unreferenced by any
-        # retained manifest).
-        out_dir = os.path.join(
-            self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
-        (
-            reduced.write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("_bucket")
-            .parquet(out_dir)
-        )
+        delta = self._write_buckets(reduced, f"v{version}", dirty)
         if not input_cached:
             changes.unpersist()
 
@@ -1255,12 +1229,7 @@ class BucketedLakeTable:
         written = []
         delta_files = []
         for b in dirty:
-            bdir = os.path.join(out_dir, f"_bucket={b}")
-            parts = (
-                [os.path.join(bdir, x) for x in os.listdir(bdir) if x.endswith(".parquet")]
-                if os.path.isdir(bdir)
-                else []
-            )
+            parts = delta[str(b)]
             new_files[str(b)] = old_files.get(str(b), []) + parts
             written.extend(parts)
             delta_files.extend(parts)
@@ -1271,27 +1240,18 @@ class BucketedLakeTable:
         ] if self.auto_fold else []
         if folded:
             fold_files = [p for b in folded for p in new_files[str(b)]]
-            fold_df = self._lww(self._read_files(fold_files, schema_json), schema)
-            fold_dir = os.path.join(
-                self.path, "data", f"v{version}_fold-{uuid.uuid4().hex[:8]}"
+            fold_df = lww_dedup(
+                self._read_files(fold_files, schema_json), self.key_cols, ORDER_COLS
             )
-            (
-                fold_df.withColumn("_bucket", bucket_expr)
-                .repartition(len(folded), "_bucket")
-                .write.mode("overwrite")
-                .option("compression", self.codec)
-                .partitionBy("_bucket")
-                .parquet(fold_dir)
+            refolded = self._write_buckets(
+                fold_df.withColumn("_bucket", bucket_expr).repartition(
+                    len(folded), "_bucket"
+                ),
+                f"v{version}_fold",
+                folded,
             )
-            for b in folded:
-                bdir = os.path.join(fold_dir, f"_bucket={b}")
-                parts = (
-                    [os.path.join(bdir, x) for x in os.listdir(bdir) if x.endswith(".parquet")]
-                    if os.path.isdir(bdir)
-                    else []
-                )
-                new_files[str(b)] = parts
-                written.extend(parts)
+            new_files.update(refolded)
+            written.extend(p for fl in refolded.values() for p in fl)
 
         bytes_written = sum(os.path.getsize(p) for p in written)
         file_stats = None
@@ -1429,18 +1389,14 @@ class BucketedLakeTable:
             return {"version": m["version"], "compacted_buckets": []}
 
         target_files = [p for b in targets for p in old_files[str(b)]]
-        df = self._lww(self._read_files(target_files, m["schema"]), schema)
+        df = lww_dedup(
+            self._read_files(target_files, m["schema"]), self.key_cols, ORDER_COLS
+        )
         if drop_tombstones_below is not None:
             df = df.filter(
                 (~F.col("_deleted")) | (F.col("_gtid") >= F.lit(drop_tombstones_below[0]))
             )
         df = df.withColumn("_bucket", self.bucket_expr())
-        version = m["version"] + 1
-        # writer-unique dir — same race rationale as merge(): a losing
-        # compactor's overwrite must never delete a winner's committed files
-        out_dir = os.path.join(
-            self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
         if zorder_by:
             if sort_by:
                 raise ValueError("pass sort_by or zorder_by, not both")
@@ -1481,19 +1437,7 @@ class BucketedLakeTable:
                 # >1 bucket, destroying the clustering this exists to
                 # create
                 out = out.sortWithinPartitions("_bucket", *sort_by)
-        out.write.mode("overwrite").option(
-            "compression", self.codec
-        ).partitionBy(
-            "_bucket"
-        ).parquet(out_dir)
-        new_parts = {}
-        for b in targets:
-            bdir = os.path.join(out_dir, f"_bucket={b}")
-            new_parts[str(b)] = (
-                [os.path.join(bdir, x) for x in os.listdir(bdir) if x.endswith(".parquet")]
-                if os.path.isdir(bdir)
-                else []
-            )
+        new_parts = self._write_buckets(out, f"v{m['version'] + 1}", targets)
         rewritten = [p for fl in new_parts.values() for p in fl]
         new_stats = (
             self._collect_stats(rewritten, self.stats_cols)
@@ -1591,9 +1535,10 @@ class BucketedLakeTable:
         new_bucket_cols = bucket_cols or self.bucket_cols
         if n_buckets == old_n and new_bucket_cols == self.bucket_cols:
             return {"version": m["version"], "rebucket": None}
-        schema = StructType.fromJson(json.loads(m["schema"]))
         all_files = [p for fl in m["files"].values() for p in fl]
-        df = self._lww(self._read_files(all_files, m["schema"]), schema)
+        df = lww_dedup(
+            self._read_files(all_files, m["schema"]), self.key_cols, ORDER_COLS
+        )
         df = df.withColumn(
             "_bucket",
             F.pmod(
@@ -1601,31 +1546,15 @@ class BucketedLakeTable:
             ),
         )
         version = m["version"] + 1
-        out_dir = os.path.join(
-            self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
         out = df.repartition(n_buckets, "_bucket")
         if self.stats_cols:
             out = out.sortWithinPartitions("_bucket", *self.stats_cols)
-        out.write.mode("overwrite").option(
-            "compression", self.codec
-        ).partitionBy("_bucket").parquet(out_dir)
-        files_map: dict = {}
-        written: list[str] = []
-        for b in range(n_buckets):
-            bdir = os.path.join(out_dir, f"_bucket={b}")
-            parts = (
-                [
-                    os.path.join(bdir, x)
-                    for x in os.listdir(bdir)
-                    if x.endswith(".parquet")
-                ]
-                if os.path.isdir(bdir)
-                else []
-            )
-            if parts:
-                files_map[str(b)] = parts
-                written.extend(parts)
+        files_map = {
+            b: fl
+            for b, fl in self._write_buckets(out, f"v{version}", range(n_buckets)).items()
+            if fl
+        }
+        written = [p for fl in files_map.values() for p in fl]
         record = {
             "version": version,
             "rebucket": [old_n, n_buckets],

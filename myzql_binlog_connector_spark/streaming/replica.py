@@ -42,8 +42,6 @@ from pyspark.sql import SparkSession
 from ..plans.lake import BucketedLakeTable
 from .feed import COMMIT_VERSION_COL, LakeChangesDataSource
 
-ORDER_COLS = ("_gtid", "_event_seq", "_event_row_index")
-
 
 def bootstrap(source: BucketedLakeTable, target: BucketedLakeTable) -> int:
     """Seed ``target`` with a pinned snapshot of ``source``; returns the
@@ -95,9 +93,7 @@ def replicate(
         if batch_df.isEmpty():
             return
         target.merge(
-            batch_df.drop(COMMIT_VERSION_COL),
-            order_cols=list(ORDER_COLS),
-            batch_id=f"feed-epoch-{epoch_id}",
+            batch_df.drop(COMMIT_VERSION_COL), batch_id=f"feed-epoch-{epoch_id}"
         )
 
     return (

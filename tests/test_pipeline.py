@@ -13,7 +13,6 @@ from myzql_binlog_connector_spark.genlog import (
     generate_stream,
     write_segments_parquet,
 )
-from myzql_binlog_connector_spark.operators.dedup import lww_dedup, lww_dedup_salted
 from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
 from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
 
@@ -60,9 +59,9 @@ class TestApplyState:
         assert got == want
 
     def test_aligned_writes_plan_same_state(self, spark, tmp_path):
-        """The one-shuffle cluster plan (aligned_writes=True: repartition on
-        the bucket function, so the LWW aggregate and the partitionBy write
-        reuse ONE exchange) must produce exactly the default plan's state.
+        """The one-shuffle cluster plan (repartition on the bucket
+        function, so the LWW aggregate and the partitionBy write reuse ONE
+        exchange) must produce exactly the ground-truth state.
         The stream is sized past the n_buckets*512 activation bound so the
         aligned branch genuinely runs (a small batch falls back)."""
         stream = generate_stream(seed=47, n_convs=800, n_segments=3)
@@ -72,7 +71,7 @@ class TestApplyState:
         assert n_ops >= 2 * 512  # over the activation bound at n_buckets=2
         table = BucketedLakeTable(
             spark, str(tmp_path / "t_aligned"), ["conv_id", "turn_idx"],
-            n_buckets=2, aligned_writes=True,
+            n_buckets=2,
         )
         rec = TranscriptsApplier(spark, table).apply_batch(env, batch_id=0)
         assert not rec.get("skipped")
@@ -205,16 +204,6 @@ class TestBoundedReplay:
         _, events, _ = stream_and_events
         tf = TableFilter(include=["other.table"])
         assert decode_changes(events, table_filter=tf).count() == 0
-
-
-class TestSaltingInvariance:
-    def test_salted_equals_plain(self, spark, stream_and_events):
-        _, events, _ = stream_and_events
-        env = decode_changes(events)
-        keys = ["database", "table_name", "event_row_index"]
-        plain = lww_dedup(env, keys).orderBy(*keys).collect()
-        salted = lww_dedup_salted(env, keys, salt=8).orderBy(*keys).collect()
-        assert plain == salted
 
 
 class TestSchemaEvolution:

@@ -6,6 +6,8 @@ allowed only there.)"""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -61,23 +63,35 @@ def test_aligned_merge_subset_bucket_cols_one_shuffle(spark):
     repartitioning on a SUBSET of the grouping keys must still satisfy the
     LWW aggregate's ClusteredDistribution (equal full key ⇒ equal subset ⇒
     same partition), so the merge keeps exactly ONE exchange.  If a Spark
-    upgrade ever stops recognizing subset satisfaction, this pins it."""
+    upgrade ever stops recognizing subset satisfaction, this pins it.
+    Built with the shipped reducer and order, as merge() builds it."""
     from pyspark.sql import functions as F
+
+    from myzql_binlog_connector_spark.operators.dedup import lww_dedup
+    from myzql_binlog_connector_spark.plans.lake import ORDER_COLS
 
     df = spark.createDataFrame(
         [("a", 0, "x", False, 1, 1, 1)],
         "conv_id string, turn_idx bigint, text string, _deleted boolean, "
         "_gtid bigint, _event_seq bigint, _event_row_index bigint",
     )
-    row = F.struct(*[F.col(c) for c in df.columns])
-    ordc = F.struct(
-        F.col("_gtid"), F.col("_event_seq"), F.col("_event_row_index")
-    )
-    plan = (
-        df.repartition(8, F.col("conv_id"))
-        .groupBy("conv_id", "turn_idx")
-        .agg(F.max_by(row, ordc).alias("_row"))
-        .select("_row.*")
+    plan = lww_dedup(
+        df.repartition(8, F.col("conv_id")), ["conv_id", "turn_idx"], ORDER_COLS
     )
     s = plan._jdf.queryExecution().executedPlan().toString()
     assert s.count("Exchange") == 1, s
+
+
+def test_lww_dedup_salted_events_has_no_window(spark):
+    """The salted LWW leaf runs the plain max_by reducer: no ranking-window
+    sort in its executed plan, and the same plan as the plain leaf."""
+    import __spark_entry__ as entry
+
+    def plan(name):
+        df = entry.queries()[name](spark, SF)
+        s = df._jdf.queryExecution().executedPlan().toString()
+        return re.sub(r"#\d+L?|plan_id=\d+", "", s)  # expression ids differ
+
+    salted = plan("lww_dedup_salted_events")
+    assert "Window" not in salted, salted
+    assert salted == plan("lww_dedup_events")

@@ -204,6 +204,59 @@ class TestRollingHashShingles:
         assert h[4] == h[5]
         assert h[1] != h[3] and h[1] != h[4]
 
+    def test_null_text_has_no_shingles(self, spark):
+        """A NULL doc emits no shingle row, so decontamination keeps it even
+        against a benchmark with an empty-text row ("" is a real shingle:
+        the empty doc matches it and is dropped)."""
+        from myzql_binlog_connector_spark.operators.text import (
+            decontaminate,
+            shingle_hash_rows,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, None), (2, "hello world"), (3, "")],
+            "doc_id bigint, text string",
+        )
+        bench = spark.createDataFrame([("",)], "text string")
+        ids = {r.doc_id for r in shingle_hash_rows(docs, "text", "doc_id", k=40).collect()}
+        assert ids == {2, 3}
+        kept = {r.doc_id for r in decontaminate(docs, bench, k=40).collect()}
+        assert kept == {1, 2}
+
+
+class TestPackedKernelLimits:
+    def test_large_k6_batch_matches_python_sets(self):
+        """One Arrow batch of 65,537 docs at k=6: a (doc << 48) | value
+        composite overflows int64 past doc 32,767, so the per-doc dedupe
+        must not build one over the whole batch.  Per-doc distinct packed
+        k-grams equal Python sets."""
+        import numpy as np
+        import pyarrow as pa
+
+        from myzql_binlog_connector_spark.operators.fuzzy import (
+            _packed_doc_shingles,
+        )
+
+        k, n = 6, 65_537
+        rng = np.random.default_rng(7)
+        alphabet = np.array(list("ab c"))
+        texts = [
+            "".join(alphabet[rng.integers(0, 4, size=int(rng.integers(0, 14)))])
+            for _ in range(n)
+        ]
+        doc_u, val_u, counts = _packed_doc_shingles(pa.array(texts), n, k)
+
+        def packed(t):
+            grams = {t[i : i + k] for i in range(len(t) - k + 1)} or {t}
+            return sorted(
+                int.from_bytes(g.encode().ljust(k, b"\0"), "big") for g in grams
+            )
+
+        want = [packed(t) for t in texts]
+        assert counts.tolist() == [len(w) for w in want]
+        assert doc_u.tolist() == [i for i, w in enumerate(want) for _ in w]
+        assert val_u.tolist() == [v for w in want for v in w]
+
 
 class TestAssignCells:
     def test_matches_joined_maxby_reference(self, spark):

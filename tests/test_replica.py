@@ -101,9 +101,6 @@ class TestReplicate:
                 fromlist=["LakeChangesDataSource"],
             ).LakeChangesDataSource
         )
-        from myzql_binlog_connector_spark.streaming.replica import (
-            ORDER_COLS,
-        )
         q = (
             spark.readStream.format("lake_changes")
             .option("path", src.path)
@@ -111,9 +108,7 @@ class TestReplicate:
             .load()
             .writeStream.foreachBatch(
                 lambda df, eid: None if df.isEmpty() else dst.merge(
-                    df.drop("_commit_version"),
-                    order_cols=list(ORDER_COLS),
-                    batch_id=f"feed-epoch-{eid}",
+                    df.drop("_commit_version"), batch_id=f"feed-epoch-{eid}"
                 )
             )
             .option("checkpointLocation", str(tmp_path / "ckpt"))
