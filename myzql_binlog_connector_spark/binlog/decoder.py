@@ -620,7 +620,27 @@ def _dml_for(event_type: int) -> str:
     return DML_UPDATE
 
 
-class EnvelopeBatch:
+class _RowBatch:
+    """Per-column list accumulator with a per-event rollback: the decode
+    loop marks before an event and truncates to the mark if it fails, so
+    no failure between two column appends can leave the batch ragged."""
+
+    __slots__ = ()
+
+    def mark(self) -> tuple:
+        """Per-column lengths, for :meth:`truncate` after a failed event."""
+        return tuple(len(c) for c in self.columns())
+
+    def truncate(self, marks: tuple | None) -> None:
+        """Discard everything appended after ``marks`` (partial rows of a
+        failed event), restoring a rectangular batch.  ``None`` means the
+        batch was empty at the mark point (the lazy-snapshot fast path:
+        callers skip :meth:`mark` while the batch is empty) — clear."""
+        for i, col in enumerate(self.columns()):
+            del col[0 if marks is None else marks[i]:]
+
+
+class EnvelopeBatch(_RowBatch):
     """Columnar accumulator for the change-event envelope — one list per
     output column, so the decode loop never builds per-row dicts."""
 
@@ -640,25 +660,30 @@ class EnvelopeBatch:
     def columns(self) -> list[list]:
         return [getattr(self, name) for name in self.__slots__]
 
-    def mark(self) -> tuple:
-        """Per-column lengths, for :meth:`truncate` after a failed event:
-        the decode loop rolls back to the mark so that no failure between
-        two column appends can leave the batch ragged."""
-        return tuple(len(getattr(self, name)) for name in self.__slots__)
 
-    def truncate(self, marks: tuple | None) -> None:
-        """Discard everything appended after ``marks`` (partial rows of a
-        failed event), restoring a rectangular batch.  ``None`` means the
-        batch was empty at the mark point (the lazy-snapshot fast path:
-        callers skip :meth:`mark` while the batch is empty) — clear."""
-        if marks is None:
-            for name in self.__slots__:
-                del getattr(self, name)[:]
-            return
-        for name, n in zip(self.__slots__, marks):
-            col = getattr(self, name)
-            if len(col) > n:
-                del col[n:]
+class TypedBatch(_RowBatch):
+    """Columnar accumulator for typed change rows: one list per payload
+    column, then ``_deleted``, ``_gtid``, ``_event_seq``,
+    ``_event_row_index``, ``_file_seq`` and ``_log_pos``.  Carries the
+    output's kinds and key positions for
+    :meth:`BinlogSession.process_packet_typed_vec`."""
+
+    __slots__ = ("cols", "apps", "meta_cols", "kinds", "keys", "n_payload")
+
+    def __init__(self, kinds, key_positions, n_payload: int):
+        self.cols = [[] for _ in range(n_payload + 6)]
+        # apps: payload appends + the _deleted append; meta_cols: the rest
+        self.apps = tuple(c.append for c in self.cols[: n_payload + 1])
+        self.meta_cols = self.cols[n_payload + 1 :]
+        self.kinds = tuple(kinds)
+        self.keys = tuple(key_positions)
+        self.n_payload = n_payload
+
+    def __len__(self):
+        return len(self.cols[-1])
+
+    def columns(self) -> list[list]:
+        return self.cols
 
 
 class BinlogSession:
@@ -903,30 +928,13 @@ class BinlogSession:
         out: EnvelopeBatch,
         vec,
     ) -> int:
-        """Like :meth:`process_packet_columnar`, but ROWS events whose
-        (schema, bitmaps, DML) have a vectorized envelope plan defer into
-        ``vec`` (a :class:`rowvec.EnvVecCollector`) for batched numpy
-        decode + JSON piece assembly; returns rows appended to ``out``
-        (0 for deferred events)."""
+        """Like :meth:`process_packet_columnar`, but ROWS events with a
+        vectorized envelope plan defer into ``vec`` (see
+        :meth:`_defer_vec`); returns rows appended to ``out`` (0 for
+        deferred events)."""
         pre = self._pre_rows(blob, file_seq)
-        if pre is None:
+        if pre is None or self._defer_vec(pre, file_seq, gtid, event_seq, vec):
             return 0
-        hdr, et, payload, table_id, schema = pre
-        if et != EventType.PARTIAL_UPDATE_ROWS:
-            pos, n_cols, p1, p2 = rows_prelude(et, payload, self._is_v2(et))
-            desc = self._schema_desc[table_id]
-            key, plan = vec.plan_for(
-                desc, _dml_for(et), schema,
-                _present_list(p1, n_cols), _present_list(p2, n_cols),
-            )
-            if plan is not None:
-                g, es = self.effective_ids(gtid, event_seq)
-                vec.defer(
-                    key, plan, payload, pos, g, es, file_seq, hdr.log_pos,
-                    hdr.timestamp, hdr.server_id, schema.database,
-                    schema.table, desc,
-                )
-                return 0
         return self._columnar_after_pre(pre, file_seq, gtid, event_seq, out)
 
     def _columnar_after_pre(self, pre, file_seq, gtid, event_seq, out) -> int:
@@ -1052,44 +1060,43 @@ class BinlogSession:
         file_seq: int,
         gtid: int,
         event_seq: int,
-        apps: tuple,
-        meta_cols: list,
-        kinds: tuple,
-        key_positions: tuple,
-        n_payload: int,
+        out: TypedBatch,
         vec,
     ) -> int:
-        """Like :meth:`process_packet_typed`, but ROWS events whose
-        (schema, present bitmaps, DML) have a vectorized plan are DEFERRED
-        into ``vec`` (a :class:`rowvec.TypedVecCollector`) for batched
-        numpy decode at flush time; everything else — state events,
-        partial updates, unsupported column types — takes the per-row
-        path immediately.  Deferral is safe because classification runs
-        sequentially: TABLE_MAP/GTID state and the effective ordering ids
-        are captured per event before decode is postponed.  Returns rows
-        appended to the list builders (0 for deferred events — their rows
-        surface in ``vec.flush()``'s RecordBatches)."""
+        """Like :meth:`process_packet_typed`, but ROWS events with a
+        vectorized typed plan defer into ``vec`` (see :meth:`_defer_vec`);
+        returns rows appended to ``out`` (0 for deferred events)."""
         pre = self._pre_rows(blob, file_seq)
-        if pre is None:
+        if pre is None or self._defer_vec(pre, file_seq, gtid, event_seq, vec):
             return 0
-        hdr, et, payload, table_id, schema = pre
-        if et != EventType.PARTIAL_UPDATE_ROWS:
-            pos, n_cols, p1, p2 = rows_prelude(et, payload, self._is_v2(et))
-            key, plan = vec.plan_for(
-                self._schema_desc[table_id],
-                _dml_for(et),
-                schema,
-                _present_list(p1, n_cols),
-                _present_list(p2, n_cols),
-            )
-            if plan is not None:
-                g, es = self.effective_ids(gtid, event_seq)
-                vec.defer(key, plan, payload, pos, g, es, file_seq, hdr.log_pos)
-                return 0
         return self._typed_after_pre(
-            pre, file_seq, gtid, event_seq, apps, meta_cols,
-            kinds, key_positions, n_payload,
+            pre, file_seq, gtid, event_seq, out.apps, out.meta_cols,
+            out.kinds, out.keys, out.n_payload,
         )
+
+    def _defer_vec(self, pre, file_seq: int, gtid: int, event_seq: int, vec) -> bool:
+        """Defer a classified ROWS event into ``vec`` (a
+        :class:`rowvec.VecCollector`) when its (schema, present bitmaps,
+        DML) has a vectorized plan; False leaves it to the per-row path
+        (partial updates, column types the plan declines).  Deferral is
+        safe because classification runs sequentially: TABLE_MAP/GTID
+        state and the effective ordering ids are captured per event before
+        decode is postponed to ``vec.flush()``."""
+        hdr, et, payload, table_id, schema = pre
+        if et == EventType.PARTIAL_UPDATE_ROWS:
+            return False
+        pos, n_cols, p1, p2 = rows_prelude(et, payload, self._is_v2(et))
+        desc = self._schema_desc[table_id]
+        key, plan = vec.plan_for(desc, _dml_for(et), schema, n_cols, p1, p2)
+        if plan is None:
+            return False
+        g, es = self.effective_ids(gtid, event_seq)
+        vec.defer(
+            key, plan, payload, pos,
+            (g, es, file_seq, hdr.log_pos, hdr.timestamp, hdr.server_id),
+            (schema.database, schema.table, desc),
+        )
+        return True
 
     def effective_ids(self, gtid: int, event_seq: int) -> tuple[int, int]:
         """In-band GTID (from GTID_LOG_EVENTs) wins over the side-column

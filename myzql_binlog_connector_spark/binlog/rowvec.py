@@ -43,6 +43,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .constants import ColumnType, DML_DELETE, DML_INSERT, DML_UPDATE
+from .decoder import _present_list
 
 _TS2_FRAC_BYTES = (0, 1, 1, 2, 2, 3, 3)
 
@@ -318,12 +319,8 @@ def walk_group(plan: VecPlan, big, pos0, end):
         if bool((pos > end).any()):
             # a row image read past its event body: truncated/corrupt
             # event (a healthy server never emits one).  Raise for the
-            # whole group.  On the ENVELOPE path (EnvVecCollector.flush)
-            # quarantine mode retries events singly so only the corrupt
-            # ones are dead-lettered; the TYPED path (TypedVecCollector)
-            # is fail-fast by design — its output schema has nowhere to
-            # carry a dead-letter row, so bit-rot-tolerant appliers go
-            # through apply_batch(decode_changes(on_error="quarantine")).
+            # whole group; in quarantine mode VecCollector.flush retries
+            # its events singly so only the corrupt ones are dead-lettered.
             raise ValueError(
                 "row image overran event body (truncated or corrupt event)"
             )
@@ -582,10 +579,10 @@ def _utf8_checked(arr: pa.Array, data: "np.ndarray | None" = None) -> pa.Array:
 def assemble_typed(plan: VecPlan, big, walk, metas, arrow_schema):
     """Final typed RecordBatch for one group.
 
-    ``metas``: dict of per-event int64 arrays (gtid, event_seq, file_seq,
-    log_pos).  Output row order is event-major (event, ordinal, tombstone
-    before upsert) — identical to the sequential per-row parser, so parity
-    tests compare element-wise."""
+    ``metas``: per-event int64 arrays (gtid, event_seq, file_seq,
+    log_pos, ...) — see :class:`VecCollector`.  Output row order is
+    event-major (event, ordinal, tombstone before upsert) — identical to
+    the sequential per-row parser, so parity tests compare element-wise."""
     ev_src, ord_src, before, after, _counts = walk
     n = len(ev_src)
     dml, keys, n_payload, kinds = plan.dml, plan.keys, plan.n_payload, plan.kinds
@@ -915,7 +912,7 @@ def _const_str_array(s, n):
     )
 
 
-def assemble_envelope(plan, big, walk, metas, consts, arrow_schema):
+def assemble_envelope(plan, big, walk, metas, arrow_schema):
     """Final envelope RecordBatch for one group: before/after positional
     JSON + per-event meta.  No tombstone splitting and row order is free,
     so no sort is ever needed (event_row_index = ordinal + 1)."""
@@ -937,15 +934,15 @@ def assemble_envelope(plan, big, walk, metas, consts, arrow_schema):
         pa.array(metas["server_id"][ev_src].astype(np.int32)),
         pa.array(metas["log_pos"][ev_src]),
         pa.array(ord_src + 1),
-        _const_str_array(consts["database"], n),
-        _const_str_array(consts["table_name"], n),
+        _const_str_array(metas["database"], n),
+        _const_str_array(metas["table_name"], n),
         _const_str_array(dml, n),
         bjson,
         ajson,
         pa.array(metas["gtid"][ev_src]),
         pa.array(metas["event_seq"][ev_src]),
         pa.array(metas["file_seq"][ev_src].astype(np.int32)),
-        _const_str_array(consts["payload_schema"], n),
+        _const_str_array(metas["payload_schema"], n),
     ]
     # wire-sourced string pieces were UTF-8-checked in
     # _escaped_string_array; every other column is generated/constant
@@ -961,82 +958,86 @@ def assemble_envelope(plan, big, walk, metas, consts, arrow_schema):
 # ---------------------------------------------------------------------------
 
 
-class TypedVecCollector:
-    """Accumulates ROWS events whose (schema, bitmaps, dml) have a VecPlan;
-    ``flush()`` decodes every group with the numpy kernel.  Events whose
-    shape has no plan are never deferred (the session's per-row path keeps
-    them)."""
+_META_NAMES = ("gtid", "event_seq", "file_seq", "log_pos", "timestamp", "server_id")
 
-    def __init__(self, kinds, key_positions, n_payload, arrow_schema):
-        self.kinds = tuple(kinds)
-        self.keys = tuple(key_positions)
-        self.n_payload = n_payload
-        self.arrow_schema = arrow_schema
+
+class VecCollector:
+    """Accumulates ROWS events whose (schema, bitmaps, dml, table) have a
+    VecPlan; ``flush()`` decodes every group with the numpy kernel.
+    Events whose shape has no plan are never deferred (the session's
+    per-row path keeps them).
+
+    The output is the two functions it is given: ``build(schema,
+    present1, present2, dml) -> VecPlan | None`` (:func:`build_plan` or
+    :func:`build_env_plan`) and ``assemble(plan, big, walk, metas) ->
+    RecordBatch`` (:func:`assemble_typed` or :func:`assemble_envelope`).
+    ``metas`` holds the per-event int64 arrays (gtid, event_seq,
+    file_seq, log_pos, timestamp, server_id) and the group's constant
+    database, table_name and payload_schema."""
+
+    def __init__(self, build, assemble):
+        self._build = build
+        self._assemble = assemble
         self._plans: dict = {}
         self._groups: dict = {}
         self.rows_hint = 0
 
-    def plan_for(self, desc_key, dml, schema, present1, present2):
-        key = (desc_key, dml, bytes(present1), bytes(present2))
+    def plan_for(self, desc_key, dml, schema, n_cols, p1, p2):
+        """``(group key, plan or None)`` for an event's raw present
+        bitmaps; the plan is built once per key."""
+        key = (desc_key, dml, n_cols, p1, p2, schema.database, schema.table)
         plan = self._plans.get(key, False)
         if plan is False:
-            plan = build_plan(
-                schema, list(present1), list(present2), dml,
-                self.kinds, self.keys, self.n_payload,
+            plan = self._plans[key] = self._build(
+                schema, _present_list(p1, n_cols), _present_list(p2, n_cols), dml
             )
-            self._plans[key] = plan
         return key, plan
 
-    def defer(self, key, plan, payload, rel_pos, gtid, event_seq, file_seq, log_pos):
+    def defer(self, key, plan, payload, rel_pos, ids, consts):
+        """``ids``: the event's (gtid, event_seq, file_seq, log_pos,
+        timestamp, server_id); ``consts``: its (database, table_name,
+        payload_schema), the same for every event of a group."""
         g = self._groups.get(key)
         if g is None:
-            g = self._groups[key] = ([], [], [], [], [], [], plan)
+            g = self._groups[key] = ([], [], [], consts, plan)
         g[0].append(payload)
         g[1].append(rel_pos)
-        g[2].append(gtid)
-        g[3].append(event_seq)
-        g[4].append(file_seq)
-        g[5].append(log_pos)
+        g[2].append(ids)
         self.rows_hint += max(1, (len(payload) - rel_pos) // 96)
 
-    def _decode_group(self, bufs, rel, gt, es, fs, lp, plan):
+    def _decode_group(self, bufs, rel, ids, consts, plan):
         big, pos0, end = _concat_group(bufs, rel)
         walk = walk_group(plan, big, pos0, end)
         if walk is None:
             return None
-        metas = {
-            "gtid": np.asarray(gt, np.int64),
-            "event_seq": np.asarray(es, np.int64),
-            "file_seq": np.asarray(fs, np.int64),
-            "log_pos": np.asarray(lp, np.int64),
-        }
-        return assemble_typed(plan, big, walk, metas, self.arrow_schema)
+        metas = dict(zip(_META_NAMES, np.asarray(ids, np.int64).T))
+        metas.update(zip(("database", "table_name", "payload_schema"), consts))
+        return self._assemble(plan, big, walk, metas)
 
     def flush(self, on_error: str = "raise", quarantine=None):
-        """Yield one typed RecordBatch per non-empty group.
+        """Yield one RecordBatch per non-empty group.
 
         ``on_error="quarantine"``: a failing group retries its events ONE
         AT A TIME through the same kernel so one corrupt body poisons only
-        itself; events that still fail go to ``quarantine(fs, gtid,
-        event_seq, log_pos, payload, err)`` instead of raising — the same
-        contract as :meth:`EnvVecCollector.flush`."""
+        itself; events that still fail go to ``quarantine(file_seq, gtid,
+        event_seq, log_pos, payload, err)`` instead of raising."""
         groups, self._groups = self._groups, {}
         self.rows_hint = 0
-        for bufs, rel, gt, es, fs, lp, plan in groups.values():
+        for bufs, rel, ids, consts, plan in groups.values():
             try:
-                rb = self._decode_group(bufs, rel, gt, es, fs, lp, plan)
+                rb = self._decode_group(bufs, rel, ids, consts, plan)
             except Exception:
                 if on_error != "quarantine":
                     raise
                 for i in range(len(bufs)):
                     try:
                         rb1 = self._decode_group(
-                            [bufs[i]], [rel[i]], [gt[i]], [es[i]],
-                            [fs[i]], [lp[i]], plan,
+                            [bufs[i]], [rel[i]], [ids[i]], consts, plan
                         )
                     except Exception as e:
                         if quarantine is not None:
-                            quarantine(fs[i], gt[i], es[i], lp[i], bufs[i], e)
+                            g, es, fs, lp = ids[i][:4]
+                            quarantine(fs, g, es, lp, bufs[i], e)
                         continue
                     if rb1 is not None:
                         yield rb1
@@ -1054,92 +1055,3 @@ def _concat_group(bufs, rel):
     for i, b in enumerate(bufs):
         big[starts[i]:starts[i + 1]] = np.frombuffer(b, np.uint8)
     return big, starts[:-1] + np.asarray(rel, np.int64), starts[1:]
-
-
-class EnvVecCollector:
-    """Envelope twin of :class:`TypedVecCollector`: defers ROWS events and
-    flushes positional-JSON envelope RecordBatches.  Groups additionally
-    key on (database, table_name) — the envelope carries them per row."""
-
-    def __init__(self, arrow_schema):
-        self.arrow_schema = arrow_schema
-        self._plans: dict = {}
-        self._groups: dict = {}
-        self.rows_hint = 0
-
-    def plan_for(self, desc_key, dml, schema, present1, present2):
-        key = (desc_key, dml, bytes(present1), bytes(present2),
-               schema.database, schema.table)
-        plan = self._plans.get(key, False)
-        if plan is False:
-            plan = build_env_plan(
-                schema, list(present1), list(present2), dml
-            )
-            self._plans[key] = plan
-        return key, plan
-
-    def defer(self, key, plan, payload, rel_pos, gtid, event_seq, file_seq,
-              log_pos, timestamp, server_id, database, table_name, desc_key):
-        g = self._groups.get(key)
-        if g is None:
-            g = self._groups[key] = (
-                [], [], [], [], [], [], [], [],
-                {"database": database, "table_name": table_name,
-                 "payload_schema": desc_key},
-                plan,
-            )
-        g[0].append(payload)
-        g[1].append(rel_pos)
-        g[2].append(gtid)
-        g[3].append(event_seq)
-        g[4].append(file_seq)
-        g[5].append(log_pos)
-        g[6].append(timestamp)
-        g[7].append(server_id)
-        self.rows_hint += max(1, (len(payload) - rel_pos) // 96)
-
-    def _decode_group(self, g):
-        bufs, rel, gt, es, fs, lp, ts, sid, consts, plan = g
-        big, pos0, end = _concat_group(bufs, rel)
-        walk = walk_group(plan, big, pos0, end)
-        if walk is None:
-            return None
-        metas = {
-            "gtid": np.asarray(gt, np.int64),
-            "event_seq": np.asarray(es, np.int64),
-            "file_seq": np.asarray(fs, np.int64),
-            "log_pos": np.asarray(lp, np.int64),
-            "timestamp": np.asarray(ts, np.int64),
-            "server_id": np.asarray(sid, np.int64),
-        }
-        return assemble_envelope(plan, big, walk, metas, consts, self.arrow_schema)
-
-    def flush(self, on_error: str = "raise", quarantine=None):
-        """Decode and yield every group.  ``on_error="quarantine"``: a
-        failing group retries its events ONE AT A TIME through the same
-        kernel so one corrupt body poisons only itself; events that still
-        fail go to ``quarantine(fs, gtid, event_seq, log_pos, payload,
-        err)`` instead of raising."""
-        groups, self._groups = self._groups, {}
-        self.rows_hint = 0
-        for g in groups.values():
-            try:
-                rb = self._decode_group(g)
-            except Exception:
-                if on_error != "quarantine":
-                    raise
-                bufs, rel, gt, es, fs, lp, ts, sid, consts, plan = g
-                for i in range(len(bufs)):
-                    sub = ([bufs[i]], [rel[i]], [gt[i]], [es[i]], [fs[i]],
-                           [lp[i]], [ts[i]], [sid[i]], consts, plan)
-                    try:
-                        rb1 = self._decode_group(sub)
-                    except Exception as e:
-                        if quarantine is not None:
-                            quarantine(fs[i], gt[i], es[i], lp[i], bufs[i], e)
-                        continue
-                    if rb1 is not None:
-                        yield rb1
-                continue
-            if rb is not None:
-                yield rb

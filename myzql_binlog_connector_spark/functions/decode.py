@@ -1,4 +1,7 @@
-"""Spark-facing decode: raw binlog event blobs → change-event envelope DF.
+"""Spark-facing decode: raw binlog event blobs → change rows, in one of two
+outputs: the JSON change-event envelope (``decode_changes``,
+``decode_segment_files``) or typed Arrow columns for the merge
+(``decode_typed_from_files``).
 
 The plan shape (SURVEY.md §3.2 restatement):
 
@@ -7,6 +10,15 @@ The plan shape (SURVEY.md §3.2 restatement):
       → sortWithinPartitions(file_seq, offset)   # decode unit: TABLE_MAP
       → mapInArrow(decode)                 # precedes its ROWS events
       → [filter / dedup / merge downstream]
+
+or, over a one-file-per-segment store, size-balanced bins of segment
+files read inside the task (``_decode_files``) with no shuffle at all.
+
+Both outputs run one driver (``_decode_driver``): the same per-event
+loop over ``BinlogSession``, the same quarantine rollback and dead-letter
+triage record, and the same vectorized collector
+(``rowvec.VecCollector``); only the row builder (``EnvelopeBatch`` or
+``TypedBatch``) and the collector's plan builder and assembler differ.
 
 Scale notes: segments are independent decode units (each starts with
 FORMAT_DESCRIPTION and re-announces TABLE_MAP before ROWS runs, exactly as a
@@ -21,6 +33,7 @@ the reference's last-TABLE_MAP-wins semantics within each segment
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import pyarrow as pa
@@ -72,27 +85,16 @@ _ARROW_ENVELOPE = pa.schema(
     ]
 )
 
-_COLS = [f.name for f in _ARROW_ENVELOPE]
-
-
-def _env_to_batch(out) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(out.columns(), _ARROW_ENVELOPE)],
-        schema=_ARROW_ENVELOPE,
-    )
-
-
 #: dml_type marker for quarantined (dead-letter) packets — see
 #: :func:`decode_changes` ``on_error="quarantine"``
 DML_CORRUPT = "_corrupt"
 
 
-def _quarantine_env_row(out, blob, file_seq, gtid, event_seq, err,
-                        framed: bool = True) -> None:
-    """Append a dead-letter envelope row for an undecodable packet: the
-    error, the event-type byte, and a hex prefix of the raw bytes ride in
-    ``after_values`` so a DLQ consumer can triage without re-reading the
-    source.
+def _triage(blob, err, framed: bool = True) -> str:
+    """The dead-letter triage record of an undecodable packet, as JSON: the
+    error, the event-type byte and a hex prefix of the raw bytes, so a DLQ
+    consumer can triage without re-reading the source.  The envelope
+    carries it in ``after_values``, the typed output in ``_corrupt``.
 
     ``framed=False``: ``blob`` is a bare event BODY (vec-flush retries
     hand the deferred payload, not the framed packet), so byte 5 is row
@@ -100,24 +102,45 @@ def _quarantine_env_row(out, blob, file_seq, gtid, event_seq, err,
     from ..binlog.decoder import _dumps
 
     mv = memoryview(blob)
-    out.timestamp.append(0)
-    out.server_id.append(0)
-    out.log_pos.append(0)
-    out.event_row_index.append(1)
-    out.database.append(None)
-    out.table_name.append(None)
-    out.dml_type.append(DML_CORRUPT)
-    out.before_values.append(None)
-    out.after_values.append(_dumps({
+    return _dumps({
         "error": f"{type(err).__name__}: {err}"[:500],
         "event_type": mv[5] if framed and len(mv) > 5 else None,
         "blob_prefix": bytes(mv[:64]).hex(),
         "blob_len": len(mv),
-    }))
-    out.gtid.append(gtid)
-    out.event_seq.append(event_seq)
-    out.file_seq.append(file_seq)
-    out.payload_schema.append(None)
+    })
+
+
+def _padded(arrays, n: int, schema: pa.Schema) -> pa.RecordBatch:
+    """RecordBatch of ``arrays`` plus null columns for the trailing fields
+    of ``schema`` they lack (the typed quarantine ``_corrupt`` column)."""
+    arrays = list(arrays) + [pa.nulls(n, f.type) for f in list(schema)[len(arrays):]]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _rows_batch(out, schema: pa.Schema) -> pa.RecordBatch:
+    """An :class:`EnvelopeBatch`/:class:`TypedBatch` as a RecordBatch."""
+    return _padded(
+        [pa.array(c, type=f.type) for c, f in zip(out.columns(), schema)],
+        len(out),
+        schema,
+    )
+
+
+def _dead_batch(
+    dead: list[tuple], schema: pa.Schema, names: tuple, fixed: dict
+) -> pa.RecordBatch:
+    """Dead-letter rows: ``dead`` holds (file_seq, gtid, event_seq,
+    log_pos, triage) tuples, which land in the output's ``names``
+    columns; ``fixed`` gives constant columns; every other column is
+    null."""
+    n = len(dead)
+    cols = dict(zip(names, zip(*dead)))
+    cols.update({name: [v] * n for name, v in fixed.items()})
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type) if f.name in cols else pa.nulls(n, f.type)
+         for f in schema],
+        schema=schema,
+    )
 
 
 def _blob_views(arr) -> list:
@@ -153,7 +176,7 @@ def _blob_views(arr) -> list:
 
 
 def _vec_flush_rows(parallelism: int | None) -> int:
-    """Per-worker deferred-row flush bound for the vectorized collectors.
+    """Per-worker deferred-row flush bound for the vectorized collector.
 
     A fixed TOTAL budget (1M estimated rows across the job) divided by the
     worker count, clamped to [8192, 512k].  Rationale: the numpy kernels
@@ -170,36 +193,35 @@ def _vec_flush_rows(parallelism: int | None) -> int:
     return max(8192, min(1 << 19, (1 << 20) // parallelism))
 
 
-def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 8192,
-                 verify_crc: bool = False, on_error: str = "raise",
-                 flush_rows: int | None = None):
-    """Build the mapInArrow function.  One BinlogSession per partition: the
-    table-map cache persists across Arrow batches within the partition,
-    matching the reference reader whose cache lives for the connection.
-    Decode is columnar end to end: events with a vectorized plan decode in
-    batched numpy programs (binlog/rowvec.py), the rest through the generic
-    parser straight into per-column lists — no per-row dicts on the path.
+def _decode_driver(new_session, new_out, new_vec, process, schema, dead_names,
+                   dead_fixed, on_error, out_batch_rows, flush_rows):
+    """The mapInArrow body both outputs run: one ``BinlogSession`` per
+    call, the per-event loop, the vec flush and the dead-letter rows.
 
-    ``on_error="quarantine"``: an undecodable packet (CRC mismatch, parse
-    error, truncated body) becomes a dead-letter row with
-    ``dml_type='_corrupt'`` instead of failing the job; decode continues.
-    Default ``"raise"`` keeps reference-parity fail-fast semantics."""
-    from ..binlog.decoder import EnvelopeBatch
+    Only the pieces handed in differ by output: ``new_out`` makes the row
+    builder (:class:`EnvelopeBatch` or :class:`TypedBatch`), ``new_vec``
+    the :class:`rowvec.VecCollector` with that output's plan builder and
+    assembler, ``process`` is the session's ``process_packet_*_vec`` entry
+    point, and ``dead_names``/``dead_fixed`` place the dead-letter record
+    (see :func:`_dead_batch`).  Input batches carry ``file_seq``, ``gtid``,
+    ``event_seq`` and ``event_blob``.
 
-    flush_rows = flush_rows or _vec_flush_rows(None)
+    Output order: per-row batches of ``out_batch_rows`` and vec-flush
+    batches (every ``flush_rows`` deferred rows) as they fill, then the
+    last per-row rows, the final flush, and one batch of dead letters."""
     quarantine = on_error == "quarantine"
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..binlog.rowvec import EnvVecCollector
-
-        session = BinlogSession(
-            table_filter=table_filter, stop_position=stop_position, verify_crc=verify_crc
-        )
-        vec = EnvVecCollector(_ARROW_ENVELOPE)
-        out = EnvelopeBatch()
+        session, out, vec = new_session(), new_out(), new_vec()
+        dead: list[tuple] = []  # (file_seq, gtid, event_seq, log_pos, triage)
 
         def q_cb(fs, g, es, lp, payload, err):
-            _quarantine_env_row(out, payload, fs, g, es, err, framed=False)
+            dead.append((fs, g, es, lp, _triage(payload, err, framed=False)))
+
+        def flushed():
+            for rb in vec.flush(on_error=on_error, quarantine=q_cb):
+                session.rows_emitted += rb.num_rows
+                yield rb
 
         for batch in batches:
             file_seqs = batch.column("file_seq").to_pylist()
@@ -213,35 +235,75 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
                 # exactly on the events it exists for).  Lazy while the
                 # batch is empty — truncate(None) clears (round-7 A/B: the
                 # unconditional per-event snapshot was ~8% of clean decode
-                # on the typed path; same economics here).
-                marks = (
-                    out.mark() if (quarantine and len(out)) else None
-                )
+                # on the typed path, where vectorized events leave the
+                # batch empty).
+                marks = out.mark() if (quarantine and len(out)) else None
                 try:
-                    session.process_packet_columnar_vec(
-                        blobs[i], file_seqs[i], gtids[i], event_seqs[i], out, vec
-                    )
+                    process(session, blobs[i], file_seqs[i], gtids[i],
+                            event_seqs[i], out, vec)
                 except Exception as e:
                     if not quarantine:
                         raise
                     out.truncate(marks)
-                    _quarantine_env_row(
-                        out, blobs[i], file_seqs[i], gtids[i], event_seqs[i], e
-                    )
+                    mv = blobs[i]
+                    # header log_pos: OK byte + timestamp, type, server_id,
+                    # event_size; 0 when the packet is shorter than that
+                    lp = int.from_bytes(mv[14:18], "little") if len(mv) >= 18 else 0
+                    dead.append((file_seqs[i], gtids[i], event_seqs[i], lp,
+                                 _triage(mv, e)))
                 if len(out) >= out_batch_rows:
-                    yield _env_to_batch(out)
-                    out = EnvelopeBatch()
+                    yield _rows_batch(out, schema)
+                    out.truncate(None)
                 if vec.rows_hint >= flush_rows:
-                    for rb in vec.flush(on_error=on_error, quarantine=q_cb):
-                        session.rows_emitted += rb.num_rows
-                        yield rb
-        for rb in vec.flush(on_error=on_error, quarantine=q_cb):
-            session.rows_emitted += rb.num_rows
-            yield rb
+                    # bound deferred-buffer memory (and keep string columns
+                    # far below the int32 Arrow offset limit on huge
+                    # inputs); sized per worker count — see _vec_flush_rows
+                    yield from flushed()
         if len(out):
-            yield _env_to_batch(out)
+            yield _rows_batch(out, schema)
+        yield from flushed()
+        if dead:
+            yield _dead_batch(dead, schema, dead_names, dead_fixed)
 
     return decode_partition
+
+
+def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 8192,
+                 verify_crc: bool = False, on_error: str = "raise",
+                 flush_rows: int | None = None):
+    """Build the envelope mapInArrow function.  One BinlogSession per
+    partition: the table-map cache persists across Arrow batches within
+    the partition, matching the reference reader whose cache lives for the
+    connection.  Decode is columnar end to end: events with a vectorized
+    plan decode in batched numpy programs (binlog/rowvec.py), the rest
+    through the generic parser straight into per-column lists — no per-row
+    dicts on the path.
+
+    ``on_error="quarantine"``: an undecodable packet (CRC mismatch, parse
+    error, truncated body) becomes a dead-letter row with
+    ``dml_type='_corrupt'`` (triage record in ``after_values``) instead
+    of failing the job; decode continues.  Default ``"raise"`` keeps
+    reference-parity fail-fast semantics."""
+    from ..binlog.decoder import EnvelopeBatch
+    from ..binlog.rowvec import VecCollector, assemble_envelope, build_env_plan
+
+    return _decode_driver(
+        new_session=lambda: BinlogSession(
+            table_filter=table_filter, stop_position=stop_position, verify_crc=verify_crc
+        ),
+        new_out=EnvelopeBatch,
+        new_vec=lambda: VecCollector(
+            build_env_plan, partial(assemble_envelope, arrow_schema=_ARROW_ENVELOPE)
+        ),
+        process=BinlogSession.process_packet_columnar_vec,
+        schema=_ARROW_ENVELOPE,
+        dead_names=("file_seq", "gtid", "event_seq", "log_pos", "after_values"),
+        dead_fixed={"timestamp": 0, "server_id": 0, "event_row_index": 1,
+                    "dml_type": DML_CORRUPT},
+        on_error=on_error,
+        out_batch_rows=out_batch_rows,
+        flush_rows=flush_rows or _vec_flush_rows(None),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +360,9 @@ def make_typed_decoder(
     flush_rows: int | None = None,
     on_error: str = "raise",
 ):
-    """Arrow UDF body: raw packets → typed change rows.
+    """Typed twin of :func:`make_decoder`: returns ``(decode_partition,
+    out_schema)``, where ``decode_partition`` maps event Arrow batches to
+    typed change rows.
 
     Output columns: payload (one per ``column_names``, Arrow type per
     ``kinds``) + the merge meta columns.  DELETE rows carry only the key
@@ -309,11 +373,12 @@ def make_typed_decoder(
     envelope decoder's dead-letter contract — an undecodable packet (CRC
     mismatch, truncation, parse error) becomes a row whose payload columns
     are null and whose ``_corrupt`` column carries the triage record
-    (error + event-type byte + hex prefix), instead of failing the job.
-    A failed vectorized flush group retries its events singly so one
-    corrupt body poisons only itself.  The output schema gains the
-    ``_corrupt`` string column ONLY in this mode (null on good rows)."""
-    quarantine = on_error == "quarantine"
+    (:func:`_triage`), instead of failing the job.  The output schema
+    gains the ``_corrupt`` string column ONLY in this mode (null on good
+    rows)."""
+    from ..binlog.decoder import TypedBatch
+    from ..binlog.rowvec import VecCollector, assemble_typed, build_plan
+
     arrow_schema = pa.schema(
         [
             (name, {"i": pa.int64(), "f": pa.float64(), "s": pa.string()}[k])
@@ -323,137 +388,32 @@ def make_typed_decoder(
     )
     out_schema = (
         arrow_schema.append(pa.field("_corrupt", pa.string()))
-        if quarantine else arrow_schema
+        if on_error == "quarantine" else arrow_schema
     )
-    n_payload = len(column_names)
+    kinds_t, keys_t, n_payload = tuple(kinds), tuple(key_positions), len(column_names)
 
-    def to_batch(cols: list[list]) -> pa.RecordBatch:
-        arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
-        if quarantine:
-            arrays.append(pa.nulls(len(cols[0]) if cols else 0, pa.string()))
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    def assemble(plan, big, walk, metas):
+        rb = assemble_typed(plan, big, walk, metas, arrow_schema)
+        return _padded(rb.columns, rb.num_rows, out_schema)
 
-    def with_null_corrupt(rb: pa.RecordBatch) -> pa.RecordBatch:
-        return rb.append_column("_corrupt", pa.nulls(rb.num_rows, pa.string()))
-
-    def new_cols():
-        return [[] for _ in range(n_payload + len(_META_ARROW))]
-
-    kinds_t = tuple(kinds)
-    keys_t = tuple(key_positions)
-    flush_rows = flush_rows or _vec_flush_rows(None)
-
-    def dead_batch(dead: list[tuple]) -> pa.RecordBatch:
-        """Dead-letter rows: null payload, meta where parseable, _corrupt
-        carrying the triage record (same fields as _quarantine_env_row)."""
-        n = len(dead)
-        arrays = [pa.nulls(n, f.type) for f in arrow_schema][:n_payload]
-        arrays += [
-            pa.array([False] * n, pa.bool_()),                 # _deleted
-            pa.array([d[1] for d in dead], pa.int64()),        # _gtid
-            pa.array([d[2] for d in dead], pa.int64()),        # _event_seq
-            pa.array([0] * n, pa.int64()),                     # _event_row_index
-            pa.array([d[0] for d in dead], pa.int32()),        # _file_seq
-            pa.array([d[3] for d in dead], pa.int64()),        # _log_pos
-            pa.array([d[4] for d in dead], pa.string()),       # _corrupt
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    def corrupt_text(blob, err, framed: bool = True) -> str:
-        # framed=False: bare event body (vec-flush retry) — byte 5 is row
-        # data, not the event type; report unknown rather than lie
-        import json as _json
-
-        mv = memoryview(blob)
-        return _json.dumps({
-            "error": f"{type(err).__name__}: {err}"[:500],
-            "event_type": mv[5] if framed and len(mv) > 5 else None,
-            "blob_prefix": bytes(mv[:64]).hex(),
-            "blob_len": len(mv),
-        }, separators=(",", ":"))
-
-    def decode_stream(packet_iter):
-        """packet_iter yields (blob, file_seq, gtid, event_seq).
-
-        Hot shape (fixed-width + varchar + timestamp columns — the whole
-        transcripts schema): events defer into a ``TypedVecCollector`` and
-        decode as batched numpy array programs (binlog/rowvec.py) — no
-        per-row Python at all.  Everything else (partial updates, cold
-        column types) decodes through the generic per-row parser
-        (``decoder.parse_rows_event``) appending into Arrow builder lists."""
-        from ..binlog.decoder import BinlogSession
-        from ..binlog.rowvec import TypedVecCollector
-
-        session = BinlogSession(table_filter=table_filter, stop_position=stop_position)
-        vec = TypedVecCollector(kinds_t, keys_t, n_payload, arrow_schema)
-        cols = new_cols()
-        # apps: payload appends + _deleted append; meta_cols: the rest
-        apps = tuple(c.append for c in cols[: n_payload + 1])
-        meta_cols = cols[n_payload + 1 :]
-        dead: list[tuple] = []  # (file_seq, gtid, event_seq, log_pos, text)
-
-        def q_cb(fs, g, es, lp, payload, err):
-            dead.append((fs, g, es, lp, corrupt_text(payload, err, framed=False)))
-
-        n = 0
-        for blob, file_seq, gtid, event_seq in packet_iter:
-            if quarantine:
-                # a failed event must roll back whatever it appended
-                # instead of leaving the batch ragged (same policy as
-                # make_decoder).  LAZY snapshot (round-7 A/B: an
-                # unconditional tuple(len) per event cost
-                # ~8% of clean-stream decode): n == 0 ⇔ cols is empty —
-                # the steady state when every event takes the vectorized
-                # hot path — so the rollback target is "clear"; a real
-                # snapshot is taken only while a cold batch accumulates.
-                marks = tuple(len(c) for c in cols) if n else None
-                try:
-                    n += session.process_packet_typed_vec(
-                        blob, file_seq, gtid, event_seq,
-                        apps, meta_cols, kinds_t, keys_t, n_payload, vec,
-                    )
-                except Exception as e:
-                    if marks is None:
-                        for c in cols:
-                            del c[:]
-                    else:
-                        for c, m in zip(cols, marks):
-                            del c[m:]
-                    mv = memoryview(blob)
-                    lp = (
-                        int.from_bytes(mv[14:18], "little")
-                        if len(mv) >= 18 else 0
-                    )
-                    dead.append(
-                        (file_seq, gtid, event_seq, lp, corrupt_text(blob, e))
-                    )
-            else:
-                n += session.process_packet_typed_vec(
-                    blob, file_seq, gtid, event_seq,
-                    apps, meta_cols, kinds_t, keys_t, n_payload, vec,
-                )
-            if n >= out_batch_rows:
-                yield to_batch(cols)
-                cols = new_cols()
-                apps = tuple(c.append for c in cols[: n_payload + 1])
-                meta_cols = cols[n_payload + 1 :]
-                n = 0
-            if vec.rows_hint >= flush_rows:
-                # bound deferred-buffer memory (and keep string columns far
-                # below the int32 Arrow offset limit on huge inputs); sized
-                # per worker count — see _vec_flush_rows
-                for rb in vec.flush(on_error=on_error, quarantine=q_cb):
-                    session.rows_emitted += rb.num_rows
-                    yield with_null_corrupt(rb) if quarantine else rb
-        if n:
-            yield to_batch(cols)
-        for rb in vec.flush(on_error=on_error, quarantine=q_cb):
-            session.rows_emitted += rb.num_rows
-            yield rb if not quarantine else with_null_corrupt(rb)
-        if dead:
-            yield dead_batch(dead)
-
-    return decode_stream, out_schema
+    decode_partition = _decode_driver(
+        new_session=lambda: BinlogSession(
+            table_filter=table_filter, stop_position=stop_position
+        ),
+        new_out=lambda: TypedBatch(kinds_t, keys_t, n_payload),
+        new_vec=lambda: VecCollector(
+            partial(build_plan, kinds=kinds_t, key_positions=keys_t, n_payload=n_payload),
+            assemble,
+        ),
+        process=BinlogSession.process_packet_typed_vec,
+        schema=out_schema,
+        dead_names=("_file_seq", "_gtid", "_event_seq", "_log_pos", "_corrupt"),
+        dead_fixed={"_deleted": False, "_event_row_index": 0},
+        on_error=on_error,
+        out_batch_rows=out_batch_rows,
+        flush_rows=flush_rows or _vec_flush_rows(None),
+    )
+    return decode_partition, out_schema
 
 
 def _bin_pack_paths(spark, paths: list[str], per_core: int = 2) -> DataFrame:
@@ -495,6 +455,31 @@ def _bin_pack_paths(spark, paths: list[str], per_core: int = 2) -> DataFrame:
     return spark.createDataFrame(rdd, "paths string")
 
 
+def _decode_files(
+    spark, paths: list[str], decode_partition, schema: StructType
+) -> DataFrame:
+    """Zero-shuffle decode: size-balanced bins of segment files, each file
+    read with pyarrow inside the task and run through ``decode_partition``
+    on its own (a fresh ``BinlogSession`` per file: each segment is
+    self-contained)."""
+    import json as _json
+
+    import pyarrow.parquet as pq
+
+    def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for pblob in batch.column("paths").to_pylist():
+                for path in _json.loads(pblob):
+                    tbl = pq.read_table(
+                        path,
+                        columns=["file_seq", "gtid", "event_seq", "event_blob"],
+                        use_threads=False,  # tasks are already core-parallel
+                    )
+                    yield from decode_partition(iter(tbl.to_batches()))
+
+    return _bin_pack_paths(spark, paths).mapInArrow(decode_files, schema=schema)
+
+
 def decode_typed_from_files(
     spark,
     paths: list[str],
@@ -505,23 +490,18 @@ def decode_typed_from_files(
     stop_position=None,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Zero-shuffle typed decode: size-balanced file bins, pyarrow read
-    inside the task, typed Arrow columns out.  The bounded-replay fast
-    path.
+    """Zero-shuffle typed decode (see :func:`_decode_files`): typed Arrow
+    columns out.  The bounded-replay fast path.
 
     ``on_error="quarantine"`` adds a ``_corrupt`` string column (null on
     good rows); undecodable packets become dead-letter rows instead of
     failing the job — see :func:`make_typed_decoder`."""
-    import json as _json
-
-    import pyarrow.parquet as pq
-
     from pyspark.sql.types import (
         BooleanType,
         DoubleType,
     )
 
-    decode_stream, arrow_schema = make_typed_decoder(
+    decode_partition, _ = make_typed_decoder(
         column_names, kinds, key_positions, table_filter, stop_position,
         flush_rows=_vec_flush_rows(spark.sparkContext.defaultParallelism),
         on_error=on_error,
@@ -539,28 +519,7 @@ def decode_typed_from_files(
     ]
     if on_error == "quarantine":
         fields.append(StructField("_corrupt", StringType(), True))
-    spark_schema = StructType(fields)
-
-    bins_df = _bin_pack_paths(spark, paths)
-
-    def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for blob in batch.column("paths").to_pylist():
-                for path in _json.loads(blob):
-                    tbl = pq.read_table(
-                        path,
-                        columns=["file_seq", "offset", "gtid", "event_seq", "event_blob"],
-                        use_threads=False,  # tasks are already core-parallel
-                    )
-                    packet_iter = zip(
-                        tbl.column("event_blob").to_pylist(),
-                        tbl.column("file_seq").to_pylist(),
-                        tbl.column("gtid").to_pylist(),
-                        tbl.column("event_seq").to_pylist(),
-                    )
-                    yield from decode_stream(packet_iter)
-
-    return bins_df.mapInArrow(decode_files, schema=spark_schema)
+    return _decode_files(spark, paths, decode_partition, StructType(fields))
 
 
 def decode_segment_files(
@@ -570,8 +529,7 @@ def decode_segment_files(
     stop_position: tuple[int, int] | None = None,
     out_batch_rows: int = 32768,
 ) -> DataFrame:
-    """Zero-shuffle decode: one task per segment file, read with pyarrow
-    inside the task, decode inline.
+    """Zero-shuffle envelope decode (see :func:`_decode_files`).
 
     ``decode_changes`` must shuffle raw blobs to co-locate segments; when
     the store is laid out one-file-per-segment (our generator, and the
@@ -580,32 +538,13 @@ def decode_segment_files(
     data movement at all.  This is the high-throughput bounded-replay path;
     the streaming path keeps ``decode_changes`` because foreachBatch hands
     it blob rows."""
-    import json as _json
-
-    import pyarrow.parquet as pq
-
-    bins_df = _bin_pack_paths(spark, paths)
     decode_partition = make_decoder(
         table_filter=table_filter,
         stop_position=stop_position,
         out_batch_rows=out_batch_rows,
         flush_rows=_vec_flush_rows(spark.sparkContext.defaultParallelism),
     )
-
-    def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pblob in batch.column("paths").to_pylist():
-                for path in _json.loads(pblob):
-                    # a fresh BinlogSession per file: each segment is
-                    # self-contained
-                    tbl = pq.read_table(
-                        path,
-                        columns=["file_seq", "offset", "gtid", "event_seq", "event_blob"],
-                        use_threads=False,  # tasks are already core-parallel
-                    )
-                    yield from decode_partition(iter(tbl.to_batches()))
-
-    return bins_df.mapInArrow(decode_files, schema=ENVELOPE_SCHEMA)
+    return _decode_files(spark, paths, decode_partition, ENVELOPE_SCHEMA)
 
 
 SCHEMA_SCAN_SCHEMA = StructType(

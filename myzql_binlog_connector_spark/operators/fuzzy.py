@@ -668,6 +668,18 @@ def _packed_doc_shingles(txt, n: int, k: int):
     return doc_u, val_u, counts
 
 
+def _packed_bitsets(rows, cols, n_rows: int, n_cols: int):
+    """Per-row bitsets with bit ``cols[j]`` of row ``rows[j]`` set, in
+    ``np.packbits(dense, axis=1)`` layout: ``(n_rows, (n_cols + 7) // 8)``
+    uint8, most significant bit first.  Set in place, without the 8×
+    larger dense bool matrix."""
+    import numpy as np
+
+    bits = np.zeros((n_rows, (n_cols + 7) // 8), dtype=np.uint8)
+    np.bitwise_or.at(bits, (rows, cols >> 3), (0x80 >> (cols & 7)).astype(np.uint8))
+    return bits
+
+
 def ngram_jaccard(
     df: DataFrame,
     pairs: DataFrame | None = None,
@@ -776,10 +788,9 @@ def ngram_jaccard(
         # path tends to fire precisely when the pair count explodes.)
         packed_width = (n_sid + 7) // 8
         if n_docs * packed_width <= 64 << 20:
-            dense = np.zeros((n_docs, n_sid), dtype=bool)
-            dense[np.repeat(np.arange(n_docs), counts), flat_dense] = True
-            bits = np.packbits(dense, axis=1)
-            del dense
+            bits = _packed_bitsets(
+                np.repeat(np.arange(n_docs), counts), flat_dense, n_docs, n_sid
+            )
             bc = spark.sparkContext.broadcast((id2row, counts, bits))
 
             def verify_fn(batches):

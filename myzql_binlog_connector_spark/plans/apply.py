@@ -436,24 +436,21 @@ class TranscriptsApplier:
                 return rec
             # quarantine parity on the narrowed route (round-6 ADVICE):
             # typed_changes silently filters dml_type='_corrupt', so dead
-            # letters must be split off and sunk HERE — same DLQ dir and
-            # column shape as the typed path below, so triage tooling
-            # reads one schema regardless of which route a batch took
+            # letters must be split off and sunk HERE, through the typed
+            # path's sink and in its column shape, so triage tooling reads
+            # one schema regardless of which route a batch took
             env = env.persist()
             try:
-                dead = env.filter(F.col("dml_type") == "_corrupt").select(
-                    F.col("file_seq").alias("_file_seq"),
-                    F.col("gtid").alias("_gtid"),
-                    F.col("event_seq").alias("_event_seq"),
-                    F.col("log_pos").alias("_log_pos"),
-                    F.col("after_values").alias("_corrupt"),
+                n_dead = self._sink_dead_letters(
+                    env.filter(F.col("dml_type") == "_corrupt").select(
+                        F.col("file_seq").alias("_file_seq"),
+                        F.col("gtid").alias("_gtid"),
+                        F.col("event_seq").alias("_event_seq"),
+                        F.col("log_pos").alias("_log_pos"),
+                        F.col("after_values").alias("_corrupt"),
+                    ),
+                    batch_id,
                 )
-                n_dead = dead.count()
-                if n_dead:
-                    dlq_dir = os.path.join(
-                        self.table.path, "_quarantine", f"batch-{batch_id}"
-                    )
-                    dead.coalesce(1).write.mode("overwrite").parquet(dlq_dir)
                 rec = self.apply_envelope_subset(env, batch_id, descs)
                 rec["quarantined_rows"] = n_dead
                 rec["narrowed_route"] = True
@@ -488,15 +485,12 @@ class TranscriptsApplier:
         # persists), split on _corrupt, sink the dead letters, merge the rest
         typed = typed.persist()
         try:
-            dead = typed.filter(F.col("_corrupt").isNotNull()).select(
-                "_file_seq", "_gtid", "_event_seq", "_log_pos", "_corrupt"
+            n_dead = self._sink_dead_letters(
+                typed.filter(F.col("_corrupt").isNotNull()).select(
+                    "_file_seq", "_gtid", "_event_seq", "_log_pos", "_corrupt"
+                ),
+                batch_id,
             )
-            n_dead = dead.count()
-            if n_dead:
-                dlq_dir = os.path.join(
-                    self.table.path, "_quarantine", f"batch-{batch_id}"
-                )
-                dead.coalesce(1).write.mode("overwrite").parquet(dlq_dir)
             rec = self._merge_typed(
                 typed.filter(F.col("_corrupt").isNull()).drop("_corrupt"),
                 batch_id,
@@ -505,6 +499,20 @@ class TranscriptsApplier:
             return rec
         finally:
             typed.unpersist()
+
+    def _sink_dead_letters(self, dead: DataFrame, batch_id: int) -> int:
+        """Write a batch's dead letters (``_file_seq``, ``_gtid``,
+        ``_event_seq``, ``_log_pos``, ``_corrupt``) as one parquet file
+        under ``{table}/_quarantine/batch-{id}/`` — the same DLQ dir and
+        shape whichever route the batch took — and return their count
+        (no dir when there are none)."""
+        import os
+
+        n_dead = dead.count()
+        if n_dead:
+            dlq_dir = os.path.join(self.table.path, "_quarantine", f"batch-{batch_id}")
+            dead.coalesce(1).write.mode("overwrite").parquet(dlq_dir)
+        return n_dead
 
     def bootstrap(self, snapshot: DataFrame, batch_id: int | None = None) -> dict:
         """Initial-load phase (the Debezium-snapshot analogue): merge a

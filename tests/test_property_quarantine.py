@@ -35,6 +35,7 @@ from myzql_binlog_connector_spark.functions.decode import (
     make_decoder,
     make_typed_decoder,
 )
+from tests.event_batches import event_batch
 
 TS = 1_700_000_000_000_000
 NAMES = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -124,7 +125,7 @@ def _decode_envelope(packets):
 def _decode_typed(packets):
     ds, _schema = make_typed_decoder(NAMES, KINDS, (0, 1), on_error="quarantine")
     good, dead = [], []
-    for rb in ds(iter(_feed(packets))):
+    for rb in ds(iter([event_batch(_feed(packets))])):
         cols = rb.to_pydict()
         for i in range(rb.num_rows):
             if cols["_corrupt"][i] is not None:

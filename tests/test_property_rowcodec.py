@@ -104,8 +104,7 @@ def test_vectorized_envelope_matches_generic(case):
     groups by event shape)."""
     from collections import Counter
 
-    from myzql_binlog_connector_spark.binlog.rowvec import EnvVecCollector
-    from myzql_binlog_connector_spark.functions.decode import _ARROW_ENVELOPE
+    from tests.event_batches import env_collector
 
     packets = _packets(*case)
 
@@ -118,7 +117,7 @@ def test_vectorized_envelope_matches_generic(case):
 
     s2 = BinlogSession()
     out = EnvelopeBatch()
-    vec = EnvVecCollector(_ARROW_ENVELOPE)
+    vec = env_collector()
     got = Counter()
     for fs, g, es, pkt in packets:
         s2.process_packet_columnar_vec(pkt, fs, g, es, out, vec)
@@ -132,7 +131,7 @@ def test_vectorized_envelope_matches_generic(case):
 @settings(max_examples=120, deadline=None)
 @given(table_and_rows())
 def test_vectorized_typed_matches_generic(case):
-    """The typed twin: ``TypedVecCollector`` (via the typed decoder) vs
+    """The typed twin: the typed decoder's ``VecCollector`` vs
     ``process_packet_typed`` on the same schemas, including the tombstones
     of key-changing UPDATEs.  Multiset parity, like the envelope test."""
     import json
@@ -142,6 +141,7 @@ def test_vectorized_typed_matches_generic(case):
         _payload_kinds,
         make_typed_decoder,
     )
+    from tests.event_batches import event_batch
 
     schema = case[0]
     packets = _packets(*case)
@@ -157,9 +157,10 @@ def test_vectorized_typed_matches_generic(case):
         s1.process_packet_typed(pkt, fs, g, es, apps, cols[n + 1 :], kinds, keys, n)
     want = Counter(zip(*cols))
 
-    decode_stream, arrow_schema = make_typed_decoder(schema.column_names, list(kinds), keys)
+    decode_partition, arrow_schema = make_typed_decoder(schema.column_names, list(kinds), keys)
     got = Counter()
-    for rb in decode_stream((pkt, fs, g, es) for fs, g, es, pkt in packets):
+    batch = event_batch((pkt, fs, g, es) for fs, g, es, pkt in packets)
+    for rb in decode_partition(iter([batch])):
         t = rb.to_pydict()
         got.update(zip(*[t[f.name] for f in arrow_schema]))
     assert got == want

@@ -361,12 +361,15 @@ class TestRowImageOverrun:
     def test_typed_quarantine_dead_letters_only_the_overrun_event(self):
         from myzql_binlog_connector_spark.functions.decode import make_typed_decoder
 
-        decode_stream, _ = make_typed_decoder(
+        from tests.event_batches import event_batch
+
+        decode_partition, _ = make_typed_decoder(
             list(DECIMAL_SCHEMA.column_names), ["s", "i", "s", "s"], (0, 1),
             on_error="quarantine",
         )
         packets = [(pkt, 1, i + 1, i + 1) for i, (_o, pkt) in enumerate(_overrun_packets())]
-        rows = [r for rb in decode_stream(iter(packets)) for r in rb.to_pylist()]
+        rows = [r for rb in decode_partition(iter([event_batch(packets)]))
+                for r in rb.to_pylist()]
         dead = [r for r in rows if r["_corrupt"] is not None]
         assert len(dead) == 1 and "overran event body" in dead[0]["_corrupt"]
         assert sorted(r["turn_idx"] for r in rows if r["_corrupt"] is None) == list(range(20))
@@ -374,7 +377,7 @@ class TestRowImageOverrun:
 
 # ---------------------------------------------------------------------------
 # round-6 directive: quarantine parity for the TYPED fast path (apply_files →
-# make_typed_decoder → TypedVecCollector.flush).  The flagship replay path
+# make_typed_decoder → VecCollector.flush).  The flagship replay path
 # must survive one corrupt packet at 100 TB without falling back to the
 # slower envelope path.
 # ---------------------------------------------------------------------------
@@ -405,6 +408,83 @@ def _typed_packets(corrupt_body_idx=(), truncate_idx=()):
             seen += 1
         packets.append((off, bytes(blob)))
     return packets
+
+
+class TestDeadLetterParity:
+    """One corrupt packet, both decoders: the envelope and the typed
+    output dead-letter it with the same (file_seq, gtid, event_seq,
+    log_pos) and the same triage text, whether the packet fails on its
+    own or inside a vectorized flush group."""
+
+    @staticmethod
+    def _dead_letters(packets):
+        from myzql_binlog_connector_spark.functions.decode import (
+            _payload_kinds,
+            make_decoder,
+            make_typed_decoder,
+        )
+        from tests.event_batches import event_batch
+
+        desc = json.dumps([[c.type_code, c.meta, int(c.nullable)]
+                           for c in TRANSCRIPTS_SCHEMA.columns])
+        batch = event_batch(
+            (blob, 1, i + 1, i + 1) for i, (_off, blob) in enumerate(packets)
+        )
+        env = [
+            (r["file_seq"], r["gtid"], r["event_seq"], r["log_pos"], r["after_values"])
+            for rb in make_decoder(on_error="quarantine")(iter([batch]))
+            for r in rb.to_pylist()
+            if r["dml_type"] == "_corrupt"
+        ]
+        decode_partition, _ = make_typed_decoder(
+            list(TRANSCRIPTS_SCHEMA.column_names), _payload_kinds([desc]), (0, 1),
+            on_error="quarantine",
+        )
+        typed = [
+            (r["_file_seq"], r["_gtid"], r["_event_seq"], r["_log_pos"], r["_corrupt"])
+            for rb in decode_partition(iter([batch]))
+            for r in rb.to_pylist()
+            if r["_corrupt"] is not None
+        ]
+        return env, typed
+
+    @pytest.mark.parametrize("failure", ["per_event", "vec_group"])
+    def test_same_record_on_both_outputs(self, failure):
+        """``per_event``: a truncated ROWS packet fails the structural
+        check before deferral.  ``vec_group``: a body with intact framing
+        defers and fails only in the kernel's group decode, so the flush
+        retries it singly."""
+        if failure == "per_event":
+            packets = _typed_packets(truncate_idx=(2,))
+        else:
+            packets = _typed_packets(corrupt_body_idx=(2,))
+        rows_events = [(i, blob) for i, (_o, blob) in enumerate(packets)
+                       if blob[5] in (30, 31, 32)]
+        idx, bad = rows_events[2]
+        env, typed = self._dead_letters(packets)
+        assert len(env) == 1
+        assert env == typed
+        fs, gtid, event_seq, log_pos, _text = env[0]
+        # the packet's own position: its header log_pos, not a placeholder
+        assert (fs, gtid, event_seq) == (1, idx + 1, idx + 1)
+        assert log_pos == int.from_bytes(bad[14:18], "little") > 0
+
+    def test_unmapped_table_triage_text_matches(self):
+        """A corrupt TABLE_MAP orphans the ROWS event after it; that
+        event's error message carries a non-ASCII dash, and both outputs
+        render the triage record the same way."""
+        w = EventWriter(server_id=1)
+        w.format_description()
+        w.table_map(5, TRANSCRIPTS_SCHEMA)
+        w.write_rows(5, TRANSCRIPTS_SCHEMA, _rows(10))
+        packets = [
+            (off, pkt[: len(pkt) // 2] if pkt[5] == 19 else pkt)
+            for off, pkt in w.events
+        ]
+        env, typed = self._dead_letters(packets)
+        assert len(env) == 2
+        assert env == typed
+        assert any("unmapped table_id" in json.loads(d[4])["error"] for d in env)
 
 
 def _write_segment(packets, path):

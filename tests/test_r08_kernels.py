@@ -257,6 +257,29 @@ class TestPackedKernelLimits:
         assert doc_u.tolist() == [i for i, w in enumerate(want) for _ in w]
         assert val_u.tolist() == [v for w in want for v in w]
 
+    @pytest.mark.parametrize("n_sid", [1, 7, 8, 64, 203])
+    def test_packed_bitsets_equal_packbits_of_dense(self, n_sid):
+        """The bitset verifier's packed per-doc sets equal
+        ``np.packbits`` over the dense bool matrix, including widths that
+        are not a multiple of 8 and empty docs."""
+        import numpy as np
+
+        from myzql_binlog_connector_spark.operators.fuzzy import _packed_bitsets
+
+        rng = np.random.default_rng(n_sid)
+        n_docs = 50
+        sets = [
+            rng.choice(n_sid, size=int(rng.integers(0, n_sid + 1)), replace=False)
+            for _ in range(n_docs)
+        ]
+        rows = np.repeat(np.arange(n_docs), [len(s) for s in sets])
+        cols = np.concatenate(sets).astype(np.int64)
+        dense = np.zeros((n_docs, n_sid), dtype=bool)
+        dense[rows, cols] = True
+        got = _packed_bitsets(rows, cols, n_docs, n_sid)
+        assert got.dtype == np.uint8
+        assert np.array_equal(got, np.packbits(dense, axis=1))
+
 
 class TestAssignCells:
     def test_matches_joined_maxby_reference(self, spark):

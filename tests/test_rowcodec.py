@@ -259,9 +259,8 @@ class TestEmptyPresentBitmap:
         bytes raises instead of looping on zero-width row images."""
         import pytest as _pytest
 
-        from myzql_binlog_connector_spark.binlog.rowvec import EnvVecCollector
         from myzql_binlog_connector_spark.binlog.wire import write_lenenc
-        from myzql_binlog_connector_spark.functions.decode import _ARROW_ENVELOPE
+        from tests.event_batches import env_collector
 
         def emit_rows_event(w, event_type, body=b""):
             n_bitmaps = 2 if event_type == 31 else 1
@@ -287,7 +286,7 @@ class TestEmptyPresentBitmap:
             sess.process_packet_columnar(bad, 1, 1, 1, EnvelopeBatch())
         # rowvec declines zero-width images, so the vec entry point raises
         # the same way instead of hanging in its row walk
-        vec = EnvVecCollector(_ARROW_ENVELOPE)
+        vec = env_collector()
         with _pytest.raises(ValueError, match="no present columns"):
             sess.process_packet_columnar_vec(bad, 1, 1, 1, EnvelopeBatch(), vec)
 

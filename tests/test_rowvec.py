@@ -23,16 +23,13 @@ from myzql_binlog_connector_spark.binlog.encoder import (
     TRANSCRIPTS_SCHEMA,
 )
 from myzql_binlog_connector_spark.binlog.rowvec import (
-    EnvVecCollector,
     _ts_string_array,
     build_env_plan,
     build_plan,
 )
-from myzql_binlog_connector_spark.functions.decode import (
-    _ARROW_ENVELOPE,
-    make_typed_decoder,
-)
+from myzql_binlog_connector_spark.functions.decode import make_typed_decoder
 from myzql_binlog_connector_spark.genlog import encode_stream, generate_ops
+from tests.event_batches import env_collector, event_batch
 
 KINDS = ("s", "i", "s", "s", "s", "s")
 NAMES = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -63,7 +60,7 @@ def _typed_vec(packets):
     ds, schema = make_typed_decoder(NAMES, list(KINDS), (0, 1))
     names = [f.name for f in schema]
     got = Counter()
-    for rb in ds(iter(packets)):
+    for rb in ds(iter([event_batch(packets)])):
         t = rb.to_pydict()
         got.update(zip(*[t[n] for n in names]))
     return got
@@ -80,7 +77,7 @@ def _env_ref(packets):
 def _env_vec(packets):
     sess = BinlogSession()
     out = EnvelopeBatch()
-    vec = EnvVecCollector(_ARROW_ENVELOPE)
+    vec = env_collector()
     got = Counter()
     for blob, fs, g, es in packets:
         sess.process_packet_columnar_vec(blob, fs, g, es, out, vec)
@@ -193,6 +190,42 @@ class TestPlanGating:
         wrong = ("i", "i", "s", "s", "s", "s")  # conv_id is VARCHAR, not int
         assert build_plan(TRANSCRIPTS_SCHEMA, present, present, "INSERT",
                           wrong, (0, 1), 6) is None
+
+    def test_wide_table_falls_back_on_both_outputs(self):
+        """A 300-column table: column indexes past 255 must not break the
+        vec path's plan lookup (no plan fits its null bitmap, so every
+        event takes the per-row parser), and both decoders equal their
+        per-row references."""
+        from myzql_binlog_connector_spark.binlog.encoder import TableSchema, long_col
+
+        n = 300
+        schema = TableSchema(
+            "db", "wide", tuple(long_col() for _ in range(n)),
+            column_names=tuple(f"c{i}" for i in range(n)),
+        )
+        w = EventWriter()
+        w.format_description()
+        w.table_map(9, schema)
+        rows = [tuple(range(r, r + n)) for r in range(3)]
+        w.write_rows(9, schema, rows)
+        w.update_rows(9, schema, [(rows[0], rows[1])])
+        w.delete_rows(9, schema, rows[2:])
+        packets = [(pkt, 1, i + 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
+        assert _env_ref(packets) == _env_vec(packets)
+
+        kinds, keys = ("i",) * n, (0, 1)
+        sess = BinlogSession()
+        cols = [[] for _ in range(n + 6)]
+        apps = tuple(c.append for c in cols[: n + 1])
+        for blob, fs, g, es in packets:
+            sess.process_packet_typed(blob, fs, g, es, apps, cols[n + 1 :], kinds, keys, n)
+        ds, out_schema = make_typed_decoder(list(schema.column_names), list(kinds), keys)
+        got = Counter()
+        for rb in ds(iter([event_batch(packets)])):
+            t = rb.to_pydict()
+            got.update(zip(*[t[f.name] for f in out_schema]))
+        # 3 inserts, a key-changing update (tombstone + upsert), 1 delete
+        assert got == Counter(zip(*cols)) and sum(got.values()) == 6
 
 
 class TestVecFlushSizing:
