@@ -40,9 +40,8 @@ def ensure_cdc_fixture(sf_tag: str) -> tuple[str, int]:
     Returns (segments_dir, n_change_rows).
 
     ``SPARK_GRAFT_CDC_FIXTURE_DIR`` points at an alternate pre-built
-    fixture root (segments/ + meta.json) — the skewed/endurance bench
-    scripts use it to run the standard measurements over their own
-    streams."""
+    fixture root (segments/ + meta.json), so the standard measurements
+    can run over another stream."""
     from myzql_binlog_connector_spark.genlog import (
         generate_ops,
         encode_stream,

@@ -4,6 +4,7 @@ Public API surface (see README.md for the architecture):
 
     from myzql_binlog_connector_spark import (
         decode_changes,          # raw event blobs → change envelope DF
+        decode_typed,            # raw event blobs → typed change rows
         decode_typed_from_files, # zero-shuffle typed decode (fast path)
         scan_schemas,            # TABLE_MAP-only schema pre-pass
         TableFilter,             # include/exclude with specificity rules
@@ -18,6 +19,7 @@ from .functions.decode import (  # noqa: F401
     ENVELOPE_SCHEMA,
     decode_changes,
     decode_segment_files,
+    decode_typed,
     decode_typed_from_files,
     scan_schemas,
 )
@@ -31,6 +33,7 @@ __all__ = [
     "ENVELOPE_SCHEMA",
     "decode_changes",
     "decode_segment_files",
+    "decode_typed",
     "decode_typed_from_files",
     "scan_schemas",
     "TableFilter",

@@ -195,7 +195,7 @@ def _combine(big, p, w, be=False):
     order = range(w - 1, -1, -1) if be else range(w)
     shift = 0
     for j in order:
-        acc |= big[p + j].astype(np.uint64) << np.uint64(shift)
+        acc |= big.take(p + j, mode="clip").astype(np.uint64) << np.uint64(shift)
         shift += 8
     return acc
 
@@ -205,12 +205,14 @@ def _walk_image(big, pos, ops, sink):
 
     ``sink`` is ``None`` (advance offsets only — UPDATE before-images of
     non-key columns) or a dict appended with per-column value chunks.
-    Returns the advanced cursor vector."""
+    Returns the advanced cursor vector.  Gathers clip to ``big``: a
+    corrupt length prefix in a group's last event must reach
+    :func:`walk_group`'s overrun check, not raise ``IndexError``."""
     n = len(pos)
     nbn = (len(ops) + 7) // 8
     nm = np.zeros(n, np.uint64)
     for j in range(nbn):
-        nm |= big[pos + j].astype(np.uint64) << np.uint64(8 * j)
+        nm |= big.take(pos + j, mode="clip").astype(np.uint64) << np.uint64(8 * j)
     pos = pos + nbn
     for bit, op in enumerate(ops):
         null = ((nm >> np.uint64(bit)) & np.uint64(1)).astype(bool)
@@ -220,10 +222,10 @@ def _walk_image(big, pos, ops, sink):
             L = np.zeros(n, np.int64)
             p = pos[nn]
             if op.lp == 1:
-                L[nn] = big[p]
+                L[nn] = big.take(p, mode="clip")
             else:
-                L[nn] = big[p].astype(np.int64) | (
-                    big[p + 1].astype(np.int64) << 8
+                L[nn] = big.take(p, mode="clip").astype(np.int64) | (
+                    big.take(p + 1, mode="clip").astype(np.int64) << 8
                 )
             if want:
                 sink.setdefault(op.out, []).append(("str", pos + op.lp, L, null))
@@ -242,7 +244,7 @@ def _walk_image(big, pos, ops, sink):
                     sink.setdefault(op.out, []).append(("num", vals, null))
                 elif op.op == "year":
                     vals = np.zeros(n, np.int64)
-                    vals[nn] = 1900 + big[pn].astype(np.int64)
+                    vals[nn] = 1900 + big.take(pn, mode="clip").astype(np.int64)
                     sink.setdefault(op.out, []).append(("num", vals, null))
                 elif op.op == "f4":
                     acc = _combine(big, pn, 4).astype(np.uint32)

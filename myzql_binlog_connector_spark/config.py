@@ -157,25 +157,15 @@ def run_replay(spark, config: ReplayConfig):
             "drives scripts/capture_daemon.py instead"
         )
     if config.output_mode in ("envelope", "stdout"):
-        from pyspark.sql import functions as F
-
         from .functions.decode import decode_changes
-        from .functions.position import position_at_least
         from .sources.segments import read_segments
 
-        events = read_segments(spark, config.segments_path)
-        if config.from_position is not None:
-            # whole segments below the from-file are pruned at the parquet
-            # scan; the intra-file cut happens on the decoded envelope so
-            # the TABLE_MAP state preceding from_position is preserved
-            events = events.filter(F.col("file_seq") >= int(config.from_position[0]))
-        env = decode_changes(events, table_filter=tf, stop_position=config.to_position)
-        if config.from_position is not None:
-            env = env.filter(
-                position_at_least(
-                    F.col("file_seq"), F.col("log_pos"), *config.from_position
-                )
-            )
+        env = decode_changes(
+            read_segments(spark, config.segments_path),
+            table_filter=tf,
+            stop_position=config.to_position,
+            from_position=config.from_position,
+        )
         if config.output_mode == "stdout":
             # reference stdout sink (S5), value-format parity with
             # output.zig printRowEvent/formatRowValue

@@ -1,9 +1,11 @@
 """Spark-facing decode: raw binlog event blobs → change rows, in one of two
 outputs: the JSON change-event envelope (``decode_changes``,
-``decode_segment_files``) or typed Arrow columns for the merge
-(``decode_typed_from_files``).
+``decode_segment_files``) or typed Arrow columns (``decode_typed``,
+``decode_typed_from_files``).  Every merging apply (``apply_files``,
+``apply_events``, so also the live stream) takes the typed output.
 
-The plan shape (SURVEY.md §3.2 restatement):
+Each output reads an event frame (a segment-store scan, a streaming
+micro-batch) with one shared plan prelude (``_decode_events``):
 
     events(file_seq, offset, gtid, event_seq, event_blob)
       → repartition(file_seq)              # a segment is a self-contained
@@ -38,8 +40,10 @@ from typing import Iterator
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -311,13 +315,19 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
 # envelope, no from_json) — the apply pipeline's hot path
 # ---------------------------------------------------------------------------
 
-_META_ARROW = [
-    ("_deleted", pa.bool_()),
-    ("_gtid", pa.int64()),
-    ("_event_seq", pa.int64()),
-    ("_event_row_index", pa.int64()),
-    ("_file_seq", pa.int32()),
-    ("_log_pos", pa.int64()),
+# payload kind → (Arrow, Spark) type; the merge meta columns likewise
+_KIND_TYPES = {
+    "i": (pa.int64(), LongType()),
+    "f": (pa.float64(), DoubleType()),
+    "s": (pa.string(), StringType()),
+}
+_META_TYPES = [
+    ("_deleted", pa.bool_(), BooleanType()),
+    ("_gtid", pa.int64(), LongType()),
+    ("_event_seq", pa.int64(), LongType()),
+    ("_event_row_index", pa.int64(), LongType()),
+    ("_file_seq", pa.int32(), IntegerType()),
+    ("_log_pos", pa.int64(), LongType()),
 ]
 
 _INT_CODES = frozenset({1, 2, 3, 8, 9, 13, 16, 247, 248})  # ints/year/bit/enum/set
@@ -361,10 +371,10 @@ def make_typed_decoder(
     on_error: str = "raise",
 ):
     """Typed twin of :func:`make_decoder`: returns ``(decode_partition,
-    out_schema)``, where ``decode_partition`` maps event Arrow batches to
-    typed change rows.
+    schema)``, where ``decode_partition`` maps event Arrow batches to
+    typed change rows and ``schema`` is their Spark schema.
 
-    Output columns: payload (one per ``column_names``, Arrow type per
+    Output columns: payload (one per ``column_names``, type per
     ``kinds``) + the merge meta columns.  DELETE rows carry only the key
     positions (from the before image) — matching the envelope-path
     semantics of ``TranscriptsApplier.typed_changes``.
@@ -380,16 +390,17 @@ def make_typed_decoder(
     from ..binlog.rowvec import VecCollector, assemble_typed, build_plan
 
     arrow_schema = pa.schema(
-        [
-            (name, {"i": pa.int64(), "f": pa.float64(), "s": pa.string()}[k])
-            for name, k in zip(column_names, kinds)
-        ]
-        + _META_ARROW
+        [(name, _KIND_TYPES[k][0]) for name, k in zip(column_names, kinds)]
+        + [(name, at) for name, at, _st in _META_TYPES]
     )
-    out_schema = (
-        arrow_schema.append(pa.field("_corrupt", pa.string()))
-        if on_error == "quarantine" else arrow_schema
+    schema = StructType(
+        [StructField(name, _KIND_TYPES[k][1], True) for name, k in zip(column_names, kinds)]
+        + [StructField(name, st, False) for name, _at, st in _META_TYPES]
     )
+    out_schema = arrow_schema
+    if on_error == "quarantine":
+        out_schema = arrow_schema.append(pa.field("_corrupt", pa.string()))
+        schema = schema.add("_corrupt", StringType(), True)
     kinds_t, keys_t, n_payload = tuple(kinds), tuple(key_positions), len(column_names)
 
     def assemble(plan, big, walk, metas):
@@ -413,7 +424,7 @@ def make_typed_decoder(
         out_batch_rows=out_batch_rows,
         flush_rows=flush_rows or _vec_flush_rows(None),
     )
-    return decode_partition, out_schema
+    return decode_partition, schema
 
 
 def _bin_pack_paths(spark, paths: list[str], per_core: int = 2) -> DataFrame:
@@ -496,30 +507,12 @@ def decode_typed_from_files(
     ``on_error="quarantine"`` adds a ``_corrupt`` string column (null on
     good rows); undecodable packets become dead-letter rows instead of
     failing the job — see :func:`make_typed_decoder`."""
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-    )
-
-    decode_partition, _ = make_typed_decoder(
+    decode_partition, schema = make_typed_decoder(
         column_names, kinds, key_positions, table_filter, stop_position,
         flush_rows=_vec_flush_rows(spark.sparkContext.defaultParallelism),
         on_error=on_error,
     )
-    fields = [
-        StructField(name, {"i": LongType(), "f": DoubleType(), "s": StringType()}[k], True)
-        for name, k in zip(column_names, kinds)
-    ] + [
-        StructField("_deleted", BooleanType(), False),
-        StructField("_gtid", LongType(), False),
-        StructField("_event_seq", LongType(), False),
-        StructField("_event_row_index", LongType(), False),
-        StructField("_file_seq", IntegerType(), False),
-        StructField("_log_pos", LongType(), False),
-    ]
-    if on_error == "quarantine":
-        fields.append(StructField("_corrupt", StringType(), True))
-    return _decode_files(spark, paths, decode_partition, StructType(fields))
+    return _decode_files(spark, paths, decode_partition, schema)
 
 
 def decode_segment_files(
@@ -535,9 +528,8 @@ def decode_segment_files(
     the store is laid out one-file-per-segment (our generator, and the
     natural layout of a binlog archive), the file itself is the decode unit
     — size-balanced bins of segment files give one wave of tasks with no
-    data movement at all.  This is the high-throughput bounded-replay path;
-    the streaming path keeps ``decode_changes`` because foreachBatch hands
-    it blob rows."""
+    data movement at all.  An event frame (a streaming micro-batch, a
+    filtered scan) takes :func:`decode_changes` or :func:`decode_typed`."""
     decode_partition = make_decoder(
         table_filter=table_filter,
         stop_position=stop_position,
@@ -570,8 +562,6 @@ def scan_schemas(events_df: DataFrame) -> DataFrame:
     written by this engine do), the TABLE_MAP predicate is pushed into the
     parquet scan so only TABLE_MAP blobs ever reach Python."""
     import json as _json
-
-    from pyspark.sql import functions as F
 
     from ..binlog.constants import CRC_LEN, HEADER_LEN, EventType
     from ..binlog.decoder import parse_table_map
@@ -632,32 +622,23 @@ def scan_schemas(events_df: DataFrame) -> DataFrame:
     return events_df.mapInArrow(scan, schema=SCHEMA_SCAN_SCHEMA).distinct()
 
 
-def decode_changes(
+def _decode_events(
     events_df: DataFrame,
-    table_filter=None,
-    stop_position: tuple[int, int] | None = None,
+    decode_partition,
+    schema: StructType,
+    from_position: tuple[int, int] | None,
+    prefix: str,
     already_partitioned: bool = False,
-    verify_crc: bool = False,
-    on_error: str = "raise",
 ) -> DataFrame:
-    """Decode a DataFrame of raw framed packets into the change envelope.
+    """The event-frame decode both outputs share.  ``from_position``:
+    segments below the from-file are pruned before the decode; the
+    intra-file cut runs on the decoded rows (position columns named with
+    ``prefix``), so the TABLE_MAP state preceding the position is kept."""
+    from .position import position_at_least
 
-    ``events_df`` columns: file_seq int, offset long, gtid long,
-    event_seq long, event_blob binary.
-
-    ``stop_position``: (file_seq, log_pos) exclusive upper bound — events
-    whose log_pos >= bound are excluded (binlog_reader.zig:443-455).
-
-    ``already_partitioned``: skip the repartition+sort when the caller
-    guarantees segment-aligned, offset-ordered partitions (e.g. one source
-    file per segment read with a file-per-partition layout).
-
-    ``on_error="quarantine"``: undecodable packets become dead-letter rows
-    (``dml_type='_corrupt'``, error + hex prefix in ``after_values``)
-    instead of failing the job — route them with
-    ``df.filter("dml_type = '_corrupt'")``; appliers exclude them.
-    """
     df = events_df
+    if from_position is not None:
+        df = df.filter(F.col("file_seq") >= int(from_position[0]))
     if not already_partitioned:
         # RANGE-partition whole segments together, then order within.
         # Hash partitioning here had classic few-distinct-keys skew: ~2×
@@ -676,15 +657,70 @@ def decode_changes(
         df = df.repartitionByRange(2 * n, "file_seq").sortWithinPartitions(
             "file_seq", "offset"
         )
-    return df.mapInArrow(
-        make_decoder(
-            table_filter=table_filter,
-            stop_position=stop_position,
-            verify_crc=verify_crc,
-            on_error=on_error,
-            flush_rows=_vec_flush_rows(
-                events_df.sparkSession.sparkContext.defaultParallelism
-            ),
-        ),
-        schema=ENVELOPE_SCHEMA,
+    out = df.mapInArrow(decode_partition, schema=schema)
+    if from_position is None:
+        return out
+    fs, pos = F.col(f"{prefix}file_seq"), F.col(f"{prefix}log_pos")
+    return out.filter(position_at_least(fs, pos, *from_position))
+
+
+def decode_changes(
+    events_df: DataFrame,
+    table_filter=None,
+    stop_position: tuple[int, int] | None = None,
+    already_partitioned: bool = False,
+    verify_crc: bool = False,
+    on_error: str = "raise",
+    from_position: tuple[int, int] | None = None,
+) -> DataFrame:
+    """Decode a DataFrame of raw framed packets into the change envelope.
+
+    ``events_df`` columns: file_seq int, offset long, gtid long,
+    event_seq long, event_blob binary.
+
+    ``stop_position``: (file_seq, log_pos) exclusive upper bound — events
+    whose log_pos >= bound are excluded (binlog_reader.zig:443-455).
+    ``from_position``: (file_seq, log_pos) inclusive lower bound (see
+    :func:`_decode_events`).
+
+    ``already_partitioned``: skip the repartition+sort when the caller
+    guarantees segment-aligned, offset-ordered partitions (e.g. one source
+    file per segment read with a file-per-partition layout).
+
+    ``on_error="quarantine"``: undecodable packets become dead-letter rows
+    (``dml_type='_corrupt'``, error + hex prefix in ``after_values``)
+    instead of failing the job — route them with
+    ``df.filter("dml_type = '_corrupt'")``; appliers exclude them.
+    """
+    decode_partition = make_decoder(
+        table_filter=table_filter,
+        stop_position=stop_position,
+        verify_crc=verify_crc,
+        on_error=on_error,
+        flush_rows=_vec_flush_rows(events_df.sparkSession.sparkContext.defaultParallelism),
     )
+    return _decode_events(
+        events_df, decode_partition, ENVELOPE_SCHEMA, from_position, "",
+        already_partitioned,
+    )
+
+
+def decode_typed(
+    events_df: DataFrame,
+    column_names: list[str],
+    kinds: list[str],
+    key_positions: tuple[int, ...] = (0, 1),
+    table_filter=None,
+    stop_position: tuple[int, int] | None = None,
+    from_position: tuple[int, int] | None = None,
+    on_error: str = "raise",
+) -> DataFrame:
+    """Typed twin of :func:`decode_changes`: the same event frame, the
+    same segment ordering and position bounds, typed change rows out (see
+    :func:`make_typed_decoder`) — no JSON envelope, no ``from_json``."""
+    decode_partition, schema = make_typed_decoder(
+        column_names, kinds, key_positions, table_filter, stop_position,
+        flush_rows=_vec_flush_rows(events_df.sparkSession.sparkContext.defaultParallelism),
+        on_error=on_error,
+    )
+    return _decode_events(events_df, decode_partition, schema, from_position, "_")

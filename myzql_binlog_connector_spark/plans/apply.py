@@ -1,20 +1,31 @@
-"""CDC apply: change-event envelope → typed rows → exactly-once LWW merge.
+"""CDC apply: raw events → typed rows → exactly-once LWW merge.
 
-The J2/T5/T6/A2 operators of SURVEY.md §2: typed extraction of row images
-from the positional-JSON envelope (JVM-side ``from_json`` — no Python),
+The J2/T5/T6/A2 operators of SURVEY.md §2: typed decode of row images
+(segment files via ``apply_files``, an event frame such as a streaming
+micro-batch via ``apply_events``; both run one body, ``_apply_typed``),
 per-file_seq watermark gating for idempotent redelivery, LWW dedup,
 and a merge into :class:`BucketedLakeTable` with lineage/metrics recorded in
-the same atomic commit.
+the same atomic commit.  A decoded envelope (``apply_batch``) is typed
+JVM-side with ``from_json``.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..binlog.constants import ColumnType
+from ..functions.decode import (
+    DML_CORRUPT,
+    _payload_kinds,
+    decode_changes,
+    decode_typed,
+    decode_typed_from_files,
+    scan_schemas,
+)
 from .lake import BucketedLakeTable, local_relation
 
 
@@ -119,15 +130,13 @@ def payload_struct_from_descs(descs: list[str]) -> T.StructType:
     )
 
 
-def utc_timestamp_col(name: str):
-    """Parse an engine envelope timestamp string (UTC wall time, the
-    decoder's contract) into TimestampType pinned to UTC regardless of
+def utc_timestamp(col):
+    """Parse an engine timestamp string (UTC wall time, the decoder's
+    contract) into TimestampType pinned to UTC regardless of
     ``spark.sql.session.timeZone``: a plain cast would interpret the wall
     time in the session zone and silently shift every value for non-UTC
     consumers."""
-    return F.expr(
-        f"from_utc_timestamp(cast(`{name}` as timestamp), current_timezone())"
-    )
+    return F.from_utc_timestamp(col.cast("timestamp"), F.expr("current_timezone()"))
 
 
 def _desc_matches(table_filter, database: str | None, table: str | None) -> bool:
@@ -235,11 +244,8 @@ class TranscriptsApplier:
     def typed_changes(self, envelope: DataFrame, descs: list[str] | None = None) -> DataFrame:
         """Envelope → typed change rows (payload cols + key + meta cols).
 
-        ``from_json`` is JVM-side; the only driver work is collecting the
-        tiny distinct set of schema descriptors (bounded by the number of
-        TABLE_MAP variants in the batch, not by row count).  Pass ``descs``
-        (e.g. from ``scan_schemas`` over the raw events) to avoid a full
-        decode pass for the descriptor scan.
+        ``from_json`` is JVM-side; without ``descs`` the only driver work
+        is collecting the tiny distinct set of schema descriptors.
 
         Dead-letter rows (``dml_type='_corrupt'``, produced by decode's
         quarantine mode) are excluded here — they carry no payload and
@@ -307,11 +313,7 @@ class TranscriptsApplier:
         )
 
         def typed(col, field: T.StructField):
-            if isinstance(field.dataType, T.TimestampType):
-                return F.from_utc_timestamp(
-                    col.cast("timestamp"), F.expr("current_timezone()")
-                )
-            return col
+            return utc_timestamp(col) if isinstance(field.dataType, T.TimestampType) else col
 
         df = envelope.withColumn(
             "_after", F.from_json("after_values", parse_struct)
@@ -324,41 +326,34 @@ class TranscriptsApplier:
             F.col("file_seq").alias("_file_seq"),
             F.col("log_pos").alias("_log_pos"),
         ]
-        cols = []
+        cols, tcols = [], []
         for i, field in enumerate(struct.fields):
             name = names[i]
-            src = (
-                F.coalesce(F.col(f"_after.c{i}"), F.col(f"_before.c{i}"))
-                if i in key_positions
-                else F.col(f"_after.c{i}")
-            )
-            cols.append(typed(src, field).alias(name))
-        base = df.select(
-            *cols,
-            (F.col("dml_type") == F.lit("DELETE")).alias("_deleted"),
-            *meta_cols,
+            after, before = F.col(f"_after.c{i}"), F.col(f"_before.c{i}")
+            if i in key_positions:
+                cols.append(typed(F.coalesce(after, before), field).alias(name))
+                tcols.append(typed(before, field).alias(name))
+            else:
+                cols.append(typed(after, field).alias(name))
+                tcols.append(F.lit(None).cast(field.dataType).alias(name))
+        upsert = F.struct(
+            *cols, (F.col("dml_type") == F.lit("DELETE")).alias("_deleted"), *meta_cols
         )
 
         # a PK-changing UPDATE upserts the new key but would leave the
-        # old-key row live forever: emit an extra tombstone for the before
-        # key (same ordering triple — it cannot collide with the upsert,
-        # which lives under the new key)
-        key_change = F.col("dml_type") == F.lit("UPDATE")
+        # old-key row live forever: the same pass emits a tombstone for the
+        # before key (same ordering triple — it cannot collide with the
+        # upsert, which lives under the new key), so each row expands to a
+        # 1- or 2-element array and the input is read once
+        tomb = F.struct(*tcols, F.lit(True).alias("_deleted"), *meta_cols)
         diff = F.lit(False)
         for i in key_positions:
             diff = diff | ~F.col(f"_before.c{i}").eqNullSafe(F.col(f"_after.c{i}"))
-        tomb_src = df.filter(key_change & diff & F.col("before_values").isNotNull())
-        tcols = []
-        for i, field in enumerate(struct.fields):
-            name = names[i]
-            src = (
-                F.col(f"_before.c{i}")
-                if i in key_positions
-                else F.lit(None).cast(parse_struct.fields[i].dataType)
-            )
-            tcols.append(typed(src, field).alias(name))
-        tombstones = tomb_src.select(*tcols, F.lit(True).alias("_deleted"), *meta_cols)
-        return base.unionByName(tombstones)
+        key_change = (
+            (F.col("dml_type") == F.lit("UPDATE")) & diff & F.col("before_values").isNotNull()
+        )
+        rows = F.slice(F.array(upsert, tomb), 1, 1 + key_change.cast("int"))
+        return df.select(F.inline(rows))
 
     def apply_files(
         self,
@@ -368,29 +363,11 @@ class TranscriptsApplier:
         stop_position: tuple[int, int] | None = None,
         on_error: str = "raise",
     ) -> dict:
-        """Bounded-replay fast path: zero-shuffle typed decode straight from
-        segment files (no JSON envelope, no from_json), then the same
-        watermark-gated exactly-once merge as :meth:`apply_batch`.
-
-        ``on_error="quarantine"``: quarantine parity for the flagship
-        typed path — an undecodable packet becomes a dead-letter row
-        instead of failing the replay (the contract ``apply_batch`` +
-        ``decode_changes(on_error="quarantine")`` already has).  Dead
-        letters are written to ``{table}/_quarantine/batch-{id}/`` for
-        DLQ triage, counted in the returned record (``quarantined_rows``),
-        and excluded from the merge; at 100 TB the hot path is exactly
-        where corruption eventually appears, and falling back to the
-        slower envelope path would forfeit the typed path's throughput
-        right when it matters."""
-        import json
-        import os
-
-        from ..functions.decode import (
-            _payload_kinds,
-            decode_typed_from_files,
-            scan_schemas,
-        )
-
+        """Bounded replay of segment files through :meth:`_apply_typed`,
+        decoded by the zero-shuffle bin-packed file reader
+        (:func:`decode_typed_from_files`).  Descriptors come from the
+        store's ``_schemas.json`` sidecar when present, else from a
+        TABLE_MAP-only pre-pass."""
         sidecar = os.path.join(os.path.dirname(paths[0]), "_schemas.json")
         if os.path.exists(sidecar):
             with open(sidecar) as f:
@@ -403,102 +380,124 @@ class TranscriptsApplier:
                 or _desc_matches(table_filter, e.get("database"), e.get("table"))
             ]
         else:
-            descs = [
-                r["payload_schema"]
-                for r in scan_schemas(self.spark.read.parquet(*paths)).collect()
-                if _desc_matches(table_filter, r["database"], r["table_name"])
-            ]
+            descs = self._scan_descs(self.spark.read.parquet(*paths), table_filter)
+        return self._apply_typed(
+            descs,
+            batch_id,
+            on_error,
+            lambda names, kinds: decode_typed_from_files(
+                self.spark, paths, names, kinds, key_positions=self.key_positions,
+                table_filter=table_filter, stop_position=stop_position, on_error=on_error,
+            ),
+            lambda: decode_changes(
+                self.spark.read.parquet(*paths), table_filter=table_filter,
+                stop_position=stop_position, on_error=on_error,
+            ),
+        )
+
+    def apply_events(
+        self,
+        events: DataFrame,
+        batch_id: int | None = None,
+        table_filter=None,
+        stop_position: tuple[int, int] | None = None,
+        from_position: tuple[int, int] | None = None,
+        on_error: str = "raise",
+    ) -> dict:
+        """Apply an event frame (segment-store columns; a streaming
+        micro-batch) through :meth:`_apply_typed`, decoded by
+        :func:`decode_typed`.  Descriptors come from a TABLE_MAP-only
+        pre-pass over ``events``."""
+        bounds = dict(
+            table_filter=table_filter, stop_position=stop_position,
+            from_position=from_position, on_error=on_error,
+        )
+        return self._apply_typed(
+            self._scan_descs(events, table_filter),
+            batch_id,
+            on_error,
+            lambda names, kinds: decode_typed(
+                events, names, kinds, self.key_positions, **bounds
+            ),
+            lambda: decode_changes(events, **bounds),
+        )
+
+    @staticmethod
+    def _scan_descs(events: DataFrame, table_filter) -> list[str]:
+        rows = scan_schemas(events).collect()
+        return [desc for db, tbl, desc in rows if _desc_matches(table_filter, db, tbl)]
+
+    def _apply_typed(self, descs, batch_id, on_error, read_typed, read_envelope) -> dict:
+        """The one typed apply: descriptors → narrowing check → typed
+        decode (the caller's reader: ``read_typed(names, kinds)``, or
+        ``read_envelope()`` for a narrowed batch) → cast → quarantine
+        split → :meth:`_merge_typed`.  ``on_error="quarantine"``: dead
+        letters are written to ``{table}/_quarantine/batch-{id}/``,
+        counted in the record (``quarantined_rows``) and never merged."""
         if not descs:
             return {"batch_id": batch_id, "skipped": True, "input_rows": 0}
         base = len(self.column_names)
-        if base and any(len(json.loads(d)) < base for d in set(descs)):
+        narrowed = {n for n in (len(json.loads(d)) for d in set(descs)) if n < base}
+        if narrowed:
             # schema narrowing (DROP COLUMN) in this batch: the typed
             # kernel is positional end-to-end, so route this batch through
             # the envelope path's per-descriptor remap (typed_changes).
             # DDL drops are one-batch rarities — steady state stays on the
-            # zero-shuffle typed kernel; validation raises
-            # SchemaNarrowingError up front when no narrowed_names is
-            # declared, which beats positionally-shifted corruption.
-            from ..functions.decode import decode_changes
-
-            for n in {len(json.loads(d)) for d in set(descs)}:
-                if n < base:
-                    self._names_for_count(n)
-            env = decode_changes(
-                self.spark.read.parquet(*paths),
-                table_filter=table_filter,
-                stop_position=stop_position,
-                on_error="quarantine" if on_error == "quarantine" else "raise",
-            )
-            if on_error != "quarantine":
-                rec = self.apply_envelope_subset(env, batch_id, descs)
-                rec["narrowed_route"] = True
-                return rec
-            # quarantine parity on the narrowed route (round-6 ADVICE):
-            # typed_changes silently filters dml_type='_corrupt', so dead
-            # letters must be split off and sunk HERE, through the typed
-            # path's sink and in its column shape, so triage tooling reads
-            # one schema regardless of which route a batch took
-            env = env.persist()
-            try:
-                n_dead = self._sink_dead_letters(
-                    env.filter(F.col("dml_type") == "_corrupt").select(
-                        F.col("file_seq").alias("_file_seq"),
-                        F.col("gtid").alias("_gtid"),
-                        F.col("event_seq").alias("_event_seq"),
-                        F.col("log_pos").alias("_log_pos"),
-                        F.col("after_values").alias("_corrupt"),
-                    ),
-                    batch_id,
+            # typed kernel; validation raises SchemaNarrowingError up
+            # front when no narrowed_names is declared, which beats
+            # positionally-shifted corruption.
+            for n in narrowed:
+                self._names_for_count(n)
+            frame = read_envelope()
+            # dead letters are split off here, in the typed sink's column
+            # shape (typed_changes drops them), so triage tooling reads one
+            # schema whichever route a batch took
+            def dead(env):
+                return env.filter(F.col("dml_type") == DML_CORRUPT).select(
+                    F.col("file_seq").alias("_file_seq"),
+                    F.col("gtid").alias("_gtid"),
+                    F.col("event_seq").alias("_event_seq"),
+                    F.col("log_pos").alias("_log_pos"),
+                    F.col("after_values").alias("_corrupt"),
                 )
-                rec = self.apply_envelope_subset(env, batch_id, descs)
-                rec["quarantined_rows"] = n_dead
-                rec["narrowed_route"] = True
-                return rec
-            finally:
-                env.unpersist()
-        struct = payload_struct_from_descs(descs)
-        names = [self._name_for(i) for i in range(len(struct.fields))]
-        kinds = _payload_kinds(descs)
-        typed = decode_typed_from_files(
-            self.spark,
-            paths,
-            names,
-            kinds,
-            key_positions=self.key_positions,
-            table_filter=table_filter,
-            stop_position=stop_position,
-            on_error=on_error,
-        )
-        # cast payload columns to their exact Spark types (string→timestamp,
-        # int64→int, string→decimal, …) — one JVM cast per column; TIMESTAMP
-        # strings are UTC wall times and must not pass through the session TZ
-        for name, field in zip(names, struct.fields):
-            if isinstance(field.dataType, T.TimestampType):
-                typed = typed.withColumn(name, utc_timestamp_col(name))
-            else:
-                typed = typed.withColumn(name, F.col(name).cast(field.dataType))
-        if on_error != "quarantine":
-            return self._merge_typed(typed, batch_id)
-        # one decode feeds both the dead-letter split and the merge: persist
-        # at batch granularity (bounded — the same unit apply_batch already
-        # persists), split on _corrupt, sink the dead letters, merge the rest
-        typed = typed.persist()
-        try:
-            n_dead = self._sink_dead_letters(
-                typed.filter(F.col("_corrupt").isNotNull()).select(
+
+            def merge(env):
+                return {**self.apply_envelope_subset(env, batch_id, descs), "narrowed_route": True}
+        else:
+            struct = payload_struct_from_descs(descs)
+            names = [self._name_for(i) for i in range(len(struct.fields))]
+            frame = read_typed(names, _payload_kinds(descs))
+            # cast payload columns to their exact Spark types (string→
+            # timestamp, int64→int, string→decimal, …) — one JVM cast per
+            # column; TIMESTAMP strings are UTC wall times and must not pass
+            # through the session TZ
+            for name, field in zip(names, struct.fields):
+                if isinstance(field.dataType, T.TimestampType):
+                    frame = frame.withColumn(name, utc_timestamp(F.col(name)))
+                else:
+                    frame = frame.withColumn(name, F.col(name).cast(field.dataType))
+
+            def dead(typed):
+                return typed.filter(F.col("_corrupt").isNotNull()).select(
                     "_file_seq", "_gtid", "_event_seq", "_log_pos", "_corrupt"
-                ),
-                batch_id,
-            )
-            rec = self._merge_typed(
-                typed.filter(F.col("_corrupt").isNull()).drop("_corrupt"),
-                batch_id,
-            )
+                )
+
+            def merge(typed):
+                if on_error == "quarantine":
+                    typed = typed.filter(F.col("_corrupt").isNull()).drop("_corrupt")
+                return self._merge_typed(typed, batch_id)
+        if on_error != "quarantine":
+            return merge(frame)
+        # one decode feeds both the dead-letter split and the merge: persist
+        # at batch granularity, split, sink the dead letters, merge the rest
+        frame = frame.persist()
+        try:
+            n_dead = self._sink_dead_letters(dead(frame), batch_id)
+            rec = merge(frame)
             rec["quarantined_rows"] = n_dead
             return rec
         finally:
-            typed.unpersist()
+            frame.unpersist()
 
     def _sink_dead_letters(self, dead: DataFrame, batch_id: int) -> int:
         """Write a batch's dead letters (``_file_seq``, ``_gtid``,
@@ -506,8 +505,6 @@ class TranscriptsApplier:
         under ``{table}/_quarantine/batch-{id}/`` — the same DLQ dir and
         shape whichever route the batch took — and return their count
         (no dir when there are none)."""
-        import os
-
         n_dead = dead.count()
         if n_dead:
             dlq_dir = os.path.join(self.table.path, "_quarantine", f"batch-{batch_id}")
@@ -615,38 +612,22 @@ class TranscriptsApplier:
         return gate_redelivered(changes, wm_df)
 
     def apply_envelope_subset(
-        self, envelope: DataFrame, batch_id: int | None, descs: list[str]
+        self, envelope: DataFrame, batch_id: int | None, descs: list[str] | None
     ) -> dict:
         """Apply a pre-filtered (single-table) envelope with known descs."""
         typed = self.typed_changes(envelope, descs=descs)
         return self._merge_typed(typed, batch_id)
 
-    def apply_batch(
-        self,
-        envelope: DataFrame,
-        batch_id: int | None = None,
-        raw_events: DataFrame | None = None,
-    ) -> dict:
-        """Decode-envelope batch → exactly-once merge.  Returns the commit
+    def apply_batch(self, envelope: DataFrame, batch_id: int | None = None) -> dict:
+        """Decoded-envelope batch → exactly-once merge.  Returns the commit
         lineage record (or a skip record when everything was redelivered).
-
-        With ``raw_events`` provided, the typed-extraction schema comes from
-        a TABLE_MAP-only pre-pass over the raw blobs (cheap) and the decode
-        runs exactly once, materialized into the persisted ``fresh`` frame.
-        Without it, the envelope is persisted and scanned for descriptors."""
-        descs = None
-        if raw_events is not None:
-            from ..functions.decode import scan_schemas
-
-            descs = [r["payload_schema"] for r in scan_schemas(raw_events).collect()]
-        else:
-            envelope = envelope.persist()
+        The envelope is persisted: the descriptor scan and the typed
+        extraction both read it.  Raw events take :meth:`apply_events`."""
+        envelope = envelope.persist()
         try:
-            typed = self.typed_changes(envelope, descs=descs)
-            return self._merge_typed(typed, batch_id)
+            return self.apply_envelope_subset(envelope, batch_id, None)
         finally:
-            if raw_events is None:
-                envelope.unpersist()
+            envelope.unpersist()
 
 
 class MultiTableApplier:
@@ -676,28 +657,20 @@ class MultiTableApplier:
         default_key_positions: tuple[int, ...] = (0,),
         n_buckets: int = 64,
     ):
-        import os
-
         self.spark = spark
         self.root_path = root_path
         self.table_specs = dict(table_specs or {})
         self.default_key_positions = tuple(default_key_positions)
         self.n_buckets = n_buckets
-        self._os = os
 
     def table_path(self, database: str, table: str) -> str:
-        return self._os.path.join(self.root_path, database, table)
+        return os.path.join(self.root_path, database, table)
 
-    def table_for(self, database: str, table: str, column_names=None, key_positions=None):
-        from .lake import BucketedLakeTable
-
+    def table_for(self, database: str, table: str):
         spec = self.table_specs.get((database, table), {})
-        names = column_names or spec.get("column_names")
-        keys = key_positions or spec.get("key_positions", self.default_key_positions)
-        if names:
-            key_cols = [names[i] for i in keys]
-        else:
-            key_cols = [f"c{i}" for i in keys]
+        names = spec.get("column_names")
+        keys = spec.get("key_positions", self.default_key_positions)
+        key_cols = [names[i] for i in keys] if names else [f"c{i}" for i in keys]
         return BucketedLakeTable(
             self.spark,
             self.table_path(database, table),
@@ -706,11 +679,27 @@ class MultiTableApplier:
             stats_cols=spec.get("stats_cols"),
         )
 
+    def apply_events(
+        self,
+        events: DataFrame,
+        batch_id: int | None = None,
+        table_filter=None,
+        stop_position: tuple[int, int] | None = None,
+        from_position: tuple[int, int] | None = None,
+        on_error: str = "raise",
+    ) -> dict:
+        """Event frame → one envelope decode → :meth:`apply_batch`'s
+        per-table fan-out."""
+        envelope = decode_changes(
+            events, table_filter=table_filter, stop_position=stop_position,
+            from_position=from_position, on_error=on_error,
+        )
+        return self.apply_batch(envelope, batch_id)
+
     def apply_batch(
         self,
         envelope: DataFrame,
         batch_id: int | None = None,
-        raw_events: DataFrame | None = None,
         parallelism: int | None = None,
     ) -> dict:
         """Route the batch per (database, table) and merge each into its own
@@ -728,20 +717,14 @@ class MultiTableApplier:
         no-op for the tables that committed."""
         from concurrent.futures import ThreadPoolExecutor
 
-        from ..functions.decode import scan_schemas
-
-        # the envelope is filtered once per (db, table) below — persist in
-        # BOTH branches so the micro-batch decode runs once, not N_tables
-        # times (the raw_events/streaming path was the expensive miss)
+        # the envelope is filtered once per (db, table) below — persisted
+        # so the micro-batch decode runs once, not N_tables times
         envelope = envelope.persist()
-        if raw_events is not None:
-            desc_rows = scan_schemas(raw_events).collect()
-        else:
-            desc_rows = (
-                envelope.select("database", "table_name", "payload_schema")
-                .distinct()
-                .collect()
-            )
+        desc_rows = (
+            envelope.select("database", "table_name", "payload_schema")
+            .distinct()
+            .collect()
+        )
         by_table: dict = {}
         for r in desc_rows:
             if r["database"] is None or r["payload_schema"] is None:

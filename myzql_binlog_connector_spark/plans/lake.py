@@ -1199,7 +1199,9 @@ class BucketedLakeTable:
         if hot_splits:
             # split each hot bucket's write across ~count/split_rows
             # tasks: a per-key salt (different hash seed than the
-            # bucket fn) fans its rows over extra partitions; files
+            # bucket fn) picks one of the bucket's write slots, and every
+            # (bucket, salt) group is placed in its own partition by id
+            # (hashing the pair would let groups share a task); files
             # still land under the single _bucket=b directory, and
             # readers/manifest already handle multi-file buckets
             salt_col = F.lit(0)
@@ -1211,12 +1213,13 @@ class BucketedLakeTable:
                         F.lit(nsplit),
                     ),
                 ).otherwise(salt_col)
-            extra = sum(n - 1 for n in hot_splits.values())
-            reduced = (
-                reduced.withColumn("_salt", salt_col)
-                .repartition(max(len(dirty) + extra, 1), "_bucket", "_salt")
-                .drop("_salt")
-            )
+            first_slot, n_slots = [], 0
+            for b in dirty:
+                first_slot += [F.lit(b), F.lit(n_slots)]
+                n_slots += hot_splits.get(b, 1)
+            slot = F.create_map(*first_slot)[F.col("_bucket")] + salt_col
+            reduced = reduced.withColumn("_slot", slot).repartitionById(n_slots, "_slot")
+            reduced = reduced.drop("_slot")
         elif not aligned:
             reduced = reduced.repartition(max(len(dirty), 1), "_bucket")
 

@@ -1,6 +1,6 @@
 """Resumable Structured-Streaming binlog replay (SURVEY.md §2.6).
 
-``readStream(segment store) → foreachBatch(decode → apply)`` with:
+``readStream(segment store) → foreachBatch(applier.apply_events)`` with:
 
   * **checkpointing** — Spark's file-source checkpoint makes the stream
     resumable (T5); a restart replays at most the in-flight micro-batch;
@@ -10,6 +10,9 @@
   * **bounded replay** — ``Trigger.AvailableNow`` drains everything present
     and stops (T1, the ``to_binlog_file`` analogue), while the default
     processing-time trigger tails forever;
+  * **one decode per commit** — ``apply_events`` is ``apply_files``' typed
+    apply over the micro-batch, so a table gets one ``_event_row_index``
+    numbering whichever route fed it;
   * **lineage/metrics** — every commit's record (rows, buckets touched,
     bytes, wall time, watermarks) lands in the manifest; the driver also
     keeps the per-batch records in ``self.batch_records`` (A2).
@@ -23,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..functions.decode import decode_changes
 from ..plans.apply import TranscriptsApplier
 from ..sources.segments import stream_segments
 
@@ -51,41 +53,22 @@ class BinlogReplayStream:
         self.stop_position = stop_position
         self.max_files_per_trigger = max_files_per_trigger
         self.compact_every = compact_every
-        # "quarantine": undecodable packets become dml_type='_corrupt'
-        # rows (excluded from the merge) instead of killing the stream —
-        # a continuous tail should not die to one bit-rotted event
+        # "quarantine": undecodable packets become dead letters (sunk
+        # under the table's _quarantine/ dir, excluded from the merge)
+        # instead of killing the stream — a continuous tail should not
+        # die to one bit-rotted event
         self.on_error = on_error
         self.batch_records: list[dict] = []
         self._applied_since_compact = 0
 
     def _process_batch(self, batch_df, batch_id: int):
-        if self.from_position is not None:
-            from pyspark.sql import functions as F
-
-            # segments wholly below the from-file never decode; the
-            # intra-file cut is applied on the envelope below so TABLE_MAP
-            # state preceding from_position is kept
-            batch_df = batch_df.filter(
-                F.col("file_seq") >= int(self.from_position[0])
-            )
-        envelope = decode_changes(
+        record = self.applier.apply_events(
             batch_df,
+            batch_id=batch_id,
             table_filter=self.table_filter,
             stop_position=self.stop_position,
+            from_position=self.from_position,
             on_error=self.on_error,
-        )
-        if self.from_position is not None:
-            from pyspark.sql import functions as F
-
-            from ..functions.position import position_at_least
-
-            envelope = envelope.filter(
-                position_at_least(
-                    F.col("file_seq"), F.col("log_pos"), *self.from_position
-                )
-            )
-        record = self.applier.apply_batch(
-            envelope, batch_id=batch_id, raw_events=batch_df
         )
         self.batch_records.append(record)
         # periodic maintenance: bin-pack small files and GC tombstones below

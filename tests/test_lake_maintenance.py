@@ -585,10 +585,11 @@ class TestHotBucketSkew:
 
         # lineage records the hot set with its pre-reduce row count
         assert rec["hot_buckets"] == {str(hot_b): 400}
-        # the hot bucket's write fanned out over multiple tasks: >= 2 part
-        # files under its single directory; cold buckets stay single-file
+        # the hot bucket's write fanned out over one task per salt group:
+        # ceil(400 / 100) part files under its single directory; cold
+        # buckets stay single-file
         files = t.snapshot_manifest()["files"]
-        assert len(files[str(hot_b)]) >= 2, files[str(hot_b)]
+        assert len(files[str(hot_b)]) == -(-400 // 100) == 4, files[str(hot_b)]
         for b, ks in by_bucket.items():
             if b != hot_b:
                 assert len(files[str(b)]) <= 1

@@ -148,9 +148,7 @@ class TestTypedFastPath:
 
         stream, events, tmp = stream_and_events
         t_env = BucketedLakeTable(spark, str(tmp / "cmp_env"), ["conv_id", "turn_idx"], n_buckets=8)
-        TranscriptsApplier(spark, t_env).apply_batch(
-            decode_changes(events), batch_id=0, raw_events=events
-        )
+        TranscriptsApplier(spark, t_env).apply_batch(decode_changes(events), batch_id=0)
         paths = sorted(glob.glob(str(tmp / "seg" / "*.parquet")))
         t_fast = BucketedLakeTable(spark, str(tmp / "cmp_fast"), ["conv_id", "turn_idx"], n_buckets=8)
         TranscriptsApplier(spark, t_fast).apply_files(paths, batch_id=0)

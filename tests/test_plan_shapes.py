@@ -95,3 +95,65 @@ def test_lww_dedup_salted_events_has_no_window(spark):
     salted = plan("lww_dedup_salted_events")
     assert "Window" not in salted, salted
     assert salted == plan("lww_dedup_events")
+
+
+def _segment_store(tmp_path):
+    from myzql_binlog_connector_spark.genlog import generate_stream, write_segments_parquet
+
+    stream = generate_stream(seed=11, n_convs=20, n_segments=2)
+    return write_segments_parquet(stream, str(tmp_path / "seg"))
+
+
+def test_stream_commit_decodes_once(spark, tmp_path):
+    """A stream commit's typed frame plans one decode over one scan of
+    the micro-batch's segment (the stream hands foreachBatch an RDD scan,
+    a segment-store read is a FileScan): no envelope, no second decode
+    for the key-change tombstones."""
+    from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
+    from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+    from myzql_binlog_connector_spark.sources.segments import read_segments
+    from myzql_binlog_connector_spark.streaming.replay import BinlogReplayStream
+
+    paths = _segment_store(tmp_path)
+    plans = []
+
+    def applier(name):
+        table = BucketedLakeTable(spark, str(tmp_path / name), ["conv_id", "turn_idx"], n_buckets=4)
+        app = TranscriptsApplier(spark, table)
+        merge = app._merge_typed
+
+        def capture(typed, batch_id):
+            plans.append(typed._jdf.queryExecution().executedPlan().toString())
+            return merge(typed, batch_id)
+
+        app._merge_typed = capture
+        return app
+
+    BinlogReplayStream(
+        spark, str(tmp_path / "seg"), applier("t"), str(tmp_path / "ckpt")
+    ).run_to_completion(timeout_sec=300)
+    applier("t2").apply_events(read_segments(spark, paths[0]), batch_id=0)
+    assert len(plans) == 3  # one per stream commit (2 segments), one file read
+    for plan in plans:
+        assert plan.count("MapInArrow") == 1, plan
+        assert len(re.findall(r"Scan ExistingRDD|FileScan", plan)) == 1, plan
+        assert "from_json" not in plan, plan
+    assert "FileScan parquet" in plans[-1], plans[-1]
+
+
+def test_envelope_typed_changes_reads_input_once(spark, tmp_path):
+    """The envelope route emits key-change tombstones in the same pass as
+    the rows: one decode node, no Union of two decode subtrees."""
+    from myzql_binlog_connector_spark.functions.decode import decode_changes, scan_schemas
+    from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
+    from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+    from myzql_binlog_connector_spark.sources.segments import read_segments
+
+    _segment_store(tmp_path)
+    events = read_segments(spark, str(tmp_path / "seg"))
+    descs = [r["payload_schema"] for r in scan_schemas(events).collect()]
+    table = BucketedLakeTable(spark, str(tmp_path / "t"), ["conv_id", "turn_idx"], n_buckets=4)
+    typed = TranscriptsApplier(spark, table).typed_changes(decode_changes(events), descs)
+    plan = typed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Union" not in plan, plan

@@ -125,7 +125,7 @@ class TestQuarantine:
         table = BucketedLakeTable(
             spark, str(tmp_path / "lake"), ["conv_id", "turn_idx"], n_buckets=4
         )
-        BinlogReplayStream(
+        records = BinlogReplayStream(
             spark,
             str(seg_dir),
             TranscriptsApplier(spark, table),
@@ -133,6 +133,12 @@ class TestQuarantine:
             on_error="quarantine",
         ).run_to_completion()
         assert table.read().count() == 50  # 5 healthy events × 10 rows
+        # the stream sinks its dead letter where apply_files does, and the
+        # commit record counts it
+        assert [r.get("quarantined_rows") for r in records] == [1]
+        dead = spark.read.parquet(str(tmp_path / "lake" / "_quarantine" / "batch-0"))
+        assert dead.count() == 1
+        assert dead.columns == ["_file_seq", "_gtid", "_event_seq", "_log_pos", "_corrupt"]
 
     def test_multitable_applier_ignores_corrupt_rows(self, spark, tmp_path):
         """Dead-letter rows carry null database/payload_schema — the
@@ -464,10 +470,16 @@ class TestDeadLetterParity:
         env, typed = self._dead_letters(packets)
         assert len(env) == 1
         assert env == typed
-        fs, gtid, event_seq, log_pos, _text = env[0]
+        fs, gtid, event_seq, log_pos, text = env[0]
         # the packet's own position: its header log_pos, not a placeholder
         assert (fs, gtid, event_seq) == (1, idx + 1, idx + 1)
         assert log_pos == int.from_bytes(bad[14:18], "little") > 0
+        if failure == "vec_group":
+            # retried singly, the corrupt event is its group's last: its
+            # length prefix points past the buffer, and the triage names
+            # the overrun, not a numpy IndexError
+            error = json.loads(text)["error"]
+            assert "row image overran event body" in error, error
 
     def test_unmapped_table_triage_text_matches(self):
         """A corrupt TABLE_MAP orphans the ROWS event after it; that

@@ -153,3 +153,34 @@ class TestStreamingReplay:
         assert all(r.get("skipped") for r in records)
         assert table.snapshot_manifest()["version"] == v_before
         assert _state_dict(table.read()) == _truth_dict(stream)
+
+
+def test_stream_after_apply_files_preload_is_exactly_once(spark, tmp_path):
+    """A table preloaded by apply_files, then tailed by the stream over a
+    store that re-holds the preloaded segments: the re-read segments are
+    no-ops, and the new one lands with the watermark apply_files records
+    for it (one typed apply, one numbering, whichever route fed it)."""
+    import os
+
+    stream = generate_stream(seed=7, n_convs=30, n_segments=3)
+    paths = write_segments_parquet(stream, str(tmp_path / "seg"))
+    for i, p in enumerate(paths):  # the file source takes files oldest first
+        os.utime(p, (1_000_000 + i, 1_000_000 + i))
+    table = BucketedLakeTable(spark, str(tmp_path / "t"), ["conv_id", "turn_idx"], n_buckets=4)
+    applier = TranscriptsApplier(spark, table)
+    applier.apply_files(paths[:2], batch_id=0)
+    n_versions = len(table.versions())
+
+    records = BinlogReplayStream(
+        spark, str(tmp_path / "seg"), applier, str(tmp_path / "ckpt"),
+    ).run_to_completion(timeout_sec=300)
+    assert len(records) == 3
+    assert [r.get("skipped") for r in records[:2]] == [True, True]
+    assert not records[2].get("skipped")
+    assert len(table.versions()) == n_versions + 1
+    assert _state_dict(table.read()) == _truth_dict(stream)
+
+    ref = BucketedLakeTable(spark, str(tmp_path / "ref"), ["conv_id", "turn_idx"], n_buckets=4)
+    TranscriptsApplier(spark, ref).apply_files(paths, batch_id=0)
+    seg3 = str(stream.segments[2][0])
+    assert table.watermarks()[seg3] == ref.watermarks()[seg3]
