@@ -1,17 +1,19 @@
 """Fuzzy-dedup operators: MinHash+LSH, SimHash, n-gram Jaccard.
 
-All md5-based so the DuckDB oracles compute identical values; all pure
-column algebra (explode → hash → groupBy min / bit-vote) — distributed,
-JVM-side, shuffle only on the aggregation keys.
+All md5-based so the DuckDB oracles compute identical values.  Shingles
+come from the one Arrow kernel :func:`..text.shingle_ids`; the rest is
+column algebra (hash → groupBy min / bit-vote) — distributed, shuffle only
+on the aggregation keys.
 
 Scale shape (10^9 docs):
-  * minhash signatures: one explode of distinct shingles (~|doc| rows),
-    one groupBy(doc) with n_hashes partial-aggregating mins — map-side
-    combine keeps the shuffle at one row per doc.
+  * minhash signatures: for k ≤ 6 one shuffle-free ``mapInArrow`` pass
+    (md5 once per distinct shingle per batch); beyond that one explode of
+    shingles and one groupBy(doc) with n_hashes partial-aggregating mins —
+    map-side combine keeps the shuffle at one row per doc.
   * LSH candidate pairs: self-equi-join on (band, minhash) — the classic
     banding join; band buckets are high-cardinality so AQE handles skew.
   * verification: exact Jaccard only on candidates — either a CSR
-    broadcast of per-doc shingle-hash sets with one vectorized intersect
+    broadcast of per-doc shingle-id sets with one vectorized intersect
     per Arrow batch (byte-capped), or row-level (pair, shingle)
     equi-joins at unbounded scale (see :func:`ngram_jaccard`).
 """
@@ -20,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .text import h60, h60_sql, normalize_sql, shingle_rows, shingle_sets
+from .text import PACKED_K, h60, h60_sql, map_shingle_ids, normalize_sql, shingle_rows
 
 #: DataFrames persisted by fuzzy operators for intra-query reuse.  A lazy
 #: return value can't know when its caller materializes it, so blocks are
@@ -85,11 +87,11 @@ def minhash_signatures(
     was tried first: its linear dependence correlates LSH bands, inflating
     the candidate set ~5× and shifting all cost into Jaccard verification.)"""
     spread = _spread(df.select(id_col, text_col), id_col)
-    if shingle_k <= 6:
+    if shingle_k <= PACKED_K:
         # Packed fast path (round 8): ONE shuffle-free mapInArrow pass —
-        # per batch, the shared packed-shingle kernel yields every doc's
-        # DISTINCT k-grams (normalized text is ASCII by construction, so
-        # k ≤ 6 grams pack injectively into int64); md5 then runs once per
+        # per batch, the shared kernel (text.shingle_ids) yields every
+        # doc's DISTINCT k-grams (normalized text is ASCII by construction,
+        # so k ≤ 6 grams pack injectively into int64); md5 then runs once per
         # distinct shingle IN THE BATCH (hashlib over the reconstructed
         # bytes — identical digests to the JVM md5 of the same string),
         # and per-doc minima fall out of segmented np.minimum.reduceat.
@@ -136,61 +138,40 @@ def _minhash_signatures_packed(docs, text_col, id_col, n_hashes, k):
     the exploded md5 plan (same digests, same halves, same minima)."""
     import hashlib
 
-    import numpy as np
-    import pyarrow as pa
-
-    from .text import normalize_text
-
     n_seeds = (n_hashes + 1) // 2
     seed_prefixes = [f"{s}:".encode() for s in range(n_seeds)]
-    dtypes = dict(docs.dtypes)
 
-    def sig_fn(batches):
-        import pyarrow.compute as pc
+    def emit(ids, doc, vals, counts):
+        import numpy as np
+        import pyarrow as pa
 
-        for rb in batches:
-            if rb.column(1).null_count:
-                # NULL-text parity with the exploded plan (see sids_fn)
-                rb = rb.filter(pc.is_valid(rb.column(1)))
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0)
-            doc_u, val_u, counts = _packed_doc_shingles(rb.column(1), n, k)
-            uniq, inv = np.unique(val_u, return_inverse=True)
-            table = np.empty((uniq.size, n_hashes), dtype=np.int64)
-            for ii, pv in enumerate(uniq):
-                sh = int(pv).to_bytes(k, "big").rstrip(b"\x00")
-                for s in range(n_seeds):
-                    hx = hashlib.md5(seed_prefixes[s] + sh).hexdigest()
-                    table[ii, 2 * s] = int(hx[:15], 16)
-                    if 2 * s + 1 < n_hashes:
-                        table[ii, 2 * s + 1] = int(hx[15:30], 16)
-            # every doc has ≥1 shingle (empty text yields the "" shingle),
-            # so the segment starts cover all n docs exactly.  Gather one
-            # CONTIGUOUS hash column at a time — a (pairs × n_hashes)
-            # gather followed by strided-column reduceat paid ~4× in
-            # memory traffic
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            cols = [ids] + [
-                pa.array(
-                    np.minimum.reduceat(
-                        np.ascontiguousarray(table[:, i])[inv], starts
-                    ),
-                    type=pa.int64(),
-                )
-                for i in range(n_hashes)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols, names=[id_col] + [f"mh_{i}" for i in range(n_hashes)]
+        uniq, inv = np.unique(vals, return_inverse=True)
+        table = np.empty((uniq.size, n_hashes), dtype=np.int64)
+        for ii, pv in enumerate(uniq):
+            sh = int(pv).to_bytes(k, "big").rstrip(b"\x00")
+            for s in range(n_seeds):
+                hx = hashlib.md5(seed_prefixes[s] + sh).hexdigest()
+                table[ii, 2 * s] = int(hx[:15], 16)
+                if 2 * s + 1 < n_hashes:
+                    table[ii, 2 * s + 1] = int(hx[15:30], 16)
+        # every non-NULL doc has ≥1 shingle (empty text yields the ""
+        # shingle), so the segment starts cover exactly the kept docs.
+        # Gather one CONTIGUOUS hash column at a time — a (pairs ×
+        # n_hashes) gather followed by strided-column reduceat paid ~4× in
+        # memory traffic
+        kept = counts > 0
+        starts = np.cumsum(counts[kept]) - counts[kept]
+        return [ids.filter(pa.array(kept))] + [
+            pa.array(
+                np.minimum.reduceat(np.ascontiguousarray(table[:, i])[inv], starts),
+                type=pa.int64(),
             )
+            for i in range(n_hashes)
+        ]
 
-    return docs.select(
-        id_col, normalize_text(F.col(text_col)).alias("_n")
-    ).mapInArrow(
-        sig_fn,
-        f"{id_col} {dtypes[id_col]}, "
-        + ", ".join(f"mh_{i} bigint" for i in range(n_hashes)),
+    return map_shingle_ids(
+        docs, text_col, id_col, k, emit,
+        {f"mh_{i}": "bigint" for i in range(n_hashes)},
     )
 
 
@@ -530,142 +511,30 @@ def _doc_shingle_sets(docs, text_col: str, id_col: str, shingle_k: int):
     """``(id, sids array<bigint>)`` — each doc's DISTINCT shingle ids, for
     the broadcast verifier.
 
-    Fast path (``shingle_k`` ≤ 6): :func:`..text.normalize_text` output is
-    pure ASCII ``[a-z0-9 ]`` *by construction* (everything else is
-    replaced by a space before trimming), so a k-gram packs INJECTIVELY
-    into an int64 (big-endian bytes, zero-padded below k — padding can't
-    collide because no real byte is 0).  One ``mapInArrow`` computes every
-    doc's packed window values straight off the Arrow string buffer
-    (5 shift-or passes over the byte buffer for the whole batch), dedupes
-    per doc with a composite ``np.unique`` per slice of docs, and emits the
-    list column — NO explode, NO per-shingle hash, NO shuffle, and exact
-    (injective beats any hash).  The prior shape exploded one row per
-    character position, ran md5+conv per row, and paid a corpus-wide
-    ``collect_set`` shuffle.
+    One shuffle-free ``mapInArrow`` over :func:`..text.shingle_ids`: every
+    doc's distinct window ids come straight off the Arrow string buffer
+    and leave as one list column — no explode, no per-shingle hash
+    expression, no ``collect_set`` shuffle.  For ``shingle_k`` ≤ 6 the
+    ids are the packed window bytes (exact); beyond that they are Horner
+    hashes (see :func:`..text.shingle_ids` for the collision class).  NULL
+    text yields no row."""
 
-    Fallback (``shingle_k`` > 6): the explode + xxhash64 + collect_set
-    shape — one shuffle, collision probability ~|doc|²/2^65 per pair."""
-    import numpy as np
-    import pyarrow as pa
+    def emit(ids, doc, vals, counts):
+        import numpy as np
+        import pyarrow as pa
 
-    from .text import normalize_text
+        kept = counts > 0
+        list_offs = np.concatenate(([0], np.cumsum(counts[kept])))
+        return [
+            ids.filter(pa.array(kept)),
+            pa.ListArray.from_arrays(
+                pa.array(list_offs, pa.int32()), pa.array(vals, pa.int64())
+            ),
+        ]
 
-    if shingle_k > 6:
-        # NULL-text contract (both paths): no shingles ⇒ no output row —
-        # without the filter, explode yields one NULL shingle whose
-        # xxhash64 degenerates to the seed value
-        return (
-            shingle_rows(
-                docs.filter(F.col(text_col).isNotNull()),
-                text_col, id_col, k=shingle_k,
-            )
-            .select(id_col, F.xxhash64(F.col("sh")).alias("sid"))
-            .groupBy(id_col)
-            .agg(F.collect_set("sid").alias("sids"))
-        )
-
-    k = shingle_k
-    dtypes = dict(docs.dtypes)
-
-    def sids_fn(batches):
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            if rb.column(1).null_count:
-                # NULL text yields no shingle row under explode (sequence
-                # over NULL length) — drop those docs here for parity
-                rb = rb.filter(pc.is_valid(rb.column(1)))
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0)
-            doc_u, val_u, counts = _packed_doc_shingles(rb.column(1), n, k)
-            list_offs = np.concatenate(([0], np.cumsum(counts)))
-            sids = pa.ListArray.from_arrays(
-                pa.array(list_offs, pa.int32()),
-                pa.array(val_u, pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays([ids, sids], names=[id_col, "sids"])
-
-    return docs.select(
-        id_col, normalize_text(F.col(text_col)).alias("_n")
-    ).mapInArrow(sids_fn, f"{id_col} {dtypes[id_col]}, sids array<bigint>")
-
-
-def _packed_doc_shingles(txt, n: int, k: int):
-    """Per-batch packed-shingle kernel shared by the shingle-set builder
-    and the fast minhash-signature path: ``(doc_u, val_u, counts)`` where
-    ``(doc_u, val_u)`` are the batch's DISTINCT (doc index, packed k-gram)
-    pairs sorted by doc then value, and ``counts[i]`` is doc i's distinct
-    count.  See :func:`_doc_shingle_sets` for the packing argument."""
-    import numpy as np
-    import pyarrow as pa
-
-    if isinstance(txt, pa.ChunkedArray):
-        txt = txt.combine_chunks()
-    bufs = txt.buffers()
-    off_dt = np.int64 if pa.types.is_large_string(txt.type) else np.int32
-    offs = np.frombuffer(
-        bufs[1], off_dt, count=n + 1,
-        offset=txt.offset * np.dtype(off_dt).itemsize,
-    ).astype(np.int64)
-    data = (
-        np.frombuffer(bufs[2], np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, np.uint8)
+    return map_shingle_ids(
+        docs, text_col, id_col, shingle_k, emit, {"sids": "array<bigint>"}
     )
-    lens = np.diff(offs)
-    if data.size and int(data[offs[0]: offs[-1]].max(initial=0)) >= 128:
-        raise ValueError(
-            "non-ASCII byte in normalized text — normalize_text "
-            "guarantees [a-z0-9 ]; shingle packing is unsound here"
-        )
-    # windows of length k over the whole values buffer, packed
-    # big-endian: acc[p] = int of data[p : p + k]
-    if data.size >= k:
-        acc = np.zeros(data.size - k + 1, dtype=np.int64)
-        for j in range(k):
-            acc = (acc << 8) | data[j : data.size - k + 1 + j]
-    else:
-        acc = np.empty(0, dtype=np.int64)
-    # docs long enough for real windows: positions
-    # offs[i] .. offs[i] + len_i - k
-    wcnt = np.where(lens >= k, lens - k + 1, 0)
-    total = int(wcnt.sum())
-    excl = np.concatenate(([0], np.cumsum(wcnt)[:-1]))
-    pos = np.repeat(offs[:-1] - excl, wcnt) + np.arange(total)
-    doc_of = np.repeat(np.arange(n, dtype=np.int64), wcnt)
-    vals = acc[pos] if total else np.empty(0, np.int64)
-    # short docs (len < k, incl. empty): ONE whole-string shingle,
-    # zero-padded on the right — exactly substring(n, 1, k)'s clamp
-    sidx = np.nonzero(lens < k)[0]
-    if sidx.size:
-        v = np.zeros(sidx.size, dtype=np.int64)
-        so = offs[:-1][sidx]
-        sl = lens[sidx]
-        for j in range(k):
-            have = j < sl
-            idx = np.minimum(so + j, data.size - 1) if data.size else np.zeros(sidx.size, np.int64)
-            b = np.where(have, data[idx] if data.size else 0, 0)
-            v = (v << 8) | b
-        doc_of = np.concatenate((doc_of, sidx.astype(np.int64)))
-        vals = np.concatenate((vals, v))
-    # composite (doc, value) dedupe, one np.unique per slice of docs: a
-    # value takes 8k bits, so a slice of 2^(63-8k) docs (32,768 at k=6)
-    # keeps (doc - lo) << 8k | value inside int64.  A two-key lexsort
-    # needs no slicing but was ~3.5x slower on 10k-doc batches.
-    bits = 8 * k
-    step = 1 << (63 - bits)
-    doc_parts, val_parts = [], []
-    for lo in range(0, n, step):
-        sel = (doc_of >= lo) & (doc_of < lo + step) if n > step else slice(None)
-        comp = np.unique(((doc_of[sel] - lo) << bits) | vals[sel])
-        doc_parts.append((comp >> bits) + lo)
-        val_parts.append(comp & ((np.int64(1) << bits) - 1))
-    doc_u = np.concatenate(doc_parts)
-    val_u = np.concatenate(val_parts)
-    counts = np.bincount(doc_u, minlength=n)
-    return doc_u, val_u, counts
 
 
 def _packed_bitsets(rows, cols, n_rows: int, n_cols: int):
@@ -714,18 +583,16 @@ def ngram_jaccard(
         (an upper bound on their distinct-shingle count — one cheap sum,
         no explode) is under the cap.
 
-    The broadcast verifier identifies shingles by their 64-bit xxhash64
-    instead of a join-interned id — one less shuffle, and the hash value
-    never leaves the job so any injective-enough function qualifies (it
-    replaced the md5-derived ``h60``, which paid an md5 digest plus a
-    string base-conversion per shingle row for the same collision class);
-    a same-doc hash collision would perturb one pair's count with
-    probability ~|doc|²/2^65 (negligible; the ``rows`` path is
-    collision-free).  When the candidate docs' distinct-shingle vocabulary
-    is small enough for per-doc bitsets to fit a ≤64 MB broadcast, the
-    verifier switches to one AND+popcount per pair over packed bytes —
-    exact, and orders of magnitude less work per pair than set
-    intersection.
+    The broadcast verifier identifies shingles by their
+    :func:`..text.shingle_ids` — one less shuffle than a join-interned id.
+    For ``shingle_k`` ≤ 6 the ids are the packed window bytes, so the
+    count is exact; beyond that they are Horner hashes, and a same-doc
+    collision (constructible, see :func:`..text.shingle_ids`) would
+    perturb one pair's count (the ``rows`` path is collision-free).  When
+    the candidate docs' distinct-shingle vocabulary is small enough for
+    per-doc bitsets to fit a ≤64 MB broadcast, the verifier switches to
+    one AND+popcount per pair over packed bytes — exact, and orders of
+    magnitude less work per pair than set intersection.
 
     Either way the division + rounding happens JVM-side (``F.round``), so
     results are bit-identical across strategies and to the DuckDB oracle.

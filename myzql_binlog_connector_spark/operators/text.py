@@ -2,8 +2,9 @@
 
 Language-ID (stopword-hit heuristic), quality scoring, token counting,
 document fingerprinting, and shingling primitives.  Everything here is pure
-``pyspark.sql.functions`` column algebra — JVM-side, whole-stage-codegen,
-no Python in the hot path — so it runs at 100 TB scan speed.  Each operator
+``pyspark.sql.functions`` column algebra — JVM-side, whole-stage-codegen —
+except the shingle-id kernel (:func:`shingle_ids`), one vectorized
+``mapInArrow`` pass over Arrow string bytes.  Each operator
 has an exact ANSI-SQL mirror (``*_SQL`` or the builder functions' ``sql=``
 docstrings) used by the DuckDB oracles in ``__spark_entry__.py``.
 
@@ -78,109 +79,153 @@ def shingle_rows(df, text_col: str, id_col: str, k: int = 5):
     )
 
 
-def shingle_hash_rows(df, text_col: str, id_col: str, k: int):
-    """(id, __h__) rows — 64-bit rolling-hash ids of each document's
-    char-``k``-gram shingles over normalized text, per-doc distinct.
+#: the largest k whose shingle ids are the window's bytes themselves
+PACKED_K = 6
+_FNV64_PRIME = 1099511628211
 
-    One ``mapInArrow`` pass: normalization stays a JVM expression, then
-    each Arrow batch computes every window hash straight off the string
-    values buffer with a Horner scan (k shift-multiply passes over the
-    whole batch's bytes — no explode, no k-char substring materialization,
-    no per-shingle hash expression).  For ``k=40`` the exploded form built
-    ~40 bytes of string per input byte before hashing it; here no shingle
-    string ever exists.  The hash identity never leaves the job (both
-    sides of any join compute the same function), so Rabin-Karp-style
-    mixing is enough; collisions ~|A|·|B|/2^64, the same class the
-    xxhash64 form carried.  Normalized text is pure ASCII by construction
-    (see :func:`normalize_text`), so byte windows == character windows;
-    documents shorter than ``k`` contribute one whole-string hash
-    (matching ``substring``'s clamp in :func:`shingle_rows`)."""
+
+def shingle_ids(txt, k: int):
+    """Every document's DISTINCT char-``k``-gram ids, straight off an Arrow
+    ``string``/``large_string`` array (sliced or not): ``(doc, ids,
+    counts)``, where ``(doc, ids)`` are the distinct (slot, id) pairs
+    sorted by slot then id and ``counts[i]`` is slot i's distinct count —
+    0 for a NULL slot (no shingles), at least 1 otherwise.
+
+    The package's one reader of Arrow string bytes.  The text must be
+    :func:`normalize_text` output: pure ASCII by construction, so byte
+    windows are character windows (a byte ≥ 128 raises — never a silently
+    wrong window).  A document shorter than ``k`` (the empty one included)
+    has one shingle, its whole string zero-padded on the right to ``k``
+    bytes: ``substring(n, 1, k)``'s clamp in :func:`shingle_rows`.
+
+    An id is the Horner sum ``Σ b_j · B^(k-1-j)`` over the window's k
+    bytes, mod 2^64, with the base fixed by ``k`` alone:
+
+    * ``k ≤ PACKED_K`` (6): ``B = 256``, so the id IS the window's bytes
+      packed big-endian into an int64 — exact and injective (padding
+      cannot alias a full window: no real byte is 0), and decodable back
+      to the shingle's bytes.
+    * ``k > PACKED_K``: ``B`` = the FNV-64 prime.  Collisions are
+      constructible, not just unlucky: Horner mod 2^64 is linear in the
+      bytes, so windows whose byte differences satisfy
+      ``Σ d_j · B^(k-1-j) ≡ 0 (mod 2^64)`` share an id, and structured
+      text can hit such differences.  An avalanche finalizer would not
+      help — it is a bijection on 64-bit values, so every Horner collision
+      stays one.  The id never leaves the job; in decontamination a
+      collision can only flag a clean document (the conservative
+      direction), and the Jaccard verifier's ``rows`` strategy is exact.
+
+    Per-doc dedup is one ``np.unique`` over a ``(doc << bits) | id``
+    composite per slice of ``2^(63-bits)`` docs, so it cannot overflow
+    int64 at any batch size; ``bits`` is ``8k`` for packed ids and the
+    width of the batch's dense id rank for hashed ones."""
     import numpy as np
     import pyarrow as pa
 
-    B = np.int64(1099511628211)  # FNV64 prime — odd, mixes well mod 2^64
-    dtypes = dict(df.dtypes)
+    n = len(txt)
+    if n == 0:
+        e = np.empty(0, np.int64)
+        return e, e, e
+    off_dt = np.int64 if pa.types.is_large_string(txt.type) else np.int32
+    bufs = txt.buffers()
+    offs = np.frombuffer(
+        bufs[1], off_dt, count=n + 1, offset=txt.offset * np.dtype(off_dt).itemsize
+    ).astype(np.int64)
+    data = (
+        np.empty(0, np.uint8) if bufs[2] is None
+        else np.frombuffer(bufs[2], np.uint8)[offs[0]: offs[-1]]
+    )
+    offs -= offs[0]
+    if data.size and int(data.max()) >= 128:
+        raise ValueError(
+            "non-ASCII byte in normalized text — normalize_text guarantees "
+            "[a-z0-9 ]; byte-window shingling is unsound"
+        )
+    lens = np.diff(offs)
+    valid = (
+        np.ones(n, bool) if txt.null_count == 0
+        else txt.is_valid().to_numpy(zero_copy_only=False)
+    )
+    base = np.int64(256 if k <= PACKED_K else _FNV64_PRIME)
+    # every length-k window of the buffer: acc[p] = id of data[p : p + k]
+    m = max(data.size - k + 1, 0)
+    acc = data[:m].astype(np.int64)
+    for j in range(1, k):
+        acc = acc * base + data[j: j + m]
+    # docs with full windows own positions offs[i] .. offs[i] + len_i - k
+    wcnt = np.where(valid & (lens >= k), lens - k + 1, 0)
+    total = int(wcnt.sum())
+    excl = np.cumsum(wcnt) - wcnt
+    doc_of = np.repeat(np.arange(n, dtype=np.int64), wcnt)
+    vals = acc[np.repeat(offs[:-1] - excl, wcnt) + np.arange(total)]
+    # short docs: one zero-padded whole-string window each
+    short = np.nonzero(valid & (lens < k))[0]
+    if short.size:
+        col = np.arange(k)
+        have = col < lens[short, None]
+        grams = np.zeros((short.size, k), np.int64)
+        grams[have] = data[(offs[short, None] + col)[have]]
+        v = grams[:, 0]
+        for j in range(1, k):
+            v = v * base + grams[:, j]
+        doc_of = np.concatenate((doc_of, short))
+        vals = np.concatenate((vals, v))
+    if k <= PACKED_K:
+        uniq, bits = None, 8 * k
+    else:
+        uniq, vals = np.unique(vals, return_inverse=True)
+        bits = max(1, (uniq.size - 1).bit_length())
+    step = 1 << (63 - bits)
+    doc_parts, id_parts = [], []
+    for lo in range(0, n, step):
+        sel = (doc_of >= lo) & (doc_of < lo + step) if n > step else slice(None)
+        comp = np.unique(((doc_of[sel] - lo) << bits) | vals[sel])
+        doc_parts.append((comp >> bits) + lo)
+        id_parts.append(comp & ((1 << bits) - 1))
+    doc = np.concatenate(doc_parts)
+    ids = np.concatenate(id_parts)
+    if uniq is not None:
+        ids = uniq[ids]
+    return doc, ids, np.bincount(doc, minlength=n)
 
-    def hash_fn(batches):
-        import pyarrow.compute as pc
+
+def map_shingle_ids(df, text_col: str, id_col: str, k: int, emit, out_cols: dict):
+    """One ``mapInArrow`` pass over ``(id_col, normalize_text(text_col))``:
+    each Arrow batch's :func:`shingle_ids` go to ``emit(ids, doc, vals,
+    counts)``, which returns the output arrays — the id column first, then
+    ``out_cols`` (``{name: spark type}``).  Normalization stays a JVM
+    expression; no shingle string and no per-shingle row ever exists."""
+    dtypes = dict(df.dtypes)
+    names = [id_col, *out_cols]
+
+    def fn(batches):
+        import pyarrow as pa
 
         for rb in batches:
-            if rb.column(1).null_count:
-                # NULL text has no shingles (the minhash paths' contract):
-                # a NULL slot's empty value range would hash like ""
-                rb = rb.filter(pc.is_valid(rb.column(1)))
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0)
-            txt = rb.column(1)
-            if isinstance(txt, pa.ChunkedArray):
-                txt = txt.combine_chunks()
-            bufs = txt.buffers()
-            off_dt = (
-                np.int64 if pa.types.is_large_string(txt.type) else np.int32
-            )
-            offs = np.frombuffer(
-                bufs[1], off_dt, count=n + 1,
-                offset=txt.offset * np.dtype(off_dt).itemsize,
-            ).astype(np.int64)
-            data = (
-                np.frombuffer(bufs[2], np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, np.uint8)
-            )
-            lens = np.diff(offs)
-            if data.size and int(data[offs[0]: offs[-1]].max(initial=0)) >= 128:
-                raise ValueError(
-                    "non-ASCII byte in normalized text — normalize_text "
-                    "guarantees [a-z0-9 ]; byte-window hashing is unsound"
+            doc, vals, counts = shingle_ids(rb.column(1), k)
+            if doc.size:
+                yield pa.RecordBatch.from_arrays(
+                    emit(rb.column(0), doc, vals, counts), names=names
                 )
-            if data.size >= k:
-                acc = np.zeros(data.size - k + 1, dtype=np.int64)
-                d64 = data.astype(np.int64)
-                for j in range(k):
-                    acc = acc * B + d64[j : data.size - k + 1 + j]
-            else:
-                acc = np.empty(0, dtype=np.int64)
-            wcnt = np.where(lens >= k, lens - k + 1, 0)
-            total = int(wcnt.sum())
-            excl = np.concatenate(([0], np.cumsum(wcnt)[:-1]))
-            pos = np.repeat(offs[:-1] - excl, wcnt) + np.arange(total)
-            doc_of = np.repeat(np.arange(n, dtype=np.int64), wcnt)
-            vals = acc[pos] if total else np.empty(0, np.int64)
-            sidx = np.nonzero(lens < k)[0]
-            if sidx.size:
-                v = np.zeros(sidx.size, dtype=np.int64)
-                so = offs[:-1][sidx]
-                sl = lens[sidx]
-                for j in range(k):
-                    have = j < sl
-                    if data.size:
-                        idx = np.minimum(so + j, data.size - 1)
-                        b = np.where(have, data[idx].astype(np.int64), 0)
-                    else:
-                        b = np.zeros(sidx.size, np.int64)
-                    v = np.where(have, v * B + b, v)
-                doc_of = np.concatenate((doc_of, sidx.astype(np.int64)))
-                vals = np.concatenate((vals, v))
-            # per-doc dedup: sort (doc, hash) pairs, drop consecutive dups
-            order = np.lexsort((vals, doc_of))
-            doc_s, val_s = doc_of[order], vals[order]
-            if doc_s.size:
-                keep = np.concatenate(
-                    ([True], (doc_s[1:] != doc_s[:-1]) | (val_s[1:] != val_s[:-1]))
-                )
-                doc_s, val_s = doc_s[keep], val_s[keep]
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(doc_s)), pa.array(val_s, pa.int64())],
-                names=[id_col, "__h__"],
-            )
 
-    from pyspark.sql import functions as _F
+    schema = ", ".join(
+        f"{c} {t}" for c, t in {id_col: dtypes[id_col], **out_cols}.items()
+    )
+    return df.select(id_col, normalize_text(F.col(text_col)).alias("_n")).mapInArrow(
+        fn, schema
+    )
 
-    return df.select(
-        id_col, normalize_text(_F.col(text_col)).alias("_n")
-    ).mapInArrow(hash_fn, f"{id_col} {dtypes[id_col]}, __h__ bigint")
+
+def shingle_hash_rows(df, text_col: str, id_col: str, k: int):
+    """(id, __h__) rows: each document's distinct :func:`shingle_ids` over
+    normalized text, one row per (doc, id)."""
+
+    def emit(ids, doc, vals, counts):
+        import pyarrow as pa
+
+        return [ids.take(pa.array(doc)), pa.array(vals, pa.int64())]
+
+    return map_shingle_ids(df, text_col, id_col, k, emit, {"__h__": "bigint"})
 
 
 def decontaminate(
@@ -198,14 +243,15 @@ def decontaminate(
     WORD-gram overlap; ``k=40`` characters ≈ an 8-word window and reuses
     the engine's shingle kernel).
 
-    Shape at 10^9 docs: one shingle pass over the corpus (explode +
-    substring, pure codegen; the source is repartitioned when it arrives
-    in fewer files than cores, or the broadcast semi-join would leave the
-    whole pass in one task), the benchmark's distinct shingle HASHES on
-    the other side of a broadcast LEFT SEMI equi-join — eval sets are
-    small, and joining on a 64-bit hash instead of the raw 40-char
-    shingle cuts the broadcast ~5×; a contaminated-id semi/anti join back
-    onto the docs frame finishes it.  ``keep="clean"`` returns the
+    Shape at 10^9 docs: one :func:`shingle_hash_rows` pass over the
+    corpus (the source is repartitioned when it arrives in fewer files
+    than cores, or the broadcast semi-join would leave the whole pass in
+    one task), the benchmark's distinct shingle ids on the other side of
+    a broadcast LEFT SEMI equi-join — eval sets are small, and joining on
+    a 64-bit id instead of the raw 40-char shingle cuts the broadcast ~5×;
+    a contaminated-id semi/anti join back onto the docs frame finishes
+    it.  A hash collision (k > 6, see :func:`shingle_ids`) can only flag
+    a clean document, never keep a contaminated one.  ``keep="clean"`` returns the
     decontaminated corpus, ``keep="contaminated"`` the flagged docs (for
     auditing)."""
     bt = bench_text_col or text_col
@@ -217,12 +263,9 @@ def decontaminate(
         n_in = 0
     if 0 < n_in < sc.defaultParallelism:
         src = src.repartition(sc.defaultParallelism, id_col)
-    # rolling-hash shingle identity (see shingle_hash_rows): the hash
-    # value never leaves this job — both sides of the semi-join compute
-    # the same function and the output is a membership decision — so no
-    # shingle string is ever materialized and no per-shingle hash
-    # expression runs; the exploded md5/xxhash forms this replaces built
-    # ~k bytes of string per input byte first
+    # shingle ids (see shingle_ids) never leave this job: both sides of
+    # the semi-join compute the same function and the output is a
+    # membership decision, so no shingle string is ever materialized
     doc_sh = shingle_hash_rows(src, text_col, id_col, k=k)
     bench = benchmark.select(
         F.monotonically_increasing_id().alias("__bid__"), F.col(bt)
@@ -243,16 +286,6 @@ def decontaminate(
     )
     how = "left_anti" if keep == "clean" else "left_semi"
     return docs.join(hit_ids, id_col, how)
-
-
-def shingle_sets(df, text_col: str, id_col: str, k: int = 5, out: str = "shingles"):
-    """(id, shingles array<string>) with distinct shingles per document —
-    the set form used for exact Jaccard (one groupBy shuffle)."""
-    return (
-        shingle_rows(df, text_col, id_col, k)
-        .groupBy(id_col)
-        .agg(F.collect_set("sh").alias(out))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from ..functions.decode import (
     decode_typed_from_files,
     scan_schemas,
 )
-from .lake import BucketedLakeTable, local_relation
+from .lake import BucketedLakeTable, _widened, local_relation
 
 
 def gate_redelivered(changes: DataFrame, wm: DataFrame) -> DataFrame:
@@ -99,7 +99,6 @@ def payload_struct_from_descs(descs: list[str]) -> T.StructType:
     the widest positional struct (c0..cN).  Column add → longer list; type
     widen (LONG→LONGLONG, FLOAT→DOUBLE) → wider Spark type."""
     widest: list[T.DataType] = []
-    rank = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3, "float": 0, "double": 1}
     for desc in descs:
         cols = json.loads(desc)
         for i, (code, meta, _nullable) in enumerate(cols):
@@ -107,24 +106,14 @@ def payload_struct_from_descs(descs: list[str]) -> T.StructType:
             if i >= len(widest):
                 widest.append(st)
             elif widest[i] != st:
-                a, b = widest[i].simpleString(), st.simpleString()
-                if {a, b} <= {"tinyint", "smallint", "int", "bigint"} or {a, b} <= {
-                    "float",
-                    "double",
-                }:
-                    widest[i] = widest[i] if rank[a] >= rank[b] else st
-                elif (
-                    isinstance(widest[i], T.DecimalType)
-                    and isinstance(st, T.DecimalType)
-                    and widest[i].scale == st.scale
-                ):
-                    # DECIMAL precision widen, same scale (the
-                    # Iceberg-compatible direction); scale changes fall
-                    # through to the exact-fidelity string fallback
-                    if st.precision > widest[i].precision:
-                        widest[i] = st
-                else:
+                # the lake's widening rule; anything else falls back to
+                # the exact-fidelity string
+                a = widest[i].simpleString()
+                w = _widened(a, st.simpleString())
+                if w is None:
                     widest[i] = T.StringType()
+                elif w != a:
+                    widest[i] = st
     return T.StructType(
         [T.StructField(f"c{i}", dt, True) for i, dt in enumerate(widest)]
     )

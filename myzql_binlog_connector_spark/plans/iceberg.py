@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import lww_dedup
 from .apply import gate_redelivered
-from .lake import ORDER_COLS
+from .lake import ORDER_COLS, _widened
 
 
 class IcebergNotAvailable(RuntimeError):
@@ -104,7 +104,7 @@ class IcebergApplier:
                 self.spark.sql(
                     f"ALTER TABLE {self.table} ADD COLUMN {f.name} {t}"
                 )
-            elif (existing[f.name], t) in {("int", "bigint"), ("float", "double")}:
+            elif t != existing[f.name] and _widened(existing[f.name], t) == t:
                 self.spark.sql(
                     f"ALTER TABLE {self.table} ALTER COLUMN {f.name} TYPE {t}"
                 )

@@ -63,24 +63,25 @@ ORDER_COLS = ("_gtid", "_event_seq", "_event_row_index")
 # parquet codec (bench.py runs zstd) never leaks into lake files.
 CODEC = "snappy"
 
-# permitted type widenings (Iceberg-compatible set)
-_WIDEN = {
-    ("integer", "long"): "long",
-    ("float", "double"): "double",
-    ("int", "bigint"): "bigint",
-}
+# permitted type widenings, as ``simpleString()`` ladders: a value of an
+# earlier type is exactly representable in any later one
+_LADDERS = (("tinyint", "smallint", "int", "bigint"), ("float", "double"))
 
 
 def _widened(old: str, new: str) -> str | None:
+    """The one type-widening rule (lake merge, struct union of a batch's
+    descriptors, Iceberg ``evolve``): the wider of two ``simpleString()``
+    types, or ``None`` when neither holds the other.  Integers widen along
+    tinyint < smallint < int < bigint, float widens to double, and
+    decimal(P,S) to decimal(P',S) in either precision direction with the
+    same scale (Iceberg's permitted decimal evolution); a scale change
+    stays incompatible.  An incoming type narrower than the stored one
+    keeps the stored type."""
     if old == new:
         return old
-    if (old, new) in _WIDEN:
-        return _WIDEN[(old, new)]
-    if (new, old) in _WIDEN:
-        return _WIDEN[(new, old)]  # incoming narrower than stored: keep stored
-    # decimal(P,S) → decimal(P',S), any precision direction, same scale
-    # (Iceberg's permitted decimal evolution); a scale change stays
-    # incompatible
+    for ladder in _LADDERS:
+        if old in ladder and new in ladder:
+            return max(old, new, key=ladder.index)
     mo = re.fullmatch(r"decimal\((\d+),(\d+)\)", old)
     mn = re.fullmatch(r"decimal\((\d+),(\d+)\)", new)
     if mo and mn and mo.group(2) == mn.group(2):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from myzql_binlog_connector_spark.functions.decode import decode_changes
 from myzql_binlog_connector_spark.functions.table_filter import TableFilter
@@ -258,6 +259,26 @@ class TestSchemaEvolution:
         assert dict(state.dtypes)["turn_idx"] == "bigint"
         vals = {r["turn_idx"] for r in state.collect()}
         assert vals == {0, 1 << 40}
+
+    def test_type_widen_tinyint_to_smallint(self, spark, tmp_path):
+        """A TINYINT column MySQL later widens to SMALLINT widens the lake
+        column on the next merge, with the stored values intact."""
+        table = BucketedLakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
+
+        def batch(v_type, rows, gtid):
+            return spark.createDataFrame(rows, f"k bigint, v {v_type}").select(
+                "k", "v",
+                F.lit(False).alias("_deleted"),
+                F.lit(gtid).cast("bigint").alias("_gtid"),
+                F.lit(0).cast("bigint").alias("_event_seq"),
+                F.lit(0).cast("bigint").alias("_event_row_index"),
+            )
+
+        table.merge(batch("tinyint", [(1, 7)], 1), batch_id=0)
+        table.merge(batch("smallint", [(2, 30_000)], 2), batch_id=1)
+        state = table.read()
+        assert dict(state.dtypes)["v"] == "smallint"
+        assert {(r.k, r.v) for r in state.collect()} == {(1, 7), (2, 30_000)}
 
     def test_decimal_precision_widen(self, spark, tmp_path):
         """DECIMAL(10,2)→DECIMAL(14,2) mid-stream (same scale) widens the

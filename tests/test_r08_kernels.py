@@ -58,15 +58,23 @@ class TestPackedShingleSets:
         sets: same docs present, same per-doc cardinality, and equal sets
         ⇔ equal packed sets (injectivity) — checked via the near-dup pair
         (docs 0 and 9) sharing most shingles."""
+        self._assert_sets_match(edge_docs, 5)
+
+    def test_hashed_sets_match_exploded_sets(self, spark, edge_docs):
+        """The same at k = 7, where ids are Horner hashes and more of the
+        edge docs are shorter than k."""
+        self._assert_sets_match(edge_docs, 7)
+
+    def _assert_sets_match(self, edge_docs, k):
         from myzql_binlog_connector_spark.operators.fuzzy import (
             _doc_shingle_sets,
         )
 
-        ref = self._reference_sets(edge_docs, 5)
+        ref = self._reference_sets(edge_docs, k)
         got = {
             r.doc_id: set(r.sids)
             for r in _doc_shingle_sets(
-                edge_docs, "text", "doc_id", 5
+                edge_docs, "text", "doc_id", k
             ).collect()
         }
         # NULL-text doc must be absent from both
@@ -224,6 +232,31 @@ class TestRollingHashShingles:
         assert kept == {1, 2}
 
 
+def _python_ids(t, k):
+    """Reference shingle ids of one normalized string: the Horner sum over
+    each distinct window's bytes (the whole string zero-padded to k when
+    shorter), mod 2^64 as a signed int64."""
+    base = 256 if k <= 6 else 1099511628211
+    grams = {t[i : i + k] for i in range(len(t) - k + 1)} or {t}
+    out = set()
+    for g in grams:
+        v = 0
+        for b in g.encode().ljust(k, b"\0"):
+            v = (v * base + b) % (1 << 64)
+        out.add(v - (1 << 64) if v >= 1 << 63 else v)
+    return sorted(out)
+
+
+def _assert_ids_match_python(arr, texts, k):
+    from myzql_binlog_connector_spark.operators.text import shingle_ids
+
+    doc, ids, counts = shingle_ids(arr, k)
+    want = [[] if t is None else _python_ids(t, k) for t in texts]
+    assert counts.tolist() == [len(w) for w in want]
+    assert doc.tolist() == [i for i, w in enumerate(want) for _ in w]
+    assert ids.tolist() == [v for w in want for v in w]
+
+
 class TestPackedKernelLimits:
     def test_large_k6_batch_matches_python_sets(self):
         """One Arrow batch of 65,537 docs at k=6: a (doc << 48) | value
@@ -233,10 +266,6 @@ class TestPackedKernelLimits:
         import numpy as np
         import pyarrow as pa
 
-        from myzql_binlog_connector_spark.operators.fuzzy import (
-            _packed_doc_shingles,
-        )
-
         k, n = 6, 65_537
         rng = np.random.default_rng(7)
         alphabet = np.array(list("ab c"))
@@ -244,18 +273,7 @@ class TestPackedKernelLimits:
             "".join(alphabet[rng.integers(0, 4, size=int(rng.integers(0, 14)))])
             for _ in range(n)
         ]
-        doc_u, val_u, counts = _packed_doc_shingles(pa.array(texts), n, k)
-
-        def packed(t):
-            grams = {t[i : i + k] for i in range(len(t) - k + 1)} or {t}
-            return sorted(
-                int.from_bytes(g.encode().ljust(k, b"\0"), "big") for g in grams
-            )
-
-        want = [packed(t) for t in texts]
-        assert counts.tolist() == [len(w) for w in want]
-        assert doc_u.tolist() == [i for i, w in enumerate(want) for _ in w]
-        assert val_u.tolist() == [v for w in want for v in w]
+        _assert_ids_match_python(pa.array(texts), texts, k)
 
     @pytest.mark.parametrize("n_sid", [1, 7, 8, 64, 203])
     def test_packed_bitsets_equal_packbits_of_dense(self, n_sid):
@@ -281,6 +299,60 @@ class TestPackedKernelLimits:
         assert np.array_equal(got, np.packbits(dense, axis=1))
 
 
+class TestShingleKernel:
+    @pytest.mark.parametrize("k", [1, 2, 3, 4, 5, 6])
+    def test_packed_ids_injective_exhaustive(self, k):
+        """Every string of length 0..k+1 over "abc" plus space: each
+        distinct shingle string (a short doc's padded whole string
+        included) gets its own id, and one string always the same id — so
+        a short doc never aliases a full window."""
+        import itertools
+
+        import pyarrow as pa
+
+        from myzql_binlog_connector_spark.operators.text import shingle_ids
+
+        texts = [
+            "".join(p)
+            for n in range(k + 2)
+            for p in itertools.product("abc ", repeat=n)
+        ]
+        doc, ids, counts = shingle_ids(pa.array(texts), k)
+        grams = [
+            sorted({t[i : i + k] for i in range(len(t) - k + 1)} or {t})
+            for t in texts
+        ]
+        assert counts.tolist() == [len(g) for g in grams]
+        # a doc's ids come sorted, and packed big-endian ids sort like
+        # their zero-padded strings, so zip pairs each gram with its id
+        pairs = set(zip((g for gs in grams for g in gs), ids.tolist()))
+        assert len(pairs) == len({g for g, _ in pairs}) == len({v for _, v in pairs})
+
+    @pytest.mark.parametrize("k", [7, 40])
+    @pytest.mark.parametrize("layout", ["sliced", "large_string", "nulls"])
+    def test_hashed_ids_match_python_horner(self, k, layout):
+        """k > 6 ids equal a pure-Python Horner reference on a sliced
+        array (offset ≠ 0), a ``large_string`` array and one with NULL
+        slots; NULL slots have no shingles."""
+        import numpy as np
+        import pyarrow as pa
+
+        rng = np.random.default_rng(k)
+        words = ["the", "quick", "fox", "a", "jumps", "over", "lazy", "dog0"]
+        texts = [
+            " ".join(rng.choice(words, size=int(rng.integers(0, 30))))
+            for _ in range(300)
+        ]
+        texts[:4] = ["", "a", "x" * (k - 1), "x" * k]
+        if layout == "nulls":
+            texts[5::7] = [None] * len(texts[5::7])
+            arr = pa.array(texts)
+        elif layout == "large_string":
+            arr = pa.array(texts, pa.large_string())
+        else:
+            arr = pa.array(["pad one", "pad two"] + texts + ["tail"])[2:-1]
+            assert arr.offset == 2
+        _assert_ids_match_python(arr, texts, k)
 class TestAssignCells:
     def test_matches_joined_maxby_reference(self, spark):
         """The mapInArrow assignment must reproduce the round-7 broadcast
