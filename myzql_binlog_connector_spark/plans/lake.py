@@ -48,7 +48,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import NumericType, StructType
 
 from ..operators.dedup import lww_dedup
 
@@ -162,6 +162,85 @@ def local_relation(
     )
 
 
+def _manifest_path(table_path: str, version: int) -> str:
+    return os.path.join(table_path, MANIFEST_DIR, f"v{version}.json")
+
+
+def _load_manifest(table_path: str, version: int) -> dict:
+    with open(_manifest_path(table_path, version)) as f:
+        return json.load(f)
+
+
+def _latest_pointer(table_path: str) -> int:
+    """The ``LATEST`` pointer; 0 when none was ever published."""
+    try:
+        with open(os.path.join(table_path, MANIFEST_DIR, LATEST)) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return 0
+
+
+def _head_version(table_path: str, pointer: int | None = None) -> int:
+    """The newest committed version, read-only: ``pointer`` (default the
+    ``LATEST`` pointer) rolled forward past every manifest a crashed
+    writer linked but never published.  0 = no committed version.  Never
+    performs recovery, so the change-feed readers stay writer-independent;
+    :meth:`BucketedLakeTable._latest_committed` finishes the commit."""
+    head = _latest_pointer(table_path) if pointer is None else pointer
+    while os.path.exists(_manifest_path(table_path, head + 1)):
+        head += 1
+    return head
+
+
+def _manifest_versions(table_path: str) -> list[int]:
+    """Every retained manifest version, ascending."""
+    try:
+        names = os.listdir(os.path.join(table_path, MANIFEST_DIR))
+    except FileNotFoundError:
+        return []
+    return sorted(
+        int(mm.group(1))
+        for mm in (re.fullmatch(r"v(\d+)\.json", n) for n in names)
+        if mm
+    )
+
+
+def _retention_floor(
+    table_path: str,
+    from_version: int,
+    allow_gaps: bool = False,
+    need: int | None = None,
+) -> int:
+    """The first version a change feed from ``from_version`` reads, after
+    the one retention check every feed reader makes: when version ``need``
+    (default ``from_version``) precedes the oldest retained manifest,
+    vacuum has expired part of the feed, and a silent gap would corrupt
+    every incremental consumer (Delta CDF / Iceberg changelog raise here
+    too) — so raise, unless ``allow_gaps`` floors the feed at the oldest
+    retained version instead."""
+    oldest = min(_manifest_versions(table_path), default=from_version)
+    need = from_version if need is None else need
+    if need < oldest and not allow_gaps:
+        gap = (
+            f"needs the prior state at version {need}, which precedes"
+            if need < from_version
+            else "precedes"
+        )
+        raise RetentionOverrunError(
+            f"change feed from_version={from_version} {gap} the oldest "
+            f"retained version {oldest} (vacuumed): the feed would be "
+            f"gapped.  Re-bootstrap the consumer from a snapshot, or allow "
+            f"gaps (read_changes(allow_gaps=True), lake_changes option "
+            f"allowGaps=true) to accept a feed starting at {oldest}."
+        )
+    return max(from_version, oldest)
+
+
+def _bucket_expr(bucket_cols: list[str], n_buckets: int):
+    """The bucket function: ``pmod(hash(bucket_cols), n_buckets)``."""
+    return F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
+
+
 def iter_commit_deltas(
     table_path: str, lo: int, hi: int, head_manifest: dict
 ) -> list[tuple[int, list[str]]]:
@@ -191,10 +270,8 @@ def iter_commit_deltas(
     window_floor = min(seen, default=lo)
     for v in range(lo, min(hi, window_floor - 1) + 1):
         # below the head's lineage window: ask the version's own manifest
-        mpath = os.path.join(table_path, MANIFEST_DIR, f"v{v}.json")
         try:
-            with open(mpath) as f:
-                mv = json.load(f)
+            mv = _load_manifest(table_path, v)
         except FileNotFoundError:
             continue  # vacuumed: caller's retention check already ruled
         lineage = mv.get("lineage") or []
@@ -293,14 +370,7 @@ class BucketedLakeTable:
         # salt-split guards that).  LWW identity stays the FULL key; this
         # only changes row placement.  Layout-authoritative like n_buckets:
         # the committed manifest wins over the handle (_sync_layout).
-        if bucket_cols is not None:
-            bucket_cols = list(bucket_cols)
-            if not bucket_cols or not set(bucket_cols) <= set(self.key_cols):
-                raise ValueError(
-                    f"bucket_cols {bucket_cols} must be a non-empty subset "
-                    f"of key_cols {self.key_cols}"
-                )
-        self.bucket_cols = bucket_cols or self.key_cols
+        self.bucket_cols = self._checked_bucket_cols(bucket_cols) or self.key_cols
         self.n_buckets = n_buckets
         self.max_files_per_bucket = max_files_per_bucket
         # a bucket whose batch row count exceeds BOTH 3x the dirty-bucket
@@ -331,6 +401,19 @@ class BucketedLakeTable:
         # manifests, see iter_commit_deltas)
         self.lineage_keep = lineage_keep
 
+    def _checked_bucket_cols(self, bucket_cols: list[str] | None) -> list[str] | None:
+        """``bucket_cols`` as a list, checked to be a non-empty subset of
+        the key columns (``None`` passes through)."""
+        if bucket_cols is None:
+            return None
+        bucket_cols = list(bucket_cols)
+        if not bucket_cols or not set(bucket_cols) <= set(self.key_cols):
+            raise ValueError(
+                f"bucket_cols {bucket_cols} must be a non-empty subset "
+                f"of key_cols {self.key_cols}"
+            )
+        return bucket_cols
+
     # ------------------------------------------------------------------
     # manifest plumbing
     # ------------------------------------------------------------------
@@ -355,35 +438,25 @@ class BucketedLakeTable:
         roll-back: finish the orphaned commit (append its lineage record
         if the crash lost it, swap ``LATEST``) and return N.
         """
-        mdir = self._mdir()
-        latest = None
-        try:
-            with open(os.path.join(mdir, LATEST)) as f:
-                latest = int(f.read().strip())
-        except FileNotFoundError:
-            latest = None
-        n = (latest or 0) + 1
-        newest = latest
-        while os.path.exists(os.path.join(mdir, f"v{n}.json")):
-            newest = n
-            n += 1
-        if newest is not None and newest != latest:
-            self._finish_commit(newest)
-        return newest
+        latest = _latest_pointer(self.path)
+        head = _head_version(self.path, latest)
+        if head != latest:
+            self._publish(self._read_manifest(head))
+        return head or None
 
-    def _finish_commit(self, version: int) -> None:
-        """Complete a commit whose ``v{version}.json`` link landed but
-        whose metrics append / ``LATEST`` swap did not (crash recovery).
-        Idempotent: racing recoveries both swap to the same version and
-        the metrics append is version-guarded."""
-        m = self._read_manifest(version)
-        lineage = m.get("lineage") or []
+    def _publish(self, manifest: dict) -> None:
+        """Make a linked manifest the head: append its lineage record to
+        the durable metrics log, then swap ``LATEST`` to its version.  The
+        commit path and crash recovery both end here.  Idempotent: racing
+        recoveries swap to the same version and the metrics append is
+        version-guarded."""
+        lineage = manifest.get("lineage") or []
         if lineage:
             self._append_metrics(lineage[-1])
         tmp = os.path.join(self._mdir(), f".latest.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self._mdir(), LATEST))
+            f.write(str(manifest["version"]))
+        os.replace(tmp, os.path.join(self._mdir(), LATEST))  # atomic swap
 
     def _append_metrics(self, record: dict) -> None:
         """Append one lineage record to the durable metrics log unless a
@@ -395,7 +468,7 @@ class BucketedLakeTable:
 
         path = os.path.join(self._mdir(), "metrics.jsonl")
         # O_APPEND plus an advisory lock serializes the tail-check-then-
-        # append: a crash-recovery _finish_commit racing the committing
+        # append: a crash-recovery _publish racing the committing
         # writer for the same version could otherwise interleave the check
         # and both append (round-6 ADVICE), double-counting in metrics().
         # Driver-side, one lock per commit — negligible at any scale.
@@ -435,33 +508,22 @@ class BucketedLakeTable:
                 raise FileNotFoundError(
                     f"no committed manifest at {self._mdir()}"
                 )
-        mpath = os.path.join(self._mdir(), f"v{version}.json")
-        if not os.path.exists(mpath):
+        try:
+            return _load_manifest(self.path, version)
+        except FileNotFoundError:
             raise ValueError(
                 f"no manifest v{version} at {self._mdir()} "
-                f"(available: {sorted(self.versions())})"
-            )
-        with open(mpath) as f:
-            m = json.load(f)
-        return m
+                f"(available: {self.versions()})"
+            ) from None
 
     def versions(self) -> list[int]:
         """Committed snapshot versions available for time travel."""
-        import re
-
-        if not os.path.isdir(self._mdir()):
-            return []
-        out = []
-        for name in os.listdir(self._mdir()):
-            mm = re.fullmatch(r"v(\d+)\.json", name)
-            if mm:
-                out.append(int(mm.group(1)))
-        return sorted(out)
+        return _manifest_versions(self.path)
 
     def _commit(self, manifest: dict):
         os.makedirs(self._mdir(), exist_ok=True)
         version = manifest["version"]
-        mpath = os.path.join(self._mdir(), f"v{version}.json")
+        mpath = _manifest_path(self.path, version)
         # exclusive-create CAS: write the manifest to a temp name, then
         # os.link it into place — link() fails with EEXIST if another
         # writer already committed this version, and (unlike open('x') +
@@ -482,17 +544,11 @@ class BucketedLakeTable:
             ) from None
         finally:
             os.remove(mtmp)
-        # append the commit's lineage record to the durable metrics log
-        # (A2: per-micro-batch lineage/metrics rows, queryable via
-        # :meth:`metrics`); a crash anywhere after the link above is
-        # finished by roll-forward recovery in _latest_committed()
-        lineage = manifest.get("lineage") or []
-        if lineage:
-            self._append_metrics(lineage[-1])
-        tmp = os.path.join(self._mdir(), f".latest.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self._mdir(), LATEST))  # atomic swap
+        # the metrics append (A2: per-micro-batch lineage/metrics rows,
+        # queryable via :meth:`metrics`) and the LATEST swap; a crash
+        # anywhere after the link above is finished by roll-forward
+        # recovery in _latest_committed(), through the same step
+        self._publish(manifest)
 
     def metrics(self) -> "DataFrame":
         """Durable per-commit lineage/metrics as a DataFrame (one row per
@@ -518,13 +574,16 @@ class BucketedLakeTable:
         # file's schema and silently drop newer columns
         return self.spark.read.schema(schema).parquet(*files)
 
-    def _collect_stats(self, paths: list[str], cols: list[str]) -> dict:
-        """{path: {col: [min, max]}} from parquet footers.  Driver-side for
-        small commits; distributed over executors past 64 files (footers
-        live on shared storage on a real cluster, so executors read them as
-        well as the driver does — and a 100 TB commit can touch tens of
+    def _collect_stats(self, paths: list[str]) -> dict:
+        """{path: {col: [min, max]}} of ``stats_cols`` from parquet footers
+        ({} on a table without ``stats_cols``).  Driver-side for small
+        commits; distributed over executors past 64 files (footers live on
+        shared storage on a real cluster, so executors read them as well
+        as the driver does — and a 100 TB commit can touch tens of
         thousands of buckets, too many for a driver loop)."""
-        cols = list(cols)
+        if not self.stats_cols:
+            return {}
+        cols = list(self.stats_cols)
         if len(paths) > 64:
             sc = self.spark.sparkContext
             return dict(
@@ -591,7 +650,7 @@ class BucketedLakeTable:
             )
         else:
             probe = self._key_probe_df(keys, schema, bucket_cols)
-        b = F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
+        b = _bucket_expr(bucket_cols, n_buckets)
         return {r["b"] for r in probe.select(b.alias("b")).collect()}
 
     def _select_buckets(
@@ -865,15 +924,7 @@ class BucketedLakeTable:
         m = self._read_manifest()
         schema = StructType.fromJson(json.loads(m["schema"]))
         hi = m["version"] if to_version is None else to_version
-        oldest = min(self.versions(), default=from_version)
-        if from_version < oldest and not allow_gaps:
-            raise RetentionOverrunError(
-                f"change feed from_version={from_version} precedes the oldest "
-                f"retained version {oldest} (vacuumed): the feed would be "
-                f"gapped.  Re-bootstrap the consumer from a snapshot, or pass "
-                f"allow_gaps=True to accept a feed starting at {oldest}."
-            )
-        lo = max(from_version, oldest)
+        lo = _retention_floor(self.path, from_version, allow_gaps)
         parts = [
             self._read_files(files, m["schema"]).withColumn(
                 "_commit_version", F.lit(int(v))
@@ -928,18 +979,11 @@ class BucketedLakeTable:
         m = self._read_manifest()
         schema = StructType.fromJson(json.loads(m["schema"]))
         hi = int(m["version"] if to_version is None else to_version)
-        oldest = min(self.versions(), default=from_version)
-        if from_version > 1 and from_version - 1 < oldest:
-            raise RetentionOverrunError(
-                f"typed change feed from_version={from_version} needs the "
-                f"prior state at version {from_version - 1}, which vacuum "
-                f"has expired (oldest retained: {oldest})."
-            )
-        if from_version < oldest:
-            raise RetentionOverrunError(
-                f"change feed from_version={from_version} precedes the "
-                f"oldest retained version {oldest} (vacuumed)."
-            )
+        _retention_floor(
+            self.path,
+            from_version,
+            need=from_version - 1 if from_version > 1 else from_version,
+        )
         payload = [
             f_.name
             for f_ in schema.fields
@@ -1018,9 +1062,7 @@ class BucketedLakeTable:
     # ------------------------------------------------------------------
 
     def bucket_expr(self):
-        return F.pmod(
-            F.hash(*[F.col(c) for c in self.bucket_cols]), F.lit(self.n_buckets)
-        )
+        return _bucket_expr(self.bucket_cols, self.n_buckets)
 
     def _write_buckets(self, df: DataFrame, tag: str, buckets) -> dict:
         """Write ``df`` (carrying ``_bucket``, already partitioned and
@@ -1051,6 +1093,96 @@ class BucketedLakeTable:
                 else []
             )
         return out
+
+    def _rewrite(
+        self,
+        files: list[str],
+        schema_json: str,
+        tag: str,
+        buckets,
+        layout: tuple[int, list[str]] | None = None,
+        drop_tombstones_below: tuple | None = None,
+        sort_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+    ) -> tuple[dict, dict]:
+        """The one bucket rewrite behind the inline fold, ``compact`` and
+        ``rebucket``: the LWW state of ``files`` (tombstones kept, unless
+        older than ``drop_tombstones_below``), hashed into ``layout``
+        (``(n_buckets, bucket_cols)``, default the handle's), one write
+        task per bucket of ``buckets``, each clustered by ``sort_by``
+        (default ``stats_cols``; ``[]`` disables) or by a Z-value over
+        ``zorder_by``.  Returns the ``{str(bucket): [files]}`` map of
+        ``buckets`` and the new files' footer stats."""
+        n_buckets, bucket_cols = layout or (self.n_buckets, self.bucket_cols)
+        df = lww_dedup(self._read_files(files, schema_json), self.key_cols, ORDER_COLS)
+        if drop_tombstones_below is not None:
+            df = df.filter(
+                (~F.col("_deleted")) | (F.col("_gtid") >= F.lit(drop_tombstones_below[0]))
+            )
+        df = df.withColumn("_bucket", _bucket_expr(bucket_cols, n_buckets))
+        if zorder_by:
+            if sort_by:
+                raise ValueError("pass sort_by or zorder_by, not both")
+            for c in zorder_by:
+                t_ = df.schema[c].dataType
+                if not isinstance(t_, NumericType):
+                    raise ValueError(
+                        f"zorder_by column {c!r} has type {t_.simpleString()} "
+                        f"— Z-order needs a numeric column (cast temporals to "
+                        f"epoch numbers at ingest; a string would silently "
+                        f"normalize to a constant)"
+                    )
+            # one aggregate over the data being rewritten for the global
+            # bounds the normalization needs (driver gets 2 scalars/col)
+            agg_row = df.agg(
+                *[F.min(c).alias(f"lo_{c}") for c in zorder_by],
+                *[F.max(c).alias(f"hi_{c}") for c in zorder_by],
+            ).collect()[0]
+            bounds = {
+                c: (agg_row[f"lo_{c}"] or 0, agg_row[f"hi_{c}"] or 0)
+                for c in zorder_by
+            }
+            df = df.withColumn("_z", _zorder_expr(zorder_by, bounds))
+        out = df.repartition(len(buckets), "_bucket")
+        if zorder_by:
+            out = out.sortWithinPartitions("_bucket", "_z").drop("_z")
+        else:
+            if sort_by is None:
+                sort_by = self.stats_cols or []
+            if sort_by:
+                # lead with _bucket: the partitionBy write needs
+                # partition-col order and would otherwise insert its own
+                # sort (by _bucket alone, not stable) on any task holding
+                # >1 bucket, destroying the clustering this exists to
+                # create
+                out = out.sortWithinPartitions("_bucket", *sort_by)
+        new = self._write_buckets(out, tag, buckets)
+        return new, self._collect_stats([p for fl in new.values() for p in fl])
+
+    def _next_manifest(
+        self, base: dict, record: dict, files: dict, new_stats: dict, **fields
+    ) -> dict:
+        """The manifest that commits ``record``: ``base`` (``{}`` before a
+        table's first commit) at ``record["version"]``, with ``files`` as
+        its bucket map, ``fields`` overriding, the lineage window advanced
+        by ``record`` and trimmed to ``lineage_keep``, and ``file_stats``
+        carried forward for the live files only (so the manifest stays
+        O(live files)), ``new_stats`` added."""
+        m = {
+            **base,
+            **fields,
+            "version": record["version"],
+            "files": files,
+            "lineage": (base.get("lineage", []) + [record])[-self.lineage_keep:],
+        }
+        if self.stats_cols or "file_stats" in base:
+            live = {p for fl in files.values() for p in fl}
+            m["file_stats"] = {
+                p: s
+                for p, s in {**base.get("file_stats", {}), **new_stats}.items()
+                if p in live
+            }
+        return m
 
     def merge(
         self,
@@ -1230,48 +1362,30 @@ class BucketedLakeTable:
             changes.unpersist()
 
         new_files = dict(old_files)
-        written = []
         delta_files = []
         for b in dirty:
-            parts = delta[str(b)]
-            new_files[str(b)] = old_files.get(str(b), []) + parts
-            written.extend(parts)
-            delta_files.extend(parts)
+            new_files[str(b)] = old_files.get(str(b), []) + delta[str(b)]
+            delta_files.extend(delta[str(b)])
 
         # --- bounded read amplification: fold over-threshold buckets --------
-        folded = [
-            b for b in dirty if len(new_files[str(b)]) > self.max_files_per_bucket
-        ] if self.auto_fold else []
+        folded = self._over_cap(new_files, dirty) if self.auto_fold else []
+        refolded, new_stats = {}, {}
         if folded:
-            fold_files = [p for b in folded for p in new_files[str(b)]]
-            fold_df = lww_dedup(
-                self._read_files(fold_files, schema_json), self.key_cols, ORDER_COLS
-            )
-            refolded = self._write_buckets(
-                fold_df.withColumn("_bucket", bucket_expr).repartition(
-                    len(folded), "_bucket"
-                ),
+            refolded, new_stats = self._rewrite(
+                [p for b in folded for p in new_files[str(b)]],
+                schema_json,
                 f"v{version}_fold",
                 folded,
             )
             new_files.update(refolded)
-            written.extend(p for fl in refolded.values() for p in fl)
-
+        # footer stats only for the deltas the fold did not supersede
+        new_stats.update(
+            self._collect_stats(
+                [p for b in dirty if b not in folded for p in delta[str(b)]]
+            )
+        )
+        written = delta_files + [p for fl in refolded.values() for p in fl]
         bytes_written = sum(os.path.getsize(p) for p in written)
-        file_stats = None
-        if self.stats_cols:
-            # footer-only reads over just this commit's files; carry stats
-            # forward for surviving files, drop entries for files folding
-            # just superseded (manifest stays O(live files))
-            live = {p for fl in new_files.values() for p in fl}
-            file_stats = {
-                p: s
-                for p, s in {
-                    **(m or {}).get("file_stats", {}),
-                    **self._collect_stats(written, self.stats_cols),
-                }.items()
-                if p in live
-            }
         record = {
             "version": version,
             "batch_id": batch_id,
@@ -1289,23 +1403,22 @@ class BucketedLakeTable:
             "wall_ms": round((time.monotonic() - t0) * 1000, 2),
             **(extra_lineage or {}),
         }
-        manifest = {
-            "version": version,
-            "schema": schema_json,
-            "n_buckets": self.n_buckets,
-            "key_cols": self.key_cols,
-            "bucket_cols": self.bucket_cols,
-            "files": new_files,
-            "watermarks": dict(wms),
-            "lineage": ((m or {}).get("lineage", []) + [record])[
-                -self.lineage_keep:
-            ],
-        }
-        if file_stats is not None:
-            manifest["file_stats"] = file_stats
+        wms = dict(wms)
         if extra_lineage and "watermarks" in extra_lineage:
-            manifest["watermarks"].update(extra_lineage["watermarks"])
-        self._commit(manifest)
+            wms.update(extra_lineage["watermarks"])
+        self._commit(
+            self._next_manifest(
+                m or {},
+                record,
+                new_files,
+                new_stats,
+                schema=schema_json,
+                n_buckets=self.n_buckets,
+                key_cols=self.key_cols,
+                bucket_cols=self.bucket_cols,
+                watermarks=wms,
+            )
+        )
         return record
 
     def set_watermarks(self, wms: dict):
@@ -1320,6 +1433,16 @@ class BucketedLakeTable:
     # maintenance
     # ------------------------------------------------------------------
 
+    def _over_cap(self, files: dict, buckets=None) -> list[int]:
+        """The fold trigger: the buckets of ``files`` (only those in
+        ``buckets``, when given) holding more than
+        ``max_files_per_bucket`` files, ascending."""
+        cands = files if buckets is None else [str(b) for b in buckets]
+        return sorted(
+            int(b) for b in cands
+            if len(files.get(b, [])) > self.max_files_per_bucket
+        )
+
     def needs_fold(self) -> list[int]:
         """Buckets whose delta-file count exceeds ``max_files_per_bucket``
         — the inline-fold trigger.  With ``auto_fold=False`` a maintenance
@@ -1327,11 +1450,7 @@ class BucketedLakeTable:
         instead of paying the fold inside a merge commit."""
         if not self.exists():
             return []
-        m = self._read_manifest()
-        return sorted(
-            int(b) for b, fl in m["files"].items()
-            if len(fl) > self.max_files_per_bucket
-        )
+        return self._over_cap(self._read_manifest()["files"])
 
     def compact(
         self,
@@ -1371,7 +1490,6 @@ class BucketedLakeTable:
         aggregate over the rewritten buckets."""
         m = self._read_manifest()
         self._sync_layout(m)
-        schema = StructType.fromJson(json.loads(m["schema"]))
         old_files = m["files"]
 
         if buckets is not None:
@@ -1392,61 +1510,14 @@ class BucketedLakeTable:
         if not targets:
             return {"version": m["version"], "compacted_buckets": []}
 
-        target_files = [p for b in targets for p in old_files[str(b)]]
-        df = lww_dedup(
-            self._read_files(target_files, m["schema"]), self.key_cols, ORDER_COLS
-        )
-        if drop_tombstones_below is not None:
-            df = df.filter(
-                (~F.col("_deleted")) | (F.col("_gtid") >= F.lit(drop_tombstones_below[0]))
-            )
-        df = df.withColumn("_bucket", self.bucket_expr())
-        if zorder_by:
-            if sort_by:
-                raise ValueError("pass sort_by or zorder_by, not both")
-            for c in zorder_by:
-                t_ = schema[c].dataType.simpleString()
-                if not (
-                    t_ in ("tinyint", "smallint", "int", "bigint",
-                           "float", "double")
-                    or t_.startswith("decimal")
-                ):
-                    raise ValueError(
-                        f"zorder_by column {c!r} has type {t_} — Z-order "
-                        f"needs a numeric column (cast temporals to epoch "
-                        f"numbers at ingest; a string would silently "
-                        f"normalize to a constant)"
-                    )
-            # one aggregate over the data being rewritten for the global
-            # bounds the normalization needs (driver gets 2 scalars/col)
-            agg_row = df.agg(
-                *[F.min(c).alias(f"lo_{c}") for c in zorder_by],
-                *[F.max(c).alias(f"hi_{c}") for c in zorder_by],
-            ).collect()[0]
-            bounds = {
-                c: (agg_row[f"lo_{c}"] or 0, agg_row[f"hi_{c}"] or 0)
-                for c in zorder_by
-            }
-            df = df.withColumn("_z", _zorder_expr(zorder_by, bounds))
-        out = df.repartition(len(targets), "_bucket")
-        if zorder_by:
-            out = out.sortWithinPartitions("_bucket", "_z").drop("_z")
-        else:
-            if sort_by is None:
-                sort_by = self.stats_cols or []
-            if sort_by:
-                # lead with _bucket: the partitionBy write needs
-                # partition-col order and would otherwise insert its own
-                # sort (by _bucket alone, not stable) on any task holding
-                # >1 bucket, destroying the clustering this exists to
-                # create
-                out = out.sortWithinPartitions("_bucket", *sort_by)
-        new_parts = self._write_buckets(out, f"v{m['version'] + 1}", targets)
-        rewritten = [p for fl in new_parts.values() for p in fl]
-        new_stats = (
-            self._collect_stats(rewritten, self.stats_cols)
-            if self.stats_cols
-            else {}
+        new_parts, new_stats = self._rewrite(
+            [p for b in targets for p in old_files[str(b)]],
+            m["schema"],
+            f"v{m['version'] + 1}",
+            targets,
+            drop_tombstones_below=drop_tombstones_below,
+            sort_by=sort_by,
+            zorder_by=zorder_by,
         )
         # the files each target bucket held when this compaction PLANNED —
         # the conflict-detection baseline below
@@ -1474,28 +1545,12 @@ class BucketedLakeTable:
                     f"there) — rerun compact() to fold the new state."
                 )
             version = base["version"] + 1
-            files = dict(base["files"])
-            files.update(new_parts)
-            manifest = dict(base)
-            manifest["version"] = version
-            manifest["files"] = files
-            if self.stats_cols:
-                live = {p for fl in files.values() for p in fl}
-                manifest["file_stats"] = {
-                    p: s
-                    for p, s in {
-                        **base.get("file_stats", {}),
-                        **new_stats,
-                    }.items()
-                    if p in live
-                }
-            manifest["lineage"] = (
-                base.get("lineage", [])
-                + [{"version": version, "compaction": True,
-                    "compacted_buckets": targets}]
-            )[-self.lineage_keep:]
+            record = {"version": version, "compaction": True,
+                      "compacted_buckets": targets}
             try:
-                self._commit(manifest)
+                self._commit(self._next_manifest(
+                    base, record, {**base["files"], **new_parts}, new_stats
+                ))
                 return {"version": version, "compacted_buckets": targets}
             except ConcurrentWriteError:
                 base = self._read_manifest()  # someone else committed: rebase
@@ -1529,51 +1584,29 @@ class BucketedLakeTable:
         n_buckets = int(n_buckets)
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        if bucket_cols is not None:
-            bucket_cols = list(bucket_cols)
-            if not bucket_cols or not set(bucket_cols) <= set(self.key_cols):
-                raise ValueError(
-                    f"bucket_cols {bucket_cols} must be a non-empty subset "
-                    f"of key_cols {self.key_cols}"
-                )
-        new_bucket_cols = bucket_cols or self.bucket_cols
+        new_bucket_cols = self._checked_bucket_cols(bucket_cols) or self.bucket_cols
         if n_buckets == old_n and new_bucket_cols == self.bucket_cols:
             return {"version": m["version"], "rebucket": None}
-        all_files = [p for fl in m["files"].values() for p in fl]
-        df = lww_dedup(
-            self._read_files(all_files, m["schema"]), self.key_cols, ORDER_COLS
-        )
-        df = df.withColumn(
-            "_bucket",
-            F.pmod(
-                F.hash(*[F.col(c) for c in new_bucket_cols]), F.lit(n_buckets)
-            ),
-        )
         version = m["version"] + 1
-        out = df.repartition(n_buckets, "_bucket")
-        if self.stats_cols:
-            out = out.sortWithinPartitions("_bucket", *self.stats_cols)
-        files_map = {
-            b: fl
-            for b, fl in self._write_buckets(out, f"v{version}", range(n_buckets)).items()
-            if fl
-        }
-        written = [p for fl in files_map.values() for p in fl]
+        written, new_stats = self._rewrite(
+            [p for fl in m["files"].values() for p in fl],
+            m["schema"],
+            f"v{version}",
+            range(n_buckets),
+            layout=(n_buckets, new_bucket_cols),
+        )
+        files_map = {b: fl for b, fl in written.items() if fl}
         record = {
             "version": version,
             "rebucket": [old_n, n_buckets],
-            "files_written": len(written),
+            "files_written": sum(len(fl) for fl in files_map.values()),
         }
         if new_bucket_cols != self.bucket_cols:
             record["rebucket_cols"] = [self.bucket_cols, new_bucket_cols]
-        m["version"] = version
-        m["n_buckets"] = n_buckets
-        m["bucket_cols"] = new_bucket_cols
-        m["files"] = files_map
-        if self.stats_cols:
-            m["file_stats"] = self._collect_stats(written, self.stats_cols)
-        m["lineage"] = m.get("lineage", []) + [record]
-        self._commit(m)
+        self._commit(self._next_manifest(
+            m, record, files_map, new_stats,
+            n_buckets=n_buckets, bucket_cols=new_bucket_cols,
+        ))
         self.n_buckets = n_buckets
         self.bucket_cols = new_bucket_cols
         return record

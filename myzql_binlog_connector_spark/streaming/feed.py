@@ -20,7 +20,8 @@ a micro-batch after a crash rereads byte-identical data, which is exactly
 Structured Streaming's exactly-once offset contract.  The source is
 read-only and writer-independent: it never touches LATEST or the
 manifests, and it tolerates a half-finished commit (manifest linked,
-pointer not yet swapped) by rolling the head *view* forward the same way
+pointer not yet swapped) by resolving the head with the lake's read-only
+``_head_version``, which rolls the head *view* forward the same way
 ``BucketedLakeTable._latest_committed`` does, without performing recovery.
 
 Semantics parity with ``BucketedLakeTable.read_changes``: same rows, same
@@ -46,7 +47,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -58,9 +58,9 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..plans.lake import (
-    LATEST,
-    MANIFEST_DIR,
-    RetentionOverrunError,
+    _head_version,
+    _load_manifest,
+    _retention_floor,
     iter_commit_deltas,
 )
 
@@ -77,41 +77,6 @@ class FeedSchemaChangedError(RuntimeError):
     primary without any signal (Delta CDF fails loud here too).  Restart
     the query — schema re-resolves from the head manifest on start, and
     offsets resume from the checkpoint, so no change data is lost."""
-
-
-def _mdir(path: str) -> str:
-    return os.path.join(path, MANIFEST_DIR)
-
-
-def _manifest_path(path: str, version: int) -> str:
-    return os.path.join(_mdir(path), f"v{version}.json")
-
-
-def _head_version(path: str) -> int:
-    """Newest COMMITTED version, read-only (no recovery side effects):
-    the LATEST pointer, rolled forward past any fully-linked manifest a
-    crashed writer didn't get to publish.  0 = table absent/empty."""
-    try:
-        with open(os.path.join(_mdir(path), LATEST)) as f:
-            head = int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        head = 0
-    while os.path.exists(_manifest_path(path, head + 1)):
-        head += 1
-    return head
-
-
-def _oldest_version(path: str) -> int:
-    try:
-        names = os.listdir(_mdir(path))
-    except FileNotFoundError:
-        return 0
-    vs = [
-        int(m.group(1))
-        for m in (re.fullmatch(r"v(\d+)\.json", n) for n in names)
-        if m
-    ]
-    return min(vs, default=0)
 
 
 @dataclass
@@ -173,19 +138,8 @@ def _plan_commits(
     ``read_changes(from_version=s+1)``."""
     if e <= s:
         return []
-    oldest = _oldest_version(path)
-    if s + 1 < oldest:
-        if not allow_gaps:
-            raise RetentionOverrunError(
-                f"change feed resume at version {s + 1} precedes the "
-                f"oldest retained version {oldest} (vacuumed): the feed "
-                f"would be gapped.  Re-bootstrap the consumer from a "
-                f"snapshot, or set allowGaps=true to accept a feed "
-                f"starting at {oldest}."
-            )
-        s = oldest - 1
-    with open(_manifest_path(path, e)) as f:
-        m = json.load(f)
+    s = _retention_floor(path, s + 1, allow_gaps) - 1
+    m = _load_manifest(path, e)
     if query_schema is not None:
         # Schema-evolution gate (round-6 ADVICE): lake schema evolution is
         # strictly additive (add/widen; narrowing fails loud at merge), so
@@ -325,9 +279,9 @@ class LakeChangesDataSource(DataSource):
                 f"no committed manifest under {path!r} — create the table "
                 f"(first merge) before subscribing to its change feed"
             )
-        with open(_manifest_path(path, head)) as f:
-            m = json.load(f)
-        return StructType.fromJson(json.loads(m["schema"]))
+        return StructType.fromJson(
+            json.loads(_load_manifest(path, head)["schema"])
+        )
 
     def schema(self) -> StructType:
         # feed rows = stored schema (payload + META_COLS; _deleted marks

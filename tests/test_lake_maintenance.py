@@ -127,6 +127,50 @@ class TestIncrementalCompaction:
         table.compact(drop_tombstones_below=(3,))
         assert table.read(include_tombstones=True).count() == 0
 
+    def test_inline_fold_writes_what_compact_writes(self, spark, table, tmp_path):
+        """The merge's inline fold and compact(buckets=[b]) are one
+        rewrite: over the same files a bucket folds to the same LWW rows,
+        tombstones included."""
+        import shutil
+        from collections import Counter
+
+        import pyarrow.parquet as pq
+
+        from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+
+        for g in range(3):
+            table.merge(
+                _mk_changes(
+                    spark,
+                    [(f"c{i}", 0, f"v{g}-{i}", g + 1, i % 3 == g) for i in range(24)],
+                ),
+                batch_id=g,
+            )
+        copy = str(tmp_path / "copy")
+        shutil.copytree(table.path, copy)  # the table before the fold
+        last = [(f"c{i}", i % 2, f"v3-{i}", 4, i % 5 == 0) for i in range(24)]
+        folded = table.merge(_mk_changes(spark, last), batch_id=3)["buckets_folded"]
+        assert folded
+        other = BucketedLakeTable(
+            spark, copy, ["conv_id", "turn_idx"], n_buckets=8,
+            max_files_per_bucket=3, auto_fold=False,
+        )
+        assert other.merge(_mk_changes(spark, last), batch_id=3)["buckets_folded"] == []
+
+        def rows(t, b):
+            files = t.snapshot_manifest()["files"][str(b)]
+            return Counter(
+                tuple(r.values()) for p in files for r in pq.read_table(p).to_pylist()
+            )
+
+        tombstones = 0
+        for b in folded:
+            other.compact(buckets=[b])
+            mine = rows(table, b)
+            assert mine == rows(other, b)
+            tombstones += sum(n for r, n in mine.items() if r[3])  # _deleted
+        assert tombstones
+
 
 # ---------------------------------------------------------------------------
 # round-1 maintenance coverage (tombstone GC, lineage, watermarks, metrics)
@@ -968,7 +1012,7 @@ class TestCrashRecovery:
         assert t.watermarks()["1"] == 20
 
     def test_concurrent_append_same_version_writes_once(self, spark, tmp_path):
-        """A crash-recovery reader's _finish_commit racing the committing
+        """A crash-recovery reader's _publish racing the committing
         writer (same version) must not double-log the lineage row — the
         tail-check + append is serialized under an advisory lock
         (round-6 ADVICE).  Threads hammer the append; exactly one line
@@ -1139,6 +1183,24 @@ class TestLineageWindowOverrun:
         feed = t.read_changes(from_version=1)
         got = {(r.conv_id, r._commit_version) for r in feed.collect()}
         assert got == {("a", 1), ("a", 2), ("b", 4), ("c", 5)}
+
+    def test_rebucket_keeps_the_lineage_window(self, spark, tmp_path):
+        """rebucket commits through the same manifest step as merge and
+        compact, so its lineage stays trimmed to lineage_keep."""
+        from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+
+        t = BucketedLakeTable(
+            spark, str(tmp_path / "t"), ["conv_id", "turn_idx"],
+            n_buckets=4, lineage_keep=2,
+        )
+        for g in range(3):
+            t.merge(
+                _mk_changes(spark, [(f"c{g}", 0, f"v{g}", g + 1, False)]),
+                batch_id=g,
+            )
+        t.rebucket(8)
+        assert len(t.lineage()) == 2
+        assert t.lineage()[-1]["rebucket"] == [4, 8]
 
 
 class TestOptimisticCompaction:

@@ -232,6 +232,29 @@ class TestRangeSkipping:
         got = table.read(ranges={"ts": (50, 60)})
         assert _rows(got) == {r for r in before if 50 <= r[3] <= 60}
 
+    def test_inline_fold_clusters_by_stats_cols(self, spark, table):
+        """The inline fold is the same rewrite as compact(): its files come
+        out ts-clustered too, with the read results unchanged."""
+        import pyarrow.parquet as pq
+
+        for g in range(5):  # crosses max_files_per_bucket=4 → inline fold
+            table.merge(
+                _mk_changes(
+                    spark,
+                    [(f"c{i}", g, "x", (i * 7 + g * 13) % 200, g + 1, False)
+                     for i in range(50)],
+                ),
+                batch_id=g,
+            )
+        m = table.snapshot_manifest()
+        folded = m["lineage"][-1]["buckets_folded"]
+        assert folded
+        for b in folded:
+            (p,) = m["files"][str(b)]
+            ts = pq.read_table(p, columns=["ts"])["ts"].to_pylist()
+            assert ts == sorted(ts), f"{p} not ts-clustered"
+        assert len(table.read().collect()) == 250
+
     def test_big_key_set_uses_semi_join_and_stays_exact(self, spark, table):
         """Past KEY_PREDICATE_MAX tuples, the lookup switches from an
         inlined OR predicate (would blow up codegen at 10k keys) to a
