@@ -22,10 +22,16 @@ Design for 100 TB:
     ``(_gtid, _event_seq, _event_row_index, _deleted)``.  A merge *appends*
     the (batch-reduced) change rows as new files in their buckets — write
     cost is O(batch), never O(bucket) — and readers resolve last-writer-wins
-    per key over the union of a bucket's files.  When a bucket accumulates
-    more than ``max_files_per_bucket`` files, the merge commit folds that
-    bucket (local compaction) so read amplification stays bounded; a fully
-    folded table reads with no LWW shuffle at all.  DELETEs persist as
+    per key over the union of a bucket's files.  When a bucket holds
+    more than ``max_files_per_bucket`` files on top of its *base*, the
+    merge commit folds those files into one (local compaction) so read
+    amplification stays bounded.  Folding is size-tiered, after O'Neil et
+    al.'s LSM-tree: a bucket's oldest file is its base while the files
+    after it hold less than ``BASE_FRAC`` of its bytes, and a fold leaves
+    the base alone and rewrites only the deltas; once they outgrow that
+    share the bucket folds whole, into one file.  A single-file bucket
+    reads with no LWW aggregate; a keyed read of small multi-file buckets
+    runs it in one task, with no shuffle.  DELETEs persist as
     tombstones, which makes the merge **idempotent and commutative under
     redelivery**: replaying an old micro-batch cannot resurrect a deleted
     row because the tombstone still outranks it.  Tombstones older than the
@@ -57,6 +63,10 @@ LATEST = "LATEST"
 META_COLS = ("_gtid", "_event_seq", "_event_row_index", "_deleted")
 # the LWW order: per key the change with the highest tuple wins
 ORDER_COLS = ("_gtid", "_event_seq", "_event_row_index")
+# a bucket's oldest file is its base while the files after it hold less
+# than this share of its bytes: the inline fold leaves a base in place and
+# rewrites only the files above it
+BASE_FRAC = 0.5
 # hot merge-on-read table: snappy (Delta's default) — decode speed dominates
 # read cost and merge wall-time beats ~1.5x file size on a CDC-applied table
 # that compaction rewrites anyway.  Set on every write, so a session-wide
@@ -241,6 +251,13 @@ def _bucket_expr(bucket_cols: list[str], n_buckets: int):
     return F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
 
 
+def _has_base(files: list[str]) -> bool:
+    """Whether a bucket's oldest file is its base: the files after it
+    hold less than ``BASE_FRAC`` of its bytes."""
+    sizes = [os.path.getsize(p) for p in files]
+    return bool(sizes) and sum(sizes[1:]) < BASE_FRAC * sizes[0]
+
+
 def iter_commit_deltas(
     table_path: str, lo: int, hi: int, head_manifest: dict
 ) -> list[tuple[int, list[str]]]:
@@ -343,7 +360,9 @@ class BucketedLakeTable:
     100 TB table wants tens of thousands of buckets; the sandbox default is
     small only because test tables are.  ``max_files_per_bucket`` bounds
     merge-on-read amplification: a bucket is folded (locally compacted)
-    inside the merge commit once it would exceed this many delta files."""
+    inside the merge commit once it holds more than this many files on top
+    of its base (see ``BASE_FRAC``), so it holds at most
+    ``max_files_per_bucket + 1`` files."""
 
     def __init__(
         self,
@@ -823,7 +842,21 @@ class BucketedLakeTable:
         Buckets with a single (folded) file hold one version per key by
         construction and union in with no shuffle; only multi-file buckets
         pay the LWW aggregate.  Keys hash to exactly one bucket, so the
-        aggregate over the multi-file union is bucket-local-correct."""
+        aggregate over the multi-file union is bucket-local-correct.  A
+        keyed read of at most ``KEY_PREDICATE_MAX`` tuples whose
+        multi-file part totals no more than
+        ``spark.sql.files.maxPartitionBytes`` coalesces that part to one
+        partition, so the aggregate plans no Exchange and the lookup runs
+        as one job.  Spark would scan such a part in several tasks (it
+        splits at ``min(maxPartitionBytes, max(openCostInBytes, (bytes +
+        files * openCostInBytes) / parallelism))``), but it reads Parquet
+        by whole row groups, so no more of those tasks are busy than the
+        part has row groups.
+        Measured with Spark 4.1.2 on a 4-core host (3-key lookups on a
+        bucket of 2 or 8 files, 1 to 118 MB, rows in key order or
+        shuffled, files in the page cache), the one-task plan was faster
+        at every size, at ``local[4]`` and ``local[2]``, by 5-26% in the
+        median."""
         m = self._read_manifest(at_version)
         schema = StructType.fromJson(json.loads(m["schema"]))
         if isinstance(keys, dict):
@@ -864,6 +897,15 @@ class BucketedLakeTable:
             part = self._read_files(multi, m["schema"])
             if keys:
                 part = self._apply_keys(part, keys, schema, probe_cols)  # pre-LWW: commutes
+                conf = self.spark._jsparkSession.sessionState().conf()
+                if len(keys) <= self.KEY_PREDICATE_MAX and sum(
+                    os.path.getsize(p) for p in multi
+                ) <= conf.filesMaxPartitionBytes():
+                    # one task scans the key-filtered files and aggregates
+                    # them, with no Exchange, so the lookup is one job; up
+                    # to this size that beat the shuffled aggregate (see
+                    # ``read``)
+                    part = part.coalesce(1)
             parts.append(range_filter(lww_dedup(part, self.key_cols, ORDER_COLS)))
         if not parts:
             parts = [self._read_files([], m["schema"])]
@@ -1368,22 +1410,31 @@ class BucketedLakeTable:
             delta_files.extend(delta[str(b)])
 
         # --- bounded read amplification: fold over-threshold buckets --------
+        # A bucket with a base folds only the files above it, tombstones
+        # kept (the base may hold the key): LWW over ORDER_COLS is
+        # associative over any subset of a bucket's files.  A bucket
+        # without one folds whole, into one file.
         folded = self._over_cap(new_files, dirty) if self.auto_fold else []
+        kept = {  # the base each folded bucket keeps, if it has one
+            b: new_files[str(b)][:1] if _has_base(new_files[str(b)]) else []
+            for b in folded
+        }
         refolded, new_stats = {}, {}
         if folded:
             refolded, new_stats = self._rewrite(
-                [p for b in folded for p in new_files[str(b)]],
+                [p for b in folded for p in new_files[str(b)][len(kept[b]):]],
                 schema_json,
                 f"v{version}_fold",
                 folded,
             )
-            new_files.update(refolded)
+            new_files.update({b: kept[int(b)] + fl for b, fl in refolded.items()})
         # footer stats only for the deltas the fold did not supersede
         new_stats.update(
             self._collect_stats(
                 [p for b in dirty if b not in folded for p in delta[str(b)]]
             )
         )
+        # the files this commit wrote: a carried base is not one of them
         written = delta_files + [p for fl in refolded.values() for p in fl]
         bytes_written = sum(os.path.getsize(p) for p in written)
         record = {
@@ -1392,6 +1443,7 @@ class BucketedLakeTable:
             "input_rows": n_changes,
             "dirty_buckets": dirty,
             "buckets_folded": folded,
+            "buckets_rebased": [b for b in folded if not kept[b]],
             "files_written": len(written),
             "bytes_written": bytes_written,
             # the commit's delta files (pre-fold) ARE the change feed for
@@ -1436,18 +1488,22 @@ class BucketedLakeTable:
     def _over_cap(self, files: dict, buckets=None) -> list[int]:
         """The fold trigger: the buckets of ``files`` (only those in
         ``buckets``, when given) holding more than
-        ``max_files_per_bucket`` files, ascending."""
+        ``max_files_per_bucket`` files on top of their base, ascending."""
+        cap = self.max_files_per_bucket
+
+        def over(fl: list[str]) -> bool:
+            return len(fl) > cap and len(fl) - _has_base(fl) > cap
+
         cands = files if buckets is None else [str(b) for b in buckets]
-        return sorted(
-            int(b) for b in cands
-            if len(files.get(b, [])) > self.max_files_per_bucket
-        )
+        return sorted(int(b) for b in cands if over(files.get(b, [])))
 
     def needs_fold(self) -> list[int]:
-        """Buckets whose delta-file count exceeds ``max_files_per_bucket``
-        — the inline-fold trigger.  With ``auto_fold=False`` a maintenance
-        loop runs ``compact(buckets=needs_fold())`` on its own schedule
-        instead of paying the fold inside a merge commit."""
+        """Buckets holding more than ``max_files_per_bucket`` files on
+        top of their base — the inline-fold trigger.  With
+        ``auto_fold=False`` a maintenance loop runs
+        ``compact(buckets=needs_fold())`` on its own schedule instead of
+        paying the fold inside a merge commit; ``compact`` folds each
+        bucket whole, base included."""
         if not self.exists():
             return []
         return self._over_cap(self._read_manifest()["files"])

@@ -56,8 +56,9 @@ def main(argv: list[str] | None = None) -> int:
                     "layout too (comma-separated subset of --keys; e.g. "
                     "conv_id to make conversation fetches one-bucket reads)")
     ap.add_argument("--max-files-per-bucket", type=int, default=8,
-                    help="fold threshold for needs_fold()/--compact "
-                    "(an operator policy, not table state)")
+                    help="fold threshold for needs_fold()/--compact: files "
+                    "a bucket may hold on top of its base (an operator "
+                    "policy, not table state)")
     ap.add_argument("--master", default="local[*]")
     args = ap.parse_args(argv)
     if not (args.status or args.compact or args.vacuum or args.rebucket):

@@ -33,6 +33,29 @@ def table(spark, tmp_path):
     )
 
 
+def _tiered(spark, tmp_path, **kw):
+    """A 4-bucket table bucketed by ``conv_id`` (every ``("k", i)`` row
+    lands in one bucket) whose first commit gives that bucket a base: 300
+    rows of incompressible text, which one-row deltas do not outweigh."""
+    import hashlib
+
+    from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+
+    t = BucketedLakeTable(
+        spark, str(tmp_path / "tiered"), ["conv_id", "turn_idx"], n_buckets=4,
+        max_files_per_bucket=3, bucket_cols=["conv_id"], **kw,
+    )
+    rows = [("k", i, hashlib.sha256(b"%d" % i).hexdigest() * 2, 1, False) for i in range(300)]
+    b = str(t.merge(_mk_changes(spark, rows), batch_id=0)["dirty_buckets"][0])
+    return t, b
+
+
+def _file_rows(path):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pylist()
+
+
 class TestMergeOnRead:
     def test_single_key_batch_touches_one_bucket(self, spark, table):
         base = _mk_changes(
@@ -85,6 +108,73 @@ class TestMergeOnRead:
         assert [(r.conv_id, r.text) for r in rows] == [("k", "v6")]
         # at least one fold happened along the way
         assert any(r.get("buckets_folded") for r in m["lineage"])
+
+    def test_fold_leaves_a_big_base_in_place(self, spark, tmp_path):
+        """Over the cap, a bucket with a base folds only its deltas: the
+        base keeps its path and its place, the fold file holds the deltas'
+        LWW rows alone, and the commit counts the files it wrote, not the
+        base it carried."""
+        t, b = _tiered(spark, tmp_path)
+        base = t.snapshot_manifest()["files"][b]
+        for g in range(2, 5):  # three deltas: the cap, not over it
+            rec = t.merge(_mk_changes(spark, [("k", g, f"v{g}", g, False)]), batch_id=g)
+            assert rec["buckets_folded"] == []
+        rec = t.merge(_mk_changes(spark, [("k", 2, None, 5, True)]), batch_id=5)
+        assert rec["buckets_folded"] == [int(b)]
+        assert rec["buckets_rebased"] == []
+        files = t.snapshot_manifest()["files"][b]
+        assert files[:1] == base and len(files) == 2
+        fold = _file_rows(files[1])
+        assert sorted((r["turn_idx"], r["text"], r["_deleted"]) for r in fold) == [
+            (2, None, True), (3, "v3", False), (4, "v4", False),
+        ]
+        assert rec["files_written"] == len(rec["delta_files"]) + 1
+        assert rec["bytes_written"] == sum(
+            os.path.getsize(p) for p in rec["delta_files"] + files[1:]
+        )
+        got = {(r.turn_idx, r.text) for r in t.read().collect()}
+        assert len(got) == 299 and (2, "v2") not in got and (3, "v3") in got
+
+    def test_tombstone_over_a_base_survives_a_delta_fold(self, spark, tmp_path):
+        """A key whose live row sits in the base and whose tombstone sits
+        in a delta stays deleted after the deltas fold (the fold keeps the
+        tombstone), and a redelivered older insert does not revive it."""
+        t, b = _tiered(spark, tmp_path)
+        t.merge(_mk_changes(spark, [("k", 7, None, 2, True)]), batch_id=1)
+        for g in range(3, 6):
+            rec = t.merge(_mk_changes(spark, [("k", g, f"w{g}", g, False)]), batch_id=g)
+        assert rec["buckets_folded"] == [int(b)] and rec["buckets_rebased"] == []
+        files = t.snapshot_manifest()["files"][b]
+        assert any(r["turn_idx"] == 7 and r["_deleted"] for r in _file_rows(files[1]))
+        key = {"conv_id": "k", "turn_idx": 7}
+        assert t.read(keys=key).count() == 0
+        t.merge(_mk_changes(spark, [("k", 7, "old", 1, False)]), batch_id=9)
+        assert t.read(keys=key).count() == 0
+        assert 7 not in {r.turn_idx for r in t.read().collect()}
+
+    def test_fold_rebases_once_deltas_reach_half_the_base(self, spark, tmp_path):
+        """Deltas that outgrow half the base end the tiering: the next
+        fold rewrites the bucket whole, into one file."""
+        import hashlib
+
+        from myzql_binlog_connector_spark.plans.lake import BASE_FRAC
+
+        t, b = _tiered(spark, tmp_path)
+        base = t.snapshot_manifest()["files"][b][0]
+        g, rec, deltas = 1, {"buckets_folded": []}, 0
+        while not rec["buckets_folded"]:
+            g += 1
+            rows = [
+                ("k", i, hashlib.sha256(b"%d-%d" % (g, i)).hexdigest() * 2, g, False)
+                for i in range(1000 * g, 1000 * g + 60)
+            ]
+            rec = t.merge(_mk_changes(spark, rows), batch_id=g)
+            deltas += sum(os.path.getsize(p) for p in rec["delta_files"])
+        assert deltas >= BASE_FRAC * os.path.getsize(base)
+        assert rec["buckets_folded"] == rec["buckets_rebased"] == [int(b)]
+        files = t.snapshot_manifest()["files"][b]
+        assert len(files) == 1 and files[0] != base
+        assert t.read().count() == 300 + 60 * (g - 1)
 
 
 class TestIncrementalCompaction:
@@ -840,6 +930,17 @@ class TestDeferredFold:
         m = t._read_manifest()
         assert max(len(fl) for fl in m["files"].values()) <= 4  # folds inline
         assert t.needs_fold() == []
+
+    def test_needs_fold_counts_files_on_top_of_the_base(self, spark, tmp_path):
+        """needs_fold() is the inline fold's count: a base plus
+        ``max_files_per_bucket`` deltas is within bound, one more is not."""
+        t, b = _tiered(spark, tmp_path, auto_fold=False)
+        for g in range(2, 5):
+            t.merge(_mk_changes(spark, [("k", g, f"v{g}", g, False)]), batch_id=g)
+        assert len(t.snapshot_manifest()["files"][b]) == 4
+        assert t.needs_fold() == []
+        t.merge(_mk_changes(spark, [("k", 5, "v5", 5, False)]), batch_id=5)
+        assert t.needs_fold() == [int(b)]
 
 
 class TestCrashRecovery:

@@ -41,6 +41,28 @@ def _rows(df):
     return {(r.conv_id, r.turn_idx, r.text, r.ts) for r in df.collect()}
 
 
+def _assert_pruned_matches(t, live, ranges, probe, case):
+    """A pruned read equals the same filter over the full read: the full
+    read equals the python model ``live`` ({key: (text, ts)}), each
+    ``(lo, hi)`` of ``ranges`` over ``ts`` (None = open) equals the
+    filtered full read, and the key set ``probe`` reads its live rows."""
+    full = _rows(t.read())
+    assert full == {(c, ti, v, ts) for (c, ti), (v, ts) in live.items()}
+    for lo, hi in ranges:
+        pruned = _rows(t.read(ranges={"ts": (lo, hi)}))
+        want = {
+            r for r in full
+            if (lo is None or r[3] >= lo) and (hi is None or r[3] <= hi)
+        }
+        assert pruned == want, (case, lo, hi)
+    got = _rows(t.read(keys=probe))
+    want = {
+        (c, ti, v, ts) for (c, ti), (v, ts) in live.items()
+        if any(p["conv_id"] == c and p["turn_idx"] == ti for p in probe)
+    }
+    assert got == want, (case, probe)
+
+
 class TestKeyLookupPruning:
     def test_point_lookup_scans_one_bucket(self, spark, table):
         table.merge(
@@ -433,33 +455,65 @@ class TestPruningInvariantSweep:
                 t.merge(_mk_changes(spark, rows), batch_id=batch)
                 if rng.random() < 0.4:
                     t.compact()
-            # ground truth from the python model
-            assert _rows(t.read()) == {
-                (c, ti, v, ts) for (c, ti), (v, ts) in live.items()
-            }
-            # random ranges: pruned == full-filtered
+            # random ranges
+            ranges = []
             for _ in range(3):
                 lo = rng.choice([None, rng.randint(0, 120)])
                 hi = rng.choice([None, rng.randint(50, 11_000)])
                 if lo is not None and hi is not None and lo > hi:
                     lo, hi = hi, lo
-                pruned = _rows(t.read(ranges={"ts": (lo, hi)}))
-                want = {
-                    r for r in _rows(t.read())
-                    if (lo is None or r[3] >= lo) and (hi is None or r[3] <= hi)
-                }
-                assert pruned == want, (case, lo, hi)
+                ranges.append((lo, hi))
             # random key sets (mix of live, deleted, absent)
             probe = [
                 {"conv_id": f"c{rng.randint(0, 18)}", "turn_idx": rng.randint(0, 2)}
                 for _ in range(rng.randint(1, 6))
             ]
-            got = _rows(t.read(keys=probe))
-            want = {
-                (c, ti, v, ts) for (c, ti), (v, ts) in live.items()
-                if any(p["conv_id"] == c and p["turn_idx"] == ti for p in probe)
-            }
-            assert got == want, (case, probe)
+            _assert_pruned_matches(t, live, ranges, probe, case)
+
+    def test_tiered_histories_pruned_equals_filtered(self, spark, tmp_path):
+        """The same sweep over histories whose folds leave a base in
+        place: a ~200-row first batch of long rows, then more small
+        batches than the fold cap, so over-cap buckets fold their deltas
+        alone."""
+        import random
+
+        from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+
+        rng = random.Random(20261019)
+        delta_folds = 0
+        for case in range(2):
+            cap = rng.choice([2, 3])
+            t = BucketedLakeTable(
+                spark, str(tmp_path / f"t{case}"), ["conv_id", "turn_idx"],
+                n_buckets=4, max_files_per_bucket=cap, stats_cols=["ts"],
+            )
+            live: dict = {}
+            gtid = 0
+            for batch in range(cap + 2 + rng.randint(0, 2)):
+                rows = []
+                for _ in range(200 if batch == 0 else rng.randint(5, 12)):
+                    gtid += 1
+                    k = (f"c{rng.randint(0, 99)}", rng.randint(0, 1))
+                    if batch and rng.random() < 0.3:  # delete something
+                        k = rng.choice(list(live))
+                        rows.append((k[0], k[1], None, 0, gtid, True))
+                        live.pop(k, None)
+                    else:
+                        ts = rng.randint(0, 999)
+                        # ~1 KB of incompressible text per base row
+                        pad = random.Random(gtid).randbytes(1024).hex()
+                        x = f"v{gtid}" + (pad if batch == 0 else "")
+                        rows.append((k[0], k[1], x, ts, gtid, False))
+                        live[k] = (x, ts)
+                rec = t.merge(_mk_changes(spark, rows), batch_id=batch)
+                delta_folds += len(set(rec["buckets_folded"]) - set(rec["buckets_rebased"]))
+            ranges = [sorted(rng.sample(range(1000), 2)) for _ in range(3)]
+            probe = [
+                {"conv_id": f"c{rng.randint(0, 102)}", "turn_idx": rng.randint(0, 2)}
+                for _ in range(rng.randint(1, 6))
+            ]
+            _assert_pruned_matches(t, live, ranges, probe, case)
+        assert delta_folds
 
 
 class TestZOrderBitWidthCap:

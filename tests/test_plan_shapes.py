@@ -157,3 +157,55 @@ def test_envelope_typed_changes_reads_input_once(spark, tmp_path):
     plan = typed._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1, plan
     assert "Union" not in plan, plan
+
+
+def _multifile_table(spark, tmp_path):
+    """A 2-bucket table whose buckets hold two small files each."""
+    from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+
+    t = BucketedLakeTable(spark, str(tmp_path / "t"), ["conv_id", "turn_idx"], n_buckets=2)
+    for g in (1, 2):
+        t.merge(
+            spark.createDataFrame(
+                [(f"c{i}", 0, f"v{g}", False, g, g, i) for i in range(100)],
+                "conv_id string, turn_idx bigint, text string, _deleted boolean, "
+                "_gtid bigint, _event_seq bigint, _event_row_index bigint",
+            ),
+            batch_id=g,
+        )
+    assert all(len(fl) == 2 for fl in t.snapshot_manifest()["files"].values())
+    return t
+
+
+def _keys(n):
+    return [{"conv_id": f"c{i}", "turn_idx": 0} for i in range(n)]
+
+
+def test_small_keyed_multifile_read_plans_no_exchange(spark, tmp_path):
+    """A keyed read of at most KEY_PREDICATE_MAX tuples over multi-file
+    buckets totalling no more than spark.sql.files.maxPartitionBytes runs
+    the LWW aggregate in one task: no Exchange, so the lookup is one job."""
+    t = _multifile_table(spark, tmp_path)
+    df = t.read(keys=_keys(t.KEY_PREDICATE_MAX))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Coalesce 1" in plan, plan
+    assert {r.text for r in df.collect()} == {"v2"}
+
+
+def test_big_keyed_or_large_multifile_read_keeps_its_plan(spark, tmp_path):
+    """More than KEY_PREDICATE_MAX tuples, or multi-file buckets bigger
+    than spark.sql.files.maxPartitionBytes, keep the shuffled LWW
+    aggregate."""
+    t = _multifile_table(spark, tmp_path)
+    big = t.read(keys=_keys(t.KEY_PREDICATE_MAX + 1))
+    plans = [big._jdf.queryExecution().executedPlan().toString()]
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1k")
+    try:
+        plans.append(t.read(keys=_keys(3))._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set(conf, old)
+    for plan in plans:
+        assert "Exchange hashpartitioning(conv_id" in plan and "Coalesce" not in plan, plan
+    assert len(big.collect()) == 65

@@ -191,6 +191,49 @@ class TestReplicate:
             q2.stop()
 
 
+    def test_replica_follows_tiered_folds(self, spark, tmp_path):
+        """A replica following a table whose folds leave each bucket's base
+        in place (a big first commit, then more small commits than the
+        fold cap) equals the primary: the feed serves each commit's delta
+        files, which a delta-only fold does not touch."""
+        import hashlib
+
+        from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+        from myzql_binlog_connector_spark.streaming.replica import replicate
+
+        src = BucketedLakeTable(
+            spark, str(tmp_path / "src"), ["conv_id", "turn_idx"], n_buckets=4,
+            max_files_per_bucket=2,
+        )
+        dst = _mk_table(spark, str(tmp_path / "dst"))
+        src.merge(
+            _chg(spark, [
+                (f"c{i}", 0, hashlib.sha256(b"%d" % i).hexdigest() * 2, 1, False)
+                for i in range(1200)
+            ]),
+            batch_id=0,
+        )
+        for g in range(2, 7):  # cap + 3 small commits over the base's keys
+            src.merge(
+                _chg(spark, [
+                    (f"c{8 * g + j}", 0, None if j == 0 else f"v{g}", g, j == 0)
+                    for j in range(8)
+                ]),
+                batch_id=g,
+            )
+        lineage = src.snapshot_manifest()["lineage"]
+        assert any(set(r["buckets_folded"]) - set(r["buckets_rebased"]) for r in lineage)
+        q = replicate(
+            spark, src.path, dst, str(tmp_path / "ckpt"), max_versions_per_batch=2
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert _state(dst) == _state(src)
+        assert len(_state(src)) == 1200 - 5
+
+
 class TestMultiTableReplication:
     def test_each_fanout_table_replicates_independently(self, spark, tmp_path):
         """MultiTableApplier tables are ordinary lake tables, so 'replicate
