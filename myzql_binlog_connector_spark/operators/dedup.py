@@ -15,6 +15,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 DEFAULT_ORDER = ("gtid", "event_seq", "event_row_index")
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def lww_dedup(
     df: DataFrame,
     key_cols: list[str],
@@ -32,12 +37,19 @@ def lww_dedup(
     order); exact ties were winner-arbitrary under the window sort too.
     Hot keys also stop mattering: partial aggregation bounds any one
     task's state at one row per key, where the window packed a viral
-    key's every row into one task."""
-    row = F.struct(*[F.col(c) for c in df.columns])
-    ordc = F.struct(*[F.col(c) for c in order_cols])
+    key's every row into one task.
+
+    The aggregate is one SQL expression, ``max_by(struct(<cols>),
+    struct(<order>)) AS _row``: it parses in one py4j call, where
+    building it from ``Column`` objects pays one per column (a keyed
+    lake read plans this on every lookup)."""
+
+    def struct(cols) -> str:
+        return f"struct({', '.join(map(quote_ident, cols))})"
+
     return (
         df.groupBy(*key_cols)
-        .agg(F.max_by(row, ordc).alias("_row"))
+        .agg(F.expr(f"max_by({struct(df.columns)}, {struct(order_cols)}) AS _row"))
         .select("_row.*")
     )
 

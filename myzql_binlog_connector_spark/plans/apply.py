@@ -457,14 +457,18 @@ class TranscriptsApplier:
             names = [self._name_for(i) for i in range(len(struct.fields))]
             frame = read_typed(names, _payload_kinds(descs))
             # cast payload columns to their exact Spark types (string→
-            # timestamp, int64→int, string→decimal, …) — one JVM cast per
-            # column; TIMESTAMP strings are UTC wall times and must not pass
+            # timestamp, int64→int, string→decimal, …) in one projection;
+            # TIMESTAMP strings are UTC wall times and must not pass
             # through the session TZ
-            for name, field in zip(names, struct.fields):
-                if isinstance(field.dataType, T.TimestampType):
-                    frame = frame.withColumn(name, utc_timestamp(F.col(name)))
-                else:
-                    frame = frame.withColumn(name, F.col(name).cast(field.dataType))
+            casts = {
+                name: (
+                    utc_timestamp(F.col(name))
+                    if isinstance(field.dataType, T.TimestampType)
+                    else F.col(name).cast(field.dataType)
+                ).alias(name)
+                for name, field in zip(names, struct.fields)
+            }
+            frame = frame.select(*[casts.get(c, c) for c in frame.columns])
 
             def dead(typed):
                 return typed.filter(F.col("_corrupt").isNotNull()).select(

@@ -47,16 +47,19 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import datetime
+import functools
 import json
 import os
 import re
 import time
 import uuid
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import NumericType, StructType
+from pyspark.sql.types import NumericType, StructType, TimestampType
 
-from ..operators.dedup import lww_dedup
+from ..operators.dedup import lww_dedup, quote_ident
 
 MANIFEST_DIR = "_manifests"
 LATEST = "LATEST"
@@ -138,6 +141,54 @@ def _footer_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
+def _sql_literal(v) -> str:
+    """The SQL text of ``F.lit(v)``: the same value, parsed in one call.
+
+    Key lookups, their bucket-id probe and :func:`local_relation` build
+    their literals here, so each of their expressions costs one py4j
+    round trip, where a ``Column`` chain costs one per column, literal
+    and operator.  A float is a ``CAST`` of its ``repr`` (which also
+    spells NaN and ±Infinity): a bare ``1.5`` parses as DECIMAL(2,1).  A
+    string is its UTF-8 bytes as a hex literal cast to STRING, so quotes,
+    backslashes, backticks and newlines need no escaping.  A Decimal is
+    an exact ``BD`` literal in positional notation (``1E+3`` would parse
+    as a DOUBLE).  A datetime is its epoch microseconds as pyspark's
+    converter computes them for ``F.lit`` (``TimestampType.toInternal``:
+    a naive one is local wall time of this process)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):  # before int: bool is an int subclass
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(v, Decimal):
+        return f"{v:f}BD"
+    if isinstance(v, datetime.datetime):  # before date: a datetime is a date
+        return f"TIMESTAMP_MICROS({TimestampType().toInternal(v)})"
+    if isinstance(v, datetime.date):
+        return f"DATE'{v.isoformat()}'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
+
+
+def _values_sql(schema: StructType, rows: list[tuple]) -> str:
+    """``rows`` (non-empty) as an inline table, ``VALUES ... AS
+    _local(<names>)``, every cell ``CAST(<literal> AS <field type>)``."""
+    types = [f.dataType.simpleString() for f in schema.fields]
+
+    def cells(row) -> str:
+        return ", ".join(f"CAST({_sql_literal(v)} AS {t})" for t, v in zip(types, row))
+
+    tuples = ", ".join(f"({cells(row)})" for row in rows)
+    names = ", ".join(quote_ident(f.name) for f in schema.fields)
+    return f"VALUES {tuples} AS _local({names})"
+
+
 def local_relation(
     spark: SparkSession, schema: StructType, rows: list[tuple]
 ) -> DataFrame:
@@ -148,28 +199,12 @@ def local_relation(
     broadcast of it ships without one.  ``createDataFrame`` over a Python
     list parallelizes an RDD instead and pays a job per use.
 
-    Values bind as named parameter markers, so each cell is exactly
-    ``F.lit(v).cast(type)``.  Python ints are rendered as SQL text instead
-    (an int's text is its literal): each bound parameter is a py4j round
-    trip, and a 1,000-row map of three ints binds in ~1.9 s but inlines
-    in ~0.08 s (4-core VM, ``local[2]``)."""
-    args: dict = {}
-    tuples = []
-    for r, row in enumerate(rows):
-        cells = []
-        for c, (f, v) in enumerate(zip(schema.fields, row)):
-            if type(v) is int:
-                val = str(v)
-            else:
-                name = f"v{r}_{c}"
-                args[name] = v
-                val = f":{name}"
-            cells.append(f"CAST({val} AS {f.dataType.simpleString()})")
-        tuples.append(f"({', '.join(cells)})")
-    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in schema.fields)
-    return spark.sql(
-        f"SELECT * FROM VALUES {', '.join(tuples)} AS _local({names})", args=args
-    )
+    Every cell is SQL text (:func:`_sql_literal`), the value of
+    ``F.lit(v).cast(type)``, and the whole table parses in one call.
+    Values are not bound as parameter markers: each bound parameter is a
+    py4j round trip, and a 1,000-row map of three ints binds in ~1.9 s
+    but inlines in ~0.08 s (4-core VM, ``local[2]``)."""
+    return spark.sql(f"SELECT * FROM {_values_sql(schema, rows)}")
 
 
 def _manifest_path(table_path: str, version: int) -> str:
@@ -246,9 +281,13 @@ def _retention_floor(
     return max(from_version, oldest)
 
 
-def _bucket_expr(bucket_cols: list[str], n_buckets: int):
+def _bucket_sql(bucket_cols: list[str], n_buckets: int) -> str:
     """The bucket function: ``pmod(hash(bucket_cols), n_buckets)``."""
-    return F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
+    return f"pmod(hash({', '.join(map(quote_ident, bucket_cols))}), {int(n_buckets)})"
+
+
+def _bucket_expr(bucket_cols: list[str], n_buckets: int):
+    return F.expr(_bucket_sql(bucket_cols, n_buckets))
 
 
 def _has_base(files: list[str]) -> bool:
@@ -650,27 +689,32 @@ class BucketedLakeTable:
     ) -> set:
         """Bucket ids for key tuples, computed with Spark's own hash (no
         Python Murmur3 reimplementation to drift).  Up to
-        ``KEY_PREDICATE_MAX`` tuples hash on the driver: the probe is a
-        :func:`local_relation` cast to the stored key types — the cast
-        :meth:`_key_cond` applies, so bucket ids and row predicate agree —
-        and ``pmod(hash(...))`` over it runs no Spark job.  Larger sets
-        hash the probe frame the semi-join uses (one job: a ``VALUES``
-        table that size costs more to parse than the job).
-        ``n_buckets`` and ``bucket_cols`` come from the manifest BEING
-        READ, not the handle — a time-travel read across a ``rebucket``
-        must hash against that snapshot's layout."""
+        ``KEY_PREDICATE_MAX`` tuples hash on the driver: one ``SELECT
+        pmod(hash(...)) FROM VALUES ...`` statement over the key values
+        cast to the stored key types (:func:`_values_sql`, the literal
+        and cast :meth:`_key_cond` renders, so bucket ids and row
+        predicate agree), which plans as a ``LocalTableScan`` and
+        collects with no Spark job.  Larger sets hash the probe frame
+        the semi-join uses (one job: a ``VALUES`` table that size costs
+        more to parse than the job).  ``n_buckets`` and ``bucket_cols``
+        come from the manifest BEING READ, not the handle — a
+        time-travel read across a ``rebucket`` must hash against that
+        snapshot's layout."""
         if not keys:
             return set()
         if len(keys) <= self.KEY_PREDICATE_MAX:
-            probe = local_relation(
-                self.spark,
+            values = _values_sql(
                 StructType([schema[c] for c in bucket_cols]),
                 [tuple(k[c] for c in bucket_cols) for k in keys],
             )
+            probe = self.spark.sql(
+                f"SELECT {_bucket_sql(bucket_cols, n_buckets)} AS b FROM {values}"
+            )
         else:
-            probe = self._key_probe_df(keys, schema, bucket_cols)
-        b = _bucket_expr(bucket_cols, n_buckets)
-        return {r["b"] for r in probe.select(b.alias("b")).collect()}
+            probe = self._key_probe_df(keys, schema, bucket_cols).select(
+                _bucket_expr(bucket_cols, n_buckets).alias("b")
+            )
+        return {r["b"] for r in probe.collect()}
 
     def _select_buckets(
         self,
@@ -755,16 +799,27 @@ class BucketedLakeTable:
     def _key_cond(self, keys: list[dict], schema: StructType, cols: list[str]):
         """Row-level predicate for key tuples (OR over tuples, AND over
         the probed columns, null-safe equality typed from the stored
-        schema).  Only used for probe sets small enough to inline —
-        see :meth:`_apply_keys`."""
-        conds = None
-        for k in keys:
-            cond = None
-            for c in cols:
-                eq = F.col(c).eqNullSafe(F.lit(k[c]).cast(schema[c].dataType))
-                cond = eq if cond is None else (cond & eq)
-            conds = cond if conds is None else (conds | cond)
-        return conds
+        schema), as one SQL expression: ``(`c1` <=> CAST(lit AS t1) AND
+        ...) OR ...`` with :func:`_sql_literal` values, parenthesized
+        into a left-deep tree (Spark's parser would balance a flat ``OR``
+        list).  Only used for probe sets small enough to inline — see
+        :meth:`_apply_keys`."""
+        types = {c: schema[c].dataType.simpleString() for c in cols}
+
+        def chain(op: str, terms) -> str:
+            return functools.reduce(lambda a, b: f"({a} {op} {b})", terms)
+
+        per_key = (
+            chain(
+                "AND",
+                (
+                    f"{quote_ident(c)} <=> CAST({_sql_literal(k[c])} AS {types[c]})"
+                    for c in cols
+                ),
+            )
+            for k in keys
+        )
+        return F.expr(chain("OR", per_key))
 
     def _key_probe_df(
         self, keys: list[dict], schema: StructType, cols: list[str] | None = None
@@ -913,7 +968,7 @@ class BucketedLakeTable:
         for p in parts[1:]:
             df = df.unionByName(p)
         if not include_tombstones:
-            df = df.filter(~F.col("_deleted"))
+            df = df.filter("NOT _deleted")
         if not include_meta:
             df = df.drop(*META_COLS, "_bucket")
         return df
@@ -1305,12 +1360,15 @@ class BucketedLakeTable:
 
         # align the batch to the merged schema
         pre_key_types = {n: t for n, t in changes.dtypes if n in self.key_cols}
-        for f_ in schema.fields:
-            if f_.name not in changes.columns:
-                changes = changes.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-            else:
-                changes = changes.withColumn(f_.name, F.col(f_.name).cast(f_.dataType))
-        changes = changes.select(*[f_.name for f_ in schema.fields])
+        have = set(changes.columns)
+        changes = changes.select(
+            *[
+                (F.col(f_.name) if f_.name in have else F.lit(None))
+                .cast(f_.dataType)
+                .alias(f_.name)
+                for f_ in schema.fields
+            ]
+        )
         if bucket_stats is not None:
             # caller-side stats hashed the PRE-alignment key values; if the
             # alignment widened a key column, F.hash changes with the type

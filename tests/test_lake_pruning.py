@@ -828,3 +828,111 @@ class TestDriverSideBucketIds:
         assert _rows(table.read(keys={"conv_id": "c4"})) == {
             ("c4", 0, "v4.0", 4), ("c4", 1, "v4.1", 4)
         }
+
+
+class TestSqlLiteral:
+    """``_sql_literal(v)`` is the SQL text of ``F.lit(v)``: cast to a key
+    type, it evaluates to the value ``F.lit(v).cast(type)`` does, in a
+    non-UTC session and for a naive datetime read as that zone's local
+    time by both sides."""
+
+    AWKWARD = ["", "it's", "back\\slash", "back`tick", "new\nline", "é漢😀"]
+
+    def _cases(self):
+        import datetime as dtm
+        from decimal import Decimal
+
+        edge = dtm.datetime(2021, 3, 14, 2, 30, 0, 123456)  # LA spring-forward gap
+        return [
+            (None, "int"), (None, "string"), (None, "timestamp"),
+            (True, "boolean"), (False, "boolean"),
+            (2**31 - 1, "int"), (-(2**31), "int"),
+            (2**63 - 1, "bigint"), (-(2**63), "bigint"), (7, "bigint"),
+            (7, "double"), (7, "string"),
+            (-0.0, "double"), (float("nan"), "double"), (float("inf"), "double"),
+            (float("-inf"), "double"), (1.5, "double"), (0.1, "double"),
+            (1.5, "decimal(12,3)"), (1e300, "double"),
+            *[(s, "string") for s in self.AWKWARD],
+            ("2021-03-14", "date"), ("42", "bigint"),
+            (b"", "binary"), (b"\x00'\\\xff", "binary"),
+            (Decimal("-12.345"), "decimal(12,3)"), (Decimal("1E+3"), "decimal(12,3)"),
+            (Decimal("0.5"), "double"),
+            (dtm.date(2021, 3, 14), "date"), (dtm.date(2021, 3, 14), "timestamp"),
+            (edge, "timestamp"), (edge, "date"), (edge, "timestamp_ntz"),
+            (dtm.datetime(2021, 11, 7, 1, 30), "timestamp"),  # LA fall-back overlap
+            (dtm.datetime(2021, 11, 7, 1, 30, tzinfo=dtm.timezone.utc), "timestamp"),
+        ]
+
+    def test_cast_literal_equals_cast_lit(self, spark):
+        import math
+        import os
+        import time
+
+        from pyspark.sql import functions as F
+
+        from myzql_binlog_connector_spark.plans.lake import _sql_literal
+
+        def same(a, b):
+            if isinstance(a, float) and isinstance(b, float):
+                return repr(a) == repr(b)  # NaN and -0.0 compare by spelling
+            return type(a) is type(b) and a == b
+
+        cases = self._cases()
+        zone = spark.conf.get("spark.sql.session.timeZone")
+        tz = os.environ.get("TZ")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        os.environ["TZ"] = "America/Los_Angeles"
+        time.tzset()
+        try:
+            text = spark.sql(
+                "SELECT " + ", ".join(
+                    f"CAST({_sql_literal(v)} AS {t}) AS c{i}"
+                    for i, (v, t) in enumerate(cases)
+                )
+            )
+            lit = spark.range(1).select(
+                *[F.lit(v).cast(t).alias(f"c{i}") for i, (v, t) in enumerate(cases)]
+            )
+            assert [f.dataType for f in text.schema] == [f.dataType for f in lit.schema]
+            got, want = text.collect()[0], lit.collect()[0]
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            if tz is None:
+                del os.environ["TZ"]
+            else:
+                os.environ["TZ"] = tz
+            time.tzset()
+        for (v, t), g, w in zip(cases, got, want):
+            assert same(g, w), (v, t, g, w)
+            assert (g is None) == (v is None), (v, t, g)
+        assert any(isinstance(g, float) and math.isnan(g) for g in got)
+
+    def test_other_types_raise(self):
+        from myzql_binlog_connector_spark.plans.lake import _sql_literal
+
+        for v in (object(), [1], {"a": 1}):
+            with pytest.raises(TypeError):
+                _sql_literal(v)
+
+    def test_awkward_string_keys_read_exactly(self, spark, table):
+        """A keyed read over string keys holding quotes, backslashes,
+        backticks, newlines and non-ASCII returns exactly the stored rows,
+        across single- and multi-file buckets."""
+        keys = self.AWKWARD + ["plain"]
+        table.merge(
+            _mk_changes(spark, [(k, 0, f"v1:{k}", 1, 1, False) for k in keys]),
+            batch_id=0,
+        )
+        table.merge(
+            _mk_changes(spark, [(k, 0, f"v2:{k}", 2, 2, False) for k in keys[::2]]),
+            batch_id=1,
+        )
+        live = {k: ("v2:" if n % 2 == 0 else "v1:") + k for n, k in enumerate(keys)}
+        probe = self.AWKWARD + ["missing"]
+        got = table.read(keys=[{"conv_id": k, "turn_idx": 0} for k in probe]).collect()
+        assert sorted((r.conv_id, r.text) for r in got) == sorted(
+            (k, live[k]) for k in self.AWKWARD
+        )
+        for k in self.AWKWARD:
+            (r,) = table.read(keys={"conv_id": k, "turn_idx": 0}).collect()
+            assert (r.conv_id, r.turn_idx, r.text) == (k, 0, live[k])

@@ -209,3 +209,36 @@ def test_big_keyed_or_large_multifile_read_keeps_its_plan(spark, tmp_path):
     for plan in plans:
         assert "Exchange hashpartitioning(conv_id" in plan and "Coalesce" not in plan, plan
     assert len(big.collect()) == 65
+
+
+def test_keyed_read_builds_in_few_py4j_round_trips(spark, tmp_path):
+    """Building a 3-key read(keys=...) over 2-file buckets, without
+    collecting it, sends at most 120 py4j commands: its literals,
+    predicate, bucket-id probe and LWW aggregate are SQL text, one
+    command each, not a Column chain of one command per column, literal
+    and operator (several hundred)."""
+    import gc
+
+    from py4j import protocol
+
+    t = _multifile_table(spark, tmp_path)
+    t.read(keys=_keys(3))  # warm-up
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.disable()
+    client.send_command = counting
+    try:
+        df = t.read(keys=_keys(3))
+    finally:
+        client.send_command = send
+        gc.enable()
+    assert len(sent) <= 120, len(sent)
+    assert {r.conv_id for r in df.collect()} == {"c0", "c1", "c2"}
