@@ -59,6 +59,7 @@ from .wire import (
     decode_timestamp2,
     parse_header,
     read_lenenc,
+    verify_crc,
 )
 
 # ---------------------------------------------------------------------------
@@ -475,29 +476,20 @@ def parse_rows_event(
     event_type: int,
     payload: memoryview,
     schema: TableSchema,
-    decoders: list | None = None,
-    rows_v2: bool | None = None,
+    decoders: list,
+    prelude: tuple[int, int, bytes, bytes],
 ) -> list[RowChange]:
     """Parse a (WRITE|UPDATE|DELETE)_ROWS event body into row changes.
 
     UPDATE events parse before+after images sequentially from the same
     buffer (event_parser.zig:1058-1066).  One event yields N rows.
-    ``rows_v2``: FDE-announced framing (see :func:`rows_prelude`).
+    ``decoders``: the table's compiled column decoders; ``prelude``: the
+    event's :func:`rows_prelude`.
     """
-    if decoders is None:
-        decoders = [compile_decoder(c) for c in schema.columns]
-    pos = 6 + 2  # table_id + flags
-    if rows_v2 if rows_v2 is not None else (event_type in ROWS_V2_TYPES):
-        extra_len = int.from_bytes(payload[pos : pos + 2], "little")
-        pos += extra_len  # includes its own 2 bytes
-    n_cols, pos = read_lenenc(payload, pos)
-    nb = (n_cols + 7) // 8
-    present1 = [i for i in range(n_cols) if payload[pos + i // 8] >> (i % 8) & 1]
-    pos += nb
-    present2 = present1
+    pos, n_cols, p1, p2 = prelude
+    present1 = present2 = _present_list(p1, n_cols)
     if event_type in UPDATE_ROWS_TYPES:
-        present2 = [i for i in range(n_cols) if payload[pos + i // 8] >> (i % 8) & 1]
-        pos += nb
+        present2 = _present_list(p2, n_cols)
 
     out: list[RowChange] = []
     append = out.append
@@ -574,7 +566,7 @@ def row_values_to_json(values: list | None) -> str | None:
 
 
 def rows_prelude(
-    event_type: int, payload: memoryview, rows_v2: bool | None = None
+    event_type: int, payload: memoryview, rows_v2: bool
 ) -> tuple[int, int, bytes, bytes]:
     """Parse the ROWS-event prelude: table_id+flags(+v2 extra), column
     count, present-column bitmap(s).  Returns (pos, n_cols, present1,
@@ -582,10 +574,10 @@ def rows_prelude(
 
     ``rows_v2``: whether the body carries the v2 extra-data section — the
     discriminator is the FORMAT_DESCRIPTION post_header_len (8 → v1,
-    10 → v2), not the event code (event_parser.zig:69-71 comment); None
-    falls back to the MySQL 5.6+ default (types 30-32/39 are v2)."""
+    10 → v2), not the event code (event_parser.zig:69-71 comment); see
+    :meth:`BinlogSession._is_v2`."""
     pos = 6 + 2
-    if rows_v2 if rows_v2 is not None else (event_type in ROWS_V2_TYPES):
+    if rows_v2:
         extra_len = int.from_bytes(payload[pos : pos + 2], "little")
         pos += extra_len  # includes its own 2 bytes
     n_cols, pos = read_lenenc(payload, pos)
@@ -666,7 +658,7 @@ class TypedBatch(_RowBatch):
     column, then ``_deleted``, ``_gtid``, ``_event_seq``,
     ``_event_row_index``, ``_file_seq`` and ``_log_pos``.  Carries the
     output's kinds and key positions for
-    :meth:`BinlogSession.process_packet_typed_vec`."""
+    :meth:`BinlogSession.process_packet_typed`."""
 
     __slots__ = ("cols", "apps", "meta_cols", "kinds", "keys", "n_payload")
 
@@ -730,21 +722,11 @@ class BinlogSession:
         self.events_seen = 0
         self.rows_emitted = 0
 
-    def process_packet_rows(
-        self,
-        blob: bytes | memoryview,
-        file_seq: int,
-    ):
-        """Per-row variant of :meth:`process_packet_events`: yields
-        ``(header, event_row_index, table_id, RowChange)`` tuples."""
-        for hdr, table_id, changes in self.process_packet_events(blob, file_seq):
-            for idx, ch in enumerate(changes, start=1):  # 1-based (main.zig:239)
-                yield hdr, idx, table_id, ch
-
     def _pre_rows(self, blob: bytes | memoryview, file_seq: int):
         """Shared header/TABLE_MAP/GTID/stop handling.  Returns ``(header,
-        event_type, payload, table_id, schema)`` for a ROWS event of a
-        cached (i.e. non-filtered) table, else None."""
+        event_type, payload, table_id, schema, prelude)`` for a ROWS event
+        of a cached (i.e. non-filtered) table, with ``prelude`` its
+        :func:`rows_prelude`; else None."""
         if self.stopped:
             return None
         mv = memoryview(blob)
@@ -756,18 +738,14 @@ class BinlogSession:
         # 4B timestamp); events we neither decode nor track state for can
         # bail before any header parse — unless a stop bound needs log_pos
         et0 = mv[5]
-        if self.verify_crc:
-            # verify BEFORE the fast-skip branch so corruption in skipped
-            # kinds (XID/QUERY/...) is still caught — the option means
-            # "every packet", not "every decoded packet"
-            import zlib
-
-            want = int.from_bytes(mv[len(mv) - CRC_LEN :], "little")
-            if (zlib.crc32(mv[1 : len(mv) - CRC_LEN]) & 0xFFFFFFFF) != want:
-                raise ValueError(
-                    f"CRC32 mismatch in packet at file_seq={file_seq} "
-                    f"(event_type={et0})"
-                )
+        # verify BEFORE the fast-skip branch so corruption in skipped kinds
+        # (XID/QUERY/...) is still caught — the option means "every
+        # packet", not "every decoded packet"
+        if self.verify_crc and not verify_crc(mv):
+            raise ValueError(
+                f"CRC32 mismatch in packet at file_seq={file_seq} "
+                f"(event_type={et0})"
+            )
         if (
             self.stop_position is None
             and et0 not in ROWS_EVENT_TYPES
@@ -878,27 +856,7 @@ class BinlogSession:
                 f"TABLE_MAP was corrupt or lost (file_seq={file_seq}, "
                 f"log_pos={hdr.log_pos})"
             )
-        return hdr, et, payload, table_id, schema
-
-    def process_packet_events(
-        self,
-        blob: bytes | memoryview,
-        file_seq: int,
-    ):
-        """Decode one framed packet; yields ``(header, table_id,
-        [RowChange])`` — one tuple per ROWS event.
-
-        The generic (per-value closure) body parse — the reference-shaped
-        implementation the vectorized paths are equality-tested against."""
-        pre = self._pre_rows(blob, file_seq)
-        if pre is None:
-            return
-        hdr, et, payload, table_id, schema = pre
-        changes = parse_rows_event(
-            et, payload, schema, self._decoders[table_id], rows_v2=self._is_v2(et)
-        )
-        self.rows_emitted += len(changes)
-        yield hdr, table_id, changes
+        return hdr, et, payload, table_id, schema, rows_prelude(et, payload, self._is_v2(et))
 
     def _is_v2(self, event_type: int) -> bool:
         return self._rows_v2.get(event_type, event_type in ROWS_V2_TYPES)
@@ -910,49 +868,30 @@ class BinlogSession:
         gtid: int,
         event_seq: int,
         out: EnvelopeBatch,
+        vec=None,
     ) -> int:
-        """Per-row envelope decode: appends change rows columnar into
-        ``out`` through the generic parser.  Returns the number of rows
-        appended.  The reference the vectorized path is tested against."""
-        pre = self._pre_rows(blob, file_seq)
-        if pre is None:
-            return 0
-        return self._columnar_after_pre(pre, file_seq, gtid, event_seq, out)
+        """Decode one framed packet into the change-event envelope: appends
+        its change rows columnar into ``out`` and returns how many.
 
-    def process_packet_columnar_vec(
-        self,
-        blob: bytes | memoryview,
-        file_seq: int,
-        gtid: int,
-        event_seq: int,
-        out: EnvelopeBatch,
-        vec,
-    ) -> int:
-        """Like :meth:`process_packet_columnar`, but ROWS events with a
-        vectorized envelope plan defer into ``vec`` (see
-        :meth:`_defer_vec`); returns rows appended to ``out`` (0 for
-        deferred events)."""
+        ``vec=None`` is the per-row reference: every ROWS event parses
+        through :func:`parse_rows_event`, and the vectorized path is
+        tested against it.  With a :class:`rowvec.VecCollector`, events
+        that have a vectorized envelope plan defer into it (see
+        :meth:`_defer_vec`) and return 0; ``vec.flush()`` yields them."""
         pre = self._pre_rows(blob, file_seq)
-        if pre is None or self._defer_vec(pre, file_seq, gtid, event_seq, vec):
+        if pre is None or (
+            vec is not None and self._defer_vec(pre, file_seq, gtid, event_seq, vec)
+        ):
             return 0
-        return self._columnar_after_pre(pre, file_seq, gtid, event_seq, out)
-
-    def _columnar_after_pre(self, pre, file_seq, gtid, event_seq, out) -> int:
-        hdr, et, payload, table_id, schema = pre
+        hdr, et, payload, table_id, schema, prelude = pre
         # the whole event parses and renders before anything is appended,
         # so a corrupt body leaves ``out`` untouched
-        changes = parse_rows_event(
-            et, payload, schema, self._decoders[table_id], rows_v2=self._is_v2(et)
-        )
+        changes = parse_rows_event(et, payload, schema, self._decoders[table_id], prelude)
         before = [row_values_to_json(ch.before) for ch in changes]
         after = [row_values_to_json(ch.after) for ch in changes]
         out.before_values.extend(before)
         out.after_values.extend(after)
         k = len(changes)
-        self._emit_env_meta(out, hdr, schema, table_id, file_seq, gtid, event_seq, _dml_for(et), k)
-        return k
-
-    def _emit_env_meta(self, out, hdr, schema, table_id, file_seq, gtid, event_seq, dml, k):
         g, es = self.effective_ids(gtid, event_seq)
         out.timestamp.extend([hdr.timestamp] * k)
         out.server_id.extend([hdr.server_id] * k)
@@ -960,12 +899,13 @@ class BinlogSession:
         out.event_row_index.extend(range(1, k + 1))
         out.database.extend([schema.database] * k)
         out.table_name.extend([schema.table] * k)
-        out.dml_type.extend([dml] * k)
+        out.dml_type.extend([_dml_for(et)] * k)
         out.gtid.extend([g] * k)
         out.event_seq.extend([es] * k)
         out.file_seq.extend([file_seq] * k)
         out.payload_schema.extend([self._schema_desc[table_id]] * k)
         self.rows_emitted += k
+        return k
 
     def process_packet_typed(
         self,
@@ -973,39 +913,11 @@ class BinlogSession:
         file_seq: int,
         gtid: int,
         event_seq: int,
-        apps: tuple,
-        meta_cols: list,
-        kinds: tuple,
-        key_positions: tuple,
-        n_payload: int,
+        out: TypedBatch,
+        vec=None,
     ) -> int:
-        """Per-row typed decode: appends payload values through ``apps``
-        (one ``list.append`` per payload column) and ``_deleted`` through
-        ``apps[n_payload]``; extends the remaining meta columns
-        (gtid/event_seq/row_index/file_seq/log_pos) per event.  Returns rows
-        appended.  The reference the vectorized path is tested against."""
-        pre = self._pre_rows(blob, file_seq)
-        if pre is None:
-            return 0
-        return self._typed_after_pre(
-            pre, file_seq, gtid, event_seq, apps, meta_cols,
-            kinds, key_positions, n_payload,
-        )
-
-    def _typed_after_pre(
-        self,
-        pre,
-        file_seq: int,
-        gtid: int,
-        event_seq: int,
-        apps: tuple,
-        meta_cols: list,
-        kinds: tuple,
-        key_positions: tuple,
-        n_payload: int,
-    ) -> int:
-        """Per-row typed decode of a classified ROWS event (shared by the
-        plain and vec-deferring entry points).
+        """Decode one framed packet into typed change rows: appends them
+        into ``out`` and returns how many.
 
         INSERT and UPDATE emit the after image, DELETE only the key
         positions of the before image (``_deleted`` set) — matching
@@ -1013,16 +925,26 @@ class BinlogSession:
         first emits a tombstone at the old key: without it the old-key row
         would stay live forever.  A key absent from either image counts as
         unchanged.  Non-string values in ``'s'`` columns render as ``str``
-        (bytes as ``0x…`` hex, like the envelope)."""
-        hdr, et, payload, table_id, schema = pre
-        rows_v2 = self._is_v2(et)
-        changes = parse_rows_event(et, payload, schema, self._decoders[table_id], rows_v2)
+        (bytes as ``0x…`` hex, like the envelope).
+
+        ``vec=None`` is the per-row reference: every ROWS event parses
+        through :func:`parse_rows_event`, and the vectorized path is
+        tested against it.  With a :class:`rowvec.VecCollector`, events
+        that have a vectorized typed plan defer into it (see
+        :meth:`_defer_vec`) and return 0; ``vec.flush()`` yields them."""
+        pre = self._pre_rows(blob, file_seq)
+        if pre is None or (
+            vec is not None and self._defer_vec(pre, file_seq, gtid, event_seq, vec)
+        ):
+            return 0
+        hdr, et, payload, table_id, schema, prelude = pre
+        changes = parse_rows_event(et, payload, schema, self._decoders[table_id], prelude)
         dml = _dml_for(et)
-        keys = key_positions
+        keys = out.keys
         if dml == DML_UPDATE:
-            _, n_cols, p1, p2 = rows_prelude(et, payload, rows_v2)
-            both = set(_present_list(p1, n_cols)).intersection(_present_list(p2, n_cols))
-            keys = [i for i in key_positions if i in both]
+            _, n_cols, p1, p2 = prelude
+            both = bytes(a & b for a, b in zip(p1, p2))  # present in both images
+            keys = [i for i in keys if i < n_cols and both[i >> 3] >> (i & 7) & 1]
         images = []  # (values, deleted) per output row
         for ch in changes:
             if dml == DML_INSERT:
@@ -1033,6 +955,7 @@ class BinlogSession:
                 if any(ch.before[i] != ch.after[i] for i in keys):
                     images.append((_key_image(ch.before, keys), True))
                 images.append((ch.after, False))
+        apps, kinds, n_payload = out.apps, out.kinds, out.n_payload
         for values, deleted in images:
             m = len(values)
             for i in range(n_payload):
@@ -1046,6 +969,7 @@ class BinlogSession:
             apps[n_payload](deleted)
         k = len(images)
         g, es = self.effective_ids(gtid, event_seq)
+        meta_cols = out.meta_cols
         meta_cols[0].extend([g] * k)
         meta_cols[1].extend([es] * k)
         meta_cols[2].extend(range(1, k + 1))
@@ -1053,26 +977,6 @@ class BinlogSession:
         meta_cols[4].extend([hdr.log_pos] * k)
         self.rows_emitted += k
         return k
-
-    def process_packet_typed_vec(
-        self,
-        blob: bytes | memoryview,
-        file_seq: int,
-        gtid: int,
-        event_seq: int,
-        out: TypedBatch,
-        vec,
-    ) -> int:
-        """Like :meth:`process_packet_typed`, but ROWS events with a
-        vectorized typed plan defer into ``vec`` (see :meth:`_defer_vec`);
-        returns rows appended to ``out`` (0 for deferred events)."""
-        pre = self._pre_rows(blob, file_seq)
-        if pre is None or self._defer_vec(pre, file_seq, gtid, event_seq, vec):
-            return 0
-        return self._typed_after_pre(
-            pre, file_seq, gtid, event_seq, out.apps, out.meta_cols,
-            out.kinds, out.keys, out.n_payload,
-        )
 
     def _defer_vec(self, pre, file_seq: int, gtid: int, event_seq: int, vec) -> bool:
         """Defer a classified ROWS event into ``vec`` (a
@@ -1082,10 +986,9 @@ class BinlogSession:
         safe because classification runs sequentially: TABLE_MAP/GTID
         state and the effective ordering ids are captured per event before
         decode is postponed to ``vec.flush()``."""
-        hdr, et, payload, table_id, schema = pre
+        hdr, et, payload, table_id, schema, (pos, n_cols, p1, p2) = pre
         if et == EventType.PARTIAL_UPDATE_ROWS:
             return False
-        pos, n_cols, p1, p2 = rows_prelude(et, payload, self._is_v2(et))
         desc = self._schema_desc[table_id]
         key, plan = vec.plan_for(desc, _dml_for(et), schema, n_cols, p1, p2)
         if plan is None:
@@ -1104,30 +1007,3 @@ class BinlogSession:
         if self.current_gtid is not None:
             return self.current_gtid, self.current_event_seq
         return gtid, event_seq
-
-    def process_packet(
-        self,
-        blob: bytes | memoryview,
-        file_seq: int,
-        gtid: int = 0,
-        event_seq: int = 0,
-    ):
-        """Decode one framed packet; yields envelope dicts for row changes."""
-        for hdr, idx, table_id, ch in self.process_packet_rows(blob, file_seq):
-            gtid, event_seq = self.effective_ids(gtid, event_seq)
-            schema = self.table_maps[table_id]
-            yield {
-                "timestamp": hdr.timestamp,
-                "server_id": hdr.server_id,
-                "log_pos": hdr.log_pos,
-                "event_row_index": idx,
-                "database": schema.database,
-                "table_name": schema.table,
-                "dml_type": ch.dml_type,
-                "before_values": row_values_to_json(ch.before),
-                "after_values": row_values_to_json(ch.after),
-                "gtid": gtid,
-                "event_seq": event_seq,
-                "file_seq": file_seq,
-                "payload_schema": self._schema_desc[table_id],
-            }

@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 import struct
 
-from .mysql_decimal import decode_decimal, encode_decimal, storage_size
+from .mysql_decimal import decode_decimal, storage_size
 from .wire import read_lenenc, write_lenenc
 
 # jsonb type codes (public MySQL format)
@@ -276,11 +276,6 @@ def _encode_array(arr: list) -> bytes:
             out += bytes([jtype]) + voff.to_bytes(2, "little")
     out += body
     return bytes(out)
-
-
-def encode_json_opaque_decimal(value: str, precision: int, scale: int) -> bytes:
-    payload = bytes([precision, scale]) + encode_decimal(value, precision, scale)
-    return bytes([J_OPAQUE, 246]) + _write_jvarlen(len(payload)) + payload
 
 
 # ---------------------------------------------------------------------------

@@ -483,14 +483,6 @@ def _null_array(out_kind, n):
     return pa.nulls(n, t)
 
 
-def _scatter_num(src_vals, src_valid, dest, total):
-    vals = np.zeros(total, src_vals.dtype)
-    valid = np.zeros(total, bool)
-    vals[dest] = src_vals
-    valid[dest] = src_valid
-    return vals, valid
-
-
 # ---------------------------------------------------------------------------
 # typed assembly: the decode_typed_from_files / apply_files fast path
 # ---------------------------------------------------------------------------

@@ -83,20 +83,12 @@ def frame_packet(header_and_payload: bytes) -> bytes:
     return b"\x00" + header_and_payload + crc.to_bytes(4, "little")
 
 
-def unframe_packet(blob: bytes | memoryview) -> memoryview:
-    """Strip the leading OK byte and trailing CRC, verifying both."""
-    mv = memoryview(blob)
-    if mv[0] != 0x00:
-        raise ValueError(f"packet does not start with OK byte: {mv[0]:#x}")
-    body = mv[1 : len(mv) - CRC_LEN]
-    return body
-
-
 def verify_crc(blob: bytes | memoryview) -> bool:
+    """Whether a framed packet's trailing CRC32 matches its event bytes
+    (everything between the OK byte and the CRC), hashed in place."""
     mv = memoryview(blob)
-    body = bytes(mv[1 : len(mv) - CRC_LEN])
     want = int.from_bytes(mv[len(mv) - CRC_LEN :], "little")
-    return (zlib.crc32(body) & 0xFFFFFFFF) == want
+    return (zlib.crc32(mv[1 : len(mv) - CRC_LEN]) & 0xFFFFFFFF) == want
 
 
 # ---------------------------------------------------------------------------
@@ -117,10 +109,6 @@ _FRAC_UNIT = [0, 10_000, 10_000, 100, 100, 1, 1]  # us per stored unit, fsp 0..6
 
 def frac_bytes(fsp: int) -> int:
     return _FRAC_BYTES[fsp]
-
-
-def frac_unit_us(fsp: int) -> int:
-    return _FRAC_UNIT[fsp]
 
 
 def _encode_frac(us: int, fsp: int) -> int:

@@ -205,8 +205,10 @@ def _decode_driver(new_session, new_out, new_vec, process, schema, dead_names,
     Only the pieces handed in differ by output: ``new_out`` makes the row
     builder (:class:`EnvelopeBatch` or :class:`TypedBatch`), ``new_vec``
     the :class:`rowvec.VecCollector` with that output's plan builder and
-    assembler, ``process`` is the session's ``process_packet_*_vec`` entry
-    point, and ``dead_names``/``dead_fixed`` place the dead-letter record
+    assembler, ``process`` is the session's entry point for that output
+    (:meth:`BinlogSession.process_packet_columnar` or
+    :meth:`BinlogSession.process_packet_typed`, always called with the
+    collector), and ``dead_names``/``dead_fixed`` place the dead-letter record
     (see :func:`_dead_batch`).  Input batches carry ``file_seq``, ``gtid``,
     ``event_seq`` and ``event_blob``.
 
@@ -299,7 +301,7 @@ def make_decoder(table_filter=None, stop_position=None, out_batch_rows: int = 81
         new_vec=lambda: VecCollector(
             build_env_plan, partial(assemble_envelope, arrow_schema=_ARROW_ENVELOPE)
         ),
-        process=BinlogSession.process_packet_columnar_vec,
+        process=BinlogSession.process_packet_columnar,
         schema=_ARROW_ENVELOPE,
         dead_names=("file_seq", "gtid", "event_seq", "log_pos", "after_values"),
         dead_fixed={"timestamp": 0, "server_id": 0, "event_row_index": 1,
@@ -416,7 +418,7 @@ def make_typed_decoder(
             partial(build_plan, kinds=kinds_t, key_positions=keys_t, n_payload=n_payload),
             assemble,
         ),
-        process=BinlogSession.process_packet_typed_vec,
+        process=BinlogSession.process_packet_typed,
         schema=out_schema,
         dead_names=("_file_seq", "_gtid", "_event_seq", "_log_pos", "_corrupt"),
         dead_fixed={"_deleted": False, "_event_row_index": 0},

@@ -18,8 +18,8 @@ from capture_stub import (  # noqa: E402
     packets_to_segments,
 )
 
-from myzql_binlog_connector_spark.binlog.decoder import BinlogSession  # noqa: E402
 from myzql_binlog_connector_spark.genlog import generate_stream  # noqa: E402
+from tests.event_batches import envelope_rows  # noqa: E402
 
 
 def _wire_frame(payload: bytes, seq: int) -> bytes:
@@ -75,24 +75,24 @@ class TestRoundTrip:
         assert os.path.exists(os.path.join(out_dir, "_schemas.json"))
 
         # decode the captured store
-        cap_rows = []
-        sess = BinlogSession()
-        for p in paths:
-            t = pq.read_table(p)
-            for fs, g, es, blob in zip(
+        tables = [pq.read_table(p) for p in paths]
+        cap_rows = envelope_rows(
+            packet
+            for t in tables
+            for packet in zip(
+                t.column("event_blob").to_pylist(),
                 t.column("file_seq").to_pylist(),
                 t.column("gtid").to_pylist(),
                 t.column("event_seq").to_pylist(),
-                t.column("event_blob").to_pylist(),
-            ):
-                cap_rows.extend(sess.process_packet(blob, fs, gtid=g, event_seq=es))
+            )
+        )
 
         # decode the generator's own segments directly
-        ref_rows = []
-        sess2 = BinlogSession()
-        for fs, rows in stream.segments:
-            for _off, g, es, blob in rows:
-                ref_rows.extend(sess2.process_packet(blob, fs, gtid=g, event_seq=es))
+        ref_rows = envelope_rows(
+            (blob, fs, g, es)
+            for fs, rows in stream.segments
+            for _off, g, es, blob in rows
+        )
 
         assert len(cap_rows) == len(ref_rows)
         for a, b in zip(cap_rows, ref_rows):

@@ -225,7 +225,6 @@ class TestOddFspFraction:
         TIMESTAMP2 column to the same (correct) string."""
         import json as _json
 
-        from myzql_binlog_connector_spark.binlog.decoder import BinlogSession
         from myzql_binlog_connector_spark.binlog.encoder import (
             EventWriter,
             TableSchema,
@@ -234,6 +233,7 @@ class TestOddFspFraction:
             varchar,
         )
         from test_quarantine import _decode_inprocess
+        from tests.event_batches import envelope_rows
 
         schema = TableSchema(
             database="chat",
@@ -249,11 +249,9 @@ class TestOddFspFraction:
         w.table_map(9, schema)
         w.write_rows(9, schema, [(f"k{i}", i, ts_us) for i in range(8)])
 
-        sess = BinlogSession()
         generic = [
             rec["after_values"]
-            for _o, pkt in w.events
-            for rec in sess.process_packet(pkt, file_seq=1)
+            for rec in envelope_rows((pkt, 1, 0, 0) for _o, pkt in w.events)
         ]
         vec = [
             av

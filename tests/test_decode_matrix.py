@@ -13,13 +13,13 @@ import json
 import pytest
 
 from myzql_binlog_connector_spark.binlog.constants import ColumnType
-from myzql_binlog_connector_spark.binlog.decoder import BinlogSession
 from myzql_binlog_connector_spark.binlog.encoder import (
     ColumnSpec,
     EventWriter,
     TableSchema,
 )
 from myzql_binlog_connector_spark.binlog.mysql_json import encode_json_value
+from tests.event_batches import envelope_rows
 
 TORTURE = TableSchema(
     database="t",
@@ -102,10 +102,7 @@ EXPECT = {
 
 
 def _decode_rows(writer: EventWriter, n_expected: int):
-    sess = BinlogSession()
-    out = []
-    for _, pkt in writer.events:
-        out.extend(sess.process_packet(pkt, file_seq=1))
+    out = envelope_rows((pkt, 1, 0, 0) for _, pkt in writer.events)
     assert len(out) == n_expected
     return out
 
@@ -179,10 +176,8 @@ class TestSessionSemantics:
         w = EventWriter()
         w.format_description()
         w.write_rows(9, TORTURE, [ROW])  # no table_map for id 9
-        sess = BinlogSession()
         with pytest.raises(ValueError, match="unmapped table_id"):
-            for _, pkt in w.events:
-                list(sess.process_packet(pkt, file_seq=1))
+            envelope_rows((pkt, 1, 0, 0) for _, pkt in w.events)
 
     def test_last_table_map_wins(self):
         narrow = TableSchema("t", "torture", TORTURE.columns[:2])

@@ -6,10 +6,7 @@ from __future__ import annotations
 import glob
 import json
 
-from myzql_binlog_connector_spark.binlog.decoder import (
-    BinlogSession,
-    parse_gtid,
-)
+from myzql_binlog_connector_spark.binlog.decoder import parse_gtid
 from myzql_binlog_connector_spark.binlog.encoder import (
     EventWriter,
     TRANSCRIPTS_SCHEMA,
@@ -17,6 +14,7 @@ from myzql_binlog_connector_spark.binlog.encoder import (
 from myzql_binlog_connector_spark.genlog import GeneratedStream, write_segments_parquet
 from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
 from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+from tests.event_batches import envelope_rows
 
 
 def _stream_with_gtids():
@@ -41,10 +39,7 @@ def _stream_with_gtids():
 class TestGtid:
     def test_parse_gtid_event(self):
         w = _stream_with_gtids()
-        sess = BinlogSession()
-        rows = []
-        for _off, pkt in w.events:
-            rows.extend(sess.process_packet(pkt, file_seq=1, gtid=0, event_seq=0))
+        rows = envelope_rows((pkt, 1, 0, 0) for _off, pkt in w.events)
         assert [r["gtid"] for r in rows] == [100, 200]
         assert rows[0]["after_values"] and json.loads(rows[0]["after_values"])["c3"] == "first"
 
@@ -59,10 +54,7 @@ class TestGtid:
         w.format_description()
         w.table_map(5, TRANSCRIPTS_SCHEMA)
         w.write_rows(5, TRANSCRIPTS_SCHEMA, [("c", 0, "user", "x", None, 1_700_000_000_000_000)])
-        sess = BinlogSession()
-        rows = []
-        for _off, pkt in w.events:
-            rows.extend(sess.process_packet(pkt, file_seq=1, gtid=77, event_seq=9))
+        rows = envelope_rows((pkt, 1, 77, 9) for _off, pkt in w.events)
         assert rows[0]["gtid"] == 77 and rows[0]["event_seq"] == 9
 
     def test_lww_uses_in_band_gtid_through_apply(self, spark, tmp_path):

@@ -7,7 +7,7 @@ import uuid
 
 import pytest
 
-from myzql_binlog_connector_spark.binlog.decoder import BinlogSession
+from myzql_binlog_connector_spark.binlog.decoder import BinlogSession, EnvelopeBatch
 from myzql_binlog_connector_spark.binlog.encoder import (
     EventWriter,
     TRANSCRIPTS_SCHEMA,
@@ -60,9 +60,9 @@ class TestSessionPreviousGtids:
                      [("c", 0, "user", "x", None, 1_700_000_000_000_000)])
         w.previous_gtids(GtidSet.from_text(f"{U2}:1-7"))
         sess = BinlogSession()
-        rows = []
+        rows = EnvelopeBatch()
         for _, pkt in w.events:
-            rows.extend(sess.process_packet(pkt, file_seq=1))
+            sess.process_packet_columnar(pkt, 1, 0, 0, rows)
         assert len(rows) == 1  # gtid events don't disturb row decode
         assert sess.previous_gtids == GtidSet.from_text(f"{U1}:1-100,{U2}:1-7")
 

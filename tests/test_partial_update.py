@@ -9,13 +9,14 @@ from __future__ import annotations
 import json
 
 from myzql_binlog_connector_spark.binlog.constants import ColumnType
-from myzql_binlog_connector_spark.binlog.decoder import BinlogSession, EnvelopeBatch
+from myzql_binlog_connector_spark.binlog.decoder import EnvelopeBatch
 from myzql_binlog_connector_spark.binlog.encoder import (
     ColumnSpec,
     EventWriter,
     PartialJson,
     TableSchema,
 )
+from tests.event_batches import env_collector, envelope_rows, typed_rows
 
 SCHEMA = TableSchema(
     database="t",
@@ -31,11 +32,7 @@ SCHEMA = TableSchema(
 
 
 def _decode(w: EventWriter):
-    sess = BinlogSession()
-    out = []
-    for _, pkt in w.events:
-        out.extend(sess.process_packet(pkt, file_seq=1))
-    return out
+    return envelope_rows((pkt, 1, 0, 0) for _, pkt in w.events)
 
 
 def _writer():
@@ -111,31 +108,18 @@ class TestPartialUpdate:
             ((7, {"m": 3}, None, None), (7, {"m": 4}, "y", PartialJson([(1, "$.o", "v")]))),
         ]
         w.partial_update_rows(11, SCHEMA, pairs)
-        packets = [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+        packets = [(pkt, 1, i + 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
 
-        generic = []
-        s1 = BinlogSession()
-        for fs, g, es, pkt in packets:
-            generic.extend(s1.process_packet(pkt, file_seq=fs, gtid=g, event_seq=es))
-
-        s2 = BinlogSession()
-        out = EnvelopeBatch()
-        for fs, g, es, pkt in packets:
-            s2.process_packet_columnar(pkt, fs, g, es, out)
+        generic = envelope_rows(packets)
+        out = envelope_rows(packets, vec=env_collector())
         assert len(out) == len(generic)
-        cols = out.columns()
-        for ci, name in enumerate(EnvelopeBatch.__slots__):
+        for name in EnvelopeBatch.__slots__:
             for r, old in enumerate(generic):
-                assert old[name] == cols[ci][r], (name, r)
+                assert old[name] == out[r][name], (name, r)
 
         # typed path: after-image values with string coercion
-        s3 = BinlogSession()
-        tcols = [[] for _ in range(4 + 1 + 5)]
-        apps = tuple(c.append for c in tcols[:5])
-        meta = tcols[5:]
         kinds = ("i", "s", "s", "s")
-        for fs, g, es, pkt in packets:
-            s3.process_packet_typed(pkt, fs, g, es, apps, meta, kinds, (0,), 4)
+        tcols = typed_rows(packets, kinds, (0,), 4)
         assert tcols[0] == [6, 7]
         assert json.loads(tcols[1][0]) == {"$partial": [{"op": "replace", "path": "$.m", "value": 10}]}
         assert tcols[4] == [False, False]  # _deleted

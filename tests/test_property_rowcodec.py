@@ -11,7 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from myzql_binlog_connector_spark.binlog.constants import ColumnType
-from myzql_binlog_connector_spark.binlog.decoder import BinlogSession, EnvelopeBatch
+from myzql_binlog_connector_spark.binlog.decoder import EnvelopeBatch
 from myzql_binlog_connector_spark.binlog.encoder import (
     ColumnSpec,
     EventWriter,
@@ -91,7 +91,7 @@ def _packets(schema, rows, dml):
         w.delete_rows(77, schema, rows)
     else:
         w.update_rows(77, schema, [(rows[i - 1], r) for i, r in enumerate(rows)])
-    return [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+    return [(pkt, 1, i + 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
 
 
 @settings(max_examples=120, deadline=None)
@@ -104,27 +104,16 @@ def test_vectorized_envelope_matches_generic(case):
     groups by event shape)."""
     from collections import Counter
 
-    from tests.event_batches import env_collector
+    from tests.event_batches import env_collector, envelope_rows
 
     packets = _packets(*case)
 
-    s1 = BinlogSession()
-    generic = []
-    for fs, g, es, pkt in packets:
-        generic.extend(s1.process_packet(pkt, file_seq=fs, gtid=g, event_seq=es))
     names = EnvelopeBatch.__slots__
-    want = Counter(tuple(rec[n] for n in names) for rec in generic)
-
-    s2 = BinlogSession()
-    out = EnvelopeBatch()
-    vec = env_collector()
-    got = Counter()
-    for fs, g, es, pkt in packets:
-        s2.process_packet_columnar_vec(pkt, fs, g, es, out, vec)
-    got.update(zip(*out.columns()))
-    for rb in vec.flush():
-        t = rb.to_pydict()
-        got.update(zip(*[t[n] for n in names]))
+    want = Counter(tuple(rec[n] for n in names) for rec in envelope_rows(packets))
+    got = Counter(
+        tuple(rec[n] for n in names)
+        for rec in envelope_rows(packets, vec=env_collector())
+    )
     assert got == want
 
 
@@ -132,8 +121,9 @@ def test_vectorized_envelope_matches_generic(case):
 @given(table_and_rows())
 def test_vectorized_typed_matches_generic(case):
     """The typed twin: the typed decoder's ``VecCollector`` vs
-    ``process_packet_typed`` on the same schemas, including the tombstones
-    of key-changing UPDATEs.  Multiset parity, like the envelope test."""
+    ``process_packet_typed``'s per-row reference on the same schemas,
+    including the tombstones of key-changing UPDATEs.  Multiset parity,
+    like the envelope test."""
     import json
     from collections import Counter
 
@@ -141,7 +131,7 @@ def test_vectorized_typed_matches_generic(case):
         _payload_kinds,
         make_typed_decoder,
     )
-    from tests.event_batches import event_batch
+    from tests.event_batches import event_batch, typed_rows
 
     schema = case[0]
     packets = _packets(*case)
@@ -150,16 +140,11 @@ def test_vectorized_typed_matches_generic(case):
     kinds = tuple(_payload_kinds([desc]))
     keys = tuple(range(min(2, n)))
 
-    s1 = BinlogSession()
-    cols = [[] for _ in range(n + 6)]
-    apps = tuple(c.append for c in cols[: n + 1])
-    for fs, g, es, pkt in packets:
-        s1.process_packet_typed(pkt, fs, g, es, apps, cols[n + 1 :], kinds, keys, n)
-    want = Counter(zip(*cols))
+    want = Counter(zip(*typed_rows(packets, kinds, keys, n)))
 
     decode_partition, arrow_schema = make_typed_decoder(schema.column_names, list(kinds), keys)
     got = Counter()
-    batch = event_batch((pkt, fs, g, es) for fs, g, es, pkt in packets)
+    batch = event_batch(packets)
     for rb in decode_partition(iter([batch])):
         t = rb.to_pydict()
         got.update(zip(*[t[f.name] for f in arrow_schema]))

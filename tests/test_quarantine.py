@@ -335,22 +335,26 @@ class TestRowImageOverrun:
     slices clamp, so without the check the value decodes silently short."""
 
     def test_generic_parser_raises(self):
-        from myzql_binlog_connector_spark.binlog.decoder import BinlogSession
+        from myzql_binlog_connector_spark.binlog.decoder import (
+            BinlogSession,
+            EnvelopeBatch,
+            TypedBatch,
+        )
 
         packets = [pkt for _off, pkt in _overrun_packets()]
         sess = BinlogSession()
+        out = EnvelopeBatch()
         for pkt in packets[:3]:
-            list(sess.process_packet_events(pkt, 1))
+            sess.process_packet_columnar(pkt, 1, 1, 1, out)
         with pytest.raises(ValueError, match="overran event body"):
-            list(sess.process_packet_events(packets[3], 1))
+            sess.process_packet_columnar(packets[3], 1, 1, 1, out)
 
         sess = BinlogSession()
-        cols = [[] for _ in range(4 + 6)]
-        typed = (tuple(c.append for c in cols[:5]), cols[5:], ("s", "i", "s", "s"), (0, 1), 4)
+        typed = TypedBatch(("s", "i", "s", "s"), (0, 1), 4)
         for pkt in packets[:3]:
-            sess.process_packet_typed(pkt, 1, 1, 1, *typed)
+            sess.process_packet_typed(pkt, 1, 1, 1, typed)
         with pytest.raises(ValueError, match="overran event body"):
-            sess.process_packet_typed(packets[3], 1, 1, 1, *typed)
+            sess.process_packet_typed(packets[3], 1, 1, 1, typed)
 
     def test_quarantine_dead_letters_only_the_overrun_event(self):
         batches = _decode_inprocess(_overrun_packets())

@@ -1,9 +1,9 @@
-"""Per-row session entry points: the columnar envelope and typed decoders
-(``process_packet_columnar`` / ``process_packet_typed``) vs the dict-per-row
-``process_packet`` over the full type matrix, nulls, updates, and schema
+"""The session's two entry points, ``process_packet_columnar`` (envelope)
+and ``process_packet_typed``: the per-row reference (``vec=None``) vs the
+vectorized collector over the full type matrix, nulls, updates, and schema
 evolution, plus the typed path's tombstones, v1 framing, CRC checks, empty
-present bitmaps and zero-copy blob views.  All of them parse through the
-generic parser (event_parser.zig:870-1039)."""
+present bitmaps and zero-copy blob views.  The per-row reference parses
+through the generic parser (event_parser.zig:870-1039)."""
 
 from __future__ import annotations
 
@@ -15,34 +15,23 @@ from myzql_binlog_connector_spark.binlog.decoder import (
 )
 from myzql_binlog_connector_spark.binlog.encoder import EventWriter, TRANSCRIPTS_SCHEMA
 from myzql_binlog_connector_spark.genlog import generate_ops, encode_stream
+from tests.event_batches import (
+    env_collector,
+    envelope_rows,
+    typed_collector,
+    typed_rows,
+)
 
 from test_decode_matrix import TORTURE, ROW
 
 
-def _envelope_dicts(packets):
-    sess = BinlogSession()
-    out = []
-    for fs, g, es, pkt in packets:
-        out.extend(sess.process_packet(pkt, file_seq=fs, gtid=g, event_seq=es))
-    return out
-
-
-def _envelope_columnar(packets):
-    sess = BinlogSession()
-    out = EnvelopeBatch()
-    for fs, g, es, pkt in packets:
-        sess.process_packet_columnar(pkt, fs, g, es, out)
-    return out
-
-
 def _assert_env_parity(packets):
-    olds = _envelope_dicts(packets)
-    out = _envelope_columnar(packets)
-    assert len(olds) == len(out)
-    cols = out.columns()
-    for ci, name in enumerate(EnvelopeBatch.__slots__):
-        for r, old in enumerate(olds):
-            assert old[name] == cols[ci][r], (name, r, old[name], cols[ci][r])
+    olds = envelope_rows(packets)
+    news = envelope_rows(packets, vec=env_collector())
+    assert len(olds) == len(news)
+    for name in EnvelopeBatch.__slots__:
+        for r, (old, new) in enumerate(zip(olds, news)):
+            assert old[name] == new[name], (name, r, old[name], new[name])
 
 
 def _torture_packets(rows_builder):
@@ -50,7 +39,7 @@ def _torture_packets(rows_builder):
     w.format_description()
     w.table_map(9, TORTURE)
     rows_builder(w)
-    return [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+    return [(pkt, 1, i + 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
 
 
 class TestEnvelopeParity:
@@ -83,7 +72,7 @@ class TestEnvelopeParity:
         ops = generate_ops(seed=7, n_convs=60)
         stream = encode_stream(ops, n_segments=3, seed=7, evolve_at=0.5)
         packets = [
-            (fs, g, es, blob)
+            (blob, fs, g, es)
             for fs, rows in stream.segments
             for (_off, g, es, blob) in rows
         ]
@@ -94,28 +83,21 @@ class TestTypedParser:
     KINDS = ("s", "i", "s", "s", "s", "s")
     NAMES = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
-    def _typed_rows(self, packets, n_payload=6, kinds=None, keys=(0, 1)):
-        sess = BinlogSession()
-        cols = [[] for _ in range(n_payload + 6)]
-        apps = tuple(c.append for c in cols[: n_payload + 1])
-        meta = cols[n_payload + 1 :]
-        for fs, g, es, pkt in packets:
-            sess.process_packet_typed(
-                pkt, fs, g, es, apps, meta, kinds or self.KINDS, keys, n_payload
-            )
-        return cols
+    def _typed_rows(self, packets, vec=None):
+        return typed_rows(packets, self.KINDS, (0, 1), 6, vec)
 
     def test_matches_envelope_projection(self):
         ops = generate_ops(seed=11, n_convs=50)
         stream = encode_stream(ops, n_segments=2, seed=11)
         packets = [
-            (fs, g, es, blob)
+            (blob, fs, g, es)
             for fs, rows in stream.segments
             for (_off, g, es, blob) in rows
         ]
-        env = _envelope_dicts(packets)
+        env = envelope_rows(packets)
         cols = self._typed_rows(packets)
         assert len(cols[0]) == len(env)
+        assert self._typed_rows(packets, typed_collector(self.KINDS, (0, 1), 6)) == cols
         for r, rec in enumerate(env):
             img = json.loads(
                 rec["after_values"]
@@ -139,7 +121,7 @@ class TestTypedParser:
         before = ("conv-a", 1, "user", "hello", None, 1_700_000_000_000_000)
         after = ("conv-b", 1, "user", "hello", None, 1_700_000_000_000_000)
         w.update_rows(5, TRANSCRIPTS_SCHEMA, [(before, after)])
-        packets = [(1, 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+        packets = [(pkt, 1, 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
         cols = self._typed_rows(packets)
         # tombstone for the old key first, then the upsert at the new key
         assert cols[0] == ["conv-a", "conv-b"]
@@ -155,7 +137,7 @@ class TestTypedParser:
         before = ("conv-a", 1, "user", "hello", None, 1_700_000_000_000_000)
         after = ("conv-a", 1, "user", "edited", None, 1_700_000_000_500_000)
         w.update_rows(5, TRANSCRIPTS_SCHEMA, [(before, after)])
-        packets = [(1, 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+        packets = [(pkt, 1, 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
         cols = self._typed_rows(packets)
         assert cols[0] == ["conv-a"]
         assert cols[3] == ["edited"]
@@ -183,22 +165,18 @@ class TestRowsV1Framing:
         w.write_rows(5, TRANSCRIPTS_SCHEMA, rows)
         w.update_rows(5, TRANSCRIPTS_SCHEMA, [(rows[0], rows[1])])
         w.delete_rows(5, TRANSCRIPTS_SCHEMA, [rows[2]])
-        return [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
+        return [(pkt, 1, i + 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
 
     def test_v1_equals_v2_generic_and_columnar(self):
         outs = {}
         for v2 in (True, False):
             packets = self._stream(v2)
-            outs[(v2, "generic")] = _envelope_dicts(packets)
-            cb = _envelope_columnar(packets)
-            outs[(v2, "columnar")] = [
-                {n: cb.columns()[ci][r] for ci, n in enumerate(EnvelopeBatch.__slots__)}
-                for r in range(len(cb))
-            ]
+            outs[(v2, "per_row")] = envelope_rows(packets)
+            outs[(v2, "vec")] = envelope_rows(packets, vec=env_collector())
         # payload-visible fields identical across framings and paths
         keys = ("database", "table_name", "dml_type", "before_values",
                 "after_values", "event_row_index")
-        base = [{k: r[k] for k in keys} for r in outs[(True, "generic")]]
+        base = [{k: r[k] for k in keys} for r in outs[(True, "per_row")]]
         for variant in outs.values():
             assert [{k: r[k] for k in keys} for r in variant] == base
         assert len(base) == 7  # 5 inserts + 1 update + 1 delete
@@ -217,11 +195,11 @@ class TestCrcVerification:
         bad[25] ^= 0xFF
         sess = BinlogSession(verify_crc=True)
         for pkt in packets[:-1]:
-            list(sess.process_packet(pkt, file_seq=1))
+            sess.process_packet_columnar(pkt, 1, 0, 0, EnvelopeBatch())
         import pytest as _pytest
 
         with _pytest.raises(ValueError, match="CRC32 mismatch"):
-            list(sess.process_packet(bytes(bad), file_seq=1))
+            sess.process_packet_columnar(bytes(bad), 1, 0, 0, EnvelopeBatch())
 
     def test_corrupt_fast_skipped_packet_detected(self):
         # XID (16) is a kind _pre_rows fast-skips when no stop bound is
@@ -231,13 +209,13 @@ class TestCrcVerification:
         w._emit(16, (1234).to_bytes(8, "little"))  # XID event
         packets = [pkt for _, pkt in w.events]
         sess = BinlogSession(verify_crc=True)
-        list(sess.process_packet(packets[0], file_seq=1))
+        sess.process_packet_columnar(packets[0], 1, 0, 0, EnvelopeBatch())
         bad = bytearray(packets[1])
         bad[-6] ^= 0xFF  # corrupt payload, keep the old CRC
         import pytest as _pytest
 
         with _pytest.raises(ValueError, match="CRC32 mismatch"):
-            list(sess.process_packet(bytes(bad), file_seq=1))
+            sess.process_packet_columnar(bytes(bad), 1, 0, 0, EnvelopeBatch())
 
     def test_clean_stream_passes(self):
         w = EventWriter()
@@ -246,9 +224,9 @@ class TestCrcVerification:
         w.write_rows(5, TRANSCRIPTS_SCHEMA,
                      [("c", 0, "user", "x", None, 1_700_000_000_000_000)])
         sess = BinlogSession(verify_crc=True)
-        rows = []
+        rows = EnvelopeBatch()
         for _, pkt in w.events:
-            rows.extend(sess.process_packet(pkt, file_seq=1))
+            sess.process_packet_columnar(pkt, 1, 0, 0, rows)
         assert len(rows) == 1
 
 
@@ -260,7 +238,6 @@ class TestEmptyPresentBitmap:
         import pytest as _pytest
 
         from myzql_binlog_connector_spark.binlog.wire import write_lenenc
-        from tests.event_batches import env_collector
 
         def emit_rows_event(w, event_type, body=b""):
             n_bitmaps = 2 if event_type == 31 else 1
@@ -273,22 +250,22 @@ class TestEmptyPresentBitmap:
         w.table_map(5, TRANSCRIPTS_SCHEMA)
         for et in (30, 31, 32):
             emit_rows_event(w, et)
-        packets = [(1, i + 1, i + 1, pkt) for i, (_, pkt) in enumerate(w.events)]
-        assert _envelope_dicts(packets) == []
-        assert len(_envelope_columnar(packets)) == 0
+        packets = [(pkt, 1, i + 1, i + 1) for i, (_, pkt) in enumerate(w.events)]
+        assert envelope_rows(packets) == []
+        assert len(envelope_rows(packets, vec=env_collector())) == 0
         assert all(c == [] for c in TestTypedParser()._typed_rows(packets))
 
         bad = emit_rows_event(w, 30, body=b"\x01")
         sess = BinlogSession()
-        for _fs, _g, _es, pkt in packets:
+        for pkt, _fs, _g, _es in packets:
             sess.process_packet_columnar(pkt, 1, 1, 1, EnvelopeBatch())
         with _pytest.raises(ValueError, match="no present columns"):
             sess.process_packet_columnar(bad, 1, 1, 1, EnvelopeBatch())
-        # rowvec declines zero-width images, so the vec entry point raises
+        # rowvec declines zero-width images, so the collector path raises
         # the same way instead of hanging in its row walk
         vec = env_collector()
         with _pytest.raises(ValueError, match="no present columns"):
-            sess.process_packet_columnar_vec(bad, 1, 1, 1, EnvelopeBatch(), vec)
+            sess.process_packet_columnar(bad, 1, 1, 1, EnvelopeBatch(), vec)
 
 
 class TestBlobViews:

@@ -13,11 +13,7 @@ from collections import Counter
 import numpy as np
 import pytest
 
-from myzql_binlog_connector_spark.binlog.decoder import (
-    BinlogSession,
-    EnvelopeBatch,
-    _fmt_ts_us,
-)
+from myzql_binlog_connector_spark.binlog.decoder import EnvelopeBatch, _fmt_ts_us
 from myzql_binlog_connector_spark.binlog.encoder import (
     EventWriter,
     TRANSCRIPTS_SCHEMA,
@@ -29,7 +25,7 @@ from myzql_binlog_connector_spark.binlog.rowvec import (
 )
 from myzql_binlog_connector_spark.functions.decode import make_typed_decoder
 from myzql_binlog_connector_spark.genlog import encode_stream, generate_ops
-from tests.event_batches import env_collector, event_batch
+from tests.event_batches import env_collector, envelope_rows, event_batch, typed_rows
 
 KINDS = ("s", "i", "s", "s", "s", "s")
 NAMES = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -47,13 +43,7 @@ def _stream_packets(seed, **kw):
 
 
 def _typed_ref(packets):
-    sess = BinlogSession()
-    cols = [[] for _ in range(12)]
-    apps = tuple(c.append for c in cols[:7])
-    meta = cols[7:]
-    for blob, fs, g, es in packets:
-        sess.process_packet_typed(blob, fs, g, es, apps, meta, KINDS, (0, 1), 6)
-    return Counter(zip(*cols))
+    return Counter(zip(*typed_rows(packets, KINDS, (0, 1), 6)))
 
 
 def _typed_vec(packets):
@@ -66,26 +56,16 @@ def _typed_vec(packets):
     return got
 
 
+def _env_counter(rows):
+    return Counter(tuple(r[n] for n in EnvelopeBatch.__slots__) for r in rows)
+
+
 def _env_ref(packets):
-    sess = BinlogSession()
-    out = EnvelopeBatch()
-    for blob, fs, g, es in packets:
-        sess.process_packet_columnar(blob, fs, g, es, out)
-    return Counter(zip(*out.columns()))
+    return _env_counter(envelope_rows(packets))
 
 
 def _env_vec(packets):
-    sess = BinlogSession()
-    out = EnvelopeBatch()
-    vec = env_collector()
-    got = Counter()
-    for blob, fs, g, es in packets:
-        sess.process_packet_columnar_vec(blob, fs, g, es, out, vec)
-    got.update(zip(*out.columns()))
-    for rb in vec.flush():
-        t = rb.to_pydict()
-        got.update(zip(*[t[n] for n in EnvelopeBatch.__slots__]))
-    return got
+    return _env_counter(envelope_rows(packets, vec=env_collector()))
 
 
 class TestStreamParity:
@@ -214,11 +194,7 @@ class TestPlanGating:
         assert _env_ref(packets) == _env_vec(packets)
 
         kinds, keys = ("i",) * n, (0, 1)
-        sess = BinlogSession()
-        cols = [[] for _ in range(n + 6)]
-        apps = tuple(c.append for c in cols[: n + 1])
-        for blob, fs, g, es in packets:
-            sess.process_packet_typed(blob, fs, g, es, apps, cols[n + 1 :], kinds, keys, n)
+        cols = typed_rows(packets, kinds, keys, n)
         ds, out_schema = make_typed_decoder(list(schema.column_names), list(kinds), keys)
         got = Counter()
         for rb in ds(iter([event_batch(packets)])):
