@@ -318,6 +318,31 @@ def parse_table_map(payload: memoryview) -> tuple[int, TableSchema]:
     return table_id, TableSchema(database, table, cols)
 
 
+def table_map_descs(blobs, seen: set):
+    """Yield ``(database, table, desc)`` per distinct TABLE_MAP among the
+    framed event ``blobs``; ``seen`` (mutated) carries the dedupe across
+    calls.  Binlogs re-announce TABLE_MAP before every statement, so a
+    store holds hundreds of thousands, but identical schemas have
+    byte-identical payloads past the 6B table_id + 2B flags: dedupe on
+    those raw bytes first and parse each distinct schema once.  A corrupt
+    announcement is skipped — this only discovers schemas, a good
+    re-announcement still lands here, and decode decides the corrupt
+    event's fate (raise, or dead-letter in quarantine mode)."""
+    for blob in blobs:
+        if blob[5] != EventType.TABLE_MAP:
+            continue  # byte 5 = event_type: the dedupe set stays TABLE_MAP-only
+        raw_key = bytes(blob[1 + HEADER_LEN + 8 : len(blob) - CRC_LEN])
+        if raw_key in seen:
+            continue
+        seen.add(raw_key)
+        body = blob[1 : len(blob) - CRC_LEN]
+        try:
+            _tid, schema = parse_table_map(body[HEADER_LEN:])
+        except Exception:
+            continue
+        yield schema.database, schema.table, schema.desc
+
+
 def _parse_column_meta(type_codes: list[int], block: memoryview) -> list[int]:
     """Per-type metadata widths; STRING/NEWDECIMAL pairs are big-endian-ish
     (reference quirk note event_parser.zig:1419-1445)."""
@@ -832,10 +857,7 @@ class BinlogSession:
             # compact schema descriptor rides along with every decoded row —
             # this materializes the TABLE_MAP as-of join (J1) so downstream
             # stages (typed extraction, schema evolution) are schema-aware
-            self._schema_desc[table_id] = json.dumps(
-                [[c.type_code, c.meta, int(c.nullable)] for c in schema.columns],
-                separators=(",", ":"),
-            )
+            self._schema_desc[table_id] = schema.desc
             return None
         if et not in ROWS_EVENT_TYPES:
             return None

@@ -15,6 +15,7 @@ against the reference parser:
 
 from __future__ import annotations
 
+import json
 import struct
 from dataclasses import dataclass, field
 
@@ -94,6 +95,17 @@ class TableSchema:
     @property
     def column_count(self) -> int:
         return len(self.columns)
+
+    @property
+    def desc(self) -> str:
+        """The compact TABLE_MAP descriptor, ``[[type_code, meta,
+        nullable], ...]`` as JSON: what decoded rows carry as
+        ``payload_schema``, what the schema pre-pass emits and what a
+        segment store's ``_schemas.json`` sidecar lists."""
+        return json.dumps(
+            [[c.type_code, c.meta, int(c.nullable)] for c in self.columns],
+            separators=(",", ":"),
+        )
 
 
 class PartialJson:

@@ -563,10 +563,8 @@ def scan_schemas(events_df: DataFrame) -> DataFrame:
     When the source carries the ``event_type`` column (segment stores
     written by this engine do), the TABLE_MAP predicate is pushed into the
     parquet scan so only TABLE_MAP blobs ever reach Python."""
-    import json as _json
-
-    from ..binlog.constants import CRC_LEN, HEADER_LEN, EventType
-    from ..binlog.decoder import parse_table_map
+    from ..binlog.constants import EventType
+    from ..binlog.decoder import table_map_descs
 
     if "event_type" in events_df.columns:
         events_df = events_df.filter(
@@ -577,40 +575,7 @@ def scan_schemas(events_df: DataFrame) -> DataFrame:
         seen: set[bytes] = set()
         rows: list[tuple[str, str, str]] = []
         for batch in batches:
-            blobs = _blob_views(batch.column("event_blob"))
-            for i in range(batch.num_rows):
-                blob = blobs[i]
-                # binlogs re-announce TABLE_MAP before every statement's
-                # ROWS events, so a segment store carries ~1 per statement
-                # (hundreds of thousands); identical schemas have
-                # byte-identical payloads past the 6B table_id + 2B flags.
-                # Dedupe on those raw bytes FIRST — a set-add per event —
-                # and run the actual parse only once per distinct schema
-                # (was: full parse_table_map per event, ~5x the cost of
-                # the whole pre-pass)
-                if blob[5] != EventType.TABLE_MAP:
-                    continue  # byte 5 = event_type; keeps the dedup set
-                    # TABLE_MAP-only when the source lacks the pushdown col
-                raw_key = bytes(blob[1 + HEADER_LEN + 8 : len(blob) - CRC_LEN])
-                if raw_key in seen:
-                    continue
-                seen.add(raw_key)
-                body = blob[1 : len(blob) - CRC_LEN]
-                try:
-                    _tid, schema = parse_table_map(body[HEADER_LEN:])
-                except Exception:
-                    # corrupt announcement: this PRE-PASS only discovers
-                    # schemas, so skip it — real binlogs re-announce per
-                    # statement and a good copy (different raw bytes)
-                    # still lands here.  The decode stage decides the
-                    # corrupt event's fate: raise in fail-fast mode,
-                    # dead-letter in quarantine mode.
-                    continue
-                desc = _json.dumps(
-                    [[c.type_code, c.meta, int(c.nullable)] for c in schema.columns],
-                    separators=(",", ":"),
-                )
-                rows.append((schema.database, schema.table, desc))
+            rows.extend(table_map_descs(_blob_views(batch.column("event_blob")), seen))
         if rows:
             yield pa.RecordBatch.from_pydict(
                 {

@@ -269,61 +269,8 @@ def generate_stream(
 
 def write_segments_parquet(stream: GeneratedStream, out_dir: str) -> list[str]:
     """One parquet file per segment (= one streaming micro-batch unit; the
-    file boundary is the engine's ROTATE analogue)."""
-    import os
+    file boundary is the engine's ROTATE analogue), plus the store's
+    ``_schemas.json`` sidecar."""
+    from .sources.segments import write_segments
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for file_seq, rows in stream.segments:
-        tbl = pa.table(
-            {
-                "file_seq": pa.array([file_seq] * len(rows), pa.int32()),
-                "offset": pa.array([r[0] for r in rows], pa.int64()),
-                "gtid": pa.array([r[1] for r in rows], pa.int64()),
-                "event_seq": pa.array([r[2] for r in rows], pa.int64()),
-                # event type from the header (byte 5 of the framed packet:
-                # OK byte + 4B timestamp); a plain column lets readers push
-                # event-type predicates into the parquet scan (P3 pushdown)
-                "event_type": pa.array([r[3][5] for r in rows], pa.int8()),
-                "event_blob": pa.array([r[3] for r in rows], pa.binary()),
-            }
-        )
-        path = os.path.join(out_dir, f"segment-{file_seq:06d}.parquet")
-        pq.write_table(tbl, path)
-        paths.append(path)
-
-    # sidecar: the distinct TABLE_MAP schema descriptors present in the
-    # store, written by the archiver that saw them stream past — readers
-    # (apply_files) use it to build the typed-extraction schema without a
-    # scan over the blobs; they fall back to scan_schemas when absent
-    import json
-
-    from .binlog.constants import CRC_LEN, HEADER_LEN, EventType
-    from .binlog.decoder import parse_table_map
-    from .binlog.wire import parse_header
-
-    descs = {}
-    for _fs, rows in stream.segments:
-        for _off, _g, _es, pkt in rows:
-            body = memoryview(pkt)[1 : len(pkt) - CRC_LEN]
-            if parse_header(body).event_type == EventType.TABLE_MAP:
-                _tid, schema = parse_table_map(body[HEADER_LEN:])
-                desc = json.dumps(
-                    [[c.type_code, c.meta, int(c.nullable)] for c in schema.columns],
-                    separators=(",", ":"),
-                )
-                descs[(schema.database, schema.table, desc)] = None
-    with open(os.path.join(out_dir, "_schemas.json"), "w") as f:
-        # v2 sidecar carries (database, table) so readers can honor a
-        # table filter when building the typed-extraction schema
-        json.dump(
-            [
-                {"database": d, "table": t, "desc": s}
-                for d, t, s in sorted(descs)
-            ],
-            f,
-        )
-    return paths
+    return write_segments(stream.segments, out_dir)

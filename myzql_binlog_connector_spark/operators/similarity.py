@@ -417,45 +417,31 @@ KMEANS_OVERSAMPLE = 8
 KMEANS_TRAIN_CAP = 200_000
 
 
-def _kmeans_centroids(corpus, stride, id_col, vec_col, dims):
-    """Sampled-Lloyd centroids as a (tiny) literal DataFrame:
-    (_cid, _cvec, _cnrm).
+def _kmeans_centroids_np(corpus, stride, id_col, vec_col, dims):
+    """Sampled-Lloyd IVF centroids ``(cids, C, cnrm)``, with ``cids``
+    ascending (argmax over cid-ascending columns == the oracle's
+    smallest-cid tie-break).
 
-    Replaces the round-4 strided stand-in (every stride-th VECTOR as a
-    centroid) which risked wildly unbalanced cells at 10^9 vectors —
-    centroids now move to the mean of their sample cell, so dense regions
-    get tighter centroids.
+    Centroids move to the mean of their sample cell, so dense regions get
+    tighter centroids; every stride-th vector as a centroid (the round-4
+    stand-in) risked wildly unbalanced cells at 10^9 vectors.
 
     Training is DRIVER-side numpy over a bounded strided sample — the
     standard IVF architecture (FAISS trains on a sample single-node): the
     train set is KMEANS_OVERSAMPLE x the centroid count, capped at
     KMEANS_TRAIN_CAP rows (raises with a pick-a-larger-stride message,
     never silently truncates).  A plan-side formulation (broadcast join +
-    64 avg aggregates per Lloyd pass) was tried first and spent ~5 s in
-    Catalyst codegen for 400 sample rows — the training data is
-    microscopic next to its query plan.  The numpy schedule mirrors the
-    DuckDB oracle exactly: sims via the sequential dimension fold
-    (:func:`_seq_rowdot` shape) rounded to 4 dp with smallest-cid
-    tie-breaks, means rounded to 6 dp (cell populations are small, so
-    cross-engine float-sum-order differences sit ~1e-15, far below the
-    rounding grid); empty cells drop out."""
-    cids, C, cnrm = _kmeans_centroids_np(corpus, stride, id_col, vec_col, dims)
-    return corpus.sparkSession.createDataFrame(
-        [
-            (int(cid), [float(x) for x in vec], float(nr))
-            for cid, vec, nr in zip(cids, C, cnrm)
-        ],
-        "_cid bigint, _cvec array<double>, _cnrm double",
-    )
+    64 avg aggregates per Lloyd pass) spent ~5 s in Catalyst codegen for
+    400 sample rows — the training data is microscopic next to its query
+    plan.  The schedule mirrors the DuckDB oracle exactly: sims via the
+    sequential dimension fold (:func:`_seq_rowdot` shape) rounded to 4 dp
+    with smallest-cid tie-breaks, means rounded to 6 dp (cell populations
+    are small, so cross-engine float-sum-order differences sit ~1e-15, far
+    below the rounding grid); empty cells drop out.
 
-
-def _kmeans_centroids_np(corpus, stride, id_col, vec_col, dims):
-    """Numpy form of :func:`_kmeans_centroids`: ``(cids, C, cnrm)`` with
-    ``cids`` ascending (argmax over cid-ascending columns == the oracle's
-    smallest-cid tie-break).  The cap is checked BEFORE anything is
-    collected (an id-only count of the sample); then the strided training
-    sample and the strided seeds are collected together (their union
-    filter) and split driver-side."""
+    The cap is checked BEFORE anything is collected (an id-only count of
+    the sample); then the strided training sample and the strided seeds
+    are collected together (their union filter) and split driver-side."""
     samp_stride = max(1, stride // KMEANS_OVERSAMPLE)
     is_samp = (F.col(id_col) % samp_stride) == 0
     n_samp = corpus.filter(is_samp).select(id_col).count()

@@ -26,6 +26,7 @@ from ..functions.decode import (
     decode_typed_from_files,
     scan_schemas,
 )
+from ..sources.segments import read_sidecars
 from .lake import BucketedLakeTable, _widened, local_relation
 
 
@@ -355,21 +356,14 @@ class TranscriptsApplier:
         """Bounded replay of segment files through :meth:`_apply_typed`,
         decoded by the zero-shuffle bin-packed file reader
         (:func:`decode_typed_from_files`).  Descriptors come from the
-        store's ``_schemas.json`` sidecar when present, else from a
-        TABLE_MAP-only pre-pass."""
-        sidecar = os.path.join(os.path.dirname(paths[0]), "_schemas.json")
-        if os.path.exists(sidecar):
-            with open(sidecar) as f:
-                entries = json.load(f)
-            # v2 sidecar: [{"database","table","desc"}]; v1: bare desc strings
-            descs = [
-                e["desc"] if isinstance(e, dict) else e
-                for e in entries
-                if not isinstance(e, dict)
-                or _desc_matches(table_filter, e.get("database"), e.get("table"))
-            ]
-        else:
+        ``_schemas.json`` sidecars of every store directory in ``paths``
+        (paths may span stores); when any of them has none, from a
+        TABLE_MAP-only pre-pass over all ``paths``."""
+        entries = read_sidecars(paths)
+        if entries is None:
             descs = self._scan_descs(self.spark.read.parquet(*paths), table_filter)
+        else:
+            descs = [d for db, tbl, d in entries if _desc_matches(table_filter, db, tbl)]
         return self._apply_typed(
             descs,
             batch_id,

@@ -1532,8 +1532,10 @@ class BucketedLakeTable:
         return record
 
     def set_watermarks(self, wms: dict):
-        """Update watermarks in a fresh commit (used when a batch is skipped
-        entirely)."""
+        """Update watermarks in a fresh commit that adds no data and leaves
+        the lineage tail as it is.  No engine path calls it: a fully
+        redelivered batch commits nothing.  It is a maintenance hook for
+        moving a table's watermarks by hand."""
         m = self._read_manifest()
         m["version"] += 1
         m["watermarks"].update(wms)

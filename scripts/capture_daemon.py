@@ -5,8 +5,9 @@ This is the network half of docs/CAPTURE.md §1 — the part the reference
 implements natively (src/mysql/conn.zig:44-408 handshake/response,
 src/mysql/auth.zig:11-26 scrambles, src/binlog_reader.zig:100-146 dump
 framing, src/connection.zig:25-62 socket lifecycle).  Everything here is
-public MySQL client/server protocol; the store-writing half is reused from
-scripts/capture_stub.py.
+public MySQL client/server protocol; the segment splitter is reused from
+scripts/capture_stub.py and the store writer is the engine's
+``sources.segments.write_segments``.
 
 Usage:
     python scripts/capture_daemon.py --host H --port P --user U \
@@ -39,8 +40,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from capture_stub import (  # noqa: E402
     CaptureError,
     iter_segments,
-    write_segment_store,
+    write_gtids,
 )
+
+from myzql_binlog_connector_spark.sources.segments import write_segments  # noqa: E402
 
 MAX_PAYLOAD = 0xFFFFFF
 
@@ -492,9 +495,8 @@ def store_stream(payloads, out_dir: str, start_file_seq: int = 1) -> list[str]:
     written: list[str] = []
     state: dict = {}
     for fs, rows, resume in iter_segments(payloads, start_file_seq, state):
-        written.extend(
-            write_segment_store([(fs, rows)], state["descs"], out_dir, state["executed"])
-        )
+        written.extend(write_segments([(fs, rows)], out_dir))
+        write_gtids(out_dir, state["executed"])
         if resume is not None:
             with open(os.path.join(out_dir, "_resume.json"), "w") as f:
                 json.dump(resume, f)

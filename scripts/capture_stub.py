@@ -24,12 +24,10 @@ from myzql_binlog_connector_spark.binlog.constants import (
     HEADER_LEN,
     EventType,
 )
-from myzql_binlog_connector_spark.binlog.decoder import (
-    parse_gtid,
-    parse_table_map,
-)
+from myzql_binlog_connector_spark.binlog.decoder import parse_gtid
 from myzql_binlog_connector_spark.binlog.gtid_set import GtidSet
 from myzql_binlog_connector_spark.binlog.wire import parse_header
+from myzql_binlog_connector_spark.sources.segments import write_segments
 
 MAX_PAYLOAD = 0xFFFFFF
 
@@ -74,15 +72,14 @@ def iter_segments(payloads, start_file_seq: int = 1, state: dict | None = None):
     segment).  A live capture daemon flushes each yield; a crash loses at
     most the open segment and resumes idempotently (§4).
 
-    ``state`` (mutated in place, create-if-None) accumulates across the
-    stream: ``descs`` {(database, table): desc_json} and ``executed`` (the
-    GtidSet from PREVIOUS_GTIDS snapshots + in-band GTIDs — the
-    COM_BINLOG_DUMP_GTID resume payload for the next capture run)."""
+    ``state`` (mutated in place, create-if-None) accumulates ``executed``
+    across the stream: the GtidSet from PREVIOUS_GTIDS snapshots + in-band
+    GTIDs — the COM_BINLOG_DUMP_GTID resume payload for the next capture
+    run."""
     from myzql_binlog_connector_spark.binlog.decoder import parse_rotate
 
     if state is None:
         state = {}
-    descs = state.setdefault("descs", {})
     state.setdefault("executed", GtidSet())
     cur: list[tuple[int, int, int, bytes]] = []
     file_seq = start_file_seq
@@ -112,12 +109,6 @@ def iter_segments(payloads, start_file_seq: int = 1, state: dict | None = None):
             state["executed"] = state["executed"].union(
                 GtidSet.from_payload(ev_payload)
             )
-        elif hdr.event_type == EventType.TABLE_MAP:
-            _tid, schema = parse_table_map(ev_payload)
-            descs[(schema.database, schema.table)] = json.dumps(
-                [[c.type_code, c.meta, int(c.nullable)] for c in schema.columns],
-                separators=(",", ":"),
-            )
         cur.append((offset, gtid, event_seq, bytes(payload)))
         offset += hdr.event_size
 
@@ -146,57 +137,30 @@ def iter_segments(payloads, start_file_seq: int = 1, state: dict | None = None):
 
 
 def packets_to_segments(payloads, start_file_seq: int = 1):
-    """Batch form of :func:`iter_segments`: returns (segments, schema_descs,
-    executed) with segments fully materialized."""
+    """Batch form of :func:`iter_segments`: returns (segments, executed)
+    with segments fully materialized."""
     state: dict = {}
     segments = [
         (fs, rows) for fs, rows, _resume in iter_segments(payloads, start_file_seq, state)
     ]
-    return segments, state["descs"], state["executed"]
+    return segments, state["executed"]
 
 
-def write_segment_store(segments, descs, out_dir: str, executed=None) -> list[str]:
-    """Write segments + the v2 `_schemas.json` sidecar (FIXTURES.md F2)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for file_seq, rows in segments:
-        tbl = pa.table(
-            {
-                "file_seq": pa.array([file_seq] * len(rows), pa.int32()),
-                "offset": pa.array([r[0] for r in rows], pa.int64()),
-                "gtid": pa.array([r[1] for r in rows], pa.int64()),
-                "event_seq": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3][5] for r in rows], pa.int8()),
-                "event_blob": pa.array([r[3] for r in rows], pa.binary()),
-            }
-        )
-        path = os.path.join(out_dir, f"segment-{file_seq:06d}.parquet")
-        pq.write_table(tbl, path)
-        paths.append(path)
-    with open(os.path.join(out_dir, "_schemas.json"), "w") as f:
-        json.dump(
-            [
-                {"database": d, "table": t, "desc": s}
-                for (d, t), s in sorted(descs.items())
-            ],
-            f,
-        )
-    if executed is not None and executed.sids:
-        # the next capture run resumes with COM_BINLOG_DUMP_GTID carrying
-        # this set (docs/CAPTURE.md §4)
+def write_gtids(out_dir: str, executed) -> None:
+    """Record the executed-GTID set the next capture run resumes from with
+    COM_BINLOG_DUMP_GTID (docs/CAPTURE.md §4)."""
+    if executed.sids:
         with open(os.path.join(out_dir, "_gtids.json"), "w") as f:
             json.dump({"executed_gtid_set": str(executed)}, f)
-    return paths
 
 
 def capture(stream_path: str, out_dir: str) -> list[str]:
     with open(stream_path, "rb") as f:
         data = f.read()
-    segments, descs, executed = packets_to_segments(iter_mysql_packets(data))
-    return write_segment_store(segments, descs, out_dir, executed)
+    segments, executed = packets_to_segments(iter_mysql_packets(data))
+    paths = write_segments(segments, out_dir)
+    write_gtids(out_dir, executed)
+    return paths
 
 
 if __name__ == "__main__":

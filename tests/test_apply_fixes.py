@@ -158,10 +158,7 @@ class TestFilteredDescs:
             {
                 "database": "other",
                 "table": "noise",
-                "desc": json.dumps(
-                    [[c.type_code, c.meta, int(c.nullable)] for c in other.columns],
-                    separators=(",", ":"),
-                ),
+                "desc": other.desc,
             }
         )
         with open(sidecar, "w") as f:
