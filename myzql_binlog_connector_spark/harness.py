@@ -25,7 +25,7 @@ from .binlog.constants import ColumnType
 from .binlog.encoder import ColumnSpec, EventWriter, TableSchema
 from .functions.decode import decode_changes
 from .operators.dedup import lww_dedup
-from .sources.segments import EVENTS_SCHEMA
+from .sources.segments import EVENTS_SCHEMA, write_segments
 
 DOCS_SCHEMA = TableSchema(
     database="corpus",
@@ -226,37 +226,21 @@ def write_writers_parquet(
     start_gtid: int = 0,
 ) -> list[str]:
     """Materialize EventWriter segments as a segment-store directory (one
-    parquet file per writer, FIXTURES.md F2 layout) — the streaming-source
-    form of :func:`_events_df_from_writer`.  ``start_seq``/``start_gtid``
-    let callers append later segments to an existing store with continuous
-    numbering (arrival-of-new-segments scenarios)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
+    parquet file per writer, FIXTURES.md F2 layout, plus the store's
+    ``_schemas.json`` sidecar) — the streaming-source form of
+    :func:`_events_df_from_writer`.  ``start_seq``/``start_gtid`` let
+    callers append later segments to an existing store with continuous
+    numbering (arrival-of-new-segments scenarios); each event's gtid and
+    event_seq are one running count."""
+    segments = []
     gtid = start_gtid
     for file_seq, w in enumerate(writers, start=start_seq):
         rows = []
-        for event_seq, (offset, pkt) in enumerate(w.events):
+        for offset, pkt in w.events:
             gtid += 1
-            rows.append((file_seq, offset, gtid, gtid, pkt[5], pkt))
-        tbl = pa.table(
-            {
-                "file_seq": pa.array([r[0] for r in rows], pa.int32()),
-                "offset": pa.array([r[1] for r in rows], pa.int64()),
-                "gtid": pa.array([r[2] for r in rows], pa.int64()),
-                "event_seq": pa.array([r[3] for r in rows], pa.int64()),
-                "event_type": pa.array([r[4] for r in rows], pa.int8()),
-                "event_blob": pa.array([r[5] for r in rows], pa.binary()),
-            }
-        )
-        path = os.path.join(out_dir, f"segment-{file_seq:06d}.parquet")
-        pq_.write_table(tbl, path)
-        paths.append(path)
-    return paths
+            rows.append((offset, gtid, gtid, pkt))
+        segments.append((file_seq, rows))
+    return write_segments(segments, out_dir)
 
 
 def events_stream_writers(sf_dir: str, n_segments: int = 3) -> list[EventWriter]:

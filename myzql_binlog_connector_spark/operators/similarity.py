@@ -8,20 +8,20 @@ verifies.  At 10^9 vectors the bucket join replaces the O(N²) cross join
 with an equi-join on ``bucket`` — standard shuffle-hash territory, skew
 handled by AQE since bucket cardinality is high.
 
-Vector math comes in two equivalent implementations, both bit-identical
-to the sequential-fold semantics the DuckDB oracles compute:
+Vector math is bit-identical to the sequential-fold semantics the DuckDB
+oracles compute:
 
-* **Arrow batch (the operators' default)** — ``dot_arrow``/``norm_arrow``/
+* **Arrow batch (what the operators run)** — ``dot_arrow``/``norm_arrow``/
   ``lsh_bucket_arrow`` arrow_udfs (pyspark 4.1): the list column arrives
   as a zero-copy Arrow ListArray, one vectorized numpy pass per ~8k-row
   batch (SIMD over the batch, dimensions accumulated in order), exact
   shape validation via list offsets (``_mat_arrow``).  Plan stays one
   node, so Catalyst analysis/codegen cost is constant.
-* **Unrolled codegen** — ``dot``/``norm``/``cosine``/``lsh_bucket``
-  Column expressions over ``element_at`` terms: pure-JVM whole-stage
-  codegen, no Python workers, but a 64-term tree per dot makes plan
-  compile pay seconds per query — use when Python workers are
-  unavailable or plans are reused.
+* **Unrolled codegen reference** — ``dot``/``norm`` Column expressions
+  over ``element_at`` terms: pure-JVM whole-stage codegen, no Python
+  workers, but a 64-term tree per dot makes plan compile pay seconds per
+  query.  They are kept as the fold-order reference the Arrow forms are
+  tested bit-identical against.
 
 Spark's higher-order functions (``F.aggregate``/``F.zip_with``/
 ``F.transform``) are deliberately NOT used anywhere: their lambdas run
@@ -101,10 +101,6 @@ def norm(a: Column, dims: int = DEFAULT_DIMS) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dims: int = DEFAULT_DIMS) -> Column:
-    return dot(a, b, dims) / (norm(a, dims) * norm(b, dims))
-
-
 # ---------------------------------------------------------------------------
 # cosine primitives (Arrow batch: one numpy pass per ~8k rows)
 #
@@ -120,14 +116,14 @@ def cosine(a: Column, b: Column, dims: int = DEFAULT_DIMS) -> Column:
 
 
 def _mat_arrow(x, dims: int):
-    """(n, dims) float64 matrix straight from an Arrow list array —
-    the hot-path form (used by every ``arrow_udf`` below).
+    """(n, dims) float64 matrix straight from an Arrow list array (used
+    by every ``arrow_udf`` below).
 
     The exact raggedness gate here is ONE vectorized kernel over the list
     offsets (``pc.list_value_length`` == ``np.diff(offsets)``), not a
-    per-row Python ``len`` loop: the round-6 gate in :func:`_mat` cost
-    ~2n interpreter calls per batch on the near-dup verify path
-    (1.79s → 5.01s on ``embedding_near_dup``; round-6 verdict item #1).
+    per-row Python ``len`` loop: a per-row gate cost ~2n interpreter
+    calls per batch on the near-dup verify path (1.79s → 5.01s on
+    ``embedding_near_dup``; round-6 verdict item #1).
     With lengths proven uniform and null-free, ``flatten()`` hands back
     the child values buffer (zero-copy, slice-aware) and the matrix is a
     single reshape + one astype pass."""
@@ -157,67 +153,6 @@ def _mat_arrow(x, dims: int):
         .reshape(n, dims)
         .astype(np.float64, copy=False)
     )
-
-
-def _mat(s, dims: int):
-    """(n, dims) float64 matrix from a pandas Series of per-row vectors —
-    the non-Arrow FALLBACK form (``mapInPandas`` call sites; the scalar
-    UDF hot paths use :func:`_mat_arrow` on the Arrow array directly).
-
-    Arrow hands a list<float> column to pandas as n ndarray VIEWS over one
-    shared values buffer; when that layout holds (no nulls, uniform length
-    — verified by pointer arithmetic, not value sampling), the matrix is a
-    single reshape + one astype pass over the base buffer, no per-row
-    Python loop at all (same buffer-view technique as functions/decode.py
-    ``_blob_views``).  Fallback: ``np.concatenate`` over the row arrays —
-    a C memcpy loop, still ~1.5x faster than the old ``s.tolist()`` path.
-    At 10^9 x 64 floats the per-row loop was real overhead (round-4
-    verdict)."""
-    n = len(s)
-    if not n:
-        return np.empty((0, dims), dtype=np.float64)
-    v = s.to_numpy()
-    # Exact raggedness gate (round-6 ADVICE): pointer anchors alone can be
-    # fooled by compensating row lengths (63 then 65 realigns by the next
-    # anchor), and a ragged column whose total length happens to equal
-    # n*dims would reshape silently in the fallback.  The per-row ``len``
-    # pass is interpreter-speed and acceptable ONLY here on the fallback
-    # path; hot paths validate via Arrow list offsets in ``_mat_arrow``.
-    lens = np.fromiter(map(len, v), dtype=np.int64, count=n)
-    if not (lens == dims).all():
-        bad = np.unique(lens[lens != dims])[:5]
-        raise ValueError(
-            f"ragged embedding column: expected uniform length {dims}, "
-            f"found rows of length {bad.tolist()}"
-        )
-    e0 = v[0]
-    if isinstance(e0, np.ndarray) and e0.ndim == 1 and len(e0) == dims:
-        base = e0.base
-        if (
-            base is not None
-            and isinstance(base, np.ndarray)
-            and base.dtype == e0.dtype
-            and v[-1].base is base
-            and len(v[-1]) == dims
-        ):
-            flat = base.reshape(-1)
-            ptr0 = flat.__array_interface__["data"][0]
-            start, rem = divmod(
-                e0.__array_interface__["data"][0] - ptr0, e0.itemsize
-            )
-            if rem == 0 and flat.size - start >= n * dims:
-                # exact layout check: row i must sit at start + i*dims
-                def _at(i):
-                    return (
-                        v[i].__array_interface__["data"][0]
-                        == ptr0 + (start + i * dims) * e0.itemsize
-                    )
-
-                if _at(1 % n) and _at(n // 2) and _at(n - 1):
-                    return flat[start : start + n * dims].reshape(
-                        n, dims
-                    ).astype(np.float64, copy=False)
-    return np.concatenate(v).astype(np.float64, copy=False).reshape(n, dims)
 
 
 def _seq_rowdot(A, B):
@@ -745,29 +680,11 @@ def ann_topk_ivf_sql(
 # ---------------------------------------------------------------------------
 
 
-def lsh_bucket(vec_col: Column, dims: int, n_planes: int = 16) -> Column:
-    """Random-hyperplane signature: bit j = (vec · plane_j) >= 0.
-
-    The plane signs are ±1 literals, so each projection unrolls to a
-    sequential ±element_at sum — pure codegen arithmetic, and codegen
-    subexpression elimination shares the element_at loads across planes."""
-    expr = F.lit(0).cast("long")
-    for j in range(n_planes):
-        signs = plane_signs(j, dims)
-        proj = _fold(
-            [
-                F.element_at(vec_col, i + 1).cast("double") * F.lit(float(signs[i]))
-                for i in range(dims)
-            ]
-        )
-        expr = expr + F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return expr
-
-
 def lsh_bucket_arrow(vec_col: Column, dims: int, n_planes: int = 16) -> Column:
-    """Arrow-batch form of :func:`lsh_bucket`: all ``n_planes`` projections
-    in one vectorized pass per batch.  Accumulates over dimensions in
-    order with ±1.0 multiplies — bit-identical to the codegen/SQL fold."""
+    """Random-hyperplane signature: bit j = (vec · plane_j) >= 0, all
+    ``n_planes`` projections in one vectorized pass per batch.
+    Accumulates over dimensions in order with ±1.0 multiplies —
+    bit-identical to the SQL fold (:func:`lsh_bucket_sql`)."""
     signs = [plane_signs(j, dims) for j in range(n_planes)]
 
     @arrow_udf("long")

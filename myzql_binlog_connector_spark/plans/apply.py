@@ -1,12 +1,15 @@
 """CDC apply: raw events → typed rows → exactly-once LWW merge.
 
-The J2/T5/T6/A2 operators of SURVEY.md §2: typed decode of row images
-(segment files via ``apply_files``, an event frame such as a streaming
-micro-batch via ``apply_events``; both run one body, ``_apply_typed``),
-per-file_seq watermark gating for idempotent redelivery, LWW dedup,
-and a merge into :class:`BucketedLakeTable` with lineage/metrics recorded in
-the same atomic commit.  A decoded envelope (``apply_batch``) is typed
-JVM-side with ``from_json``.
+The decode half of the J2/T5/T6/A2 operators of SURVEY.md §2: typed
+decode of row images (segment files via ``apply_files``, an event frame
+such as a streaming micro-batch via ``apply_events``; both run one body,
+``_apply_typed``) into typed change rows that carry their binlog position
+(``_file_seq``, ``_log_pos``).  Every route hands that frame to
+:meth:`BucketedLakeTable.merge`, which owns exactly-once: it gates
+redelivered rows against the per-file_seq watermarks of the manifest it
+commits on, LWW-reduces, and commits the data, the advanced watermarks and
+the lineage/metrics record atomically.  A decoded envelope
+(``apply_batch``) is typed JVM-side with ``from_json``.
 """
 
 from __future__ import annotations
@@ -27,26 +30,7 @@ from ..functions.decode import (
     scan_schemas,
 )
 from ..sources.segments import read_sidecars
-from .lake import BucketedLakeTable, _widened, local_relation
-
-
-def gate_redelivered(changes: DataFrame, wm: DataFrame) -> DataFrame:
-    """The exactly-once redelivery gate (T5/T6) both appliers share: drop
-    change rows at-or-below their file's stored watermark.  ``wm`` is the
-    small per-file_seq map ``(wm_file_seq, wm_log_pos, wm_eri)``; it is
-    broadcast, and a file with no watermark keeps all its rows."""
-    joined = changes.join(
-        F.broadcast(wm), changes["_file_seq"] == wm["wm_file_seq"], "left"
-    )
-    keep = (
-        F.col("wm_log_pos").isNull()
-        | (F.col("_log_pos") > F.col("wm_log_pos"))
-        | (
-            (F.col("_log_pos") == F.col("wm_log_pos"))
-            & (F.col("_event_row_index") > F.col("wm_eri"))
-        )
-    )
-    return joined.filter(keep).drop("wm_file_seq", "wm_log_pos", "wm_eri")
+from .lake import BucketedLakeTable, _widened
 
 
 # MySQL column-type code → Spark type for typed extraction (SURVEY.md §1.2)
@@ -414,9 +398,10 @@ class TranscriptsApplier:
         """The one typed apply: descriptors → narrowing check → typed
         decode (the caller's reader: ``read_typed(names, kinds)``, or
         ``read_envelope()`` for a narrowed batch) → cast → quarantine
-        split → :meth:`_merge_typed`.  ``on_error="quarantine"``: dead
-        letters are written to ``{table}/_quarantine/batch-{id}/``,
-        counted in the record (``quarantined_rows``) and never merged."""
+        split → :meth:`BucketedLakeTable.merge`.
+        ``on_error="quarantine"``: dead letters are written to
+        ``{table}/_quarantine/batch-{id}/``, counted in the record
+        (``quarantined_rows``) and never merged."""
         if not descs:
             return {"batch_id": batch_id, "skipped": True, "input_rows": 0}
         base = len(self.column_names)
@@ -472,7 +457,7 @@ class TranscriptsApplier:
             def merge(typed):
                 if on_error == "quarantine":
                     typed = typed.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-                return self._merge_typed(typed, batch_id)
+                return self.table.merge(typed, batch_id)
         if on_error != "quarantine":
             return merge(frame)
         # one decode feeds both the dead-letter split and the merge: persist
@@ -525,85 +510,14 @@ class TranscriptsApplier:
             .withColumn("_file_seq", F.lit(0).cast("int"))
             .withColumn("_log_pos", F.lit(0).cast("bigint"))
         )
-        return self._merge_typed(typed, batch_id)
-
-    def _merge_typed(self, typed: DataFrame, batch_id: int | None) -> dict:
-        fresh = self._watermark_filter(typed).persist()
-        try:
-            # ONE pass computes the per-file watermarks AND the dirty-bucket
-            # stats (the merge skips its own counting job): grouped by
-            # (file_seq, bucket), both aggregates fall out of the collect —
-            # the result is O(files × buckets) rows, never O(rows)
-            stat_rows = (
-                fresh.groupBy("_file_seq", self.table.bucket_expr().alias("_b"))
-                .agg(
-                    F.max(F.struct("_log_pos", "_event_row_index")).alias("mx"),
-                    F.max("_gtid").alias("max_gtid"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()
-            )
-            if not stat_rows:
-                return {"batch_id": batch_id, "skipped": True, "input_rows": 0}
-            new_wms: dict = {}
-            bucket_counts: dict = {}
-            for r in stat_rows:
-                fs = str(r["_file_seq"])
-                cand = {
-                    "log_pos": r["mx"]["_log_pos"],
-                    "event_row_index": r["mx"]["_event_row_index"],
-                    "gtid": r["max_gtid"],
-                }
-                cur = new_wms.get(fs)
-                if cur is None or (cand["log_pos"], cand["event_row_index"]) > (
-                    cur["log_pos"], cur["event_row_index"]
-                ):
-                    cand["gtid"] = max(cand["gtid"], cur["gtid"]) if cur else cand["gtid"]
-                    new_wms[fs] = cand
-                elif cand["gtid"] > cur["gtid"]:
-                    cur["gtid"] = cand["gtid"]
-                bucket_counts[r["_b"]] = bucket_counts.get(r["_b"], 0) + r["n"]
-            changes = fresh.drop("_file_seq", "_log_pos")
-            return self.table.merge(
-                changes,
-                batch_id=batch_id,
-                extra_lineage={"watermarks": new_wms},
-                input_cached=True,  # `fresh` is persisted above
-                bucket_stats=sorted(bucket_counts.items()),
-            )
-        finally:
-            fresh.unpersist()
-
-    def _watermark_filter(self, changes: DataFrame) -> DataFrame:
-        """Drop rows at-or-below the stored per-file_seq watermark
-        (redelivered work) — broadcast join against the tiny watermark
-        map, a driver-local relation (broadcast with no Spark job)."""
-        wms = self.table.watermarks()
-        if not wms:
-            return changes
-        rows = [
-            (int(fs), int(v["log_pos"]), int(v["event_row_index"]))
-            for fs, v in wms.items()
-        ]
-        wm_df = local_relation(
-            self.spark,
-            T.StructType(
-                [
-                    T.StructField("wm_file_seq", T.IntegerType()),
-                    T.StructField("wm_log_pos", T.LongType()),
-                    T.StructField("wm_eri", T.LongType()),
-                ]
-            ),
-            rows,
-        )
-        return gate_redelivered(changes, wm_df)
+        return self.table.merge(typed, batch_id)
 
     def apply_envelope_subset(
         self, envelope: DataFrame, batch_id: int | None, descs: list[str] | None
     ) -> dict:
         """Apply a pre-filtered (single-table) envelope with known descs."""
         typed = self.typed_changes(envelope, descs=descs)
-        return self._merge_typed(typed, batch_id)
+        return self.table.merge(typed, batch_id)
 
     def apply_batch(self, envelope: DataFrame, batch_id: int | None = None) -> dict:
         """Decoded-envelope batch → exactly-once merge.  Returns the commit

@@ -41,8 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import lww_dedup
-from .apply import gate_redelivered
-from .lake import ORDER_COLS, _widened
+from .lake import ORDER_COLS, TRANSPORT_COLS, _widened, gate_redelivered
 
 
 class IcebergNotAvailable(RuntimeError):
@@ -91,7 +90,7 @@ class IcebergApplier:
     #: batch-transport columns that must never evolve INTO the table —
     #: the merge consumes them (_deleted → DELETE clause, _file_seq/_log_pos
     #: → the watermark side table); only the order columns are stored
-    _TRANSPORT_COLS = frozenset({"_deleted", "_file_seq", "_log_pos"})
+    _TRANSPORT_COLS = frozenset({"_deleted", *TRANSPORT_COLS})
 
     def evolve(self, typed: DataFrame):
         """TABLE_MAP-driven evolution → ALTER TABLE (add / widen)."""
@@ -184,7 +183,7 @@ class IcebergApplier:
 
     def apply_batch(self, typed: DataFrame, batch_id: int | None = None) -> dict:
         """LWW MERGE of a typed change batch (same input as
-        TranscriptsApplier._merge_typed): watermark-gate redelivered rows,
+        ``BucketedLakeTable.merge``): watermark-gate redelivered rows,
         pre-reduce per key (:func:`lww_dedup`), one MERGE INTO, then commit
         the new watermarks to the side table."""
         self.ensure_table(typed)

@@ -40,9 +40,10 @@ Design for 100 TB:
     manifest, then atomically swaps the ``LATEST`` pointer (os.replace).
     Readers resolve ``LATEST`` once and read an immutable snapshot.
   * **Exactly-once** — the manifest stores per-file_seq binlog watermarks
-    written in the same commit as the data (transactional with it); the
-    streaming applier skips change rows at-or-below the stored watermark, so
-    a redelivered batch is a no-op (cf. SURVEY.md §2.6 T5/T6).
+    written in the same commit as the data (transactional with it);
+    ``merge`` drops change rows at-or-below the watermarks of the manifest
+    it commits on, so a redelivered batch is a no-op (cf. SURVEY.md §2.6
+    T5/T6).
 """
 
 from __future__ import annotations
@@ -57,13 +58,31 @@ import uuid
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import NumericType, StructType, TimestampType
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    NumericType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from ..operators.dedup import lww_dedup, quote_ident
 
 MANIFEST_DIR = "_manifests"
 LATEST = "LATEST"
 META_COLS = ("_gtid", "_event_seq", "_event_row_index", "_deleted")
+# a change row's binlog position: merge gates on it and advances the
+# watermarks with it, and never stores it
+TRANSPORT_COLS = ("_file_seq", "_log_pos")
+# the gate's per-file_seq watermark map
+_WM_SCHEMA = StructType(
+    [
+        StructField("wm_file_seq", IntegerType()),
+        StructField("wm_log_pos", LongType()),
+        StructField("wm_eri", LongType()),
+    ]
+)
 # the LWW order: per key the change with the highest tuple wins
 ORDER_COLS = ("_gtid", "_event_seq", "_event_row_index")
 # a bucket's oldest file is its base while the files after it hold less
@@ -205,6 +224,25 @@ def local_relation(
     py4j round trip, and a 1,000-row map of three ints binds in ~1.9 s
     but inlines in ~0.08 s (4-core VM, ``local[2]``)."""
     return spark.sql(f"SELECT * FROM {_values_sql(schema, rows)}")
+
+
+def gate_redelivered(changes: DataFrame, wm: DataFrame) -> DataFrame:
+    """The exactly-once redelivery gate (T5/T6) both backends share: drop
+    change rows at-or-below their file's stored watermark.  ``wm`` is the
+    small per-file_seq map ``(wm_file_seq, wm_log_pos, wm_eri)``; it is
+    broadcast, and a file with no watermark keeps all its rows."""
+    joined = changes.join(
+        F.broadcast(wm), changes["_file_seq"] == wm["wm_file_seq"], "left"
+    )
+    keep = (
+        F.col("wm_log_pos").isNull()
+        | (F.col("_log_pos") > F.col("wm_log_pos"))
+        | (
+            (F.col("_log_pos") == F.col("wm_log_pos"))
+            & (F.col("_event_row_index") > F.col("wm_eri"))
+        )
+    )
+    return joined.filter(keep).drop("wm_file_seq", "wm_log_pos", "wm_eri")
 
 
 def _manifest_path(table_path: str, version: int) -> str:
@@ -1286,46 +1324,37 @@ class BucketedLakeTable:
         changes: DataFrame,
         batch_id: int | None = None,
         extra_lineage: dict | None = None,
-        input_cached: bool = False,
-        bucket_stats: list | None = None,
     ) -> dict:
         """Apply a change batch: upserts + tombstones, LWW per key.
 
-        ``changes`` must contain the payload columns plus META_COLS.
-        ``bucket_stats``: optional precomputed ``[(bucket, count), ...]``
-        over ``changes`` (callers that already aggregate per-batch stats —
-        e.g. the applier's watermark pass — fold the dirty-bucket count
-        into the same job and skip a full extra pass here).
-        Returns the commit's lineage/metrics record.
+        ``changes`` must contain the payload columns plus META_COLS.  A
+        batch that also carries ``TRANSPORT_COLS`` (the typed decode's
+        ``_file_seq``/``_log_pos``) merges exactly once (T5/T6): rows
+        at-or-below their file's watermark in the manifest this commit
+        builds on are redelivered work and dropped, the commit advances
+        those watermarks with the data, and the transport columns are not
+        stored.  A batch left empty commits nothing and returns a skip
+        record (``skipped``, every count zero).  ``extra_lineage`` fields
+        join the commit record.  Returns the commit's lineage/metrics
+        record.
         """
         t0 = time.monotonic()
 
         m = self._read_manifest() if self.exists() else None
-        pre_layout = (self.n_buckets, list(self.bucket_cols))
         if m:
             self._sync_layout(m)
-        if bucket_stats is not None and (
-            self.n_buckets, list(self.bucket_cols)
-        ) != pre_layout:
-            # the caller hashed its stats with the handle's ENTRY-TIME
-            # layout; a rebucket/bucket_cols migration committed since
-            # (e.g. by the maintenance job between a long-lived applier's
-            # batches) makes that dirty set wrong — and new_files
-            # registration iterates the dirty set, so trusting it would
-            # silently drop the batch's files from the manifest.  Recompute.
-            bucket_stats = None
         old_schema_json = m["schema"] if m else None
+        gated = set(TRANSPORT_COLS) <= set(changes.columns)
+        unstored = {"_bucket", *(TRANSPORT_COLS if gated else ())}
+        change_fields = [f_ for f_ in changes.schema.fields if f_.name not in unstored]
 
         # --- schema evolution: diff incoming payload schema vs stored ------
-        change_schema = changes.schema
         if m:
             stored = StructType.fromJson(json.loads(old_schema_json))
             merged_fields = list(stored.fields)
             names = {f_.name: i for i, f_ in enumerate(merged_fields)}
             evolution: list[str] = []
-            for f_ in change_schema.fields:
-                if f_.name == "_bucket":
-                    continue
+            for f_ in change_fields:
                 if f_.name not in names:
                     # force nullable: every pre-evolution row IS null here
                     merged_fields.append(type(f_)(f_.name, f_.dataType, True))
@@ -1349,17 +1378,14 @@ class BucketedLakeTable:
             # either happens (file sources report nullable for the same
             # reason)
             schema = StructType(
-                [
-                    type(f_)(f_.name, f_.dataType, True)
-                    for f_ in change_schema.fields
-                    if f_.name != "_bucket"
-                ]
+                [type(f_)(f_.name, f_.dataType, True) for f_ in change_fields]
             )
             evolution = ["create"]
         schema_json = json.dumps(schema.jsonValue())
 
-        # align the batch to the merged schema
-        pre_key_types = {n: t for n, t in changes.dtypes if n in self.key_cols}
+        # align the batch to the merged schema (the transport columns ride
+        # along for the gate and the stats), then gate it against the
+        # watermarks of the manifest read above
         have = set(changes.columns)
         changes = changes.select(
             *[
@@ -1367,34 +1393,74 @@ class BucketedLakeTable:
                 .cast(f_.dataType)
                 .alias(f_.name)
                 for f_ in schema.fields
-            ]
+            ],
+            *(TRANSPORT_COLS if gated else ()),
         )
-        if bucket_stats is not None:
-            # caller-side stats hashed the PRE-alignment key values; if the
-            # alignment widened a key column, F.hash changes with the type
-            # (hash(5::int) != hash(5::bigint)) and the dirty set would be
-            # wrong — recompute below instead
-            post_key_types = {n: t for n, t in changes.dtypes if n in self.key_cols}
-            if post_key_types != pre_key_types:
-                bucket_stats = None
-
-        # (watermark gating happens in the applier, pre-merge: T5/T6)
         wms = (m or {}).get("watermarks", {})
+        if gated and wms:
+            # the watermark map as a driver-local relation: broadcast
+            # with no Spark job
+            changes = gate_redelivered(
+                changes,
+                local_relation(
+                    self.spark,
+                    _WM_SCHEMA,
+                    [
+                        (int(fs), int(v["log_pos"]), int(v["event_row_index"]))
+                        for fs, v in wms.items()
+                    ],
+                ),
+            )
         bucket_expr = self.bucket_expr()
-        if not input_cached:  # callers with an already-persisted frame skip
-            changes = changes.persist()
-        if bucket_stats is None:
-            # one action yields both the dirty-bucket set and the input count
-            bucket_stats = [
-                (r["b"], r["count"])
-                for r in changes.groupBy(bucket_expr.alias("b")).count().collect()
-            ]
-        n_changes = int(sum(c for _b, c in bucket_stats))
-        dirty = sorted(b for b, _c in bucket_stats)
-        mean_rows = n_changes / max(1, len(dirty))
+        changes = changes.persist()
+        # ONE pass yields the dirty-bucket counts and, grouped by file
+        # too, the new per-file watermarks: O(files × buckets) rows,
+        # never O(rows)
+        stats = (
+            changes.groupBy(*(["_file_seq"] if gated else []), bucket_expr.alias("_b"))
+            .agg(
+                *(
+                    [
+                        F.max(F.struct("_log_pos", "_event_row_index")).alias("mx"),
+                        F.max("_gtid").alias("max_gtid"),
+                    ]
+                    if gated
+                    else []
+                ),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        )
+        if not stats:
+            changes.unpersist()
+            return {
+                "batch_id": batch_id,
+                "skipped": True,
+                "input_rows": 0,
+                "dirty_buckets": [],
+                "buckets_folded": [],
+                "files_written": 0,
+                "bytes_written": 0,
+            }
+        counts: dict = {}
+        new_wms: dict = {}
+        for r in stats:
+            counts[r["_b"]] = counts.get(r["_b"], 0) + r["n"]
+            if gated:
+                pos = (r["mx"]["_log_pos"], r["mx"]["_event_row_index"])
+                wm = new_wms.setdefault(
+                    str(r["_file_seq"]),
+                    {"log_pos": pos[0], "event_row_index": pos[1], "gtid": r["max_gtid"]},
+                )
+                if pos > (wm["log_pos"], wm["event_row_index"]):
+                    wm["log_pos"], wm["event_row_index"] = pos
+                wm["gtid"] = max(wm["gtid"], r["max_gtid"])
+        n_changes = sum(counts.values())
+        dirty = sorted(counts)
+        mean_rows = n_changes / len(dirty)
         hot = {
             int(b): int(c)
-            for b, c in bucket_stats
+            for b, c in counts.items()
             if c >= 3 * mean_rows and c > self.hot_bucket_split_rows
         }
         hot_splits = {
@@ -1421,10 +1487,11 @@ class BucketedLakeTable:
         # drop out too — partition i == bucket i makes a hot bucket one
         # giant task, and the alignment can't salt within a partition.
         aligned = n_changes >= self.n_buckets * 512 and not hot
+        batch = changes.drop(*TRANSPORT_COLS) if gated else changes
         src = (
-            changes.repartition(self.n_buckets, *[F.col(c) for c in self.bucket_cols])
+            batch.repartition(self.n_buckets, *[F.col(c) for c in self.bucket_cols])
             if aligned
-            else changes
+            else batch
         )
         reduced = lww_dedup(src, self.key_cols, ORDER_COLS).withColumn(
             "_bucket", bucket_expr
@@ -1458,8 +1525,7 @@ class BucketedLakeTable:
 
         version = (m["version"] + 1) if m else 1
         delta = self._write_buckets(reduced, f"v{version}", dirty)
-        if not input_cached:
-            changes.unpersist()
+        changes.unpersist()
 
         new_files = dict(old_files)
         delta_files = []
@@ -1511,11 +1577,9 @@ class BucketedLakeTable:
             "hot_buckets": {str(b): c for b, c in sorted(hot.items())[:16]},
             "schema_evolution": evolution,
             "wall_ms": round((time.monotonic() - t0) * 1000, 2),
+            **({"watermarks": new_wms} if gated else {}),
             **(extra_lineage or {}),
         }
-        wms = dict(wms)
-        if extra_lineage and "watermarks" in extra_lineage:
-            wms.update(extra_lineage["watermarks"])
         self._commit(
             self._next_manifest(
                 m or {},
@@ -1526,7 +1590,7 @@ class BucketedLakeTable:
                 n_buckets=self.n_buckets,
                 key_cols=self.key_cols,
                 bucket_cols=self.bucket_cols,
-                watermarks=wms,
+                watermarks={**wms, **new_wms},
             )
         )
         return record

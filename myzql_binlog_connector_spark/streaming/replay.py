@@ -4,9 +4,10 @@
 
   * **checkpointing** — Spark's file-source checkpoint makes the stream
     resumable (T5); a restart replays at most the in-flight micro-batch;
-  * **exactly-once** — the applier's per-file_seq watermarks (committed
-    atomically with the data in the lake-table manifest) turn that replayed
-    micro-batch into a no-op (T6): end-to-end idempotent apply;
+  * **exactly-once** — the lake table's per-file_seq watermarks, which
+    ``BucketedLakeTable.merge`` gates on and advances in the manifest it
+    commits atomically with the data, turn that replayed micro-batch into
+    a no-op (T6): end-to-end idempotent apply;
   * **bounded replay** — ``Trigger.AvailableNow`` drains everything present
     and stops (T1, the ``to_binlog_file`` analogue), while the default
     processing-time trigger tails forever;

@@ -48,16 +48,14 @@ t0 = time.monotonic()
 typed = decode_typed_from_files(spark, paths, names, kinds, key_positions=ap.key_positions)
 for name, f_ in zip(names, struct.fields):
     typed = typed.withColumn(name, F.col(name).cast(f_.dataType))
-fresh = ap._watermark_filter(typed).persist()
-nf = fresh.count()
+typed = typed.persist()
+nf = typed.count()
 print("PHASE decode_cast_persist:", nf, round(time.monotonic() - t0, 2), flush=True)
 
-t0 = time.monotonic()
-wm = fresh.groupBy("_file_seq").agg(F.max("_log_pos")).collect()
-print("PHASE wm_agg:", round(time.monotonic() - t0, 2), flush=True)
-
-rec = table.merge(fresh.drop("_file_seq", "_log_pos"), batch_id=0)
+# merge gates, computes the bucket stats and watermarks, reduces and writes
+rec = table.merge(typed, batch_id=0)
 print("PHASE merge_wall:", rec["wall_ms"] / 1000, flush=True)
+typed.unpersist()
 
 t0 = time.monotonic()
 print("PHASE readback:", table.read().count(), round(time.monotonic() - t0, 2), flush=True)

@@ -1,5 +1,5 @@
-"""Shared applier contract: TranscriptsApplier+BucketedLakeTable and
-IcebergApplier must implement IDENTICAL merge semantics.
+"""Shared applier contract: BucketedLakeTable.merge and IcebergApplier
+must implement IDENTICAL merge semantics over the same typed frame.
 
 The sandbox has no iceberg-spark-runtime jar, so the Iceberg side runs
 against :class:`FakeIcebergEngine` — a test-only executor for exactly the
@@ -26,7 +26,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
 from myzql_binlog_connector_spark.plans.iceberg import IcebergApplier
 from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
 
@@ -179,10 +178,9 @@ class FakeIcebergEngine:
 
 def _lake_backend(spark, tmp_path):
     table = BucketedLakeTable(spark, str(tmp_path / "lake"), KEYS, n_buckets=4)
-    applier = TranscriptsApplier(spark, table)
 
     def apply(typed, batch_id):
-        return applier._merge_typed(typed, batch_id)
+        return table.merge(typed, batch_id)
 
     def state():
         return {

@@ -209,11 +209,16 @@ class TestStaleStatsInvalidation:
     def test_precomputed_stats_from_stale_layout_are_recomputed(
         self, spark, tmp_path
     ):
-        """The applier precomputes bucket_stats with its handle's
-        ENTRY-TIME bucket expr; if a maintenance job rebucketted (or
-        migrated bucket_cols) since, merge must recompute — trusting the
-        stale dirty set would register the batch's files under the wrong
-        buckets and silently lose rows."""
+        """A long-lived applier's table handle keeps its ENTRY-TIME layout
+        while a maintenance job rebuckets (and migrates bucket_cols) from
+        another handle.  The next apply must hash its dirty-bucket stats
+        with the committed layout — stats from the stale one would
+        register the batch's files under the wrong buckets and silently
+        lose rows."""
+        import json
+
+        from myzql_binlog_connector_spark.functions.decode import ENVELOPE_SCHEMA
+        from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
         from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
 
         path = str(tmp_path / "t")
@@ -222,16 +227,25 @@ class TestStaleStatsInvalidation:
         # maintenance migrates layout from another handle
         maint = BucketedLakeTable(spark, path, ["conv_id", "turn_idx"], n_buckets=4)
         maint.rebucket(8, bucket_cols=["conv_id"])
-        # the stale writer precomputes stats with its OLD expr (applier
-        # pattern), then merges
-        batch = _mk_changes(
-            spark, [(f"c{i}", 1, f"upd{i}", 500, 9, False) for i in range(6)]
+        # the stale writer's applier lands one UPDATE per conversation
+        # (VARCHAR, LONGLONG, VARCHAR, LONGLONG: conv_id, turn_idx, text, ts)
+        desc = json.dumps([[15, 255, 1], [8, 0, 0], [15, 255, 1], [8, 0, 1]])
+
+        def image(i, text, ts):
+            return json.dumps({"c0": f"c{i}", "c1": 1, "c2": text, "c3": ts})
+
+        envelope = spark.createDataFrame(
+            [
+                (0, 1, 100 + i, 0, "chat", "t", "UPDATE", image(i, f"v{i}.1", 100 + i),
+                 image(i, f"upd{i}", 500), 500, 9, 1, desc)
+                for i in range(6)
+            ],
+            ENVELOPE_SCHEMA,
         )
-        stale_stats = [
-            (r["b"], r["count"])
-            for r in batch.groupBy(writer.bucket_expr().alias("b")).count().collect()
-        ]
-        writer.merge(batch, batch_id=1, bucket_stats=stale_stats)
+        TranscriptsApplier(
+            spark, writer, column_names=("conv_id", "turn_idx", "text", "ts"),
+            extra_names=(),
+        ).apply_batch(envelope, batch_id=1)
         got = _rows(writer.read())
         for i in range(6):
             assert (f"c{i}", 1, f"upd{i}", 500) in got, f"c{i} row lost"

@@ -313,13 +313,17 @@ class TestMaintenance:
     def test_watermark_roundtrip(self, spark, table20):
         table20.set_watermarks({"1": {"log_pos": 500, "event_row_index": 3, "gtid": 42}})
         assert table20.watermarks()["1"]["log_pos"] == 500
+        # a row at binlog position (file 2, log_pos 9) advances file 2's
+        # watermark in its own commit and leaves file 1's as it was
         table20.merge(
-            _chg(spark, [(100, "x", False, 99, 0, 1)]),
+            _chg(spark, [(100, "x", False, 50, 0, 1)])
+            .withColumn("_file_seq", F.lit(2))
+            .withColumn("_log_pos", F.lit(9).cast("bigint")),
             batch_id=1,
-            extra_lineage={"watermarks": {"2": {"log_pos": 9, "event_row_index": 1, "gtid": 50}}},
         )
         wms = table20.watermarks()
         assert wms["1"]["log_pos"] == 500 and wms["2"]["gtid"] == 50
+        assert wms["2"] == {"log_pos": 9, "event_row_index": 1, "gtid": 50}
 
     def test_metrics_table(self, spark, table20):
         table20.merge(_chg(spark, [(50, "y", False, 200, 0, 1)]), batch_id=7)
@@ -1021,9 +1025,10 @@ class TestCrashRecovery:
         monkeypatch.setattr(lake_mod.os, "link", link_then_crash)
         with pytest.raises(RuntimeError, match="after link"):
             t.merge(
-                _mk_changes(spark, [("a", 1, "v2", 2, False)]),
+                _mk_changes(spark, [("a", 1, "v2", 2, False)])
+                .withColumn("_file_seq", F.lit(7))
+                .withColumn("_log_pos", F.lit(42).cast("bigint")),
                 batch_id=1,
-                extra_lineage={"watermarks": {"7": 42}},
             )
         # the crash left v2.json committed but LATEST still at 1 and no
         # metrics line for v2
@@ -1035,7 +1040,7 @@ class TestCrashRecovery:
         assert self._state(t2) == {("a", 0): "v1", ("a", 1): "v2"}
         # the committed watermark is visible — an applier-level redelivery
         # of batch 1 would be watermark-filtered (exactly-once holds)
-        assert t2.watermarks().get("7") == 42
+        assert t2.watermarks().get("7", {}).get("log_pos") == 42
         # recovery re-appended the lost metrics line, exactly once
         assert self._metric_versions(path) == [1, 2]
         t2.merge(_mk_changes(spark, [("a", 2, "v3", 3, False)]), batch_id=2)

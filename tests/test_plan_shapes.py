@@ -119,15 +119,14 @@ def test_stream_commit_decodes_once(spark, tmp_path):
 
     def applier(name):
         table = BucketedLakeTable(spark, str(tmp_path / name), ["conv_id", "turn_idx"], n_buckets=4)
-        app = TranscriptsApplier(spark, table)
-        merge = app._merge_typed
+        merge = table.merge
 
         def capture(typed, batch_id):
             plans.append(typed._jdf.queryExecution().executedPlan().toString())
             return merge(typed, batch_id)
 
-        app._merge_typed = capture
-        return app
+        table.merge = capture
+        return TranscriptsApplier(spark, table)
 
     BinlogReplayStream(
         spark, str(tmp_path / "seg"), applier("t"), str(tmp_path / "ckpt")
