@@ -12,8 +12,12 @@ hashes are md5-based so Spark and DuckDB compute identical values.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -31,6 +35,22 @@ from myzql_binlog_connector_spark.operators import fuzzy, sampling, similarity, 
 from myzql_binlog_connector_spark.operators.dedup import lww_dedup
 
 SF_DEFAULT = "/root/testdata/sf0.001"
+
+
+@functools.cache
+def _scratch_root() -> str:
+    """This process's scratch root, removed when the process exits."""
+    root = tempfile.mkdtemp(prefix="spark_entry_")
+    pid = os.getpid()  # a forked child must not remove its parent's root
+    atexit.register(lambda: os.getpid() == pid and shutil.rmtree(root, ignore_errors=True))
+    return root
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh directory for one query run, under :func:`_scratch_root`.
+    The queries return lazy frames that read from it, so it lives until
+    the process exits, not until the query returns."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -119,8 +139,6 @@ def q_cdc_streaming_restart(spark, sf_dir):
     (all current segments drained), then resumes after more segments
     arrive — state is a pure function of the op stream, so the oracle is
     the same CASE/WHERE SQL as cdc_apply_state (T5 resume semantics)."""
-    import os
-    import tempfile
 
     from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
     from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
@@ -128,7 +146,7 @@ def q_cdc_streaming_restart(spark, sf_dir):
 
     writers = harness.events_stream_writers(sf_dir, n_segments=4)
     split = max(1, len(writers) // 2)
-    root = tempfile.mkdtemp(prefix="cdc_restart_")
+    root = _scratch("cdc_restart_")
     seg = os.path.join(root, "seg")
     harness.write_writers_parquet(writers[:split], seg)
 
@@ -163,7 +181,6 @@ def q_cdc_change_feed(spark, sf_dir):
     the op stream — batch-reduced upserts + tombstones per commit (Delta
     CDF / Iceberg changelog analogue, served from the merge-on-read delta
     files at zero extra write cost)."""
-    import tempfile
 
     from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
     from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
@@ -171,7 +188,7 @@ def q_cdc_change_feed(spark, sf_dir):
     events = harness.events_cdc_stream(spark, sf_dir)
     env = decode_changes(events)
     table = BucketedLakeTable(
-        spark, tempfile.mkdtemp(prefix="cdc_feed_"), ["event_id"], n_buckets=8
+        spark, _scratch("cdc_feed_"), ["event_id"], n_buckets=8
     )
     TranscriptsApplier(
         spark,
@@ -196,7 +213,6 @@ def q_cdc_quarantine(spark, sf_dir):
     them.  The oracle reconstructs the corrupted 80-doc chunks from doc_id
     rank (documents.parquet is doc_id-ascending; the encoder chunks it in
     that order)."""
-    import tempfile
 
     from pyspark.sql import functions as SF
 
@@ -217,7 +233,7 @@ def q_cdc_quarantine(spark, sf_dir):
     events = spark.createDataFrame(rows, EVENTS_SCHEMA)
     env = decode_changes(events, verify_crc=True, on_error="quarantine")
     table = BucketedLakeTable(
-        spark, tempfile.mkdtemp(prefix="cdc_q_"), ["doc_id"], n_buckets=8
+        spark, _scratch("cdc_q_"), ["doc_id"], n_buckets=8
     )
     TranscriptsApplier(
         spark, table,
@@ -235,7 +251,6 @@ def q_cdc_bootstrap_handoff(spark, sf_dir):
     stream replays on top.  Snapshot-only keys survive untouched; every
     key the stream touches ends at the stream's LWW state — the marker
     must be gone."""
-    import tempfile
 
     from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
     from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
@@ -253,7 +268,7 @@ def q_cdc_bootstrap_handoff(spark, sf_dir):
         )
     )
     table = BucketedLakeTable(
-        spark, tempfile.mkdtemp(prefix="cdc_boot_"), ["event_id"], n_buckets=8
+        spark, _scratch("cdc_boot_"), ["event_id"], n_buckets=8
     )
     applier = TranscriptsApplier(
         spark, table,
@@ -271,14 +286,13 @@ def q_cdc_multitable_state(spark, sf_dir):
     decodes once and lands in three per-(db, table) lake tables with their
     own schemas, keys, and watermarks (MultiTableApplier).  Result = the
     union of the three final states, normalized to (src, id, val)."""
-    import tempfile
 
     from myzql_binlog_connector_spark.plans.apply import MultiTableApplier
 
     env = decode_changes(harness.multitable_cdc_events(spark, sf_dir))
     mt = MultiTableApplier(
         spark,
-        tempfile.mkdtemp(prefix="mt_state_"),
+        _scratch("mt_state_"),
         table_specs={
             ("corpus", "docs2"): {
                 "column_names": ["doc_id", "text"], "key_positions": (0,), "n_buckets": 4,
@@ -318,7 +332,6 @@ def q_cdc_time_travel(spark, sf_dir):
     the live table has moved on.  Manifests are immutable per version and
     compaction never deletes data files, so any committed version stays
     readable."""
-    import tempfile
 
     from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
     from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
@@ -326,7 +339,7 @@ def q_cdc_time_travel(spark, sf_dir):
     events = harness.events_cdc_stream(spark, sf_dir, n_segments=2)
     env = decode_changes(events)
     table = BucketedLakeTable(
-        spark, tempfile.mkdtemp(prefix="cdc_tt_"), ["event_id"], n_buckets=8
+        spark, _scratch("cdc_tt_"), ["event_id"], n_buckets=8
     )
     applier = TranscriptsApplier(
         spark,
@@ -718,13 +731,11 @@ def q_stateful_progress(spark, sf_dir):
     applyInPandasWithState invokes Python once per (key, batch), so key
     cardinality — not row count — is the cost driver; fat keys are both
     the realistic shape and the honest benchmark."""
-    import os
-    import tempfile
 
     from myzql_binlog_connector_spark.sources.segments import stream_segments
     from myzql_binlog_connector_spark.streaming.stateful import conversation_progress
 
-    root = tempfile.mkdtemp(prefix="stateful_q_")
+    root = _scratch("stateful_q_")
     seg = os.path.join(root, "seg")
     harness.write_writers_parquet(
         harness.events_stream_writers(sf_dir, n_segments=3), seg
@@ -777,8 +788,6 @@ def q_windowed_event_counts(spark, sf_dir):
     dropped at any SF and the oracle stays a plain GROUP BY.  Counts are
     monotone under update mode, so the final state is the per-(window,
     type) max over the sink."""
-    import os
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq_
@@ -809,7 +818,7 @@ def q_windowed_event_counts(spark, sf_dir):
     # would silently drop them and diverge from the GROUP BY oracle)
     delay_hours = max(48, int(2.5 * max_span_us / 3_600_000_000) + 1)
 
-    root = tempfile.mkdtemp(prefix="wm_counts_")
+    root = _scratch("wm_counts_")
     src = os.path.join(root, "src")
     os.makedirs(src)
     for k, chunk in enumerate(chunks):

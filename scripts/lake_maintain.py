@@ -86,7 +86,9 @@ def main(argv: list[str] | None = None) -> int:
     t._sync_layout(m)  # adopt committed n_buckets; raise on key mismatch
     out = []
     if args.status:
-        files = [p for fl in m["files"].values() for p in fl]
+        # distinct paths: a shared delta file is listed under every
+        # bucket it holds rows of
+        files = {p for fl in m["files"].values() for p in fl}
         out.append({
             "action": "status",
             "version": m["version"],
