@@ -710,6 +710,14 @@ class BinlogSession:
     semantics; ROWS events whose table_id is not cached are skipped entirely
     (binlog_reader.zig:419-424, 439, 462-463).  The cache intentionally
     persists across segment (file) boundaries, like the reference reader's.
+
+    ``known_descs``: the descriptors the caller planned its output for (the
+    typed decode's names and kinds come from them).  A TABLE_MAP that
+    passes the table filter but whose ``desc`` is not among them is never
+    decoded against that plan: the session stops there and sets
+    ``descriptor_miss``, and the partition driver emits one marker row for
+    it (see :func:`functions.decode.make_typed_decoder`).  A miss is not an
+    exception, so quarantine mode cannot turn it into a dead letter.
     """
 
     def __init__(
@@ -717,6 +725,7 @@ class BinlogSession:
         table_filter=None,
         stop_position: tuple[int, int] | None = None,
         verify_crc: bool = False,
+        known_descs: frozenset[str] | None = None,
     ):
         self.table_maps: dict[int, TableSchema] = {}
         self._schema_desc: dict[int, str] = {}  # table_id -> compact JSON desc
@@ -744,6 +753,8 @@ class BinlogSession:
         self.verify_crc = verify_crc
         self.stop_position = stop_position  # (file_seq, pos): exclusive
         self.stopped = False
+        self.known_descs = known_descs
+        self.descriptor_miss = False
         self.events_seen = 0
         self.rows_emitted = 0
 
@@ -850,6 +861,9 @@ class BinlogSession:
                 self._schema_desc.pop(table_id, None)
                 self._decoders.pop(table_id, None)
                 self._filtered_ids.add(table_id)
+                return None
+            if self.known_descs is not None and schema.desc not in self.known_descs:
+                self.descriptor_miss = self.stopped = True
                 return None
             self._filtered_ids.discard(table_id)
             self.table_maps[table_id] = schema  # last TABLE_MAP wins

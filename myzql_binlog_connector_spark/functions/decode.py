@@ -93,6 +93,11 @@ _ARROW_ENVELOPE = pa.schema(
 #: :func:`decode_changes` ``on_error="quarantine"``
 DML_CORRUPT = "_corrupt"
 
+#: ``_file_seq`` of the typed decode's descriptor-miss marker row (see
+#: :func:`make_typed_decoder` ``known``): no binlog file has a negative
+#: one, and ``BucketedLakeTable.merge`` raises ``DescriptorMiss`` on it
+MISS_FILE_SEQ = -1
+
 
 def _triage(blob, err, framed: bool = True) -> str:
     """The dead-letter triage record of an undecodable packet, as JSON: the
@@ -214,7 +219,10 @@ def _decode_driver(new_session, new_out, new_vec, process, schema, dead_names,
 
     Output order: per-row batches of ``out_batch_rows`` and vec-flush
     batches (every ``flush_rows`` deferred rows) as they fill, then the
-    last per-row rows, the final flush, and one batch of dead letters."""
+    last per-row rows, the final flush, one batch of dead letters, and,
+    when the session met a TABLE_MAP outside its ``known_descs``, one
+    marker row at ``MISS_FILE_SEQ`` (laid out like a dead letter whose
+    triage record is null)."""
     quarantine = on_error == "quarantine"
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -270,6 +278,8 @@ def _decode_driver(new_session, new_out, new_vec, process, schema, dead_names,
         yield from flushed()
         if dead:
             yield _dead_batch(dead, schema, dead_names, dead_fixed)
+        if session.descriptor_miss:
+            yield _dead_batch([(MISS_FILE_SEQ, 0, 0, 0, None)], schema, dead_names, dead_fixed)
 
     return decode_partition
 
@@ -371,6 +381,7 @@ def make_typed_decoder(
     out_batch_rows: int = 8192,
     flush_rows: int | None = None,
     on_error: str = "raise",
+    known: frozenset[str] | None = None,
 ):
     """Typed twin of :func:`make_decoder`: returns ``(decode_partition,
     schema)``, where ``decode_partition`` maps event Arrow batches to
@@ -387,7 +398,15 @@ def make_typed_decoder(
     are null and whose ``_corrupt`` column carries the triage record
     (:func:`_triage`), instead of failing the job.  The output schema
     gains the ``_corrupt`` string column ONLY in this mode (null on good
-    rows)."""
+    rows).
+
+    ``known``: the descriptors ``column_names``/``kinds`` were planned
+    from.  A partition whose stream holds a TABLE_MAP (past the table
+    filter) outside them decodes nothing from there on and ends with one
+    marker row: ``_file_seq = MISS_FILE_SEQ``, null payload and null
+    ``_corrupt``, so it survives the quarantine split and the merge's
+    watermark gate, and :meth:`BucketedLakeTable.merge` raises
+    :class:`DescriptorMiss` on it before writing anything."""
     from ..binlog.decoder import TypedBatch
     from ..binlog.rowvec import VecCollector, assemble_typed, build_plan
 
@@ -411,7 +430,7 @@ def make_typed_decoder(
 
     decode_partition = _decode_driver(
         new_session=lambda: BinlogSession(
-            table_filter=table_filter, stop_position=stop_position
+            table_filter=table_filter, stop_position=stop_position, known_descs=known
         ),
         new_out=lambda: TypedBatch(kinds_t, keys_t, n_payload),
         new_vec=lambda: VecCollector(
@@ -681,13 +700,18 @@ def decode_typed(
     stop_position: tuple[int, int] | None = None,
     from_position: tuple[int, int] | None = None,
     on_error: str = "raise",
+    known: frozenset[str] | None = None,
 ) -> DataFrame:
     """Typed twin of :func:`decode_changes`: the same event frame, the
     same segment ordering and position bounds, typed change rows out (see
-    :func:`make_typed_decoder`) — no JSON envelope, no ``from_json``."""
+    :func:`make_typed_decoder`, also for ``known``) — no JSON envelope, no
+    ``from_json``.  A ``from_position`` cut would drop ``known``'s marker
+    row: pass one or the other."""
+    if known is not None and from_position is not None:
+        raise ValueError("decode_typed: known and from_position exclude each other")
     decode_partition, schema = make_typed_decoder(
         column_names, kinds, key_positions, table_filter, stop_position,
         flush_rows=_vec_flush_rows(events_df.sparkSession.sparkContext.defaultParallelism),
-        on_error=on_error,
+        on_error=on_error, known=known,
     )
     return _decode_events(events_df, decode_partition, schema, from_position, "_")

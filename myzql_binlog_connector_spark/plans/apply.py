@@ -10,6 +10,14 @@ redelivered rows against the per-file_seq watermarks of the manifest it
 commits on, LWW-reduces, and commits the data, the advanced watermarks and
 the lineage/metrics record atomically.  A decoded envelope
 (``apply_batch``) is typed JVM-side with ``from_json``.
+
+The typed decode needs the batch's TABLE_MAP descriptors up front.
+``apply_files`` reads them from the store's sidecar; ``apply_events``
+decodes with those of the applier's last typed commit and scans the batch
+for them (a TABLE_MAP-only pre-pass, 2 Spark jobs) only when the decoder
+meets one it was not given — that is, after DDL — or when nothing is
+remembered yet.  Each commit record says which route ran
+(``descriptor_scan``).
 """
 
 from __future__ import annotations
@@ -30,7 +38,7 @@ from ..functions.decode import (
     scan_schemas,
 )
 from ..sources.segments import read_sidecars
-from .lake import BucketedLakeTable, _widened
+from .lake import BucketedLakeTable, DescriptorMiss, _widened
 
 
 # MySQL column-type code → Spark type for typed extraction (SURVEY.md §1.2)
@@ -113,6 +121,14 @@ def utc_timestamp(col):
     return F.from_utc_timestamp(col.cast("timestamp"), F.expr("current_timezone()"))
 
 
+def _kinds_agree(descs: list[str]) -> bool:
+    """Every descriptor has the same payload kind at every position they
+    share (a column added at the end never disagrees)."""
+    kinds = [_payload_kinds([d]) for d in descs]
+    width = max(map(len, kinds))
+    return all(len({k[i] for k in kinds if i < len(k)}) == 1 for i in range(width))
+
+
 def _desc_matches(table_filter, database: str | None, table: str | None) -> bool:
     if table_filter is None or database is None or table is None:
         return True
@@ -159,6 +175,10 @@ class TranscriptsApplier:
         self.narrowed_names = {
             int(k): list(v) for k, v in (narrowed_names or {}).items()
         }
+        # (table_filter, descs) of the last typed commit: apply_events'
+        # decode hint.  In memory only — a miss is always detected, so a
+        # new process just pays one descriptor scan.
+        self._known: tuple | None = None
 
     def _name_for(self, i: int) -> str:
         if i < len(self.column_names):
@@ -350,6 +370,8 @@ class TranscriptsApplier:
             descs = [d for db, tbl, d in entries if _desc_matches(table_filter, db, tbl)]
         return self._apply_typed(
             descs,
+            table_filter,
+            entries is None,
             batch_id,
             on_error,
             lambda names, kinds: decode_typed_from_files(
@@ -373,37 +395,72 @@ class TranscriptsApplier:
     ) -> dict:
         """Apply an event frame (segment-store columns; a streaming
         micro-batch) through :meth:`_apply_typed`, decoded by
-        :func:`decode_typed`.  Descriptors come from a TABLE_MAP-only
-        pre-pass over ``events``."""
+        :func:`decode_typed`.
+
+        Descriptors: those of this applier's last typed commit (its
+        sidecar's, its pre-pass's or these very ones), when it had one under
+        the same ``table_filter`` and the batch has no position bound.  The
+        decoder is handed them as the known set, so a TABLE_MAP outside it
+        (DDL, a new table) makes the merge raise :class:`DescriptorMiss`
+        before it writes; the batch then takes the route every other batch
+        takes: a TABLE_MAP-only pre-pass over ``events``
+        (:meth:`_scan_descs`), then the decode.  The commit record's
+        ``descriptor_scan`` says whether the pre-pass ran."""
         bounds = dict(
             table_filter=table_filter, stop_position=stop_position,
             from_position=from_position, on_error=on_error,
         )
-        return self._apply_typed(
-            self._scan_descs(events, table_filter),
-            batch_id,
-            on_error,
-            lambda names, kinds: decode_typed(
-                events, names, kinds, self.key_positions, **bounds
-            ),
-            lambda: decode_changes(events, **bounds),
-        )
+
+        def apply(descs, known):
+            return self._apply_typed(
+                descs,
+                table_filter,
+                known is None,
+                batch_id,
+                on_error,
+                lambda names, kinds: decode_typed(
+                    events, names, kinds, self.key_positions, known=known, **bounds
+                ),
+                lambda: decode_changes(events, **bounds),
+            )
+
+        if self._known and self._known[0] is table_filter and not (
+            stop_position or from_position
+        ):
+            descs = self._known[1]
+            try:
+                return apply(descs, frozenset(descs))
+            except DescriptorMiss:
+                pass
+        return apply(self._scan_descs(events, table_filter), None)
 
     @staticmethod
     def _scan_descs(events: DataFrame, table_filter) -> list[str]:
         rows = scan_schemas(events).collect()
         return [desc for db, tbl, desc in rows if _desc_matches(table_filter, db, tbl)]
 
-    def _apply_typed(self, descs, batch_id, on_error, read_typed, read_envelope) -> dict:
+    def _apply_typed(
+        self, descs, table_filter, scanned, batch_id, on_error, read_typed, read_envelope
+    ) -> dict:
         """The one typed apply: descriptors → narrowing check → typed
         decode (the caller's reader: ``read_typed(names, kinds)``, or
         ``read_envelope()`` for a narrowed batch) → cast → quarantine
-        split → :meth:`BucketedLakeTable.merge`.
+        split → :meth:`BucketedLakeTable.merge`, whose record gains
+        ``descriptor_scan`` (``scanned``: the descriptors came from a
+        pre-pass over the batch).
         ``on_error="quarantine"``: dead letters are written to
         ``{table}/_quarantine/batch-{id}/``, counted in the record
-        (``quarantined_rows``) and never merged."""
+        (``quarantined_rows``) and never merged.
+
+        A typed-route batch that returns leaves ``(table_filter, descs)``
+        as :meth:`apply_events`' decode hint when its descriptors agree on
+        the payload kind at every shared position: ones that disagree (a
+        VARCHAR → INT change) widen the position to a string, which a batch
+        of only the new descriptor would not, so those batches scan.  A
+        narrowed batch (envelope route) forgets the hint."""
         if not descs:
             return {"batch_id": batch_id, "skipped": True, "input_rows": 0}
+        lineage = {"descriptor_scan": scanned}
         base = len(self.column_names)
         narrowed = {n for n in (len(json.loads(d)) for d in set(descs)) if n < base}
         if narrowed:
@@ -416,6 +473,7 @@ class TranscriptsApplier:
             # positionally-shifted corruption.
             for n in narrowed:
                 self._names_for_count(n)
+            self._known = None
             frame = read_envelope()
             # dead letters are split off here, in the typed sink's column
             # shape (typed_changes drops them), so triage tooling reads one
@@ -430,7 +488,11 @@ class TranscriptsApplier:
                 )
 
             def merge(env):
-                return {**self.apply_envelope_subset(env, batch_id, descs), "narrowed_route": True}
+                typed = self.typed_changes(env, descs=descs)
+                return {
+                    **self.table.merge(typed, batch_id, extra_lineage=lineage),
+                    "narrowed_route": True,
+                }
         else:
             struct = payload_struct_from_descs(descs)
             names = [self._name_for(i) for i in range(len(struct.fields))]
@@ -457,7 +519,9 @@ class TranscriptsApplier:
             def merge(typed):
                 if on_error == "quarantine":
                     typed = typed.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-                return self.table.merge(typed, batch_id)
+                rec = self.table.merge(typed, batch_id, extra_lineage=lineage)
+                self._known = (table_filter, descs) if _kinds_agree(descs) else None
+                return rec
         if on_error != "quarantine":
             return merge(frame)
         # one decode feeds both the dead-letter split and the merge: persist

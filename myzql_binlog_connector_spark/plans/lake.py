@@ -463,6 +463,15 @@ class ConcurrentWriteError(RuntimeError):
     stay orphaned (invisible to readers) until vacuum."""
 
 
+class DescriptorMiss(RuntimeError):
+    """A typed batch decoded against a given descriptor set met a TABLE_MAP
+    outside it: the decoder emitted a marker row (negative ``_file_seq``)
+    where it would have typed rows with names and kinds planned for other
+    schemas.  :meth:`BucketedLakeTable.merge` raises it from its stats
+    pass, before any write or commit; the applier then rescans the batch's
+    descriptors and applies it again."""
+
+
 class BucketedLakeTable:
     """``n_buckets`` sizing: aim for ~0.5–2 GB of live data per bucket, so a
     100 TB table wants tens of thousands of buckets; the sandbox default is
@@ -1439,7 +1448,11 @@ class BucketedLakeTable:
         builds on are redelivered work and dropped, the commit advances
         those watermarks with the data, and the transport columns are not
         stored.  A batch left empty commits nothing and returns a skip
-        record (``skipped``, every count zero).  ``extra_lineage`` fields
+        record (``skipped``, every count zero).  A gated batch holding a
+        row at a negative ``_file_seq`` (the typed decoder's marker for a
+        TABLE_MAP outside its known descriptors) raises
+        :class:`DescriptorMiss` from the stats pass, before any write.
+        The persisted batch is released on every exit.  ``extra_lineage`` fields
         join the commit record.  Returns the commit's lineage/metrics
         record.
 
@@ -1526,129 +1539,137 @@ class BucketedLakeTable:
             )
         bucket_expr = self.bucket_expr()
         changes = changes.persist()
-        # ONE pass yields the dirty-bucket counts and, grouped by file
-        # too, the new per-file watermarks: O(files × buckets) rows,
-        # never O(rows)
-        stats = (
-            changes.groupBy(*(["_file_seq"] if gated else []), bucket_expr.alias("_b"))
-            .agg(
-                *(
-                    [
-                        F.max(F.struct("_log_pos", "_event_row_index")).alias("mx"),
-                        F.max("_gtid").alias("max_gtid"),
-                    ]
-                    if gated
-                    else []
-                ),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        if not stats:
-            changes.unpersist()
-            return {
-                "batch_id": batch_id,
-                "skipped": True,
-                "input_rows": 0,
-                "dirty_buckets": [],
-                "buckets_folded": [],
-                "files_written": 0,
-                "bytes_written": 0,
-            }
-        counts: dict = {}
-        new_wms: dict = {}
-        for r in stats:
-            counts[r["_b"]] = counts.get(r["_b"], 0) + r["n"]
-            if gated:
-                pos = (r["mx"]["_log_pos"], r["mx"]["_event_row_index"])
-                wm = new_wms.setdefault(
-                    str(r["_file_seq"]),
-                    {"log_pos": pos[0], "event_row_index": pos[1], "gtid": r["max_gtid"]},
-                )
-                if pos > (wm["log_pos"], wm["event_row_index"]):
-                    wm["log_pos"], wm["event_row_index"] = pos
-                wm["gtid"] = max(wm["gtid"], r["max_gtid"])
-        n_changes = sum(counts.values())
-        dirty = sorted(counts)
-        mean_rows = n_changes / len(dirty)
-        hot = {
-            int(b): int(c)
-            for b, c in counts.items()
-            if c >= 3 * mean_rows and c > self.hot_bucket_split_rows
-        }
-        hot_splits = {
-            b: min(32, -(-c // self.hot_bucket_split_rows)) for b, c in hot.items()
-        }
-        old_files = (m or {}).get("files", {})
-
-        # --- merge-on-read append: batch-reduce, then write ONLY the batch --
-        # The LWW max_by hash aggregate pre-reduces map-side (hot keys never
-        # concentrate on one reducer); existing bucket data is NOT read or
-        # rewritten — write cost is O(batch), readers resolve LWW across a
-        # bucket's files, and the fold below bounds how many there can be.
-        #
-        # Big batches take ONE shuffle: repartition(n_buckets, bucket_cols)
-        # hash-partitions by Murmur3(bucket_cols) pmod n_buckets — exactly
-        # the bucket function — and HashPartitioning on a subset of the
-        # grouping keys still satisfies the aggregate's
-        # ClusteredDistribution (equal full key ⇒ equal subset ⇒ same
-        # partition), so the groupBy reuses that one exchange, partition i
-        # holds precisely bucket i, and the partitionBy write needs no
-        # second shuffle.  Small batches (streaming micro-batches) would
-        # spawn n_buckets near-empty write tasks on that plan, so a cheap
-        # second shuffle over the few dirty buckets wins there; hot batches
-        # drop out too — partition i == bucket i makes a hot bucket one
-        # giant task, and the alignment can't salt within a partition.
-        # A small batch on top of a committed table is a delta, not a
-        # base: it is written from one task as one shared file (below).
-        aligned = n_changes >= self.n_buckets * 512 and not hot
-        shared = m is not None and not aligned and not hot
-        batch = changes.drop(*TRANSPORT_COLS) if gated else changes
-        src = (
-            batch.repartition(self.n_buckets, *[F.col(c) for c in self.bucket_cols])
-            if aligned
-            else batch
-        )
-        reduced = lww_dedup(src, self.key_cols, ORDER_COLS).withColumn(
-            "_bucket", bucket_expr
-        )
-        if hot_splits:
-            # split each hot bucket's write across ~count/split_rows
-            # tasks: a per-key salt (different hash seed than the
-            # bucket fn) picks one of the bucket's write slots, and every
-            # (bucket, salt) group is placed in its own partition by id
-            # (hashing the pair would let groups share a task); files
-            # still land under the single _bucket=b directory, and
-            # readers/manifest already handle multi-file buckets
-            salt_col = F.lit(0)
-            for b, nsplit in hot_splits.items():
-                salt_col = F.when(
-                    F.col("_bucket") == b,
-                    F.pmod(
-                        F.hash(*[F.col(c) for c in self.key_cols], F.lit(21557)),
-                        F.lit(nsplit),
+        # released on every exit: the skip, a DescriptorMiss, a failed
+        # stats pass or write, and after the write (the fold reads files)
+        try:
+            # ONE pass yields the dirty-bucket counts and, grouped by file
+            # too, the new per-file watermarks: O(files × buckets) rows,
+            # never O(rows)
+            stats = (
+                changes.groupBy(*(["_file_seq"] if gated else []), bucket_expr.alias("_b"))
+                .agg(
+                    *(
+                        [
+                            F.max(F.struct("_log_pos", "_event_row_index")).alias("mx"),
+                            F.max("_gtid").alias("max_gtid"),
+                        ]
+                        if gated
+                        else []
                     ),
-                ).otherwise(salt_col)
-            first_slot, n_slots = [], 0
-            for b in dirty:
-                first_slot += [F.lit(b), F.lit(n_slots)]
-                n_slots += hot_splits.get(b, 1)
-            slot = F.create_map(*first_slot)[F.col("_bucket")] + salt_col
-            reduced = reduced.withColumn("_slot", slot).repartitionById(n_slots, "_slot")
-            reduced = reduced.drop("_slot")
-        elif shared:
-            # one task, one file: the batch's reduce runs in the write
-            # task, with no second shuffle; each bucket's rows lie
-            # together, clustered by stats_cols as a fold's file is
-            reduced = reduced.coalesce(1).sortWithinPartitions(
-                "_bucket", *(self.stats_cols or [])
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .collect()
             )
-        elif not aligned:
-            reduced = reduced.repartition(max(len(dirty), 1), "_bucket")
+            if gated and any(r["_file_seq"] < 0 for r in stats):
+                raise DescriptorMiss(
+                    "the batch holds a TABLE_MAP outside the descriptors it was "
+                    "decoded with"
+                )
+            if not stats:
+                return {
+                    "batch_id": batch_id,
+                    "skipped": True,
+                    "input_rows": 0,
+                    "dirty_buckets": [],
+                    "buckets_folded": [],
+                    "files_written": 0,
+                    "bytes_written": 0,
+                }
+            counts: dict = {}
+            new_wms: dict = {}
+            for r in stats:
+                counts[r["_b"]] = counts.get(r["_b"], 0) + r["n"]
+                if gated:
+                    pos = (r["mx"]["_log_pos"], r["mx"]["_event_row_index"])
+                    wm = new_wms.setdefault(
+                        str(r["_file_seq"]),
+                        {"log_pos": pos[0], "event_row_index": pos[1], "gtid": r["max_gtid"]},
+                    )
+                    if pos > (wm["log_pos"], wm["event_row_index"]):
+                        wm["log_pos"], wm["event_row_index"] = pos
+                    wm["gtid"] = max(wm["gtid"], r["max_gtid"])
+            n_changes = sum(counts.values())
+            dirty = sorted(counts)
+            mean_rows = n_changes / len(dirty)
+            hot = {
+                int(b): int(c)
+                for b, c in counts.items()
+                if c >= 3 * mean_rows and c > self.hot_bucket_split_rows
+            }
+            hot_splits = {
+                b: min(32, -(-c // self.hot_bucket_split_rows)) for b, c in hot.items()
+            }
+            old_files = (m or {}).get("files", {})
 
-        version = (m["version"] + 1) if m else 1
-        delta = self._write_buckets(reduced, f"v{version}", dirty, shared=shared)
-        changes.unpersist()
+            # --- merge-on-read append: batch-reduce, then write ONLY the batch --
+            # The LWW max_by hash aggregate pre-reduces map-side (hot keys never
+            # concentrate on one reducer); existing bucket data is NOT read or
+            # rewritten — write cost is O(batch), readers resolve LWW across a
+            # bucket's files, and the fold below bounds how many there can be.
+            #
+            # Big batches take ONE shuffle: repartition(n_buckets, bucket_cols)
+            # hash-partitions by Murmur3(bucket_cols) pmod n_buckets — exactly
+            # the bucket function — and HashPartitioning on a subset of the
+            # grouping keys still satisfies the aggregate's
+            # ClusteredDistribution (equal full key ⇒ equal subset ⇒ same
+            # partition), so the groupBy reuses that one exchange, partition i
+            # holds precisely bucket i, and the partitionBy write needs no
+            # second shuffle.  Small batches (streaming micro-batches) would
+            # spawn n_buckets near-empty write tasks on that plan, so a cheap
+            # second shuffle over the few dirty buckets wins there; hot batches
+            # drop out too — partition i == bucket i makes a hot bucket one
+            # giant task, and the alignment can't salt within a partition.
+            # A small batch on top of a committed table is a delta, not a
+            # base: it is written from one task as one shared file (below).
+            aligned = n_changes >= self.n_buckets * 512 and not hot
+            shared = m is not None and not aligned and not hot
+            batch = changes.drop(*TRANSPORT_COLS) if gated else changes
+            src = (
+                batch.repartition(self.n_buckets, *[F.col(c) for c in self.bucket_cols])
+                if aligned
+                else batch
+            )
+            reduced = lww_dedup(src, self.key_cols, ORDER_COLS).withColumn(
+                "_bucket", bucket_expr
+            )
+            if hot_splits:
+                # split each hot bucket's write across ~count/split_rows
+                # tasks: a per-key salt (different hash seed than the
+                # bucket fn) picks one of the bucket's write slots, and every
+                # (bucket, salt) group is placed in its own partition by id
+                # (hashing the pair would let groups share a task); files
+                # still land under the single _bucket=b directory, and
+                # readers/manifest already handle multi-file buckets
+                salt_col = F.lit(0)
+                for b, nsplit in hot_splits.items():
+                    salt_col = F.when(
+                        F.col("_bucket") == b,
+                        F.pmod(
+                            F.hash(*[F.col(c) for c in self.key_cols], F.lit(21557)),
+                            F.lit(nsplit),
+                        ),
+                    ).otherwise(salt_col)
+                first_slot, n_slots = [], 0
+                for b in dirty:
+                    first_slot += [F.lit(b), F.lit(n_slots)]
+                    n_slots += hot_splits.get(b, 1)
+                slot = F.create_map(*first_slot)[F.col("_bucket")] + salt_col
+                reduced = reduced.withColumn("_slot", slot).repartitionById(n_slots, "_slot")
+                reduced = reduced.drop("_slot")
+            elif shared:
+                # one task, one file: the batch's reduce runs in the write
+                # task, with no second shuffle; each bucket's rows lie
+                # together, clustered by stats_cols as a fold's file is
+                reduced = reduced.coalesce(1).sortWithinPartitions(
+                    "_bucket", *(self.stats_cols or [])
+                )
+            elif not aligned:
+                reduced = reduced.repartition(max(len(dirty), 1), "_bucket")
+
+            version = (m["version"] + 1) if m else 1
+            delta = self._write_buckets(reduced, f"v{version}", dirty, shared=shared)
+        finally:
+            changes.unpersist()
 
         new_files = dict(old_files)
         for b in dirty:

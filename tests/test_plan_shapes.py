@@ -121,9 +121,9 @@ def test_stream_commit_decodes_once(spark, tmp_path):
         table = BucketedLakeTable(spark, str(tmp_path / name), ["conv_id", "turn_idx"], n_buckets=4)
         merge = table.merge
 
-        def capture(typed, batch_id):
+        def capture(typed, batch_id, **kw):
             plans.append(typed._jdf.queryExecution().executedPlan().toString())
-            return merge(typed, batch_id)
+            return merge(typed, batch_id, **kw)
 
         table.merge = capture
         return TranscriptsApplier(spark, table)
@@ -241,3 +241,41 @@ def test_keyed_read_builds_in_few_py4j_round_trips(spark, tmp_path):
         gc.enable()
     assert len(sent) <= 120, len(sent)
     assert {r.conv_id for r in df.collect()} == {"c0", "c1", "c2"}
+
+
+def test_steady_state_commit_runs_two_fewer_jobs(spark, tmp_path):
+    """An ``apply_events`` commit whose descriptors the applier already
+    knows skips the TABLE_MAP pre-pass: on a 16-bucket table it runs
+    exactly the 2 jobs of that scan fewer than the same commit by a fresh
+    applier, which must scan, and the two tables end equal."""
+    from myzql_binlog_connector_spark.genlog import generate_stream, write_segments_parquet
+    from myzql_binlog_connector_spark.plans.apply import TranscriptsApplier
+    from myzql_binlog_connector_spark.plans.lake import BucketedLakeTable
+    from myzql_binlog_connector_spark.sources.segments import read_segments
+
+    stream = generate_stream(seed=11, n_convs=40, n_segments=3)
+    paths = write_segments_parquet(stream, str(tmp_path / "seg"))
+    sc = spark.sparkContext
+
+    def commit(name, hinted):
+        table = BucketedLakeTable(spark, str(tmp_path / name), ["conv_id", "turn_idx"], n_buckets=16)
+        app = TranscriptsApplier(spark, table)
+        app.apply_files(paths[:2], batch_id=0)
+        if not hinted:
+            app = TranscriptsApplier(spark, table)
+        events = read_segments(spark, paths[2])
+        group = f"steady-state-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rec = app.apply_events(events, batch_id=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return rec, jobs, {tuple(r) for r in table.read().collect()}
+
+    hinted, n_hinted, state = commit("hinted", True)
+    scanned, n_scanned, want = commit("scanned", False)
+    assert (hinted["descriptor_scan"], scanned["descriptor_scan"]) == (False, True)
+    assert n_scanned - n_hinted == 2, (n_hinted, n_scanned)
+    assert state == want
